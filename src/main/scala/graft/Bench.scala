@@ -1,28 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-      .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-      // standard INT64-micros timestamps (same as Verify): tx-table
-      // timestamp stats become parquet-footer-readable (TxLogTable
-      // batchStats) instead of INT96, whose footer stats are unusable
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // some events.parquet vintages carried TIMESTAMP(NANOS), readable only
-      // under this flag (as BIGINT nanos); no-op for the current
-      // timestamp[us] files. SimQueries.events adapts to either surface.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // ad-hoc scale-drill overrides (same contract as Verify), e.g.
-    // SPARK_GRAFT_CONF="spark.sql.files.maxPartitionBytes=33554432"
-    val spark = Verify.applyEnvConf(builder).getOrCreate()
+    val spark = LocalSpark.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Shared artifacts (the LSH candidate chain, the materialized MA staged

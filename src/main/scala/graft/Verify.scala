@@ -28,24 +28,6 @@ object Verify {
     case c => c.toString
   } + "\""
 
-  /** `SPARK_GRAFT_CONF` ("k1=v1;k2=v2") parsed to pairs — shared by
-    * Verify and Bench. An entry without '=' fails loudly naming the bad
-    * token (previously both mains indexed split()(1) and died with an
-    * opaque ArrayIndexOutOfBoundsException at session build). */
-  private[graft] def parseConf(raw: String): Seq[(String, String)] =
-    raw.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { entry =>
-      val kv = entry.split("=", 2)
-      require(kv.length == 2 && kv(0).trim.nonEmpty,
-        s"SPARK_GRAFT_CONF entry '$entry' is not key=value")
-      // trim both halves: "c.d = 2" must set key "c.d" (not "c.d ") —
-      // a trailing space makes the conf silently inert
-      (kv(0).trim, kv(1).trim)
-    }.toSeq
-
-  private[graft] def applyEnvConf(builder: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_CONF").iterator.flatMap(parseConf)
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-
   /** Oracle SQL yields naive TIMESTAMP in DuckDB; Spark's TimestampType
     * writes parquet isAdjustedToUTC=true (read back as TIMESTAMPTZ), so the
     * driver's schema compare fails. Session TZ is UTC, so the LTZ→NTZ cast
@@ -110,33 +92,16 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Some query families persist a shared artifact (the LSH candidate
-      // chain, the ER pair kernel) that later consumers reread. Verify runs
-      // the whole registry in one session, so at large SFs those cached
-      // blocks would otherwise pin up to storageFraction of the unified
-      // pool while an unrelated query's sort is starving and spill-thrashing
-      // (observed at sf10: a window top-k at 30+ min CPU in
-      // UnsafeExternalSorter.spill). Correctness runs prefer execution
-      // memory over cache residency — let eviction reclaim down to 5%.
-      .config("spark.memory.storageFraction", "0.05")
-      // year-0001/8888 sentinel timestamps need proleptic-Gregorian parquet
-      // (matches DuckDB's reading) — see SURVEY §7.5-4
-      .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-      .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // some events.parquet vintages carried TIMESTAMP(NANOS), readable only
-      // under this flag (as BIGINT nanos); no-op for the current
-      // timestamp[us] files. SimQueries.events adapts to either surface.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // ad-hoc scale-drill overrides, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.files.maxPartitionBytes=33554432;spark.memory.storageFraction=0.05"
-    val spark = applyEnvConf(builder).getOrCreate()
+    // Some query families persist a shared artifact (the LSH candidate
+    // chain, the ER pair kernel) that later consumers reread. Verify runs
+    // the whole registry in one session, so at large SFs those cached
+    // blocks would otherwise pin up to storageFraction of the unified
+    // pool while an unrelated query's sort is starving and spill-thrashing
+    // (observed at sf10: a window top-k at 30+ min CPU in
+    // UnsafeExternalSorter.spill). Correctness runs prefer execution
+    // memory over cache residency — let eviction reclaim down to 5%.
+    val spark = LocalSpark.builder()
+      .config("spark.memory.storageFraction", "0.05").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries

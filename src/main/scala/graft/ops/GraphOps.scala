@@ -14,7 +14,7 @@ object GraphOps {
     * every node the MINIMUM node id of its component.
     *
     * Measured vs the alternating large-star/small-star alternative and
-    * kept ([[graft.tools.CcBench]], 1M nodes, local[16]): the realistic
+    * kept (a one-off benchmark main, 1M nodes, local[16]): the realistic
     * near-dup shape — many small dense components, the only shape an LSH
     * candidate graph can have since the bucket cap bounds every component
     * to a union of ≤cap-size quasi-cliques — converges in ~3 rounds

@@ -1,12 +1,16 @@
 package graft.runtime
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+
+import graft.sources.{CommitCas, DeltaWrite, MergeClauses, StatsSkip}
+import graft.sources.StatsSkip.FileStats
 
 /** A minimal log-structured transactional table format over a Parquet
   * directory — the Spark-native answer to the reference's reliance on a
@@ -20,6 +24,18 @@ import org.apache.spark.sql.functions.{col, lit}
   *                                           # body: one line per live file
   *   <base>/<name>/d-<uuid>/part-*.parquet   # immutable data-file batches
   * }}}
+  *
+  * Per-file statistics of the stats columns ([[setStatsColumns]]) are one
+  * header line per file, `#fstat <file> <json>` (tab-separated), the JSON
+  * in Delta `add.stats` shape over PHYSICAL column names:
+  * `{"numRecords":n,"minValues":{..},"maxValues":{..},"nullCount":{..}}`.
+  * Values are typed as the shared footer reader gives them
+  * ([[graft.sources.DeltaWrite.footerRanges]]): integral and fractional
+  * numbers, strings, booleans, dates as ISO text, decimals as exact JSON
+  * numbers and timestamps as integral epoch micros; [[StatsSkip]] prunes
+  * on them. Older manifests carried one `#fstat <file> <col> <min> <max>`
+  * line per column in CAST-AS-STRING form; those read as "no stats",
+  * which never prunes.
   *
   * Properties, each asserted by `TxLogTableSpec`:
   *  - **Atomic commits**: a manifest is staged as `.tmp-*` and published via
@@ -132,13 +148,17 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     manifestLines(name, v).filter(_.startsWith(StatsColHeader))
       .map(_.stripPrefix(StatsColHeader))
 
-  /** per-file min/max stats: (file, physicalCol) → (min, max), both rendered
-    * through CAST AS STRING. Files/columns without an entry are simply
-    * unprunable — the safe default. */
-  def fileStats(name: String, v: Long): Map[(String, String), (String, String)] =
-    manifestLines(name, v).filter(_.startsWith(FStatHeader)).map { l =>
-      val p = l.stripPrefix(FStatHeader).split('\t')
-      (p(0), p(1)) -> (p(2), p(3))
+  /** per-file stats of the stats columns (physical names): file → stats,
+    * typed as [[StatsSkip]] evaluates them. Files/columns without an entry
+    * are simply unprunable — the safe default. */
+  def fileStats(name: String, v: Long): Map[String, FileStats] =
+    manifestLines(name, v).filter(_.startsWith(FStatHeader)).flatMap { l =>
+      l.stripPrefix(FStatHeader).split("\t", -1) match {
+        case Array(f, js) if js.startsWith("{") =>
+          scala.util.Try(TxLogTable.statsMapper.readTree(js)).toOption
+            .flatMap(FileStats.parse).map(f -> _)
+        case _ => None // the older per-column string form: no stats
+      }
     }.toMap
 
   /** the version's EQUALITY DELETE files (merge-on-read row-level deletes,
@@ -179,14 +199,12 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   private def render(cols: Seq[ColMap], fs: Seq[String],
                      statsCols: Seq[String] = Nil,
-                     stats: Map[(String, String), (String, String)] = Map.empty,
+                     stats: Map[String, FileStats] = Map.empty,
                      txns: Map[String, Long] = Map.empty,
                      edels: Seq[EqDelete] = Nil): Seq[String] =
     cols.map(c => s"$ColHeader${c.physical}\t${c.logical}\t${c.typeDdl}") ++
       statsCols.map(c => s"$StatsColHeader$c") ++
-      stats.toSeq.sortBy(_._1).map { case ((f, c), (mn, mx)) =>
-        s"$FStatHeader$f\t$c\t$mn\t$mx"
-      } ++
+      stats.toSeq.sortBy(_._1).map { case (f, st) => s"$FStatHeader$f\t${st.json}" } ++
       txns.toSeq.sorted.map { case (a, bv) => s"$TxnHeader$a\t$bv" } ++
       edels.map(e =>
         s"$EDelHeader${e.file}\t${e.keyPhys.mkString(",")}\t${e.scope.toSeq.sorted.mkString(",")}") ++
@@ -194,26 +212,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** Publish `lines` as version `v` of `name`. Returns false when `v` was
     * committed concurrently by another writer (CAS lost — re-read, retry). */
-  private def tryCommit(name: String, v: Long, lines: Seq[String]): Boolean = {
-    Files.createDirectories(logDir(name))
-    val tmp = logDir(name).resolve(s".tmp-${UUID.randomUUID()}")
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    val target = manifestPath(name, v)
-    try { Files.createLink(target, tmp); Files.delete(tmp); true }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(tmp); false
-      case _: UnsupportedOperationException =>
-        // filesystem without hard links: fall back to create-new move (still
-        // atomic-rename on POSIX; the exists-check narrows the race window)
-        if (Files.exists(target)) { Files.delete(tmp); false }
-        else {
-          try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            Files.delete(tmp); false }
-        }
-    }
-  }
+  private def tryCommit(name: String, v: Long, lines: Seq[String]): Boolean =
+    CommitCas.publish(manifestPath(name, v), lines.mkString("\n").getBytes("UTF-8"))
 
   /** identity mapping for a table born from `df`'s schema */
   private def identityMapping(df: DataFrame): Seq[ColMap] =
@@ -222,7 +222,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** the full metadata of one version */
   private case class Meta(cols: Seq[ColMap], statsCols: Seq[String],
-                          stats: Map[(String, String), (String, String)],
+                          stats: Map[String, FileStats],
                           txns: Map[String, Long] = Map.empty,
                           edels: Seq[EqDelete] = Nil,
                           bloomCols: Map[String, Int] = Map.empty,
@@ -292,7 +292,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       .map(e => e.copy(scope = e.scope.intersect(liveSet)))
       .filter(_.scope.nonEmpty)
     render(m.cols, fs, m.statsCols,
-      m.stats.filter { case ((f, _), _) => liveSet(f) }, m.txns, live) ++
+      m.stats.filter { case (f, _) => liveSet(f) }, m.txns, live) ++
       m.bloomCols.toSeq.sorted.map { case (pc, n) => s"$BloomColHeader$pc\t$n" } ++
       m.blooms.toSeq.sortBy(_._1).collect {
         case ((f, pc), b64) if liveSet(f) => s"$FBloomHeader$f\t$pc\t$b64"
@@ -300,244 +300,76 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       m.checks.toSeq.sorted.map { case (n, sql) => s"$CheckHeader$n\t$sql" }
   }
 
-  /** Per-file min/max of the stats columns for a just-written batch, read
-    * from the parquet FOOTERS — driver-side metadata work (one footer per
-    * file, O(files) not O(rows)) replacing the full read-back Spark job
-    * this used to cost on every stats-bearing commit. Values render
-    * exactly as the scan path rendered them (Spark CAST AS STRING under
-    * the session time zone), so stored stats stay comparable with
-    * caller-supplied probe bounds and across commit eras. Footer min/max
-    * remain valid BOUNDS even when the writer truncated long strings (min
-    * rounds down, max rounds up per the parquet spec), so interval pruning
-    * stays sound; a column that is all-NULL in a file, or absent from it,
-    * gets no entry (unprunable, safe) — same as before. A file whose
-    * footer is unusable for any requested column with actual values
-    * (INT96 timestamps, exotic types, a writer that dropped stats) falls
-    * back to the old one-pass scan for that file: identical results at
-    * the old cost. */
-  private def batchStats(name: String, batchFiles: Seq[String],
-                         statsCols: Seq[String]): Map[(String, String), (String, String)] = {
+  /** Per-file stats of the stats columns for a just-written batch, read
+    * from the parquet FOOTERS through the shared typed reader
+    * ([[DeltaWrite.footerRanges]]) — driver-side metadata work, one footer
+    * per file, no Spark job. Types [[StatsSkip]] cannot compare get no
+    * stats (unprunable, safe). A file whose footer holds values without
+    * usable bounds for a stats column (INT96 timestamps, a writer that
+    * dropped stats) falls back to a one-pass scan: same typed values at
+    * the cost of a Spark job, which is logged. */
+  private def batchStats(name: String, batchFiles: Seq[String], cols: Seq[ColMap],
+                         statsCols: Seq[String]): Map[String, FileStats] = {
     if (statsCols.isEmpty || batchFiles.isEmpty) return Map.empty
+    val schema = StructType(physicalSchema(cols).filter(f => statsCols.contains(f.name)))
     val conf = spark.sparkContext.hadoopConfiguration
-    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    val out = Map.newBuilder[(String, String), (String, String)]
-    val fallback = Seq.newBuilder[String]
-    batchFiles.foreach { f =>
-      footerMinMax(conf, root(name).resolve(f), statsCols, zone) match {
-        case Some(entries) =>
-          entries.foreach { case (c, mnmx) => out += ((f, c) -> mnmx) }
-        case None => fallback += f
-      }
-    }
-    val needScan = fallback.result()
-    // fallback telemetry (VERDICT r14): a silent 100%-fallback table pays
-    // footer-open cost PLUS the old scan — make the rate visible
+    val footers = batchFiles.map(f => f ->
+      DeltaWrite.footerRanges(conf, root(name).resolve(f), schema).filter(_.unbounded.isEmpty))
+    val needScan = footers.collect { case (f, None) => f }
     if (needScan.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"TxLogTable $name batchStats: footer fallback for " +
           s"${needScan.size}/${batchFiles.size} files (INT96/statless)")
-    val scanned = if (needScan.isEmpty) Map.empty else scanStats(name, needScan, statsCols)
-    out.result() ++ scanned
+    footers.collect { case (f, Some(fr)) => f -> fr.stats }.toMap ++
+      scanStats(name, needScan, cols, schema)
   }
 
-  /** The pre-footer stats pass: one column-pruned Spark scan over `fs`
-    * collecting per-file min/max. Kept as the fallback for files whose
-    * footer stats are unusable. */
-  private def scanStats(name: String, batchFiles: Seq[String],
-                        statsCols: Seq[String]): Map[(String, String), (String, String)] = {
-    import org.apache.spark.sql.functions.{input_file_name, max => fmax, min => fmin}
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(batchFiles.map(f => root(name).resolve(f).toString): _*)
-    val present = df.columns.toSet
-    val cols = statsCols.filter(present)
-    if (cols.isEmpty) return Map.empty
-    val aggs = cols.flatMap(c => Seq(
-      fmin(col(c)).cast("string").as(s"__mn_$c"),
-      fmax(col(c)).cast("string").as(s"__mx_$c")))
-    df.groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.flatMap { r =>
-        val abs = r.getAs[String]("__f")
-        batchFiles.find(f => abs.endsWith("/" + f)).toSeq.flatMap { rel =>
-          cols.flatMap { c =>
-            (Option(r.getAs[String](s"__mn_$c")), Option(r.getAs[String](s"__mx_$c"))) match {
-              case (Some(mn), Some(mx)) => Some((rel, c) -> (mn, mx))
-              case _                    => None // all-NULL file: unprunable, safe
-            }
+  /** The footer fallback: one column-pruned Spark scan over `fs`
+    * collecting per-file count/min/max/nulls, read as Catalyst values and
+    * typed like [[DeltaWrite.footerRanges]]. */
+  private def scanStats(name: String, fs: Seq[String], cols: Seq[ColMap],
+                        schema: StructType): Map[String, FileStats] = {
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    import org.apache.spark.sql.functions.{count, input_file_name, max => fmax, min => fmin}
+    val use = schema.filter(f => RowOrdering.isOrderable(f.dataType))
+    if (fs.isEmpty || use.isEmpty) return Map.empty
+    val aggs = count(lit(1)) +: use.flatMap(f =>
+      Seq(fmin(col(f.name)), fmax(col(f.name)), count(col(f.name))))
+    readPhysical(name, cols, fs).groupBy(input_file_name())
+      .agg(aggs.head, aggs.tail: _*)
+      .queryExecution.toRdd.map(_.copy()).collect().toSeq.flatMap { r =>
+        val abs = r.getUTF8String(0).toString
+        fs.find(f => abs.endsWith("/" + f)).map { f =>
+          val n = r.getLong(1)
+          val ranges = use.zipWithIndex.flatMap { case (c, i) =>
+            val mn = typedValue(r.get(2 + 3 * i, c.dataType), c.dataType)
+            val mx = typedValue(r.get(3 + 3 * i, c.dataType), c.dataType)
+            if (mn == null || mx == null) None else Some((c.name, mn, mx))
           }
+          f -> DeltaWrite.FooterRanges(n,
+            ranges.map(x => x._1 -> x._2).toMap, ranges.map(x => x._1 -> x._3).toMap,
+            use.zipWithIndex.map { case (c, i) => c.name -> (n - r.getLong(4 + 3 * i)) }.toMap,
+            Set.empty).stats
         }
       }.toMap
   }
 
-  /** Footer min/max of `statsCols` for one file, rendered as Spark CAST AS
-    * STRING. Some(entries): usable (absent / all-NULL columns yield no
-    * entry). None: at least one requested column has values but unusable
-    * stats — caller must scan this file. */
-  private def footerMinMax(conf: org.apache.hadoop.conf.Configuration,
-                           file: java.nio.file.Path, statsCols: Seq[String],
-                           zone: java.time.ZoneId): Option[Seq[(String, (String, String))]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val hPath = new org.apache.hadoop.fs.Path(file.toUri)
-    val rdr = try ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-    catch { case _: Exception => return None }
-    try {
-      val blocks = rdr.getFooter.getBlocks.asScala.toSeq
-      val schema = rdr.getFooter.getFileMetaData.getSchema
-      val entries = Seq.newBuilder[(String, (String, String))]
-      statsCols.foreach { c =>
-        // only TOP-LEVEL primitive columns are ever stats columns (the
-        // writer casts to the mapping's flat physical schema)
-        val inSchema = schema.getFields.asScala.exists(_.getName == c)
-        if (inSchema) {
-          val prim = schema.getType(Seq(c): _*).asPrimitiveType()
-          var lo: Any = null; var hi: Any = null
-          var usable = true; var hasValues = false
-          blocks.foreach { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == c) match {
-              case None => usable = false
-              case Some(cc) =>
-                val st = cc.getStatistics
-                if (st == null || st.isEmpty) {
-                  // no stats at all: if the block has rows, values may exist
-                  if (b.getRowCount > 0) { usable = false; hasValues = true }
-                } else if (st.hasNonNullValue) {
-                  hasValues = true
-                  val (mn, mx) = (st.genericGetMin, st.genericGetMax)
-                  if (lo == null || cmpFooter(prim, mn, lo) < 0) lo = mn
-                  if (hi == null || cmpFooter(prim, mx, hi) > 0) hi = mx
-                } else if (!st.isNumNullsSet || st.getNumNulls < b.getRowCount) {
-                  usable = false; hasValues = true // values but no bounds
-                } // else: all-NULL block — contributes nothing, stays usable
-            }
-          }
-          if (!usable && hasValues) return None // scan fallback
-          if (usable && lo != null) {
-            (renderFooterValue(lo, prim, zone), renderFooterValue(hi, prim, zone)) match {
-              case (Some(mn), Some(mx)) => entries += (c -> (mn, mx))
-              case _ => return None // unrenderable type (INT96, …) — scan
-            }
-          }
-          // lo == null (all-NULL or zero rows): no entry — unprunable, safe
-        }
-        // column not in this file (pre-DDL era): no entry, same as before
-      }
-      Some(entries.result())
-    } catch { case _: Exception => None }
-    finally rdr.close()
-  }
-
-  /** footer values are Comparable within a column's physical type — except
-    * Binary, whose order depends on the LOGICAL type: strings combine in
-    * UNSIGNED byte order (the order Spark's string min/max uses), while a
-    * DECIMAL stored as BINARY/FIXED_LEN_BYTE_ARRAY is a SIGNED big-endian
-    * two's-complement integer — combining those unsigned would let a
-    * multi-rowgroup file with mixed-sign decimals store min > true min
-    * (e.g. block mins [-5, 3] combine to 3) and silently wrong-prune. */
-  private def cmpFooter(prim: org.apache.parquet.schema.PrimitiveType,
-                        a: Any, b: Any): Int = (a, b) match {
-    case (x: org.apache.parquet.io.api.Binary, y: org.apache.parquet.io.api.Binary) =>
-      prim.getLogicalTypeAnnotation match {
-        case _: org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          new java.math.BigInteger(x.getBytes)
-            .compareTo(new java.math.BigInteger(y.getBytes))
-        case _ =>
-          org.apache.spark.unsafe.types.UTF8String.fromBytes(x.getBytes)
-            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromBytes(y.getBytes))
-      }
-    case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
-  }
-
-  /** One footer value rendered the way Spark CAST AS STRING renders the
-    * corresponding Catalyst value — the format every stats consumer
-    * (statCompare probes, TxRehash's activeStr checks) compares against.
-    * None = type we cannot render faithfully; caller falls back to the
-    * scan. */
-  private def renderFooterValue(v: Any, prim: org.apache.parquet.schema.PrimitiveType,
-                                zone: java.time.ZoneId): Option[String] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val ann = prim.getLogicalTypeAnnotation
-    (prim.getPrimitiveTypeName, ann) match {
-      case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-        Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-      case (INT32, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-        Some(java.math.BigDecimal.valueOf(v.asInstanceOf[Number].longValue, d.getScale).toString)
-      case (INT64, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-        Some(java.math.BigDecimal.valueOf(v.asInstanceOf[Number].longValue, d.getScale).toString)
-      case ((BINARY | FIXED_LEN_BYTE_ARRAY), d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-        Some(new java.math.BigDecimal(new java.math.BigInteger(
-          v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes), d.getScale).toString)
-      case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-        Some(java.time.LocalDate.ofEpochDay(v.asInstanceOf[Number].longValue).toString)
-      case (INT64, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-        import LogicalTypeAnnotation.TimeUnit
-        val micros = t.getUnit match {
-          case TimeUnit.MICROS => v.asInstanceOf[Number].longValue
-          case TimeUnit.MILLIS => Math.multiplyExact(v.asInstanceOf[Number].longValue, 1000L)
-          case _ => return None // NANOS: read as BIGINT under nanosAsLong — scan
-        }
-        // adjusted-to-UTC (TimestampType) renders in the session zone;
-        // NTZ renders the stored local datetime verbatim
-        formatMicros(micros, if (t.isAdjustedToUTC) zone else java.time.ZoneOffset.UTC)
-      case (INT32, _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) |
-           (INT64, _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) |
-           (INT32, null) | (INT64, null) =>
-        Some(v.asInstanceOf[Number].longValue.toString)
-      case (FLOAT, null) => Some(v.asInstanceOf[java.lang.Float].toString)
-      case (DOUBLE, null) => Some(v.asInstanceOf[java.lang.Double].toString)
-      case (BOOLEAN, null) => Some(v.asInstanceOf[java.lang.Boolean].toString)
-      case _ => None // INT96 timestamps, UUIDs, … — scan fallback
+  /** one Catalyst value in the typed stats domain of
+    * [[DeltaWrite.FooterRanges]]; null for types stats do not carry */
+  private def typedValue(v: Any, dt: DataType): Any = {
+    import org.apache.spark.sql.types._
+    (dt, v) match {
+      case (_, null) => null
+      case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
+        java.lang.Long.valueOf(n.longValue)
+      case (FloatType | DoubleType, n: Number) => java.lang.Double.valueOf(n.doubleValue)
+      case (StringType, s: org.apache.spark.unsafe.types.UTF8String) => s.toString
+      case (BooleanType, b: java.lang.Boolean) => b
+      case (DateType, d: Integer) => java.time.LocalDate.ofEpochDay(d.longValue).toString
+      case (_: DecimalType, d: Decimal) => d.toJavaBigDecimal
+      case (TimestampType | TimestampNTZType, us: java.lang.Long) => us
+      case _ => null
     }
-  }
-
-  /** epoch-micros → Spark's timestamp CAST AS STRING rendering in `zone`:
-    * "yyyy-MM-dd HH:mm:ss[.f…]" with trailing fraction zeros trimmed.
-    * None for years outside [1, 9999]: Spark renders those with a sign /
-    * 5+ digits ("+10000-…", "-0001-…") where %04d would emit "10000" /
-    * "-001" — a divergence that breaks the exact-render contract the
-    * min==max set-membership skip and utf8Compare ordering rely on, so
-    * such files take the scan fallback instead. */
-  private def formatMicros(us: Long, zone: java.time.ZoneId): Option[String] = {
-    val secs = Math.floorDiv(us, 1000000L)
-    val frac = Math.floorMod(us, 1000000L)
-    val ldt = java.time.LocalDateTime.ofInstant(
-      java.time.Instant.ofEpochSecond(secs, frac * 1000L), zone)
-    if (ldt.getYear < 1 || ldt.getYear > 9999) return None
-    val base = f"${ldt.getYear}%04d-${ldt.getMonthValue}%02d-${ldt.getDayOfMonth}%02d" +
-      f" ${ldt.getHour}%02d:${ldt.getMinute}%02d:${ldt.getSecond}%02d"
-    Some(if (frac == 0L) base
-    else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse)
-  }
-
-  /** UTF-8 byte ordering — Spark's min/max over strings is binary
-    * (UTF8String) order, NOT Java's UTF-16 compareTo: supplementary
-    * characters rank above ￿ in byte order but below it in UTF-16, so
-    * comparing stats with compareTo could prune a file that holds matching
-    * rows. Compare the same way the stats were computed. */
-  private def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** order stats values as their column's type: numerics numerically,
-    * everything else as rendered strings in UTF-8 byte order (CAST AS
-    * STRING of timestamps and dates is fixed-format ASCII, so byte order =
-    * chronological). A value that fails to parse (NaN/Infinity renderings
-    * of a double column) compares as 0 = "ranges overlap" — the file stays
-    * a candidate, never wrongly pruned. */
-  private def statCompare(typeDdl: String): (String, String) => Int = {
-    val numeric = Set("tinyint", "smallint", "int", "bigint", "float", "double")
-    if (numeric(typeDdl) || typeDdl.startsWith("decimal"))
-      (a, b) => try BigDecimal(a).compare(BigDecimal(b))
-        catch { case _: NumberFormatException => 0 }
-    else (a, b) => utf8Compare(a, b)
   }
 
   /** Write `df` (LOGICAL names) as a new immutable data-file batch under
@@ -592,10 +424,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * typeDdl, retype rewrites every live file atomically, and evolution
     * never retypes — so every live file either carries a column at exactly
     * this type or lacks it entirely (and the reader null-fills it). */
-  private def physicalSchema(cols: Seq[ColMap]): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(cols.map(c =>
-      org.apache.spark.sql.types.StructField(c.physical,
-        org.apache.spark.sql.types.DataType.fromDDL(c.typeDdl), nullable = true)))
+  private def physicalSchema(cols: Seq[ColMap]): StructType =
+    StructType(cols.map(c =>
+      StructField(c.physical, DataType.fromDDL(c.typeDdl), nullable = true)))
 
   /** raw PHYSICAL-name read of `fs` under the mapping's known schema (no
     * logical rename/cast) — the shared no-inference read for stats/bloom
@@ -801,7 +632,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       }
       val base = head.map(files(name, _)).getOrElse(Seq.empty)
       val withStats =
-        m.copy(stats = m.stats ++ batchStats(name, added, m.statsCols))
+        m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols))
       done = tryCommit(name, head.getOrElse(0L) + 1,
         renderM(withStats, base ++ added))
     }
@@ -891,7 +722,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         case _ => val fs = writeBatch(name, df, m.cols); batch = Some((m.cols, fs)); fs
       }
       val base = head.map(files(name, _)).getOrElse(Seq.empty)
-      val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.statsCols),
+      val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
         txns = m.txns ++ txn)
       done = tryCommit(name, head.getOrElse(0L) + 1,
         renderM(withStats, base ++ added))
@@ -927,7 +758,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val added = writeBatch(name, df, cols)
     // txn markers survive a full refresh: a replayed streaming batch must
     // still be recognized after someone rebuilds the table
-    val m = Meta(cols, statsCols, batchStats(name, added, statsCols),
+    val m = Meta(cols, statsCols, batchStats(name, added, cols, statsCols),
       head.map(txnVersions(name, _)).getOrElse(Map.empty), checks = checks)
     if (!tryCommit(name, head.getOrElse(0L) + 1, renderM(m, added)))
       throw new IllegalStateException(
@@ -968,7 +799,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         rewrite(readWithDeletes(name, m.cols, touched, m.edels)), newCols)
     val next = live.filterNot(touched.contains) ++ added
     val withStats = m.copy(cols = newCols,
-      stats = m.stats ++ batchStats(name, added, m.statsCols))
+      stats = m.stats ++ batchStats(name, added, newCols, m.statsCols))
     if (!tryCommit(name, v + 1, renderM(withStats, next)))
       throw new IllegalStateException(
         s"TxLogTable $name: lost commit race on replaceFiles — " +
@@ -1001,30 +832,21 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
     // data skipping: the probe scans only files whose per-file [min,max]
     // intersects the source's key range — with stats on the key column a
-    // clustered table turns the probe from O(table) into O(overlap)
+    // clustered table turns the probe from O(table) into O(overlap). No
+    // stats on any key: no bounds job.
     val probeFiles = {
-      val statted = keyCols.flatMap(kc =>
-        m.cols.find(_.logical == kc).map(c => (kc, c))
-          .filter { case (_, c) => m.statsCols.contains(c.physical) })
+      val statted = keyCols.flatMap(kc => m.cols.find(_.logical == kc))
+        .filter(c => m.statsCols.contains(c.physical))
       if (statted.isEmpty) live
       else {
-        val rangeAggs = statted.flatMap { case (kc, _) => Seq(
-          fmin(col(kc)).cast("string").as(s"__mn_$kc"),
-          fmax(col(kc)).cast("string").as(s"__mx_$kc")) }
-        val r = srcKeys.agg(rangeAggs.head, rangeAggs.tail: _*).head()
-        statted.foldLeft(live) { case (cand, (kc, c)) =>
-          val (srcMn, srcMx) = (r.getAs[String](s"__mn_$kc"), r.getAs[String](s"__mx_$kc"))
-          if (srcMn == null) cand
-          else {
-            val cmp = statCompare(c.typeDdl)
-            cand.filter { f =>
-              m.stats.get((f, c.physical)) match {
-                case Some((mn, mx)) => cmp(mx, srcMn) >= 0 && cmp(mn, srcMx) <= 0
-                case None           => true // no stats: unprunable, safe
-              }
-            }
-          }
-        }
+        // laid out (min_k0, max_k0, …) as keyBoundFilters reads it, each
+        // bound typed as the table column
+        val rangeAggs = statted.flatMap(c => Seq(
+          fmin(col(c.logical).cast(c.typeDdl)), fmax(col(c.logical).cast(c.typeDdl))))
+        val bounds = srcKeys.agg(rangeAggs.head, rangeAggs.tail: _*).head()
+        val schema = physicalSchema(statted)
+        val filters = MergeClauses.keyBoundFilters(bounds, statted.map(_.physical), schema)
+        live.filter(f => StatsSkip.keep(m.stats.get(f), filters, schema))
       }
     }
     val touchedAbs =
@@ -1041,7 +863,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         .join(srcKeys, keyCols, "left_anti")
         .unionByName(src.select(tableCols.map(col): _*))
     val added = writeBatch(name, survivors, m.cols)
-    val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.statsCols))
+    val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols))
     if (!tryCommit(name, v + 1,
         renderM(withStats, live.filterNot(touched.contains) ++ added)))
       throw new IllegalStateException(
@@ -1065,29 +887,38 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     }
     val live = files(name, v)
     val withStats = m.copy(statsCols = phys.distinct,
-      stats = batchStats(name, live, phys.distinct))
+      stats = batchStats(name, live, m.cols, phys.distinct))
     if (!tryCommit(name, v + 1, renderM(withStats, live)))
       throw new IllegalStateException(
         s"TxLogTable $name: lost commit race on setStatsColumns — retry")
   }
 
   /** The files of the current version possibly holding a `logicalCol` value
-    * in [lo, hi] (rendered as strings the way stats are: CAST AS STRING).
-    * Complete by construction: a file is only skipped when its recorded
-    * min/max range provably cannot intersect. */
+    * in [lo, hi]. The bounds are cast to the column's type (timestamps in
+    * the session time zone); a bound that does not cast prunes nothing.
+    * Complete by construction: a file is only skipped when its stats
+    * provably exclude the interval. */
   def candidateFiles(name: String, logicalCol: String,
                      lo: String, hi: String): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, GreaterThanOrEqual, LessThanOrEqual, Literal}
     val v = currentVersion(name).getOrElse(
       throw new IllegalStateException(s"TxLogTable $name does not exist"))
     val m = metaOf(name, v)
     val c = m.cols.find(_.logical == logicalCol).getOrElse(
       throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
-    val cmp = statCompare(c.typeDdl)
-    files(name, v).filter { f =>
-      m.stats.get((f, c.physical)) match {
-        case Some((mn, mx)) => cmp(mx, lo) >= 0 && cmp(mn, hi) <= 0
-        case None           => true
-      }
+    val live = files(name, v)
+    val dt = DataType.fromDDL(c.typeDdl)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def typed(b: String): Option[Literal] =
+      scala.util.Try(Cast(Literal(b), dt, tz).eval()).toOption
+        .filter(_ != null).map(Literal(_, dt))
+    (typed(lo), typed(hi)) match {
+      case (Some(l), Some(h)) =>
+        val a = AttributeReference(c.physical, dt)()
+        val filters = Seq(GreaterThanOrEqual(a, l), LessThanOrEqual(a, h))
+        val schema = physicalSchema(Seq(c))
+        live.filter(f => StatsSkip.keep(m.stats.get(f), filters, schema))
+      case _ => live
     }
   }
 
@@ -1278,7 +1109,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   // still applied exactly row-wise; the index only shrinks the scan.
 
   private final class ManifestFileIndex(name: String, v: Long, m: Meta,
-                                        live: Seq[String])
+                                        live: Seq[String], dataSchema: StructType)
       extends org.apache.spark.sql.execution.datasources.FileIndex {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions._
@@ -1299,9 +1130,19 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       live.map(f => root(name).resolve(f).toString).toArray
     override def refresh(): Unit = ()
 
-    /** stats are stored CAST-AS-STRING; literals render the same way.
-      * None = unrenderable type → that conjunct never prunes (safe). */
-    private def render(value: Any, dt: DataType): Option[String] = dt match {
+    /** the Bloom channel of [[StatsSkip.keep]] for `=`/IN on file `f`: the
+      * literal renders as the column's CAST AS STRING, the form the blooms
+      * were built from; a type without that rendering never prunes. */
+    private def bloomKeep(f: String)(a: AttributeReference, value: Any): Boolean =
+      m.bloomCols.get(a.name).forall { nbits =>
+        (bloomKey(value, a.dataType), m.blooms.get((f, a.name))) match {
+          case (Some(s), Some(b64)) =>
+            bloomPositions(s, nbits).forall(decodedBloom(name, v, f, a.name, b64).get)
+          case _ => true
+        }
+      }
+
+    private def bloomKey(value: Any, dt: DataType): Option[String] = dt match {
       case StringType | ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType | _: DecimalType => Option(value).map(_.toString)
       case DateType => Option(value).map(d =>
@@ -1309,94 +1150,12 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       case _ => None
     }
 
-    private def physCol(e: Expression): Option[ColMap] = e match {
-      case a: AttributeReference => m.cols.find(_.physical == a.name)
-      case _ => None
-    }
-
-    /** keep files whose [min,max] could intersect the probe interval;
-      * strict bounds prune the boundary file too (max == lo proves no row
-      * satisfies `col > lo`) */
-    private def rangeKeep(c: ColMap, lo: Option[String], hi: Option[String],
-                          loStrict: Boolean = false,
-                          hiStrict: Boolean = false): String => Boolean = {
-      val cmp = statCompare(c.typeDdl)
-      f => m.stats.get((f, c.physical)) match {
-        case Some((mn, mx)) =>
-          lo.forall(l => if (loStrict) cmp(mx, l) > 0 else cmp(mx, l) >= 0) &&
-            hi.forall(h => if (hiStrict) cmp(mn, h) < 0 else cmp(mn, h) <= 0)
-        case None => true
-      }
-    }
-
-    /** `col = value`: min/max AND bloom, both sound — a file is dropped
-      * only on proof of absence; missing stats/blooms stay candidates */
-    private def eqKeep(c: ColMap, s: String): String => Boolean = {
-      val byStats = rangeKeep(c, Some(s), Some(s))
-      m.bloomCols.get(c.physical) match {
-        case None => byStats
-        case Some(nbits) =>
-          val pos = bloomPositions(s, nbits)
-          f => byStats(f) && (m.blooms.get((f, c.physical)) match {
-            case None => true
-            case Some(b64) =>
-              pos.forall(decodedBloom(name, v, f, c.physical, b64).get)
-          })
-      }
-    }
-
-    private def eqFor(a: Expression, x: Any, dt: DataType): Option[String => Boolean] =
-      physCol(a).flatMap(c => render(x, dt).map(eqKeep(c, _)))
-    private def rgFor(a: Expression, x: Any, dt: DataType, isLo: Boolean,
-                      strict: Boolean): Option[String => Boolean] =
-      physCol(a).flatMap(c => render(x, dt).map(s =>
-        if (isLo) rangeKeep(c, Some(s), None, loStrict = strict)
-        else rangeKeep(c, None, Some(s), hiStrict = strict)))
-
-    /** one pushed conjunct → a sound file-keep predicate; IN keeps a file
-      * when ANY value could be present; OR prunes only when both arms can;
-      * unsupported shapes never prune. */
-    private def keepFor(e: Expression): Option[String => Boolean] = e match {
-      case EqualTo(a, Literal(x, dt)) => eqFor(a, x, dt)
-      case EqualTo(Literal(x, dt), a) => eqFor(a, x, dt)
-      case EqualNullSafe(a, Literal(x, dt)) if x != null => eqFor(a, x, dt)
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val ks = vs.map { case Literal(x, dt) => eqFor(a, x, dt) }
-        if (ks.exists(_.isEmpty)) None
-        else Some(f => ks.flatten.exists(_(f)))
-      case InSet(a, vs) if vs.nonEmpty =>
-        val ks = vs.toSeq.map(x => eqFor(a, x, a.dataType))
-        if (ks.exists(_.isEmpty)) None
-        else Some(f => ks.flatten.exists(_(f)))
-      case GreaterThan(a, Literal(x, dt))          => rgFor(a, x, dt, isLo = true,  strict = true)
-      case GreaterThanOrEqual(a, Literal(x, dt))   => rgFor(a, x, dt, isLo = true,  strict = false)
-      case LessThan(a, Literal(x, dt))             => rgFor(a, x, dt, isLo = false, strict = true)
-      case LessThanOrEqual(a, Literal(x, dt))      => rgFor(a, x, dt, isLo = false, strict = false)
-      case GreaterThan(Literal(x, dt), a)          => rgFor(a, x, dt, isLo = false, strict = true)
-      case GreaterThanOrEqual(Literal(x, dt), a)   => rgFor(a, x, dt, isLo = false, strict = false)
-      case LessThan(Literal(x, dt), a)             => rgFor(a, x, dt, isLo = true,  strict = true)
-      case LessThanOrEqual(Literal(x, dt), a)      => rgFor(a, x, dt, isLo = true,  strict = false)
-      // prefix probe: every p-prefixed string sorts >= p, so the lower
-      // bound alone prunes files whose max < p — sound without the
-      // fiddly next-after-prefix upper bound (utf8 byte order vs string
-      // order makes a tight hi unsafe to hand-roll)
-      case StartsWith(a, Literal(x, StringType)) if x != null =>
-        physCol(a).map(c => rangeKeep(c, Some(x.toString), None))
-      case And(l, r) => (keepFor(l), keepFor(r)) match {
-        case (Some(a), Some(b)) => Some(f => a(f) && b(f))
-        case (one, other)       => one.orElse(other)
-      }
-      case Or(l, r) => (keepFor(l), keepFor(r)) match {
-        case (Some(a), Some(b)) => Some(f => a(f) || b(f))
-        case _                  => None
-      }
-      case _ => None
-    }
-
     override def listFiles(partitionFilters: Seq[Expression],
                            dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val keeps = dataFilters.flatMap(keepFor)
-      val cand = if (keeps.isEmpty) live else live.filter(f => keeps.forall(_(f)))
+      val cand =
+        if (dataFilters.isEmpty) live
+        else live.filter(f =>
+          StatsSkip.keep(m.stats.get(f), dataFilters, dataSchema, bloomKeep(f)))
       Seq(PartitionDirectory(InternalRow.empty,
         cand.map(f => FileStatusWithMetadata(statuses(f), Map.empty))))
     }
@@ -1413,7 +1172,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def sqlScan(name: String): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.{DataType, StructField, StructType}
     val v = currentVersion(name).getOrElse(
       throw new IllegalStateException(s"TxLogTable $name does not exist"))
     val m = metaOf(name, v)
@@ -1421,9 +1179,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // legacy unmapped manifests and empty tables declare no physical
     // schema — serve the plain snapshot read (nothing to prune anyway)
     if (m.cols.isEmpty || live.isEmpty) return readVersion(name, v)
-    val idx = new ManifestFileIndex(name, v, m, live)
-    val dataSchema = StructType(m.cols.map(c =>
-      StructField(c.physical, DataType.fromDDL(c.typeDdl))))
+    val dataSchema = physicalSchema(m.cols)
+    val idx = new ManifestFileIndex(name, v, m, live, dataSchema)
     val rel = HadoopFsRelation(idx, new StructType(), dataSchema, None,
       new ParquetFileFormat(), Map.empty[String, String])(spark)
     val base = spark.baseRelationToDataFrame(rel)
@@ -1483,7 +1240,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // contract on every DDL would be worse.
     val withStats = Meta(next,
       m.statsCols.filter(phys),
-      m.stats.filter { case ((_, c), _) => phys(c) }, m.txns, m.edels,
+      m.stats.flatMap { case (f, st) => TxLogTable.restrict(st, phys).map(f -> _) },
+      m.txns, m.edels,
       m.bloomCols.filter { case (c, _) => phys(c) },
       m.blooms.filter { case ((_, c), _) => phys(c) },
       m.checks)
@@ -1550,7 +1308,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       else all.repartitionByRange(math.max(1, targetFiles), clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
     val added = writeBatch(name, compacted, m.cols)
-    val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.statsCols),
+    val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
       blooms = rebuiltBlooms(name, m, added), edels = Nil)
     if (!tryCommit(name, v + 1, renderM(withStats, added)))
       throw new IllegalStateException(
@@ -1586,7 +1344,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     if (compacted eq all) return (live.size, live.size)
     val added = writeBatch(name, compacted, m.cols)
     val withStats = m.copy(
-      stats = m.stats ++ batchStats(name, added, m.statsCols),
+      stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
       blooms = rebuiltBlooms(name, m, added), edels = Nil)
     if (!tryCommit(name, v + 1, renderM(withStats, added)))
       throw new IllegalStateException(
@@ -1666,4 +1424,16 @@ object TxLogTable {
     * to the data files in `scope` (those live when the delete committed),
     * so later appends can re-insert a key visibly. */
   final case class EqDelete(file: String, keyPhys: Seq[String], scope: Set[String])
+
+  /** reads `#fstat` JSON with decimals as exact big-decimal nodes, the
+    * encoding [[StatsSkip]] compares decimals on */
+  private val statsMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+
+  /** `st` over the columns `keep` accepts; None when no column is left */
+  private def restrict(st: FileStats, keep: String => Boolean): Option[FileStats] = {
+    val r = st.copy(min = st.min.filter(e => keep(e._1)), max = st.max.filter(e => keep(e._1)),
+      nullCount = st.nullCount.filter(e => keep(e._1)))
+    if (r.min.isEmpty && r.nullCount.isEmpty) None else Some(r)
+  }
 }

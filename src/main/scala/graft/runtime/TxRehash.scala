@@ -311,33 +311,46 @@ object TxPitCleaner {
     val v = t.currentVersion(pitTable).getOrElse(
       throw new IllegalStateException(s"TxLogTable $pitTable does not exist"))
     val live = t.files(pitTable, v)
+    val sdtsMap = t.mapping(pitTable, v).find(_.logical == sdts)
     // the active set is snapshot metadata — O(log t) rows under logarithmic
-    // retention — so it is collected (for stat pruning) and broadcast (for
-    // the probe/rewrite). Values compare the way stats are rendered: CAST
-    // AS STRING.
-    val activeStr = active.select(col(sdts).cast("string")).collect()
-      .flatMap(r => Option(r.getString(0))).toSet
-    val physSdts = t.mapping(pitTable, v).find(_.logical == sdts)
-      .map(_.physical).getOrElse(sdts)
+    // retention — so it is collected once, typed as the PIT column, for the
+    // stat skip and the probe/rewrite predicate
+    val activeVals = active.select(sdtsMap.fold(col(sdts))(c => col(sdts).cast(c.typeDdl)))
+      .collect().flatMap(r => Option(r.get(0))).toSeq
     val stats = t.fileStats(pitTable, v)
     // min == max is the only SOUND stat skip for a set-membership DELETE: a
     // wider [min,max] can hide a doomed middle value even when both
-    // endpoints are active. (All-NULL files carry no stats entry → probed,
+    // endpoints are active. A single-valued file is decided when the stats
+    // prove its value is no active value (doomed) or one of them (kept);
+    // anything else is probed. (All-NULL files carry no min/max → probed,
     // then kept by the NULL rule.)
-    val (decided, unsure) = live.partition(f =>
-      stats.get((f, physSdts)).exists { case (mn, mx) => mn == mx })
-    val doomedByStats = decided.filter(f => !activeStr(stats((f, physSdts))._1))
+    val (decided, doomedByStats) = sdtsMap.filter(_ => stats.nonEmpty) match {
+      case None => (Seq.empty[String], Seq.empty[String])
+      case Some(c) =>
+        import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GreaterThan, In, LessThan, Literal, Or}
+        import org.apache.spark.sql.types.{DataType, StructField, StructType}
+        val dt = DataType.fromDDL(c.typeDdl)
+        val a = AttributeReference(c.physical, dt)()
+        val schema = StructType(Seq(StructField(c.physical, dt)))
+        val lits = activeVals.map(Literal.create(_, dt))
+        def proves(f: String, e: Expression) =
+          !graft.sources.StatsSkip.keep(stats.get(f), Seq(e), schema)
+        val single = live.filter(f => stats.get(f).exists(st =>
+          st.min.get(c.physical).exists(mn => st.max.get(c.physical).contains(mn))))
+        val doomed = single.filter(f => proves(f, In(a, lits)))
+        val kept = single.filter(f =>
+          lits.exists(l => proves(f, Or(LessThan(a, l), GreaterThan(a, l)))))
+        (doomed ++ kept, doomed)
+    }
+    val unsure = live.filterNot(decided.contains)
     // membership predicate against the ALREADY-COLLECTED active set: the
     // probe and the rewrite used to re-evaluate the snapshot scan (plus a
     // broadcast) each — two extra jobs per cleanup for a frame that is
-    // already driver-side. An in-set literal keeps both single-scan. The
-    // string-cast comparison is 1:1 with timestamp equality (one render
-    // per value, the same form the stats use). Guarded: an unexpectedly
-    // huge active set falls back to the broadcast join rather than a
-    // million-literal predicate.
-    val inSet = activeStr.size <= 10000
-    def isActive(c: org.apache.spark.sql.Column) =
-      c.cast("string").isin(activeStr.toSeq: _*)
+    // already driver-side. An in-set literal keeps both single-scan.
+    // Guarded: an unexpectedly huge active set falls back to the broadcast
+    // join rather than a million-literal predicate.
+    val inSet = activeVals.size <= 10000
+    def isActive(c: org.apache.spark.sql.Column) = c.isin(activeVals: _*)
     val doomedByProbe =
       if (unsure.isEmpty) Seq.empty[String]
       else {

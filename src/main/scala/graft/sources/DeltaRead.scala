@@ -434,7 +434,7 @@ object DeltaRead {
         // add.stats is a JSON STRING per the protocol; unparseable or
         // absent stats degrade to "no skipping", never to an error
         val stats = Option(a.get("stats")).filter(_.isTextual).flatMap { s =>
-          scala.util.Try(mapper.readTree(s.asText)).toOption.flatMap(parseStats)
+          scala.util.Try(mapper.readTree(s.asText)).toOption.flatMap(StatsSkip.FileStats.parse)
         }.map(st => st.copy(
           min = st.min.map { case (k, v) => logicalKey(k) -> v },
           max = st.max.map { case (k, v) => logicalKey(k) -> v },
@@ -594,17 +594,6 @@ object DeltaRead {
     snap.files.filter(f => keep.forall { case (c, vs) =>
       f.partitionValues.get(c).exists(vs.contains)
     })
-
-  private def parseStats(n: JsonNode): Option[StatsSkip.FileStats] = {
-    if (!n.has("numRecords")) return None
-    def objMap(field: String): Map[String, JsonNode] =
-      Option(n.get(field)).filter(_.isObject).toSeq.flatMap { o =>
-        o.fieldNames().asScala.map(k => k -> o.get(k)).toSeq
-      }.toMap
-    Some(StatsSkip.FileStats(n.get("numRecords").asLong,
-      objMap("minValues"), objMap("maxValues"),
-      objMap("nullCount").collect { case (k, v) if v.isIntegralNumber => k -> v.asLong }))
-  }
 
   /** An add/remove action's dataChange flag — required by the protocol,
     * but a lax writer may omit it; absent means "changes data" (the

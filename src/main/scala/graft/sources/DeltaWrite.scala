@@ -37,7 +37,7 @@ import org.apache.spark.sql.types._
   * Per-file `add.stats` (numRecords / minValues / maxValues / nullCount)
   * are extracted from each written file's parquet footer and carried
   * through checkpoints, feeding [[StatsSkip]]'s file skipping on the read
-  * side — see [[footerStats]] for the emitted type coverage.
+  * side — see [[portableType]] for the emitted type coverage.
   *
   * Scope (declared): optimistic single-attempt writer — version =
   * head + 1 published through a hard-link CAS, so a racing writer LOSES
@@ -245,10 +245,10 @@ object DeltaWrite {
       add.put("size", f.size)
       add.put("modificationTime", 0L)
       add.put("dataChange", true)
-      f.stats.foreach(st => add.put("stats", statsJson(st.copy(
+      f.stats.foreach(st => add.put("stats", st.copy(
         min = st.min.map { case (k, v) => physKey(k) -> v },
         max = st.max.map { case (k, v) => physKey(k) -> v },
-        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }))))
+        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }).json))
       f.deletionVector.foreach { d =>
         val dvn = add.putObject("deletionVector")
         dvn.put("storageType", d.storageType)
@@ -327,7 +327,7 @@ object DeltaWrite {
       Files.createDirectories(target.getParent)
       Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
       (DeltaRead.AddFile(segs.mkString("/"), pv, Files.size(target)),
-        footerStats(hadoopConf, target, dataSchema))
+        portableRanges(hadoopConf, target, dataSchema).map(_.stats.json))
     }
     deleteRecursively(staging)
     adds
@@ -733,35 +733,19 @@ object DeltaWrite {
     version
   }
 
-  /** Publish `lines` as commit `version` iff no other writer claimed it —
-    * the hard-link CAS TxLogTable.tryCommit uses (createLink fails when
-    * the target exists, where a rename would silently REPLACE the
-    * winner's commit and tear the history). Commit visibility is this
-    * link, after every data file is in place. A losing writer gets a
-    * loud ConcurrentModificationException with the log intact — re-read
-    * the head and retry with a fresh version. */
+  /** Publish `lines` as commit `version` iff no other writer claimed it
+    * ([[CommitCas]]). Commit visibility is this publish, after every data
+    * file is in place. A losing writer gets a loud
+    * ConcurrentModificationException with the log intact — re-read the
+    * head and retry with a fresh version. */
   private[sources] def commitCas(logDir: Path, version: Long,
                                  lines: Seq[String]): Unit = {
-    Files.createDirectories(logDir)
     val target = logDir.resolve(f"$version%020d.json")
-    val tmp = Files.createTempFile(logDir, s".commit_$version", ".tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    def lost(): Nothing = {
-      Files.deleteIfExists(tmp)
+    if (!CommitCas.publish(target,
+        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)))
       throw new java.util.ConcurrentModificationException(
         s"Delta version $version was committed concurrently ($target exists) — " +
           "re-read the head and retry")
-    }
-    try { Files.createLink(target, tmp); Files.delete(tmp) }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => lost()
-      case _: UnsupportedOperationException =>
-        // no hard links on this filesystem: exists-check + atomic rename
-        // (POSIX rename still replaces, so the check is the best fence)
-        if (Files.exists(target)) lost()
-        try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException => lost() }
-    }
   }
 
   /** Merge-on-read DELETE via deletion vectors: rows matching `condition`
@@ -906,10 +890,10 @@ object DeltaWrite {
       an.put("size", f.size)
       an.put("modificationTime", 0L)
       an.put("dataChange", true)
-      f.stats.foreach(st => an.put("stats", statsJson(st.copy(
+      f.stats.foreach(st => an.put("stats", st.copy(
         min = st.min.map { case (k, v) => physKey(k) -> v },
         max = st.max.map { case (k, v) => physKey(k) -> v },
-        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }))))
+        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }).json))
       val dvn = an.putObject("deletionVector")
       dvn.put("storageType", "u")
       dvn.put("pathOrInlineDv", encUuid)
@@ -1179,10 +1163,10 @@ object DeltaWrite {
       f.partitionValues.map { case (k, v) => physKey(k) -> v },
       java.lang.Long.valueOf(f.size), java.lang.Long.valueOf(0L),
       java.lang.Boolean.FALSE,
-      f.stats.map(st => statsJson(st.copy(
+      f.stats.map(st => st.copy(
         min = st.min.map { case (k, v) => physKey(k) -> v },
         max = st.max.map { case (k, v) => physKey(k) -> v },
-        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }))).orNull,
+        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }).json).orNull,
       f.deletionVector.map(d => org.apache.spark.sql.Row(d.storageType,
         d.pathOrInlineDv, d.offset.map(Integer.valueOf).orNull,
         Integer.valueOf(d.sizeInBytes),
@@ -1362,55 +1346,64 @@ object DeltaWrite {
     mapper.writeValueAsString(m)
   }
 
-  /** Per-file `add.stats` JSON from the written file's parquet footer —
-    * driver-side, bounded by #files-per-commit, the same seam Delta's own
-    * writers use when stats collection is on. Row-group chunk statistics
-    * are VALID BOUNDS by the parquet spec even when the writer truncated
-    * them (min rounds down, max rounds up), so [[StatsSkip]]'s interval
-    * tests stay sound. Emitted types: integral, float/double, string,
-    * boolean, date (ISO). Timestamps/decimals/binary/nested are omitted —
-    * a missing stat never skips. A column that is all-null in the file
+  /** Typed per-file statistics from one parquet footer — the ONE footer
+    * reader behind Delta `add.stats`, Iceberg manifest
+    * `lower_bounds`/`upper_bounds` and TxLogTable's `#fstat` lines,
+    * driver-side and bounded by #files-per-commit. Row-group chunk
+    * statistics are VALID BOUNDS by the parquet spec even when the writer
+    * truncated them (min rounds down, max rounds up), so [[StatsSkip]]'s
+    * interval tests stay sound. Values: Long (integrals), Double
+    * (fractionals), String (strings; dates as ISO), Boolean,
+    * java.math.BigDecimal (decimals) and Long epoch micros (timestamps,
+    * with or without time zone). A column that is all-null in the file
     * gets no min/max but a full nullCount, which is exactly what IsNotNull
-    * skipping needs. */
-  /** Typed min/max/nullCount ranges from one parquet footer — the shared
-    * seam behind Delta `add.stats` JSON and Iceberg manifest
-    * `lower_bounds`/`upper_bounds`. Values: Long (integrals), Double
-    * (fractionals), String (strings; dates as ISO), Boolean. */
-  private[sources] final case class FooterRanges(numRecords: Long,
+    * skipping needs; `unbounded` names the columns that hold values but
+    * whose footer gives no usable bounds (INT96 timestamps, NANOS, a
+    * writer that dropped stats). */
+  private[graft] final case class FooterRanges(numRecords: Long,
       mins: Map[String, Any], maxs: Map[String, Any],
-      nulls: Map[String, Long])
-
-  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-                          file: Path, dataSchema: StructType): Option[String] =
-    footerRanges(conf, file, dataSchema).map { fr =>
-      val n = mapper.createObjectNode()
-      n.put("numRecords", fr.numRecords)
-      val minN = n.putObject("minValues"); val maxN = n.putObject("maxValues")
-      def putVal(o: com.fasterxml.jackson.databind.node.ObjectNode,
-                 k: String, v: Any): Unit = v match {
-        case l: java.lang.Long => o.put(k, l.longValue)
-        case d: java.lang.Double => o.put(k, d.doubleValue)
-        case b: java.lang.Boolean => o.put(k, b.booleanValue)
-        case s: String => o.put(k, s)
-        case _ => ()
+      nulls: Map[String, Long], unbounded: Set[String]) {
+    def stats: StatsSkip.FileStats = {
+      import com.fasterxml.jackson.databind.JsonNode
+      import com.fasterxml.jackson.databind.node.{BooleanNode, DecimalNode, DoubleNode, LongNode, TextNode}
+      def conv(m: Map[String, Any]): Map[String, JsonNode] = m.flatMap {
+        case (k, l: java.lang.Long) => Some(k -> LongNode.valueOf(l))
+        case (k, d: java.lang.Double) => Some(k -> DoubleNode.valueOf(d))
+        case (k, b: java.lang.Boolean) => Some(k -> BooleanNode.valueOf(b))
+        case (k, s: String) => Some(k -> TextNode.valueOf(s))
+        case (k, d: java.math.BigDecimal) => Some(k -> DecimalNode.valueOf(d))
+        case _ => None
       }
-      fr.mins.foreach { case (k, v) => putVal(minN, k, v) }
-      fr.maxs.foreach { case (k, v) => putVal(maxN, k, v) }
-      val nullN = n.putObject("nullCount")
-      fr.nulls.foreach { case (k, v) => nullN.put(k, v) }
-      mapper.writeValueAsString(n)
+      StatsSkip.FileStats(numRecords, conv(mins), conv(maxs), nulls)
     }
+  }
 
-  private[sources] def footerRanges(conf: org.apache.hadoop.conf.Configuration,
-                                    file: Path,
-                                    dataSchema: StructType): Option[FooterRanges] = {
+  /** the column types Delta `add.stats` and Iceberg bounds carry:
+    * integral, float/double, string, boolean, date (ISO). Timestamps,
+    * decimals, binary and nested types are omitted — a missing stat
+    * never skips. */
+  private def portableType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | StringType | BooleanType | DateType => true
+    case _ => false
+  }
+
+  /** [[footerRanges]] over the [[portableType]] columns only. */
+  private[sources] def portableRanges(conf: org.apache.hadoop.conf.Configuration,
+                                      file: Path,
+                                      dataSchema: StructType): Option[FooterRanges] =
+    footerRanges(conf, file, StructType(dataSchema.filter(f => portableType(f.dataType))))
+
+  private[graft] def footerRanges(conf: org.apache.hadoop.conf.Configuration,
+                                  file: Path,
+                                  dataSchema: StructType): Option[FooterRanges] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val supported = dataSchema.fields.filter(f => f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | StringType | BooleanType | DateType => true
-      case _ => false
-    })
+    val supported = dataSchema.fields.filter(f => portableType(f.dataType) ||
+      (f.dataType match {
+        case _: DecimalType | TimestampType | TimestampNTZType => true
+        case _ => false
+      }))
     val hPath = new org.apache.hadoop.fs.Path(file.toUri)
     val rdr = try ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
     catch { case _: Exception => return None }
@@ -1420,77 +1413,97 @@ object DeltaWrite {
       val mins = scala.collection.mutable.LinkedHashMap[String, Any]()
       val maxs = scala.collection.mutable.LinkedHashMap[String, Any]()
       val nulls = scala.collection.mutable.LinkedHashMap[String, Long]()
+      val unbounded = Set.newBuilder[String]
       supported.foreach { f =>
         var nullCount = 0L
         var nullsKnown = true
         var lo: Any = null
         var hi: Any = null
         var rangeKnown = true
+        var hasValues = false
+        var prim: org.apache.parquet.schema.PrimitiveType = null
         blocks.asScala.foreach { b =>
           b.getColumns.asScala.find(_.getPath.toDotString == f.name) match {
             case None => nullsKnown = false; rangeKnown = false
             case Some(c) =>
+              prim = c.getPrimitiveType
               val st = c.getStatistics
-              if (st == null || st.isEmpty) { nullsKnown = false; rangeKnown = false }
-              else {
+              if (st == null || st.isEmpty) {
+                nullsKnown = false; rangeKnown = false
+                if (b.getRowCount > 0) hasValues = true
+              } else {
                 if (st.isNumNullsSet) nullCount += st.getNumNulls else nullsKnown = false
                 if (st.hasNonNullValue) {
+                  hasValues = true
                   val (mn, mx) = (st.genericGetMin, st.genericGetMax)
-                  if (lo == null || cmpStat(mn, lo) < 0) lo = mn
-                  if (hi == null || cmpStat(mx, hi) > 0) hi = mx
-                } else if (!st.isNumNullsSet || st.getNumNulls < b.getRowCount)
+                  if (lo == null || cmpStat(mn, lo, f.dataType) < 0) lo = mn
+                  if (hi == null || cmpStat(mx, hi, f.dataType) > 0) hi = mx
+                } else if (!st.isNumNullsSet || st.getNumNulls < b.getRowCount) {
                   rangeKnown = false // values exist but no bounds — unusable
+                  hasValues = true
+                }
               }
           }
         }
-        if (rangeKnown && lo != null) {
-          val (mn, mx) = (statToJsonValue(lo, f.dataType),
-            statToJsonValue(hi, f.dataType))
-          if (mn != null && mx != null) { mins(f.name) = mn; maxs(f.name) = mx }
-        }
+        val (mn, mx) =
+          if (rangeKnown && lo != null)
+            (typedStat(lo, f.dataType, prim), typedStat(hi, f.dataType, prim))
+          else (null, null)
+        if (mn != null && mx != null) { mins(f.name) = mn; maxs(f.name) = mx }
+        else if (hasValues) unbounded += f.name
         if (nullsKnown) nulls(f.name) = nullCount
       }
-      Some(FooterRanges(numRecords, mins.toMap, maxs.toMap, nulls.toMap))
+      Some(FooterRanges(numRecords, mins.toMap, maxs.toMap, nulls.toMap,
+        unbounded.result()))
     } catch { case _: Exception => None }
     finally rdr.close()
   }
 
   /** parquet footer min/max values are Comparable within a column's
-    * physical type — except Binary, which must combine in UNSIGNED
-    * lexicographic order (Spark's string order; Binary.compareTo has had
-    * signed-byte history across parquet-mr versions). */
-  private def cmpStat(a: Any, b: Any): Int = (a, b) match {
+    * physical type — except Binary, whose order depends on the column:
+    * strings combine in UNSIGNED lexicographic order (Spark's string
+    * order; Binary.compareTo has had signed-byte history across
+    * parquet-mr versions), while a DECIMAL stored as binary is a SIGNED
+    * big-endian two's-complement integer — combining those unsigned would
+    * let mixed-sign row groups store min > true min. */
+  private def cmpStat(a: Any, b: Any, dt: DataType): Int = (a, b) match {
     case (x: org.apache.parquet.io.api.Binary, y: org.apache.parquet.io.api.Binary) =>
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(x.getBytes)
+      if (dt.isInstanceOf[DecimalType])
+        new java.math.BigInteger(x.getBytes).compareTo(new java.math.BigInteger(y.getBytes))
+      else org.apache.spark.unsafe.types.UTF8String.fromBytes(x.getBytes)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromBytes(y.getBytes))
     case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
-  /** footer value → the JSON-friendly domain [[StatsSkip]] parses back:
-    * integrals widen to Long, fractionals to Double, strings decode UTF8,
-    * dates become ISO text. */
-  private def statToJsonValue(v: Any, dt: DataType): Any = (dt, v) match {
-    case (DateType, i: Number) =>
-      java.time.LocalDate.ofEpochDay(i.longValue).toString
-    case (StringType, b: org.apache.parquet.io.api.Binary) => b.toStringUsingUTF8
-    case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
-      java.lang.Long.valueOf(n.longValue)
-    case (FloatType | DoubleType, n: Number) =>
-      java.lang.Double.valueOf(n.doubleValue)
-    case (BooleanType, b: java.lang.Boolean) => b
-    case _ => null
-  }
-
-  /** re-serialize parsed stats for checkpoint rows. */
-  private def statsJson(st: StatsSkip.FileStats): String = {
-    val n = mapper.createObjectNode()
-    n.put("numRecords", st.numRecords)
-    val mn = n.putObject("minValues")
-    st.min.foreach { case (k, v) => mn.set[com.fasterxml.jackson.databind.JsonNode](k, v) }
-    val mx = n.putObject("maxValues")
-    st.max.foreach { case (k, v) => mx.set[com.fasterxml.jackson.databind.JsonNode](k, v) }
-    val nc = n.putObject("nullCount"); st.nullCount.foreach { case (k, v) => nc.put(k, v) }
-    mapper.writeValueAsString(n)
+  /** footer value → the typed domain of [[FooterRanges]]; null when the
+    * physical encoding does not match the column type exactly (the
+    * column then counts as unbounded). */
+  private def typedStat(v: Any, dt: DataType,
+                        prim: org.apache.parquet.schema.PrimitiveType): Any = {
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+    (dt, v, prim.getLogicalTypeAnnotation) match {
+      case (DateType, i: Number, _) =>
+        java.time.LocalDate.ofEpochDay(i.longValue).toString
+      case (StringType, b: Binary, _) => b.toStringUsingUTF8
+      case (ByteType | ShortType | IntegerType | LongType, n: Number, _) =>
+        java.lang.Long.valueOf(n.longValue)
+      case (FloatType | DoubleType, n: Number, _) =>
+        java.lang.Double.valueOf(n.doubleValue)
+      case (BooleanType, b: java.lang.Boolean, _) => b
+      case (_: DecimalType, n: Number, d: DecimalLogicalTypeAnnotation) =>
+        java.math.BigDecimal.valueOf(n.longValue, d.getScale)
+      case (_: DecimalType, b: Binary, d: DecimalLogicalTypeAnnotation) =>
+        new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), d.getScale)
+      case (TimestampType | TimestampNTZType, n: java.lang.Long, t: TimestampLogicalTypeAnnotation)
+          if t.isAdjustedToUTC == (dt == TimestampType) =>
+        t.getUnit match {
+          case TimeUnit.MICROS => n
+          case TimeUnit.MILLIS => java.lang.Long.valueOf(Math.multiplyExact(n.longValue, 1000L))
+          case _ => null // NANOS: Spark reads these as BIGINT, not timestamps
+        }
+      case _ => null
+    }
   }
 
   /** Log paths are RFC 2396 percent-encoded relative paths. */

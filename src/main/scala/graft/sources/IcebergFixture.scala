@@ -143,21 +143,6 @@ object IcebergFixture {
     }
   }
 
-  /** Typed footer ranges → the JsonNode-valued [[StatsSkip.FileStats]]
-    * shape both readers share. */
-  private def rangesToStats(fr: DeltaWrite.FooterRanges): StatsSkip.FileStats = {
-    import com.fasterxml.jackson.databind.JsonNode
-    import com.fasterxml.jackson.databind.node.{BooleanNode, DoubleNode, LongNode, TextNode}
-    def conv(m: Map[String, Any]): Map[String, JsonNode] = m.flatMap {
-      case (k, l: java.lang.Long) => Some(k -> LongNode.valueOf(l))
-      case (k, d: java.lang.Double) => Some(k -> DoubleNode.valueOf(d))
-      case (k, b: java.lang.Boolean) => Some(k -> BooleanNode.valueOf(b))
-      case (k, s: String) => Some(k -> TextNode.valueOf(s))
-      case _ => None
-    }
-    StatsSkip.FileStats(fr.numRecords, conv(fr.mins), conv(fr.maxs), fr.nulls)
-  }
-
   private def writeAvro(file: java.nio.file.Path, schema: Schema,
                         rows: Seq[GenericRecord]): Unit = {
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
@@ -533,8 +518,8 @@ object IcebergFixture {
     val added = written.map { case (p, pv, n, size) =>
       val st =
         if (addFormat == "parquet")
-          DeltaWrite.footerRanges(hadoopConf, Paths.get(p), schema)
-            .map(rangesToStats)
+          DeltaWrite.portableRanges(hadoopConf, Paths.get(p), schema)
+            .map(_.stats)
         else None
       entry(1, p, pv, n, size, fmt = addFormat, stats = st)
     }
@@ -660,8 +645,7 @@ object IcebergFixture {
     * ([[commitSnapshot]], [[IcebergWrite.rollback]],
     * [[IcebergWrite.expireSnapshots]]) — the table's single most
     * safety-critical primitive, kept in ONE place. The commit point is
-    * creating `v<N>.metadata.json`, which a hard link makes exclusive
-    * (ATOMIC_MOVE fallback where links are unsupported) — a racing
+    * creating `v<N>.metadata.json` through [[CommitCas]] — a racing
     * writer that computed the same N fails loudly with the winner's
     * state intact. The version hint is advisory (readers fall back to
     * the max-v* scan), so the winner updating it after the CAS is
@@ -670,24 +654,11 @@ object IcebergFixture {
       newVersion: Int,
       meta: com.fasterxml.jackson.databind.JsonNode): Unit = {
     val target = metaDir.resolve(s"v$newVersion.metadata.json")
-    val tmp = Files.createTempFile(metaDir, ".meta", ".tmp")
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8))
-    def lost(): Nothing = {
-      Files.deleteIfExists(tmp)
+    if (!CommitCas.publish(target, mapper.writerWithDefaultPrettyPrinter()
+        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8)))
       throw new java.util.ConcurrentModificationException(
         s"Iceberg metadata version $newVersion was committed concurrently " +
           s"($target exists) — re-read the table and retry")
-    }
-    try { Files.createLink(target, tmp); Files.delete(tmp) }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => lost()
-      case _: UnsupportedOperationException =>
-        if (Files.exists(target)) lost()
-        try Files.move(tmp, target,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException => lost() }
-    }
     Files.write(metaDir.resolve("version-hint.text"),
       newVersion.toString.getBytes(StandardCharsets.UTF_8))
   }

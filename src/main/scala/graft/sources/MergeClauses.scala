@@ -79,9 +79,9 @@ object MergeClauses {
     * [[sourcePrecheck]]'s bounds imply — the prune predicate every MERGE
     * hands to StatsSkip. A key whose bounds are null (all-NULL column)
     * contributes no filter, same as before. */
-  private[sources] def keyBoundFilters(b: org.apache.spark.sql.Row,
-                                       keyCols: Seq[String],
-                                       schema: StructType)
+  private[graft] def keyBoundFilters(b: org.apache.spark.sql.Row,
+                                     keyCols: Seq[String],
+                                     schema: StructType)
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
     keyCols.zipWithIndex.flatMap { case (k, i) =>
       import org.apache.spark.sql.catalyst.expressions._

@@ -4,9 +4,12 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Per-file data skipping over Delta `add.stats` (numRecords / minValues /
   * maxValues / nullCount — the protocol's optional per-file column stats).
+  * The one min/max evaluator of all three formats: Iceberg manifest bounds
+  * and TxLogTable's `#fstat` lines are read into the same [[FileStats]].
   *
   * [[DeltaFileIndex.listFiles]] receives the scan's pushed dataFilters and
   * asks, per live file, "can any row of this file satisfy them?" — a file
@@ -33,40 +36,78 @@ object StatsSkip {
   /** Stats of one file, as parsed JSON (typing is deferred to the table
     * schema at evaluation time). */
   final case class FileStats(numRecords: Long, min: Map[String, JsonNode],
-                             max: Map[String, JsonNode], nullCount: Map[String, Long])
-
-  /** true ⇔ the file may contain a row satisfying ALL `filters`. */
-  def keep(stats: Option[FileStats], filters: Seq[Expression],
-           dataSchema: StructType): Boolean = stats match {
-    case None => true
-    case Some(st) => filters.forall(f => mayMatch(f, st, dataSchema))
+                             max: Map[String, JsonNode], nullCount: Map[String, Long]) {
+    /** the stats as `add.stats` JSON */
+    def json: String = {
+      val n = mapper.createObjectNode()
+      n.put("numRecords", numRecords)
+      val mn = n.putObject("minValues")
+      min.foreach { case (k, v) => mn.set[JsonNode](k, v) }
+      val mx = n.putObject("maxValues")
+      max.foreach { case (k, v) => mx.set[JsonNode](k, v) }
+      val nc = n.putObject("nullCount"); nullCount.foreach { case (k, v) => nc.put(k, v) }
+      mapper.writeValueAsString(n)
+    }
   }
 
-  private def mayMatch(e: Expression, st: FileStats, sch: StructType): Boolean = e match {
-    case And(l, r) => mayMatch(l, st, sch) && mayMatch(r, st, sch)
-    case Or(l, r) => mayMatch(l, st, sch) || mayMatch(r, st, sch)
-    case EqualTo(a: AttributeReference, Literal(v, _)) => inRange(a, v, st, sch)
-    case EqualTo(Literal(v, _), a: AttributeReference) => inRange(a, v, st, sch)
-    case EqualNullSafe(a: AttributeReference, Literal(v, _)) =>
-      if (v == null) mayHaveNull(a, st) else inRange(a, v, st, sch)
-    case EqualNullSafe(Literal(v, _), a: AttributeReference) =>
-      if (v == null) mayHaveNull(a, st) else inRange(a, v, st, sch)
-    case LessThan(a: AttributeReference, Literal(v, _)) => cmpMin(a, v, st, sch) < 0
-    case LessThan(Literal(v, _), a: AttributeReference) => cmpMax(a, v, st, sch) > 0
-    case LessThanOrEqual(a: AttributeReference, Literal(v, _)) => cmpMin(a, v, st, sch) <= 0
-    case LessThanOrEqual(Literal(v, _), a: AttributeReference) => cmpMax(a, v, st, sch) >= 0
-    case GreaterThan(a: AttributeReference, Literal(v, _)) => cmpMax(a, v, st, sch) > 0
-    case GreaterThan(Literal(v, _), a: AttributeReference) => cmpMin(a, v, st, sch) < 0
-    case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) => cmpMax(a, v, st, sch) >= 0
-    case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) => cmpMin(a, v, st, sch) <= 0
-    case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.exists { case Literal(v, _) => inRange(a, v, st, sch) }
-    case InSet(a: AttributeReference, vs) => vs.exists(v => inRange(a, v, st, sch))
-    case IsNull(a: AttributeReference) => mayHaveNull(a, st)
-    case IsNotNull(a: AttributeReference) => !allNull(a, st)
-    case StartsWith(a: AttributeReference, Literal(p: UTF8String, StringType)) =>
-      prefixInRange(a, p, st, sch)
-    case _ => true // unknown shape — never prune on it
+  object FileStats {
+    /** an `add.stats`-shaped JSON object back to stats; None without
+      * numRecords */
+    def parse(n: JsonNode): Option[FileStats] = {
+      if (!n.has("numRecords")) return None
+      def objMap(field: String): Map[String, JsonNode] =
+        Option(n.get(field)).filter(_.isObject).toSeq.flatMap { o =>
+          o.fieldNames().asScala.map(k => k -> o.get(k)).toSeq
+        }.toMap
+      Some(FileStats(n.get("numRecords").asLong,
+        objMap("minValues"), objMap("maxValues"),
+        objMap("nullCount").collect { case (k, v) if v.isIntegralNumber => k -> v.asLong }))
+    }
+  }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val Unknown = FileStats(0L, Map.empty, Map.empty, Map.empty)
+
+  /** true ⇔ the file may contain a row satisfying ALL `filters`.
+    * `mayContain(a, v)` is an optional second channel for equality and
+    * IN (a per-file Bloom filter): false proves `v` absent from `a`. */
+  def keep(stats: Option[FileStats], filters: Seq[Expression],
+           dataSchema: StructType,
+           mayContain: (AttributeReference, Any) => Boolean = (_, _) => true): Boolean =
+    filters.forall(f => mayMatch(f, stats.getOrElse(Unknown), dataSchema, mayContain))
+
+  private def mayMatch(e: Expression, st: FileStats, sch: StructType,
+                       mayContain: (AttributeReference, Any) => Boolean): Boolean = {
+    def inRange(a: AttributeReference, v: Any): Boolean =
+      v != null && // null-rejecting comparison: no row matches
+        cmpMin(a, v, st, sch) <= 0 && cmpMax(a, v, st, sch) >= 0 && mayContain(a, v)
+    def go(e: Expression): Boolean = e match {
+      case And(l, r) => go(l) && go(r)
+      case Or(l, r) => go(l) || go(r)
+      case EqualTo(a: AttributeReference, Literal(v, _)) => inRange(a, v)
+      case EqualTo(Literal(v, _), a: AttributeReference) => inRange(a, v)
+      case EqualNullSafe(a: AttributeReference, Literal(v, _)) =>
+        if (v == null) mayHaveNull(a, st) else inRange(a, v)
+      case EqualNullSafe(Literal(v, _), a: AttributeReference) =>
+        if (v == null) mayHaveNull(a, st) else inRange(a, v)
+      case LessThan(a: AttributeReference, Literal(v, _)) => cmpMin(a, v, st, sch) < 0
+      case LessThan(Literal(v, _), a: AttributeReference) => cmpMax(a, v, st, sch) > 0
+      case LessThanOrEqual(a: AttributeReference, Literal(v, _)) => cmpMin(a, v, st, sch) <= 0
+      case LessThanOrEqual(Literal(v, _), a: AttributeReference) => cmpMax(a, v, st, sch) >= 0
+      case GreaterThan(a: AttributeReference, Literal(v, _)) => cmpMax(a, v, st, sch) > 0
+      case GreaterThan(Literal(v, _), a: AttributeReference) => cmpMin(a, v, st, sch) < 0
+      case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) => cmpMax(a, v, st, sch) >= 0
+      case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) => cmpMin(a, v, st, sch) <= 0
+      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        vs.exists { case Literal(v, _) => inRange(a, v) }
+      case InSet(a: AttributeReference, vs) => vs.exists(v => inRange(a, v))
+      case IsNull(a: AttributeReference) => mayHaveNull(a, st)
+      case IsNotNull(a: AttributeReference) => !allNull(a, st)
+      case StartsWith(a: AttributeReference, Literal(p: UTF8String, StringType)) =>
+        prefixInRange(a, p, st, sch)
+      case _ => true // unknown shape — never prune on it
+    }
+    go(e)
   }
 
   /** -1/0/+1 comparing the file's MIN for `a` against literal `v`; returns
@@ -82,11 +123,6 @@ object StatsSkip {
                      sch: StructType): Int =
     statValue(a, st.max, sch).flatMap(m => compare(m, v, typeOf(a, sch)))
       .getOrElse(Int.MaxValue)
-
-  private def inRange(a: AttributeReference, v: Any, st: FileStats,
-                      sch: StructType): Boolean =
-    if (v == null) false // null-rejecting comparison: no row matches
-    else cmpMin(a, v, st, sch) <= 0 && cmpMax(a, v, st, sch) >= 0
 
   private def mayHaveNull(a: AttributeReference, st: FileStats): Boolean =
     st.nullCount.get(a.name).forall(_ > 0)
@@ -138,6 +174,13 @@ object StatsSkip {
         // are epoch days
         scala.util.Try(java.time.LocalDate.parse(stat.asText).toEpochDay.toInt)
           .toOption.map(Integer.compare(_, d))
-      case _ => None // timestamps/decimals/binary: writer omits, reader keeps
+      // exact encodings only: an integral or big-decimal JSON number for
+      // decimals (a JSON double may have rounded the bound), integral
+      // epoch micros for timestamps (textual stats of other writers keep)
+      case (_: DecimalType, d: Decimal) if stat.isIntegralNumber || stat.isBigDecimal =>
+        Some(stat.decimalValue.compareTo(d.toJavaBigDecimal))
+      case (TimestampType | TimestampNTZType, t: java.lang.Long) if stat.canConvertToLong =>
+        Some(java.lang.Long.compare(stat.asLong, t))
+      case _ => None // binary/nested, inexact or textual encodings: keep
     }
 }

@@ -53,16 +53,6 @@ class VerifySpec extends SparkSpec {
     assert(Verify.jsonQuote(in) === expected)
   }
 
-  test("parseConf: k=v pairs, tolerant of whitespace/empties, loud on a bad token") {
-    assert(Verify.parseConf("a=1;b=x=y; c.d = 2 ;;") ===
-      Seq(("a", "1"), ("b", "x=y"), ("c.d", "2")))
-    assert(Verify.parseConf("") === Seq.empty)
-    val e1 = intercept[IllegalArgumentException](Verify.parseConf("a=1;oops"))
-    assert(e1.getMessage.contains("oops"))
-    val e2 = intercept[IllegalArgumentException](Verify.parseConf("=v"))
-    assert(e2.getMessage.contains("=v"))
-  }
-
   test("every oracle key names a registered query") {
     // oracleSql ⊆ queries, names exact (a typo'd oracle key silently
     // downgrades the query to a rows-only check)

@@ -77,6 +77,56 @@ class DeltaStatsSpec extends SparkSpec {
     assert(!kept(EqualTo(a, Literal(1.0d, DoubleType))))
   }
 
+  test("decimal and timestamp stats prune only on exact encodings") {
+    val plain = new com.fasterxml.jackson.databind.ObjectMapper()
+    val exact = new com.fasterxml.jackson.databind.ObjectMapper().enable(
+      com.fasterxml.jackson.databind.DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    def keeps(dt: DataType, lo: String, hi: String,
+              mapper: com.fasterxml.jackson.databind.ObjectMapper)
+             (e: AttributeReference => Expression): Boolean = {
+      val st = StatsSkip.FileStats(10L, Map("x" -> mapper.readTree(lo)),
+        Map("x" -> mapper.readTree(hi)), Map("x" -> 0L))
+      StatsSkip.keep(Some(st), Seq(e(attr("x", dt))), StructType(Seq(StructField("x", dt))))
+    }
+    val dec = DecimalType(10, 2)
+    def d(v: String) = Literal(Decimal(BigDecimal(v)), dec)
+    // mixed-sign bounds as exact big-decimal JSON numbers
+    val exactDec = keeps(dec, "-5.25", "3.10", exact) _
+    assert(!exactDec(EqualTo(_, d("-5.30"))))
+    assert(exactDec(EqualTo(_, d("-5.25"))))
+    assert(exactDec(EqualTo(_, d("0.00"))))
+    assert(!exactDec(GreaterThan(_, d("3.10"))))
+    assert(!exactDec(LessThan(_, d("-5.25"))))
+    // integral JSON numbers are exact too
+    assert(!keeps(dec, "-5", "3", plain)(EqualTo(_, d("4.00"))))
+    // a JSON double may have rounded the bound: never prune on it
+    assert(keeps(dec, "-5.25", "3.1", plain)(EqualTo(_, d("100.00"))))
+
+    def micros(ts: String): Long = {
+      val i = java.time.Instant.parse(ts)
+      i.getEpochSecond * 1000000L + i.getNano / 1000
+    }
+    val (y2024, y10000) = (micros("2024-01-01T00:00:00Z"), micros("+10000-01-01T00:00:00Z"))
+    Seq(TimestampType, TimestampNTZType).foreach { tt =>
+      val ts = keeps(tt, y2024.toString, y10000.toString, plain) _
+      assert(ts(EqualTo(_, Literal(y10000, tt))), tt)
+      assert(ts(GreaterThan(_, Literal(y10000 - 1, tt))), tt)
+      assert(!ts(GreaterThan(_, Literal(y10000, tt))), tt)
+      assert(!ts(LessThan(_, Literal(y2024, tt))), tt)
+      assert(!ts(EqualTo(_, Literal(y2024 - 1, tt))), tt)
+    }
+    // textual timestamp stats, as Delta writers emit them: never prune
+    assert(keeps(TimestampType, "\"2024-01-01T00:00:00.000Z\"",
+      "\"2024-01-02T00:00:00.000Z\"", plain)(EqualTo(_, Literal(y10000, TimestampType))))
+
+    // this writer's add.stats stay as they were: no decimal or timestamp
+    val t = tbl()
+    DeltaWrite.write(spark.range(0, 5, 1, 1).select($"id",
+      $"id".cast("decimal(10,2)").as("dec"), current_timestamp().as("ts")), t)
+    val st = DeltaRead.snapshot(t).files.head.stats.get
+    assert(st.min.keySet === Set("id") && st.nullCount.keySet === Set("id"))
+  }
+
   test("range predicate schedules only overlapping files") {
     val (t, snap) = rangeTable()
     assert(listedFiles(spark, t, snap,
