@@ -86,9 +86,10 @@ object Bench {
     def fmt(v: Double): String = f"$v%.4f"
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val fj = failed.map { case (k, v) =>
-      Verify.jsonQuote(k) + ":" + Verify.jsonQuote(v)
+    def failedJson(msgChars: Int): String = failed.map { case (k, v) =>
+      Verify.jsonQuote(k) + ":" + Verify.jsonQuote(v.take(msgChars))
     }.mkString("{", ",", "}")
+    val fj = failedJson(Int.MaxValue)
     val total = results.map(_._2).sum
     // Key order matters: the driver keeps only the LAST ~2000 chars of
     // stdout, and the per-query map is the long part. Emit `queries`
@@ -101,13 +102,14 @@ object Bench {
     // 418-entry line above survives headless in its capture and
     // PERF_r*.per_query has been empty since r11. Emit a SECOND, short
     // summary line (same schema; `queries` holds only the 30 slowest
-    // entries — the ones regression triage needs) that fits the tail
-    // whole and parses. The full per-query map is unchanged above and
-    // persisted in BENCH_full.json / target/bench.json.
+    // entries — the ones regression triage needs; failure messages cut
+    // to 80 chars) that fits the tail whole and parses. The full
+    // per-query map and messages are unchanged above and persisted in
+    // BENCH_full.json / target/bench.json.
     val top = results.sortBy(-_._2).take(30)
     val qsTop = top.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    println(s"""{"note":"summary line: queries = 30 slowest of ${results.size}; full map in BENCH_full.json","queries":$qsTop,"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$fj,"sf":"$sfDir"}""")
+    println(s"""{"note":"summary line: queries = 30 slowest of ${results.size}; full map in BENCH_full.json","queries":$qsTop,"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":${failedJson(80)},"sf":"$sfDir"}""")
     // stdout capture can truncate long lines; persist the full artifact
     // twice — target/ for local runs, and BENCH_full.json at the repo
     // root (committed each round) so per-query regression triage never

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session `graft.Bench` and `graft.Verify` both run on; each
-  * adds only the settings it alone needs. `SPARK_GRAFT_CPUS` (default 4)
-  * sets the cores and the shuffle partitions. */
+/** The one local session builder: `graft.Bench`, `graft.Verify`, the
+  * `graft.tools` mains (`Explain`, `Demo`) and the tests (`SparkSpec`)
+  * all start from it, and each adds only the settings it alone needs
+  * (the tests pin 4 cores and 4 shuffle partitions). `SPARK_GRAFT_CPUS`
+  * (default 4) sets the cores and the shuffle partitions. */
 object LocalSpark {
   def builder(): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

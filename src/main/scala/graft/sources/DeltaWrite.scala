@@ -131,8 +131,8 @@ object DeltaWrite {
       case "overwritePartitions" =>
         // staged pv keys are physical; the replayed snapshot's are
         // logical — compare in the logical space
-        val touched = adds.map(_._1.partitionValues
-          .map { case (k, v) => toLogical.getOrElse(k, k) -> v }).toSet
+        val touched = adds.map(_.partitionValues
+          .map { case (k, v) => toLogical.getOrElse(k, k) -> v }.toMap).toSet
         existing.toSeq.flatMap(_.files.filter(f => touched(f.partitionValues)).map(_.path))
     }
 
@@ -146,35 +146,9 @@ object DeltaWrite {
     // silently wipe table properties like delta.enableChangeDataFeed)
     evolvedSchema.foreach(sch => lines += metaDataJson(sch, cols,
       existing.map(_.configuration).getOrElse(Map.empty)))
-    val ci = mapper.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("operation",
-      if (mode == "append") "WRITE" else "OVERWRITE")
-    info.put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
-    removes.foreach { rel =>
-      val n = mapper.createObjectNode()
-      val rm = n.putObject("remove")
-      rm.put("path", pathEnc(rel))
-      rm.put("deletionTimestamp", 0L)
-      rm.put("dataChange", true)
-      lines += mapper.writeValueAsString(n)
-    }
-    adds.foreach { case (a, stats) =>
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", pathEnc(a.path))
-      val pvn = add.putObject("partitionValues")
-      a.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvn.putNull(k) else pvn.put(k, v)
-      }
-      add.put("size", a.size)
-      add.put("modificationTime", 0L)
-      add.put("dataChange", true)
-      stats.foreach(add.put("stats", _)) // a JSON STRING, per the protocol
-      lines += mapper.writeValueAsString(n)
-    }
-    commitCas(logDir, version, lines.toSeq)
+    val actions = CommitInfo(if (mode == "append") "WRITE" else "OVERWRITE") +:
+      (removes.map(Remove(_)) ++ adds)
+    commitCas(logDir, version, lines.toSeq ++ actions.map(render))
     version
   }
 
@@ -220,47 +194,10 @@ object DeltaWrite {
             "retention horizon is impossible")
       }
     }
-    def physKey(k: String): String = head.columnMapping.getOrElse(k, k)
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    val ci = mapper.createObjectNode()
-    ci.putObject("commitInfo")
-      .put("operation", "RESTORE").put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
-    removes.foreach { f =>
-      val n = mapper.createObjectNode()
-      val rm = n.putObject("remove")
-      rm.put("path", pathEnc(f.path))
-      rm.put("deletionTimestamp", 0L)
-      rm.put("dataChange", true)
-      lines += mapper.writeValueAsString(n)
-    }
-    readds.foreach { f =>
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", pathEnc(f.path))
-      val pvn = add.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvn.putNull(physKey(k)) else pvn.put(physKey(k), v)
-      }
-      add.put("size", f.size)
-      add.put("modificationTime", 0L)
-      add.put("dataChange", true)
-      f.stats.foreach(st => add.put("stats", st.copy(
-        min = st.min.map { case (k, v) => physKey(k) -> v },
-        max = st.max.map { case (k, v) => physKey(k) -> v },
-        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }).json))
-      f.deletionVector.foreach { d =>
-        val dvn = add.putObject("deletionVector")
-        dvn.put("storageType", d.storageType)
-        dvn.put("pathOrInlineDv", d.pathOrInlineDv)
-        d.offset.foreach(dvn.put("offset", _))
-        dvn.put("sizeInBytes", d.sizeInBytes)
-        dvn.put("cardinality", d.cardinality)
-      }
-      lines += mapper.writeValueAsString(n)
-    }
+    val actions = CommitInfo("RESTORE") +: (removes.map(f => Remove(f.path)) ++
+      readds.map(f => reAdd(head, f, f.deletionVector)))
     val version = head.version + 1
-    commitCas(root.resolve("_delta_log"), version, lines.toSeq)
+    commitCas(root.resolve("_delta_log"), version, actions.map(render))
     version
   }
 
@@ -284,11 +221,10 @@ object DeltaWrite {
     }
 
   /** [[stageDataFiles]] of a logical-column frame against `snap`'s
-    * physical layout — the shared staging seam for rewrites (optimize /
-    * merge / mergeClauses) on mapped and unmapped tables alike. */
+    * physical layout — the shared staging seam for rewrites ([[optimize]]
+    * and [[mergeClauses]]) on mapped and unmapped tables alike. */
   private def stagePhysical(snap: DeltaRead.Snapshot, out: DataFrame,
-                            root: Path, version: Long)
-      : Seq[(DeltaRead.AddFile, Option[String])] =
+                            root: Path, version: Long): Seq[Add] =
     stageDataFiles(toPhysical(snap, out), root, version,
       snap.partitionColumns.map(n => snap.columnMapping.getOrElse(n, n)),
       if (snap.columnMapping.isEmpty) snap.dataSchema else snap.physDataSchema)
@@ -297,12 +233,11 @@ object DeltaWrite {
     * (uuid: racing writers must not stage into / sweep each other's dir;
     * staged part names carry Spark's task uuids, so the moved data files
     * never collide either), then metadata-move every staged file under
-    * the table root. Returns (add action, footer-stats JSON) per file —
-    * the shared staging seam behind [[write]], [[optimize]], and
-    * [[merge]]. */
+    * the table root. Returns one `add` action per file, its stats from
+    * the file's footer — the shared staging seam behind [[write]],
+    * [[optimize]] and [[mergeClauses]]. */
   private def stageDataFiles(df: DataFrame, root: Path, version: Long,
-                             cols: Seq[String], dataSchema: StructType)
-      : Seq[(DeltaRead.AddFile, Option[String])] = {
+                             cols: Seq[String], dataSchema: StructType): Seq[Add] = {
     val spark = df.sparkSession
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val staging = root.resolve(
@@ -326,8 +261,8 @@ object DeltaWrite {
       val target = root.resolve(rel)
       Files.createDirectories(target.getParent)
       Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
-      (DeltaRead.AddFile(segs.mkString("/"), pv, Files.size(target)),
-        portableRanges(hadoopConf, target, dataSchema).map(_.stats.json))
+      Add(segs.mkString("/"), pv, Files.size(target),
+        stats = portableRanges(hadoopConf, target, dataSchema).map(_.stats.json))
     }
     deleteRecursively(staging)
     adds
@@ -404,34 +339,10 @@ object DeltaWrite {
 
     val version = snap.version + 1
     val adds = stagePhysical(snap, laid, root, version)
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    val ci = mapper.createObjectNode()
-    ci.putObject("commitInfo")
-      .put("operation", "OPTIMIZE").put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
-    rewritten.foreach { f =>
-      val n = mapper.createObjectNode()
-      val rm = n.putObject("remove")
-      rm.put("path", pathEnc(f.path))
-      rm.put("deletionTimestamp", 0L)
-      rm.put("dataChange", false)
-      lines += mapper.writeValueAsString(n)
-    }
-    adds.foreach { case (a, stats) =>
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", pathEnc(a.path))
-      val pvn = add.putObject("partitionValues")
-      a.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvn.putNull(k) else pvn.put(k, v)
-      }
-      add.put("size", a.size)
-      add.put("modificationTime", 0L)
-      add.put("dataChange", false)
-      stats.foreach(add.put("stats", _))
-      lines += mapper.writeValueAsString(n)
-    }
-    commitCas(root.resolve("_delta_log"), version, lines.toSeq)
+    val actions = CommitInfo("OPTIMIZE") +:
+      (rewritten.map(f => Remove(f.path, dataChange = false)) ++
+        adds.map(_.copy(dataChange = false)))
+    commitCas(root.resolve("_delta_log"), version, actions.map(render))
     (before, before - rewritten.size + adds.size)
   }
 
@@ -439,29 +350,14 @@ object DeltaWrite {
     * THEN INSERT * — the statement the reference's incremental
     * materializations compile to on its Databricks target
     * (datavault4dbt macros/materializations: MERGE on the hashkey), here
-    * as a copy-on-write rewrite against a real Delta log.
-    *
-    * Scale shape (the same 3-job plan Delta's own MERGE runs):
-    *  1. **Stats prune** — source key [min, max] bounds (one aggregate)
-    *     against each live file's `add.stats` through [[StatsSkip]]; a
-    *     file whose key range cannot contain any source key is never
-    *     read. An append-mostly table with clustered keys touches only
-    *     the recent tail.
-    *  2. **Find touched** — a distributed semi-join of the surviving
-    *     files' rows (deletion vectors pre-applied) against the distinct
-    *     source keys; only DISTINCT file paths reach the driver
-    *     (O(touched files), the same order as the add actions).
-    *  3. **Rewrite** — touched-file rows anti-joined out of the carried
-    *     set, unioned with ALL source rows (matched = update, unmatched
-    *     = insert), one distributed `partitionBy` write. Untouched files
-    *     are never rewritten. Touched files' deletion vectors are purged
-    *     by the rewrite (their suppressed rows are already absent from
-    *     the carried scan).
+    * as a copy-on-write rewrite against a real Delta log. It is the
+    * UPDATE-all/INSERT-all clause list of [[mergeClauses]], which plans
+    * it without a full-outer join: touched-file rows anti-joined out of
+    * the carried set, unioned with ALL source rows, one distributed
+    * `partitionBy` write.
     *
     * `source` is evaluated more than once (bounds, key probe, rewrite,
-    * change feed) — cache it if it is expensive. Duplicate keys in
-    * `source` are a loud reject, matching Delta's
-    * multiple-source-rows-matched error. With
+    * change feed) — cache it if it is expensive. With
     * `delta.enableChangeDataFeed=true` the commit also persists
     * `_change_data` rows — `update_preimage`/`update_postimage` for
     * matched keys, `insert` for new ones; carried rows stay out of the
@@ -470,205 +366,60 @@ object DeltaWrite {
     *
     * Returns the committed version (head unchanged on an empty source). */
   def merge(spark: org.apache.spark.sql.SparkSession, tableDir: String,
-            source: DataFrame, keyCols: Seq[String]): Long = {
-    import org.apache.spark.sql.functions._
-    val snap = DeltaRead.snapshot(tableDir)
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val missing = keyCols.filterNot(snap.schema.fieldNames.contains)
-    require(missing.isEmpty, s"merge keys not in table schema: $missing")
-    val want = snap.schema.fields.map(f => (f.name, f.dataType)).toSeq
-    val got = source.schema.fields.map(f => (f.name, f.dataType)).toSeq
-    require(got == want,
-      s"merge source schema ${got.mkString(",")} != table ${want.mkString(",")}")
-    val root = Paths.get(tableDir)
-    val fieldCols = snap.schema.fieldNames.toSeq.map(col)
-
-    // 1. one-pass precheck (dup gate + row count + key bounds in a single
-    // source job — MergeClauses.sourcePrecheck) feeding the stats prune:
-    // a file whose key interval is disjoint from the source's overall key
-    // [min,max] cannot contain a match (a match needs EVERY key equal, so
-    // ANY disjoint key dimension suffices)
-    val b = MergeClauses.sourcePrecheck(source, keyCols) match {
-      case None => return snap.version // empty MERGE: no-op
-      case Some(r) => r
-    }
-    val boundFilters = MergeClauses.keyBoundFilters(b, keyCols, snap.schema)
-    val candidates = snap.files.filter(f =>
-      StatsSkip.keep(f.stats, boundFilters, snap.dataSchema))
-
-    // 2. exactly-touched files: distinct scan paths whose (DV-applied)
-    // rows carry a source key — only the path strings reach the driver
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    val touched: Seq[DeltaRead.AddFile] =
-      if (candidates.isEmpty) Nil
-      else {
-        val byQualified = candidates
-          .map(f => DeltaRead.qualifiedPath(spark, root, f) -> f).toMap
-        DeltaRead.readWithPositions(spark, tableDir, snap.copy(files = candidates))
-          .join(srcKeys, keyCols, "left_semi")
-          .select(col("__fp")).distinct()
-          .collect().map(_.getString(0)).toSeq
-          .map(fp => byQualified.getOrElse(fp,
-            throw new IllegalStateException(s"scan surfaced unknown file $fp")))
-      }
-
-    // 3. rewrite: carried rows (touched minus matched) ∪ every source row
-    val src = source.select(fieldCols: _*)
-    val out =
-      if (touched.isEmpty) src
-      else DeltaRead.readSnapshot(spark, tableDir, snap.copy(files = touched))
-        .select(fieldCols: _*)
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(src)
-
-    val version = snap.version + 1
-    val adds = stagePhysical(snap, out, root, version)
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    val ci = mapper.createObjectNode()
-    ci.putObject("commitInfo")
-      .put("operation", "MERGE").put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
-    touched.foreach { f =>
-      val n = mapper.createObjectNode()
-      val rm = n.putObject("remove")
-      rm.put("path", pathEnc(f.path))
-      rm.put("deletionTimestamp", 0L)
-      rm.put("dataChange", true)
-      lines += mapper.writeValueAsString(n)
-    }
-    adds.foreach { case (a, stats) =>
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", pathEnc(a.path))
-      val pvn = add.putObject("partitionValues")
-      a.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvn.putNull(k) else pvn.put(k, v)
-      }
-      add.put("size", a.size)
-      add.put("modificationTime", 0L)
-      add.put("dataChange", true)
-      stats.foreach(add.put("stats", _))
-      lines += mapper.writeValueAsString(n)
-    }
-
-    if (snap.configuration.get("delta.enableChangeDataFeed")
-        .exists(_.equalsIgnoreCase("true"))) {
-      // cdc files would need the physical column space too — reject
-      // rather than emit a feed conformant readers mis-decode
-      require(snap.columnMapping.isEmpty,
-        s"CDF emission on a column-mapped table is not supported ($tableDir)")
-      // matched keys = source keys that exist in the touched scan; the
-      // pre/post images split on them, carried rows never enter the feed
-      val touchedRows =
-        if (touched.isEmpty) None
-        else Some(DeltaRead.readSnapshot(spark, tableDir,
-          snap.copy(files = touched)).select(fieldCols: _*))
-      val pre = touchedRows.map(_.join(srcKeys, keyCols, "left_semi")
-        .withColumn("_change_type", lit("update_preimage")))
-      val matchedKeys = touchedRows.map(
-        _.select(keyCols.map(col): _*).distinct())
-      val post = matchedKeys.map(mk => src.join(mk, keyCols, "left_semi")
-        .withColumn("_change_type", lit("update_postimage")))
-      val ins = matchedKeys.map(mk => src.join(mk, keyCols, "left_anti"))
-        .getOrElse(src).withColumn("_change_type", lit("insert"))
-      val changeDf = (pre.toSeq ++ post.toSeq :+ ins).reduce(_ unionByName _)
-        .select((snap.dataSchema.fieldNames.toSeq ++ snap.partitionColumns)
-          .map(col) :+ col("_change_type"): _*)
-      stageAndEmit(changeDf, root, "_change_data",
-        snap.partitionColumns, Map.empty).foreach { case (rel, pv, size) =>
-        val n = mapper.createObjectNode()
-        val cd = n.putObject("cdc")
-        cd.put("path", pathEnc(rel))
-        val pvn = cd.putObject("partitionValues")
-        pv.foreach { case (k, v) =>
-          if (v == null) pvn.putNull(k) else pvn.put(k, v)
-        }
-        cd.put("size", size)
-        cd.put("dataChange", false)
-        lines += mapper.writeValueAsString(n)
-      }
-    }
-    commitCas(root.resolve("_delta_log"), version, lines.toSeq)
-    version
-  }
+            source: DataFrame, keyCols: Seq[String]): Long =
+    mergeClauses(spark, tableDir, source, keyCols,
+      Seq(MergeClauses.MatchedUpdate(), MergeClauses.NotMatchedInsert()))
 
   /** MERGE with the FULL clause family ([[MergeClauses]]): clause
     * conditions, WHEN MATCHED DELETE, column-subset UPDATE SET (the
     * reference rehash shape), WHEN NOT MATCHED BY SOURCE
-    * UPDATE/DELETE — everything beyond [[merge]]'s fast
-    * UPDATE-all/INSERT-all path. Same commit anatomy and scale shape:
-    * touched files
-    * are discovered by stats-bounds + a distributed semi-join and
-    * rewritten copy-on-write, UNLESS a NOT-MATCHED-BY-SOURCE clause is
-    * present — those see rows the source does NOT name, so every live
-    * file is touched (the standard cost of that clause everywhere).
+    * UPDATE/DELETE, and the UPDATE-all/INSERT-all upsert [[merge]].
+    *
+    * Scale shape (the same 3-job plan Delta's own MERGE runs):
+    *  1. **Stats prune** — source key [min, max] bounds (one aggregate,
+    *     which also gates duplicate keys) against each live file's
+    *     `add.stats` through [[StatsSkip]]; a file whose key range cannot
+    *     contain any source key is never read. An append-mostly table
+    *     with clustered keys touches only the recent tail.
+    *  2. **Find touched** — a distributed semi-join of the surviving
+    *     files' rows (deletion vectors pre-applied) against the distinct
+    *     source keys; only DISTINCT file paths reach the driver
+    *     (O(touched files), the same order as the add actions).
+    *  3. **Rewrite** — the clauses applied to the touched files' rows,
+    *     one distributed `partitionBy` write, copy-on-write. Untouched
+    *     files are never rewritten; touched files' deletion vectors are
+    *     purged by the rewrite.
+    * A NOT-MATCHED-BY-SOURCE clause sees rows the source does NOT name,
+    * so it touches every live file (the standard cost of that clause
+    * everywhere). The search is [[MergeClauses.touchedFiles]], shared
+    * with Iceberg.
     * With CDF enabled the change rows are emitted PER CLAUSE —
     * update_preimage/postimage for updates, delete for deletes, insert
     * for inserts; carried rows stay out of the feed.
     *
     * Source contract: must carry the key columns; a NOT MATCHED INSERT
     * or SET-* update clause additionally requires the full table
-    * schema. Duplicate source keys reject loudly. Returns the committed
-    * version (head unchanged when nothing was touched or inserted). */
+    * schema. Duplicate source keys reject loudly, matching Delta's
+    * multiple-source-rows-matched error. Returns the committed version
+    * (head unchanged when nothing was touched or inserted). */
   def mergeClauses(spark: org.apache.spark.sql.SparkSession, tableDir: String,
                    source: DataFrame, keyCols: Seq[String],
                    clauses: Seq[MergeClauses.Clause],
                    aliases: (String, String) = ("t", "s")): Long = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     val snap = DeltaRead.snapshot(tableDir)
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val missing = keyCols.filterNot(snap.schema.fieldNames.contains)
-    require(missing.isEmpty, s"merge keys not in table schema: $missing")
-    val srcMissing = keyCols.filterNot(source.schema.fieldNames.contains)
-    require(srcMissing.isEmpty, s"merge keys not in source: $srcMissing")
-    val needsFullSchema = clauses.exists {
-      case _: MergeClauses.NotMatchedInsert => true
-      case MergeClauses.MatchedUpdate(set, _) => set.isEmpty
-      case _ => false
-    }
-    if (needsFullSchema) {
-      val want = snap.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = source.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      require(got == want, "INSERT * / UPDATE SET * clauses need the full " +
-        s"table schema in the source; got ${got.mkString(",")}, table has ${want.mkString(",")}")
-    }
+    MergeClauses.validate(snap.schema, source, keyCols, clauses)
     val root = Paths.get(tableDir)
-
-    // one-pass precheck: dup gate + row count + key bounds in one source
-    // job (MergeClauses.sourcePrecheck) — the dup gate applies to every
-    // clause family; the bounds only prune when no BY SOURCE clause
-    // forces a full-table touch
-    val pre = MergeClauses.sourcePrecheck(source, keyCols)
-
-    val touched: Seq[DeltaRead.AddFile] =
-      if (MergeClauses.touchesBySource(clauses)) snap.files
-      else {
-        val b = pre match {
-          case None => return snap.version
-          case Some(r) => r
-        }
-        val boundFilters = MergeClauses.keyBoundFilters(b, keyCols, snap.schema)
-        val candidates = snap.files.filter(f =>
-          StatsSkip.keep(f.stats, boundFilters, snap.dataSchema))
-        if (candidates.isEmpty) Nil
-        else {
-          val byQualified = candidates
-            .map(f => DeltaRead.qualifiedPath(spark, root, f) -> f).toMap
-          DeltaRead.readWithPositions(spark, tableDir,
-              snap.copy(files = candidates))
-            .join(source.select(keyCols.map(col): _*).distinct(),
-              keyCols, "left_semi")
-            .select(col("__fp")).distinct()
-            .collect().map(_.getString(0)).toSeq
-            .map(fp => byQualified.getOrElse(fp,
-              throw new IllegalStateException(s"scan surfaced unknown file $fp")))
-        }
-      }
+    val touched = MergeClauses.touchedFiles[DeltaRead.AddFile](source, keyCols,
+        clauses, snap.schema, snap.files, _.stats,
+        DeltaRead.qualifiedPath(spark, root, _),
+        fs => DeltaRead.readWithPositions(spark, tableDir, snap.copy(files = fs))) match {
+      case None => return snap.version
+      case Some(fs) => fs
+    }
 
     val target =
-      if (touched.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+      if (touched.isEmpty) MergeClauses.emptyFrame(spark, snap.schema)
       else DeltaRead.readSnapshot(spark, tableDir, snap.copy(files = touched))
         .select(snap.schema.fieldNames.map(col).toSeq: _*)
     val (out, changes) =
@@ -677,59 +428,9 @@ object DeltaWrite {
     val version = snap.version + 1
     val adds = stagePhysical(snap, out, root, version)
     if (touched.isEmpty && adds.isEmpty) return snap.version
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    val ci = mapper.createObjectNode()
-    ci.putObject("commitInfo")
-      .put("operation", "MERGE").put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
-    touched.foreach { f =>
-      val n = mapper.createObjectNode()
-      val rm = n.putObject("remove")
-      rm.put("path", pathEnc(f.path))
-      rm.put("deletionTimestamp", 0L)
-      rm.put("dataChange", true)
-      lines += mapper.writeValueAsString(n)
-    }
-    adds.foreach { case (a, stats) =>
-      val n = mapper.createObjectNode()
-      val add = n.putObject("add")
-      add.put("path", pathEnc(a.path))
-      val pvn = add.putObject("partitionValues")
-      a.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvn.putNull(k) else pvn.put(k, v)
-      }
-      add.put("size", a.size)
-      add.put("modificationTime", 0L)
-      add.put("dataChange", true)
-      stats.foreach(add.put("stats", _))
-      lines += mapper.writeValueAsString(n)
-    }
-    if (snap.configuration.get("delta.enableChangeDataFeed")
-        .exists(_.equalsIgnoreCase("true"))) {
-      // cdc files would need the physical column space too — reject
-      // rather than emit a feed conformant readers mis-decode
-      require(snap.columnMapping.isEmpty,
-        s"CDF emission on a column-mapped table is not supported ($tableDir)")
-      // per-clause change rows from the SAME clause evaluation —
-      // update images, deletes, inserts; carried rows never enter
-      val changeDf = changes
-        .select((snap.dataSchema.fieldNames.toSeq ++ snap.partitionColumns)
-          .map(col) :+ col("_change_type"): _*)
-      stageAndEmit(changeDf, root, "_change_data",
-        snap.partitionColumns, Map.empty).foreach { case (rel, pv, size) =>
-        val n = mapper.createObjectNode()
-        val cd = n.putObject("cdc")
-        cd.put("path", pathEnc(rel))
-        val pvn = cd.putObject("partitionValues")
-        pv.foreach { case (k, v) =>
-          if (v == null) pvn.putNull(k) else pvn.put(k, v)
-        }
-        cd.put("size", size)
-        cd.put("dataChange", false)
-        lines += mapper.writeValueAsString(n)
-      }
-    }
-    commitCas(root.resolve("_delta_log"), version, lines.toSeq)
+    val actions = CommitInfo("MERGE") +: (touched.map(f => Remove(f.path)) ++
+      adds ++ cdcActions(snap, root, changes))
+    commitCas(root.resolve("_delta_log"), version, actions.map(render))
     version
   }
 
@@ -826,141 +527,63 @@ object DeltaWrite {
         }
         .collect()
     if (touched.isEmpty) return snap.version
-    // the snapshot's pv/stats keys are LOGICAL (normalized at replay);
-    // a column-mapped table's log stores them PHYSICAL — map back
-    def physKey(k: String): String = snap.columnMapping.getOrElse(k, k)
 
     val version = snap.version + 1
     val logDir = root.resolve("_delta_log")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
     // first DV on the table gates the protocol up (readerFeatures is how
-    // a conformant engine knows it MUST apply the vectors). Converting a
-    // LEGACY protocol to table features must enumerate the features the
-    // old version numbers implied (PROTOCOL.md §Table Features) — else a
-    // strict engine stops enforcing e.g. appendOnly/invariants.
-    if (!snap.protocol.readerFeatures.contains("deletionVectors")) {
-      // implied features only when CONVERTING from a legacy protocol — a
-      // table already on table features (writer 7 / reader 3) lists its
-      // features explicitly and implies nothing
-      val impliedWriter =
-        if (snap.protocol.minWriterVersion >= 7) Nil
-        else Seq(
-          2 -> Seq("appendOnly", "invariants"),
-          3 -> Seq("checkConstraints"),
-          4 -> Seq("changeDataFeed", "generatedColumns"),
-          5 -> Seq("columnMapping"),
-          6 -> Seq("identityColumns"))
-          .filter(_._1 <= snap.protocol.minWriterVersion).flatMap(_._2)
-      val impliedReader =
-        if (snap.protocol.minReaderVersion >= 3) Nil
-        else if (snap.protocol.minReaderVersion == 2) Seq("columnMapping")
-        else Nil
-      val p = mapper.createObjectNode()
-      val pn = p.putObject("protocol")
-      pn.put("minReaderVersion", 3)
-      pn.put("minWriterVersion", 7)
-      val rf = pn.putArray("readerFeatures")
-      (impliedReader ++ snap.protocol.readerFeatures :+ "deletionVectors")
-        .distinct.foreach(rf.add)
-      val wf = pn.putArray("writerFeatures")
-      (impliedWriter ++ snap.protocol.writerFeatures :+ "deletionVectors")
-        .distinct.foreach(wf.add)
-      lines += mapper.writeValueAsString(p)
-    }
-    val ci = mapper.createObjectNode()
-    ci.putObject("commitInfo").put("operation", "DELETE")
-      .put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
-    touched.foreach { case (fp, encUuid, offset, sizeInBytes, card) =>
-      val f = byQualified.getOrElse(fp,
-        throw new IllegalStateException(s"scan surfaced unknown file $fp"))
-      val rm = mapper.createObjectNode()
-      val rmn = rm.putObject("remove")
-      rmn.put("path", pathEnc(f.path))
-      rmn.put("deletionTimestamp", 0L)
-      rmn.put("dataChange", true)
-      lines += mapper.writeValueAsString(rm)
-      val ad = mapper.createObjectNode()
-      val an = ad.putObject("add")
-      an.put("path", pathEnc(f.path))
-      val pvn = an.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvn.putNull(physKey(k)) else pvn.put(physKey(k), v)
+    // a conformant engine knows it MUST apply the vectors)
+    val protocol =
+      if (snap.protocol.readerFeatures.contains("deletionVectors")) Nil
+      else Seq(featureProtocolJson(snap.protocol, "deletionVectors"))
+    val actions = CommitInfo("DELETE") +:
+      touched.toSeq.flatMap { case (fp, encUuid, offset, sizeInBytes, card) =>
+        val f = byQualified.getOrElse(fp,
+          throw new IllegalStateException(s"scan surfaced unknown file $fp"))
+        Seq(Remove(f.path), reAdd(snap, f, Some(DeletionVectors.Descriptor(
+          "u", encUuid, Some(offset), sizeInBytes, card))))
       }
-      an.put("size", f.size)
-      an.put("modificationTime", 0L)
-      an.put("dataChange", true)
-      f.stats.foreach(st => an.put("stats", st.copy(
-        min = st.min.map { case (k, v) => physKey(k) -> v },
-        max = st.max.map { case (k, v) => physKey(k) -> v },
-        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }).json))
-      val dvn = an.putObject("deletionVector")
-      dvn.put("storageType", "u")
-      dvn.put("pathOrInlineDv", encUuid)
-      dvn.put("offset", offset)
-      dvn.put("sizeInBytes", sizeInBytes)
-      dvn.put("cardinality", card)
-      lines += mapper.writeValueAsString(ad)
-    }
     // CDF: persist the deleted rows as change data so this DV commit is
-    // consumable as a feed (only when the table property opted in — the
-    // same gate Delta's own writers use)
-    if (snap.configuration.get("delta.enableChangeDataFeed")
-        .exists(_.equalsIgnoreCase("true"))) {
-      // cdc files would need the physical column space too — reject
-      // rather than emit a feed conformant readers mis-decode
-      require(snap.columnMapping.isEmpty,
-        s"CDF emission on a column-mapped table is not supported ($tableDir)")
-      def phys(n: String): String = snap.columnMapping.getOrElse(n, n)
-      val deleted = DeltaRead.readWithPositions(spark, tableDir, snap)
-        .filter(condition).drop("__fp", "__ri")
-      // change files store the table's PHYSICAL layout + _change_type;
-      // partition columns become hive dirs (dropped from data pages). On
-      // an id-mode table the data columns also carry parquet field ids,
-      // so the written change files resolve under the table's id matcher.
-      def asPhys(n: String): org.apache.spark.sql.Column =
-        snap.fieldIds.get(n).map { id =>
-          col(n).as(phys(n), new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id", id).build())
-        }.getOrElse(col(n).as(phys(n)))
-      val changeDf = deleted.select(
-        (snap.dataSchema.fields.toSeq.map(f => asPhys(f.name)) ++
-          snap.partitionColumns.map(asPhys) :+
-          lit("delete").as("_change_type")): _*)
-      stageAndEmit(changeDf, root, "_change_data",
-        snap.partitionColumns, snap.columnMapping).foreach {
-        case (rel, pv, size) =>
-          val n = mapper.createObjectNode()
-          val cd = n.putObject("cdc")
-          cd.put("path", pathEnc(rel))
-          val pvn = cd.putObject("partitionValues")
-          pv.foreach { case (k, v) =>
-            if (v == null) pvn.putNull(physKey(k)) else pvn.put(physKey(k), v)
-          }
-          cd.put("size", size)
-          cd.put("dataChange", false)
-          lines += mapper.writeValueAsString(n)
-      }
-    }
-    commitCas(logDir, version, lines.toSeq)
+    // consumable as a feed
+    val cdc = cdcActions(snap, root, DeltaRead.readWithPositions(spark, tableDir, snap)
+      .filter(condition).drop("__fp", "__ri").withColumn("_change_type", lit("delete")))
+    commitCas(logDir, version, protocol ++ (actions ++ cdc).map(render))
     version
   }
 
+  /** The `cdc` actions of a commit whose change rows are `changes` (table
+    * columns + `_change_type`), staged under `_change_data/` — only when
+    * the table opted into Change Data Feed (`delta.enableChangeDataFeed`,
+    * the same gate Delta's own writers use); none otherwise. */
+  private def cdcActions(snap: DeltaRead.Snapshot, root: Path,
+                         changes: => DataFrame): Seq[Cdc] =
+    if (!snap.configuration.get("delta.enableChangeDataFeed")
+        .exists(_.equalsIgnoreCase("true"))) Nil
+    else {
+      import org.apache.spark.sql.functions.col
+      // cdc files would need the physical column space too — reject
+      // rather than emit a feed conformant readers mis-decode
+      require(snap.columnMapping.isEmpty,
+        s"CDF emission on a column-mapped table is not supported ($root)")
+      // change files store the table's layout + _change_type; partition
+      // columns become hive dirs (dropped from data pages)
+      val changeDf = changes.select((snap.dataSchema.fieldNames.toSeq ++
+        snap.partitionColumns).map(col) :+ col("_change_type"): _*)
+      stageAndEmit(changeDf, root, "_change_data", snap.partitionColumns)
+        .map { case (rel, pv, size) => Cdc(rel, pv, size) }
+    }
+
   /** Stage `df` (hive-partitioned by `partCols`) and move the files under
-    * `root/subdir`, returning (table-relative path, partitionValues
-    * keyed LOGICAL, size) per file — the shared write shape of change
-    * data and any other auxiliary file family. */
+    * `root/subdir`, returning (table-relative path, partitionValues,
+    * size) per file — the shared write shape of change data and any
+    * other auxiliary file family. */
   private def stageAndEmit(df: DataFrame, root: Path, subdir: String,
-                           partCols: Seq[String],
-                           columnMapping: Map[String, String])
+                           partCols: Seq[String])
       : Seq[(String, Map[String, String], Long)] = {
-    val toLogical = columnMapping.map(_.swap)
     val staging = root.resolve(
       s"_staging_${subdir.stripPrefix("_")}-${java.util.UUID.randomUUID().toString.take(8)}")
     val writer = df.write.mode("overwrite")
-    (if (partCols.nonEmpty)
-      writer.partitionBy(partCols.map(c => columnMapping.getOrElse(c, c)): _*)
-    else writer).parquet(staging.toString)
+    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
+      .parquet(staging.toString)
     val out = listParquet(staging).map { p =>
       val rel = staging.relativize(p)
       val segs = (0 until rel.getNameCount).map(rel.getName(_).toString)
@@ -968,7 +591,7 @@ object DeltaWrite {
         val eq = seg.indexOf('=')
         require(eq > 0, s"staged path $rel is not hive-layout under partitionBy")
         val raw = ExternalCatalogUtils.unescapePathName(seg.substring(eq + 1))
-        toLogical.getOrElse(seg.substring(0, eq), seg.substring(0, eq)) ->
+        seg.substring(0, eq) ->
           (if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else raw)
       }.toMap
       val target = root.resolve(subdir).resolve(rel)
@@ -1013,21 +636,9 @@ object DeltaWrite {
         lines += mapper.writeValueAsString(n)
       }
     }
-    val m = mapper.createObjectNode()
-    val md = m.putObject("metaData")
-    md.put("id", "graft-delta-write")
-    md.putObject("format").put("provider", "parquet")
-    md.put("schemaString", snap.schema.json)
-    val pc = md.putArray("partitionColumns")
-    snap.partitionColumns.foreach(pc.add)
-    val cfg = md.putObject("configuration")
-    (snap.configuration ++ props).foreach { case (k, v) => cfg.put(k, v) }
-    md.put("createdTime", 0L)
-    lines += mapper.writeValueAsString(m)
-    val ci = mapper.createObjectNode()
-    ci.putObject("commitInfo").put("operation", "SET TBLPROPERTIES")
-      .put("engineInfo", "graft-delta-write")
-    lines += mapper.writeValueAsString(ci)
+    lines += metaDataJson(snap.schema, snap.partitionColumns,
+      snap.configuration ++ props)
+    lines += render(CommitInfo("SET TBLPROPERTIES"))
     commitCas(root.resolve("_delta_log"), version, lines.toSeq)
     version
   }
@@ -1158,15 +769,10 @@ object DeltaWrite {
     * log — checkpoints included — stores them PHYSICAL, so map back. */
   private def cpAddRow(snap: DeltaRead.Snapshot,
                        f: DeltaRead.AddFile): org.apache.spark.sql.Row = {
-    def physKey(k: String): String = snap.columnMapping.getOrElse(k, k)
-    org.apache.spark.sql.Row(pathEnc(f.path),
-      f.partitionValues.map { case (k, v) => physKey(k) -> v },
+    val a = reAdd(snap, f, f.deletionVector)
+    org.apache.spark.sql.Row(pathEnc(f.path), a.partitionValues.toMap,
       java.lang.Long.valueOf(f.size), java.lang.Long.valueOf(0L),
-      java.lang.Boolean.FALSE,
-      f.stats.map(st => st.copy(
-        min = st.min.map { case (k, v) => physKey(k) -> v },
-        max = st.max.map { case (k, v) => physKey(k) -> v },
-        nullCount = st.nullCount.map { case (k, v) => physKey(k) -> v }).json).orNull,
+      java.lang.Boolean.FALSE, a.stats.orNull,
       f.deletionVector.map(d => org.apache.spark.sql.Row(d.storageType,
         d.pathOrInlineDv, d.offset.map(Integer.valueOf).orNull,
         Integer.valueOf(d.sizeInBytes),
@@ -1256,34 +862,9 @@ object DeltaWrite {
     val logDir = Paths.get(tableDir, "_delta_log")
     var snap = DeltaRead.snapshot(tableDir)
     if (!snap.protocol.readerFeatures.contains("v2Checkpoint")) {
-      val impliedWriter =
-        if (snap.protocol.minWriterVersion >= 7) Nil
-        else Seq(
-          2 -> Seq("appendOnly", "invariants"),
-          3 -> Seq("checkConstraints"),
-          4 -> Seq("changeDataFeed", "generatedColumns"),
-          5 -> Seq("columnMapping"),
-          6 -> Seq("identityColumns"))
-          .filter(_._1 <= snap.protocol.minWriterVersion).flatMap(_._2)
-      val impliedReader =
-        if (snap.protocol.minReaderVersion >= 3) Nil
-        else if (snap.protocol.minReaderVersion == 2) Seq("columnMapping")
-        else Nil
-      val p = mapper.createObjectNode()
-      val pn = p.putObject("protocol")
-      pn.put("minReaderVersion", 3)
-      pn.put("minWriterVersion", 7)
-      val rf = pn.putArray("readerFeatures")
-      (impliedReader ++ snap.protocol.readerFeatures :+ "v2Checkpoint")
-        .distinct.foreach(rf.add)
-      val wf = pn.putArray("writerFeatures")
-      (impliedWriter ++ snap.protocol.writerFeatures :+ "v2Checkpoint")
-        .distinct.foreach(wf.add)
-      val ci = mapper.createObjectNode()
-      ci.putObject("commitInfo").put("operation", "UPGRADE PROTOCOL")
-        .put("engineInfo", "graft-delta-write")
       commitCas(logDir, snap.version + 1,
-        Seq(mapper.writeValueAsString(p), mapper.writeValueAsString(ci)))
+        Seq(featureProtocolJson(snap.protocol, "v2Checkpoint"),
+          render(CommitInfo("UPGRADE PROTOCOL"))))
       snap = DeltaRead.snapshot(tableDir)
     }
 
@@ -1329,6 +910,97 @@ object DeltaWrite {
     Files.writeString(logDir.resolve("_last_checkpoint"),
       s"""{"version":${snap.version},"size":${topRows.size + fileRows.size}}""")
     snap.version
+  }
+
+  /** The commit and file actions this writer logs, rendered by
+    * [[render]] — the one place their JSON shape (keys and key order) is
+    * defined. Paths are table-relative and decoded; partitionValues and
+    * stats are keyed as the log stores them (physical on a column-mapped
+    * table, see [[reAdd]]). */
+  private sealed trait Action
+  private final case class CommitInfo(operation: String) extends Action
+  private final case class Remove(path: String, dataChange: Boolean = true) extends Action
+  private final case class Add(path: String, partitionValues: Iterable[(String, String)],
+      size: Long, dataChange: Boolean = true, stats: Option[String] = None,
+      deletionVector: Option[DeletionVectors.Descriptor] = None) extends Action
+  private final case class Cdc(path: String, partitionValues: Map[String, String],
+                               size: Long) extends Action
+
+  private def render(a: Action): String = {
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    def putPartitionValues(o: ObjectNode, pv: Iterable[(String, String)]): Unit = {
+      val pvn = o.putObject("partitionValues")
+      pv.foreach { case (k, v) => if (v == null) pvn.putNull(k) else pvn.put(k, v) }
+    }
+    val n = mapper.createObjectNode()
+    a match {
+      case CommitInfo(operation) =>
+        n.putObject("commitInfo").put("operation", operation)
+          .put("engineInfo", "graft-delta-write")
+      case Remove(path, dataChange) =>
+        n.putObject("remove").put("path", pathEnc(path))
+          .put("deletionTimestamp", 0L).put("dataChange", dataChange)
+      case Add(path, pv, size, dataChange, stats, dv) =>
+        val add = n.putObject("add").put("path", pathEnc(path))
+        putPartitionValues(add, pv)
+        add.put("size", size).put("modificationTime", 0L).put("dataChange", dataChange)
+        stats.foreach(add.put("stats", _)) // a JSON STRING, per the protocol
+        dv.foreach { d =>
+          val dvn = add.putObject("deletionVector")
+            .put("storageType", d.storageType).put("pathOrInlineDv", d.pathOrInlineDv)
+          d.offset.foreach(dvn.put("offset", _))
+          dvn.put("sizeInBytes", d.sizeInBytes).put("cardinality", d.cardinality)
+        }
+      case Cdc(path, pv, size) =>
+        val cd = n.putObject("cdc").put("path", pathEnc(path))
+        putPartitionValues(cd, pv)
+        cd.put("size", size).put("dataChange", false)
+    }
+    mapper.writeValueAsString(n)
+  }
+
+  /** `f` (a file of the replayed `snap`) re-added with `dv`, keyed as the
+    * log stores it: the snapshot's partitionValues and stats keys are
+    * LOGICAL (normalized at replay), a column-mapped table's log —
+    * checkpoints included — stores them PHYSICAL, so map back. */
+  private def reAdd(snap: DeltaRead.Snapshot, f: DeltaRead.AddFile,
+                    dv: Option[DeletionVectors.Descriptor]): Add = {
+    def phys(k: String): String = snap.columnMapping.getOrElse(k, k)
+    def physKeys[V](m: Map[String, V]): Map[String, V] =
+      m.map { case (k, v) => phys(k) -> v }
+    Add(f.path, f.partitionValues.toSeq.map { case (k, v) => phys(k) -> v }, f.size,
+      stats = f.stats.map(st => st.copy(min = physKeys(st.min),
+        max = physKeys(st.max), nullCount = physKeys(st.nullCount)).json),
+      deletionVector = dv)
+  }
+
+  /** A protocol action that moves `p` onto table features and adds
+    * `feature` to both feature lists (reader 3 / writer 7). Converting a
+    * LEGACY protocol must enumerate the features its version numbers
+    * implied (PROTOCOL.md §Table Features) — else a strict engine stops
+    * enforcing e.g. appendOnly/invariants; a protocol already on table
+    * features lists them explicitly and implies nothing. */
+  private def featureProtocolJson(p: DeltaRead.Protocol, feature: String): String = {
+    val impliedWriter =
+      if (p.minWriterVersion >= 7) Nil
+      else Seq(
+        2 -> Seq("appendOnly", "invariants"),
+        3 -> Seq("checkConstraints"),
+        4 -> Seq("changeDataFeed", "generatedColumns"),
+        5 -> Seq("columnMapping"),
+        6 -> Seq("identityColumns"))
+        .filter(_._1 <= p.minWriterVersion).flatMap(_._2)
+    val impliedReader =
+      if (p.minReaderVersion == 2) Seq("columnMapping") else Nil
+    val n = mapper.createObjectNode()
+    val pn = n.putObject("protocol")
+    pn.put("minReaderVersion", 3)
+    pn.put("minWriterVersion", 7)
+    val rf = pn.putArray("readerFeatures")
+    (impliedReader ++ p.readerFeatures :+ feature).distinct.foreach(rf.add)
+    val wf = pn.putArray("writerFeatures")
+    (impliedWriter ++ p.writerFeatures :+ feature).distinct.foreach(wf.add)
+    mapper.writeValueAsString(n)
   }
 
   private def metaDataJson(schema: StructType, partCols: Seq[String],

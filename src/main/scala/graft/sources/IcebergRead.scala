@@ -233,7 +233,7 @@ object IcebergRead {
     * `toSnapshotId`, oldest first — the shared range seam behind
     * [[readAppends]] and [[readChanges]]. Resolution is by the spec's
     * `parent-snapshot-id` ANCESTRY when every non-root snapshot records
-    * it (real Iceberg writers and [[IcebergFixture.commitSnapshot]]
+    * it (real Iceberg writers and [[IcebergWrite.commitSnapshot]]
     * both do): walking parents from `to` is the only range definition
     * that stays correct after [[IcebergWrite.rollback]] — rolled-over
     * snapshots sit in the metadata array but are NOT ancestors of the

@@ -4,9 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** The full MERGE clause family, shared by [[DeltaWrite.mergeClauses]]
-  * and [[IcebergWrite.mergeClauses]] — clause semantics are format-
-  * independent; only the commit differs.
+/** The MERGE clause family and the one MERGE implementation behind the
+  * two writers, [[DeltaWrite.mergeClauses]] and
+  * [[IcebergWrite.mergeClauses]] — validation, the touched-file search
+  * and the clause semantics are format-independent; only the commit
+  * differs. Each format's upsert (`merge`) is the clause list
+  * `[MatchedUpdate(), NotMatchedInsert()]`.
   *
   * Clauses follow SQL MERGE: within each category (MATCHED / NOT
   * MATCHED / NOT MATCHED BY SOURCE) they evaluate in declaration order
@@ -23,7 +26,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Scale shape: ONE shuffle — a full-outer join of the (already
   * file-pruned) target rows against the source on the key equality;
   * every clause then evaluates as codegen'd `when` chains inside the
-  * join's projection, so clause count never adds passes over the data. */
+  * join's projection, so clause count never adds passes over the data.
+  * The unconditional upsert needs no full-outer join at all (see
+  * [[apply]]). */
 object MergeClauses {
 
   sealed trait Clause { def condition: Option[Column] }
@@ -49,17 +54,38 @@ object MergeClauses {
     case _ => false
   }
 
-  /** One-pass MERGE-source precheck shared by the four MERGE writers
-    * (Delta/Iceberg × fast/clauses): a per-key count aggregate yields, in
+  /** The input checks both writers share: the keys exist in the table
+    * and the source, and an INSERT * or UPDATE SET * clause needs the
+    * full table schema in the source. */
+  private[sources] def validate(schema: StructType, source: DataFrame,
+                                keyCols: Seq[String], clauses: Seq[Clause]): Unit = {
+    require(keyCols.nonEmpty, "merge needs at least one key column")
+    val missing = keyCols.filterNot(schema.fieldNames.contains)
+    require(missing.isEmpty, s"merge keys not in table schema: $missing")
+    val srcMissing = keyCols.filterNot(source.schema.fieldNames.contains)
+    require(srcMissing.isEmpty, s"merge keys not in source: $srcMissing")
+    val needsFullSchema = clauses.exists {
+      case _: NotMatchedInsert => true
+      case MatchedUpdate(set, _) => set.isEmpty
+      case _ => false
+    }
+    if (needsFullSchema) {
+      val want = schema.fields.map(f => (f.name, f.dataType)).toSeq
+      val got = source.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      require(got == want, "INSERT * / UPDATE SET * clauses need the full " +
+        s"table schema in the source; got ${got.mkString(",")}, table has ${want.mkString(",")}")
+    }
+  }
+
+  /** One-pass MERGE-source precheck shared by the two MERGE writers
+    * (through [[touchedFiles]]): a per-key count aggregate yields, in
     * ONE job over the source, all three facts every MERGE needs — the
     * duplicate-key gate (max per-key count), the source row count (the
     * empty-MERGE no-op), and the per-key [min, max] bounds that drive the
-    * file-stats prune. These were previously two separate full scans of
-    * the source per MERGE (a groupBy dup probe + a bounds aggregate).
-    * Throws on duplicate keys; None on an empty source; otherwise the
-    * aggregate row laid out (min_k0, max_k0, …, min_kn, max_kn, rows,
-    * maxdup) in keyCols order — a bound is null when its key column is
-    * all-NULL, exactly as the old bounds aggregate reported it. */
+    * file-stats prune. Throws on duplicate keys; None on an empty source;
+    * otherwise the aggregate row laid out (min_k0, max_k0, …, min_kn,
+    * max_kn, rows, maxdup) in keyCols order — a bound is null when its
+    * key column is all-NULL. */
   private[sources] def sourcePrecheck(source: DataFrame, keyCols: Seq[String])
       : Option[org.apache.spark.sql.Row] = {
     val perKey = source.groupBy(keyCols.map(col): _*)
@@ -94,17 +120,80 @@ object MergeClauses {
       }
     }
 
+  /** The live files a MERGE rewrites, for either format: every file
+    * under a BY SOURCE clause; otherwise [[sourcePrecheck]]'s key bounds
+    * prune `files` through their `stats` ([[StatsSkip]] over the table
+    * `schema`), and a distributed semi-join of the surviving files'
+    * rows (`scan`: the format's positions scan, row-level deletes
+    * pre-applied, tagging each row with its file as `__fp`) against the
+    * distinct source keys finds the files that hold a source key. Only
+    * the distinct `__fp` paths reach the driver, mapped back to files
+    * through `qualify` (O(touched files)). The precheck's duplicate-key
+    * gate runs in every case. None ⇔ the MERGE is a no-op (an empty
+    * source and no BY SOURCE clause). */
+  private[sources] def touchedFiles[F](source: DataFrame, keyCols: Seq[String],
+      clauses: Seq[Clause], schema: StructType, files: Seq[F],
+      stats: F => Option[StatsSkip.FileStats], qualify: F => String,
+      scan: Seq[F] => DataFrame): Option[Seq[F]] = {
+    val pre = sourcePrecheck(source, keyCols)
+    if (touchesBySource(clauses)) Some(files)
+    else pre.map { b =>
+      // a file whose key interval is disjoint from the source's overall
+      // key [min,max] cannot contain a match (a match needs EVERY key
+      // equal, so ANY disjoint key dimension suffices)
+      val boundFilters = keyBoundFilters(b, keyCols, schema)
+      val candidates = files.filter(f => StatsSkip.keep(stats(f), boundFilters, schema))
+      if (candidates.isEmpty) Nil
+      else {
+        val byQualified = candidates.map(f => qualify(f) -> f).toMap
+        scan(candidates)
+          .join(source.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
+          .select(col("__fp")).distinct()
+          .collect().map(_.getString(0)).toSeq
+          .map(fp => byQualified.getOrElse(fp,
+            throw new IllegalStateException(s"scan surfaced unknown file $fp")))
+      }
+    }
+  }
+
+  /** An empty frame of `schema` that the optimizer knows is empty (a
+    * local relation): the MERGE target when no file is touched, so the
+    * rewrite plans as the source side alone. */
+  private[sources] def emptyFrame(spark: org.apache.spark.sql.SparkSession,
+                                  schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
   /** Apply `clauses` to `target` (the rows of the touched files, table
     * schema) vs `source`. Returns
     * (output rows, change rows + `_change_type`): the output replaces
     * the touched files; the change rows are the commit's CDF content
     * (update_preimage/update_postimage, delete, insert — carried rows
     * excluded). Both frames share one join; neither is materialized
-    * here. */
+    * here.
+    *
+    * The upsert — exactly `[MatchedUpdate(), NotMatchedInsert()]`, no
+    * conditions — replaces every target row the source names with its
+    * source row, so it needs no full-outer join: the output is the
+    * target anti-joined with the source keys, unioned with the whole
+    * source, and the change rows split the source on the keys the
+    * target holds. */
   def apply(target: DataFrame, source: DataFrame, keyCols: Seq[String],
             clauses: Seq[Clause], schema: StructType,
             aliases: (String, String) = ("t", "s")): (DataFrame, DataFrame) = {
     require(clauses.nonEmpty, "MERGE needs at least one clause")
+    if (clauses == Seq(MatchedUpdate(), NotMatchedInsert())) {
+      val fields = schema.fieldNames.toSeq.map(col)
+      val keys = keyCols.map(col)
+      val srcKeys = source.select(keys: _*).distinct()
+      val src = source.select(fields: _*)
+      val rows = target.select(fields: _*)
+      val matchedKeys = rows.select(keys: _*).distinct()
+      def stamped(df: DataFrame, ct: String) = df.withColumn("_change_type", lit(ct))
+      return (rows.join(srcKeys, keyCols, "left_anti").unionByName(src),
+        stamped(rows.join(srcKeys, keyCols, "left_semi"), "update_preimage")
+          .unionByName(stamped(src.join(matchedKeys, keyCols, "left_semi"), "update_postimage"))
+          .unionByName(stamped(src.join(matchedKeys, keyCols, "left_anti"), "insert")))
+    }
     // user expressions resolve through the aliases; internal references
     // are dataframe-anchored (t(..)/s(..)), immune to a data column
     // shadowing an alias name — pick different aliases when a column is

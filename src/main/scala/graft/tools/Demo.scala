@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.expr.{HashConfig, SystemColumns}
 import graft.loaders._
 import graft.runtime.{Materialization, Runner, TableStore, VaultModel}
@@ -15,14 +16,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     implicit val hc: HashConfig = HashConfig()
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-      .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val wh = java.nio.file.Files.createTempDirectory("graft_demo_wh").toString

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs. */
+/** Shared local SparkSession for all specs: [[LocalSpark]]'s session,
+  * pinned to 4 cores and 4 shuffle partitions. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   protected def sqlc = spark.sqlContext
@@ -12,18 +13,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = LocalSpark.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-      .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-      // some events.parquet vintages carried TIMESTAMP(NANOS), readable only
-      // under this flag (as BIGINT nanos); no-op for the current
-      // timestamp[us] files. SimQueries.events adapts to either surface.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -137,4 +137,17 @@ class MergeClausesSpec extends SparkSpec {
         Seq("id"), Seq(NotMatchedInsert()))
     }
   }
+
+  test("upsert plans without a full-outer join; a conditional list keeps it") {
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    def fullOuterJoins(cs: Seq[Clause]): Int = {
+      val (out, _) = MergeClauses(base, src, Seq("id"), cs, base.schema)
+      out.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == FullOuter => j
+      }.size
+    }
+    assert(fullOuterJoins(Seq(MatchedUpdate(), NotMatchedInsert())) == 0)
+    assert(fullOuterJoins(clauses) > 0)
+  }
 }
