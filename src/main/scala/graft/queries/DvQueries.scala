@@ -2529,9 +2529,8 @@ object DvQueries {
         // one clustered write job lands all 3 snapshot days one-day-per-file
         // (the layout 3 per-day appends produced) without re-scanning and
         // re-hashing customer per day (guide §1.2)
-        // cluster key is an INT day index, not the timestamp itself: hive
-        // partition-dir escaping of ':' would otherwise break the
-        // cleaner's input_file_name↔manifest suffix matching
+        // cluster key is an INT day index; the timestamp itself would do as
+        // well, since the cleaner maps rows to files by their scan path
         t.appendClustered("pit", hk.withColumn("sdts",
           explode(array(Seq("2024-01-01", "2024-01-02", "2024-01-03")
             .map(d => lit(d).cast("timestamp")): _*))),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.sources.{CommitCas, DeltaWrite, MergeClauses, StatsSkip}
+import graft.sources.{CommitCas, DeltaRead, DeltaWrite, MergeClauses, StatsSkip}
 import graft.sources.StatsSkip.FileStats
 
 /** A minimal log-structured transactional table format over a Parquet
@@ -133,8 +133,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def files(name: String, v: Long): Seq[String] =
     manifestLines(name, v).filterNot(_.startsWith("#"))
 
-  /** the version's logical→physical column mapping (empty: unmapped legacy
-    * manifest — raw parquet schema applies) */
+  /** the version's logical→physical column mapping, one `#col` line per
+    * column (every writer records it; [[read]] rejects a manifest
+    * without one) */
   def mapping(name: String, v: Long): Seq[ColMap] =
     manifestLines(name, v).filter(_.startsWith(ColHeader)).map { l =>
       // tab-separated: physical \t logical \t catalogString (type strings
@@ -229,10 +230,19 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
                           blooms: Map[(String, String), String] = Map.empty,
                           checks: Map[String, String] = Map.empty)
 
-  private def metaOf(name: String, v: Long): Meta =
-    Meta(mapping(name, v), statsColumns(name, v), fileStats(name, v),
+  private def metaOf(name: String, v: Long): Meta = {
+    val cols = mapping(name, v)
+    if (cols.isEmpty)
+      throw new IllegalStateException(
+        s"TxLogTable $name: version $v has no column mapping (#col lines)")
+    Meta(cols, statsColumns(name, v), fileStats(name, v),
       txnVersions(name, v), equalityDeletes(name, v),
       bloomColumns(name, v), fileBlooms(name, v), checkConstraints(name, v))
+  }
+
+  /** the current version; throws when the table does not exist */
+  private def latest(name: String): Long = currentVersion(name).getOrElse(
+    throw new IllegalStateException(s"TxLogTable $name does not exist"))
 
   /** enforce the version's CHECK constraints on rows about to be written:
     * a row violates when the predicate is FALSE **or NULL** (Delta's
@@ -262,11 +272,10 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     require(!constraintName.exists(c => c == '\t' || c == '\n') &&
       !sql.exists(c => c == '\t' || c == '\n'),
       "constraint name/expression must be free of tabs and line breaks")
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val m = metaOf(name, v)
     requireChecks(m.copy(checks = Map(constraintName -> sql)),
-      readWithDeletes(name, m.cols, files(name, v), m.edels),
+      rows(name, m, files(name, v)),
       s"$name: existing rows reject new constraint")
     val m2 = m.copy(checks = m.checks + (constraintName -> sql))
     if (!tryCommit(name, v + 1, renderM(m2, files(name, v))))
@@ -275,8 +284,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   }
 
   def dropCheckConstraint(name: String, constraintName: String): Unit = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val m = metaOf(name, v)
     if (!tryCommit(name, v + 1,
         renderM(m.copy(checks = m.checks - constraintName), files(name, v))))
@@ -324,33 +332,31 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       scanStats(name, needScan, cols, schema)
   }
 
-  /** The footer fallback: one column-pruned Spark scan over `fs`
-    * collecting per-file count/min/max/nulls, read as Catalyst values and
-    * typed like [[DeltaWrite.footerRanges]]. */
+  /** The footer fallback: one column-pruned Spark scan over `fs` (the
+    * [[relation]], no deletes) collecting per-file count/min/max/nulls,
+    * read as Catalyst values and typed like [[DeltaWrite.footerRanges]]. */
   private def scanStats(name: String, fs: Seq[String], cols: Seq[ColMap],
                         schema: StructType): Map[String, FileStats] = {
     import org.apache.spark.sql.catalyst.expressions.RowOrdering
-    import org.apache.spark.sql.functions.{count, input_file_name, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.{count, max => fmax, min => fmin}
     val use = schema.filter(f => RowOrdering.isOrderable(f.dataType))
     if (fs.isEmpty || use.isEmpty) return Map.empty
     val aggs = count(lit(1)) +: use.flatMap(f =>
       Seq(fmin(col(f.name)), fmax(col(f.name)), count(col(f.name))))
-    readPhysical(name, cols, fs).groupBy(input_file_name())
+    val manifestPath = byQualified(name, fs)
+    relation(name, Meta(cols, Nil, Map.empty), fs, withFile = true).groupBy(col("__fp"))
       .agg(aggs.head, aggs.tail: _*)
-      .queryExecution.toRdd.map(_.copy()).collect().toSeq.flatMap { r =>
-        val abs = r.getUTF8String(0).toString
-        fs.find(f => abs.endsWith("/" + f)).map { f =>
-          val n = r.getLong(1)
-          val ranges = use.zipWithIndex.flatMap { case (c, i) =>
-            val mn = typedValue(r.get(2 + 3 * i, c.dataType), c.dataType)
-            val mx = typedValue(r.get(3 + 3 * i, c.dataType), c.dataType)
-            if (mn == null || mx == null) None else Some((c.name, mn, mx))
-          }
-          f -> DeltaWrite.FooterRanges(n,
-            ranges.map(x => x._1 -> x._2).toMap, ranges.map(x => x._1 -> x._3).toMap,
-            use.zipWithIndex.map { case (c, i) => c.name -> (n - r.getLong(4 + 3 * i)) }.toMap,
-            Set.empty).stats
+      .queryExecution.toRdd.map(_.copy()).collect().toSeq.map { r =>
+        val n = r.getLong(1)
+        val ranges = use.zipWithIndex.flatMap { case (c, i) =>
+          val mn = typedValue(r.get(2 + 3 * i, c.dataType), c.dataType)
+          val mx = typedValue(r.get(3 + 3 * i, c.dataType), c.dataType)
+          if (mn == null || mx == null) None else Some((c.name, mn, mx))
         }
+        manifestPath(r.getUTF8String(0).toString) -> DeltaWrite.FooterRanges(n,
+          ranges.map(x => x._1 -> x._2).toMap, ranges.map(x => x._1 -> x._3).toMap,
+          use.zipWithIndex.map { case (c, i) => c.name -> (n - r.getLong(4 + 3 * i)) }.toMap,
+          Set.empty).stats
       }.toMap
   }
 
@@ -376,10 +382,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * the mapping's physical names; returns relative paths. */
   private def writeBatch(name: String, df: DataFrame,
                          cols: Seq[ColMap]): Seq[String] = {
-    val physical =
-      if (cols.isEmpty) df
-      else df.select(cols.map(c =>
-        col(c.logical).cast(c.typeDdl).as(c.physical)): _*)
+    val physical = df.select(cols.map(c =>
+      col(c.logical).cast(c.typeDdl).as(c.physical)): _*)
     val batch = s"d-${UUID.randomUUID()}"
     val dir = root(name).resolve(batch)
     physical.write.mode("overwrite").parquet(dir.toString)
@@ -403,11 +407,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
                                   cols: Seq[ColMap], cluster: Column,
                                   buckets: Int): Seq[String] = {
     val clustered = df.withColumn("__cluster", cluster)
-    val physical =
-      (if (cols.isEmpty) clustered
-       else clustered.select(cols.map(c =>
-         col(c.logical).cast(c.typeDdl).as(c.physical)) :+ col("__cluster"): _*))
-        .repartition(buckets, col("__cluster"))
+    val physical = clustered.select(cols.map(c =>
+      col(c.logical).cast(c.typeDdl).as(c.physical)) :+ col("__cluster"): _*)
+      .repartition(buckets, col("__cluster"))
     val batch = s"d-${UUID.randomUUID()}"
     val dir = root(name).resolve(batch)
     physical.write.mode("overwrite").partitionBy("__cluster")
@@ -428,41 +430,74 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     StructType(cols.map(c =>
       StructField(c.physical, DataType.fromDDL(c.typeDdl), nullable = true)))
 
-  /** raw PHYSICAL-name read of `fs` under the mapping's known schema (no
-    * logical rename/cast) — the shared no-inference read for stats/bloom
-    * builders. Falls back to mergeSchema inference only for legacy
-    * unmapped manifests. */
-  private def readPhysical(name: String, cols: Seq[ColMap],
-                           fs: Seq[String]): DataFrame =
-    if (cols.isEmpty) spark.read.option("mergeSchema", "true")
-      .parquet(fs.map(f => root(name).resolve(f).toString): _*)
-    else spark.read.schema(physicalSchema(cols))
-      .parquet(fs.map(f => root(name).resolve(f).toString): _*)
+  /** The relation over exactly `fs` under the mapping's physical schema:
+    * a [[ManifestFileIndex]] (pushed data filters prune files by `m`'s
+    * stats and blooms). `withFile` adds each row's file as `__fp`, the
+    * `_metadata.file_path` string [[qualify]] gives — taken in the same
+    * projection as the relation, since `_metadata` does not survive an
+    * intervening Project, and only when asked: an unused `_metadata`
+    * still makes the scan build every metadata field. Files predating an
+    * added column null-fill; the schema comes from the mapping, so no
+    * footer inference runs. */
+  private def relation(name: String, m: Meta, fs: Seq[String],
+                       withFile: Boolean): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val dataSchema = physicalSchema(m.cols)
+    val rel = HadoopFsRelation(new ManifestFileIndex(name, m, fs, dataSchema),
+      new StructType(), dataSchema, None, new ParquetFileFormat(),
+      Map.empty[String, String])(spark)
+    val df = spark.baseRelationToDataFrame(rel)
+    if (withFile) df.select(col("*"), col("_metadata.file_path").as("__fp")) else df
+  }
 
-  /** read `fs` through the mapping: files predating an added column
-    * null-fill (the reader null-fills requested-but-absent columns),
-    * renamed columns surface under their logical name. The mapping KNOWS
-    * the merged physical schema, so it is passed explicitly — the
-    * `mergeSchema` footer-inference pass this replaces cost one extra
-    * Spark job (a distributed footer read over every file) per table
-    * read, pure fixed overhead at any scale and O(files) wasted I/O at
-    * 100 TB. */
-  private def readMapped(name: String, cols: Seq[ColMap],
-                         fs: Seq[String]): DataFrame = {
-    if (fs.isEmpty) {
-      require(cols.nonEmpty,
-        s"TxLogTable $name: empty unmapped table has no recoverable schema")
-      return spark.emptyDataFrame.select(cols.map(c =>
-        lit(null).cast(c.typeDdl).as(c.logical)): _*)
+  /** The one TxLogTable scan: the LOGICAL rows of `fs` (typed column
+    * mapping, renamed columns under their logical names) with the
+    * equality deletes applied, plus `__fp` when `withFile`. Each delete
+    * is a broadcast anti-join on its PHYSICAL key columns — physical
+    * names are immutable, so deletes survive renames — gated to the
+    * files in its scope by `__fp`, so a key re-inserted after the delete
+    * stays visible. Every read, the registered views and `merge` go
+    * through it. */
+  private def scan(name: String, m: Meta, fs: Seq[String],
+                   withFile: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    val scanned = fs.toSet
+    val edels = m.edels.filter(_.scope.exists(scanned))
+    val base = relation(name, m, fs, withFile || edels.nonEmpty)
+    val cleaned = edels.foldLeft(base) { (df, e) =>
+      // physical key columns are always present: delete files are only
+      // scoped to data files that were live (hence schema-complete for
+      // the keys) when the delete committed
+      val keys = deleteKeys(name, e).select(e.keyPhys.map(col): _*)
+      val scope = e.scope.intersect(scanned).toSeq.map(qualify(name, _))
+      df.join(broadcast(keys), e.keyPhys.map(k => df(k) === keys(k)).reduce(_ && _) &&
+        df("__fp").isInCollection(scope), "left_anti")
     }
-    if (cols.isEmpty)
-      spark.read.option("mergeSchema", "true")
-        .parquet(fs.map(f => root(name).resolve(f).toString): _*)
-    else
-      spark.read.schema(physicalSchema(cols))
-        .parquet(fs.map(f => root(name).resolve(f).toString): _*)
-        .select(cols.map(c =>
-          col(c.physical).cast(c.typeDdl).as(c.logical)): _*)
+    cleaned.select(m.cols.map(c => col(c.physical).cast(c.typeDdl).as(c.logical)) ++
+      (if (withFile) Seq(col("__fp")) else Nil): _*)
+  }
+
+  /** [[scan]] without `__fp`: the rows a reader sees */
+  private def rows(name: String, m: Meta, fs: Seq[String]): DataFrame =
+    scan(name, m, fs, withFile = false)
+
+  /** the `_metadata.file_path` form of manifest path `f` */
+  private def qualify(name: String, f: String): String =
+    DeltaRead.qualifiedPath(spark, root(name).resolve(f))
+
+  /** qualified path → manifest path, over `fs` */
+  private def byQualified(name: String, fs: Seq[String]): Map[String, String] =
+    fs.map(f => qualify(name, f) -> f).toMap
+
+  /** The files among `subset` of version `v` holding a row that `keep`
+    * retains (`keep` sees [[scan]]'s rows: deletes applied, plus
+    * `__fp`). Only the distinct files reach the driver. */
+  private[graft] def filesHolding(name: String, v: Long, subset: Seq[String])
+                                 (keep: DataFrame => DataFrame): Seq[String] = {
+    val manifestPath = byQualified(name, subset)
+    keep(scan(name, metaOf(name, v), subset, withFile = true)).select("__fp").distinct()
+      .collect().map(r => manifestPath(r.getString(0))).toSeq
   }
 
   /** the deleted-key frame of one equality-delete file (physical key
@@ -470,46 +505,17 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   private def deleteKeys(name: String, e: EqDelete): DataFrame =
     spark.read.parquet(root(name).resolve(e.file).toString)
 
-  /** read `fs` under `cols` with the applicable equality deletes
-    * anti-joined in. Files are grouped by their applicable delete-file
-    * SET (normally one group: everything pre-delete), each group
-    * anti-joins its deletes ON THE PHYSICAL key columns before the
-    * logical mapping applies — physical names are immutable, so deletes
-    * survive renames. */
-  private def readWithDeletes(name: String, cols: Seq[ColMap],
-                              fs: Seq[String], edels: Seq[EqDelete]): DataFrame = {
-    val applicable = edels.filter(_.scope.exists(fs.contains))
-    if (applicable.isEmpty) return readMapped(name, cols, fs)
-    val groups = fs.groupBy(f => applicable.filter(_.scope(f)).map(_.file))
-    groups.map { case (delFiles, groupFs) =>
-      val raw =
-        if (cols.isEmpty) spark.read.option("mergeSchema", "true")
-          .parquet(groupFs.map(f => root(name).resolve(f).toString): _*)
-        else spark.read.schema(physicalSchema(cols))
-          .parquet(groupFs.map(f => root(name).resolve(f).toString): _*)
-      val surviving = applicable.filter(e => delFiles.contains(e.file))
-        .foldLeft(raw) { (df, e) =>
-          // physical key columns are always present: delete files are only
-          // scoped to data files that were live (hence schema-complete for
-          // the keys) when the delete committed
-          df.join(deleteKeys(name, e), e.keyPhys, "left_anti")
-        }
-      if (cols.isEmpty) surviving
-      else surviving.select(cols.map(c =>
-        col(c.physical).cast(c.typeDdl).as(c.logical)): _*)
-    }.reduce(_ unionByName _)
-  }
-
-  /** read the current snapshot (resolves the manifest ONCE — concurrent
-    * commits do not move this DataFrame's version) */
-  def read(name: String): DataFrame = readVersion(name,
-    currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist")))
+  /** Read the current snapshot (resolves the manifest ONCE — concurrent
+    * commits do not move this DataFrame's version). The scan prunes
+    * files by the manifest's min/max stats and per-file blooms whenever
+    * Catalyst pushes a predicate down ([[ManifestFileIndex]]), so a
+    * plain `spark.sql("SELECT … FROM t WHERE k = 42")` over a registered
+    * view schedules only candidate files. */
+  def read(name: String): DataFrame = readVersion(name, latest(name))
 
   /** time travel */
   def readVersion(name: String, v: Long): DataFrame =
-    readWithDeletes(name, mapping(name, v), files(name, v),
-      equalityDeletes(name, v))
+    rows(name, metaOf(name, v), files(name, v))
 
   /** RESTORE TABLE ... TO VERSION (Delta RESTORE): re-commit an old
     * version's manifest verbatim as the NEW head — a metadata-only undo
@@ -519,8 +525,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * same vacuum keeps them live). Roll-forward is equally possible:
     * restore to any retained version, in either direction. */
   def restore(name: String, toVersion: Long): Unit = {
-    val head = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val head = latest(name)
     require(versions(name).contains(toVersion),
       s"TxLogTable $name: version $toVersion is not retained " +
         s"(have ${versions(name)})")
@@ -538,7 +543,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     require(subset.forall(live.contains),
       s"TxLogTable $name: readFiles over non-live files " +
         s"${subset.filterNot(live.contains)}")
-    readWithDeletes(name, mapping(name, v), subset, equalityDeletes(name, v))
+    rows(name, metaOf(name, v), subset)
   }
 
   /** MERGE-ON-READ row-level DELETE (Iceberg equality deletes / Delta
@@ -551,7 +556,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * distinct deleted keys. */
   def deleteWhere(name: String, cond: org.apache.spark.sql.Column,
                   keyCols: Seq[String]): Long =
-    deleteKeysOf(name, keyCols) { (snapshot, _) => snapshot.filter(cond) }
+    deleteKeysOf(name, keyCols)(_.filter(cond))
 
   /** [[deleteWhere]] with the doomed keys given as a DATAFRAME instead of
     * a `Column` predicate — the shape a production GDPR/forget batch has
@@ -563,7 +568,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * `keyCols`. */
   def deleteWhereKeys(name: String, keyDf: DataFrame,
                       keyCols: Seq[String]): Long =
-    deleteKeysOf(name, keyCols) { (snapshot, _) =>
+    deleteKeysOf(name, keyCols) { snapshot =>
       snapshot.join(keyDf.select(keyCols.map(col): _*), keyCols, "leftsemi")
     }
 
@@ -573,15 +578,14 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * equality-delete scoped to the files live now. Returns the number of
     * distinct deleted keys. */
   private def deleteKeysOf(name: String, keyCols: Seq[String])
-      (restrict: (DataFrame, Seq[ColMap]) => DataFrame): Long = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+      (restrict: DataFrame => DataFrame): Long = {
+    val v = latest(name)
     val m = metaOf(name, v)
     val live = files(name, v)
     val phys = keyCols.map(kc => m.cols.find(_.logical == kc).getOrElse(
       throw new IllegalArgumentException(
         s"TxLogTable $name: no column $kc")))
-    val keys = restrict(readWithDeletes(name, m.cols, live, m.edels), m.cols)
+    val keys = restrict(rows(name, m, live))
       .select(phys.map(c => col(c.logical).cast(c.typeDdl).as(c.physical)): _*)
       .distinct()
       .localCheckpoint()
@@ -638,8 +642,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     }
   }
 
-  /** Append with AUTOMATIC SCHEMA EVOLUTION (Delta's mergeSchema write
-    * option): columns in `df` the table lacks are added first as
+  /** Append with AUTOMATIC SCHEMA EVOLUTION (Delta's schema-merging
+    * write option): columns in `df` the table lacks are added first as
     * metadata-only DDL (older files null-fill), then the batch appends;
     * columns the table has but `df` lacks null-fill the new batch.
     * Existing columns must keep their type — a changed type is a real
@@ -649,8 +653,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       case None => append(name, df)
       case Some(v) =>
         val m = metaOf(name, v)
-        require(m.cols.nonEmpty,
-          s"TxLogTable $name: appendEvolve needs a mapped table")
         val incoming = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
         m.cols.foreach { c =>
           incoming.get(c.logical).foreach { t =>
@@ -773,8 +775,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def replaceFiles(name: String, touched: Seq[String],
                    retype: Map[String, String] = Map.empty)
                   (rewrite: DataFrame => DataFrame): Unit = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val live = files(name, v)
     val m = metaOf(name, v)
     require(touched.forall(live.contains),
@@ -796,7 +797,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       // its output files leave every delete's scope via renderM), so
       // tombstoned rows can never be resurrected by a rewrite
       else writeBatch(name,
-        rewrite(readWithDeletes(name, m.cols, touched, m.edels)), newCols)
+        rewrite(rows(name, m, touched)), newCols)
     val next = live.filterNot(touched.contains) ++ added
     val withStats = m.copy(cols = newCols,
       stats = m.stats ++ batchStats(name, added, newCols, m.statsCols))
@@ -809,60 +810,41 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   /** S7 — row-level MERGE compiled onto [[replaceFiles]]' primitive: rows of
     * `name` whose `keyCols` match a `source` row are replaced by it,
     * unmatched `source` rows are inserted — the semantics of the reference's
-    * `MERGE INTO` rehash (`rehash_single_hub.sql:84-111`). FILE-PRUNED: a
-    * key-presence probe (`input_file_name` + semi-join) finds the files that
-    * actually hold matched keys; only those are rewritten, every other live
-    * file carries over by identity. One atomic version publishes
-    * (removed ∪ added); readers of the old version stay consistent. The
-    * probe's collected output is file PATHS — metadata-scale, like a
-    * partition listing. */
+    * `MERGE INTO` rehash (`rehash_single_hub.sql:84-111`), and the same
+    * upsert as Delta's and Iceberg's `merge`: [[MergeClauses.touchedFiles]]
+    * finds the files that hold a source key (key-range stats prune, then a
+    * semi-join over [[scan]]), [[MergeClauses.apply]] rewrites only those,
+    * every other live file carries over by identity. One atomic version
+    * publishes (removed ∪ added); readers of the old version stay
+    * consistent. A source with duplicate keys is rejected; an empty source
+    * commits nothing. */
   def merge(name: String, source: DataFrame, keyCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{input_file_name, max => fmax, min => fmin}
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    import MergeClauses.{MatchedUpdate, NotMatchedInsert}
+    val v = latest(name)
     val live = files(name, v)
     val m = metaOf(name, v)
-    // the source is evaluated by THREE jobs (key-range probe, touched-file
-    // probe, survivors write) — materialize it once so a nondeterministic
-    // input (limit without order, sampling, now()) cannot yield different
-    // key sets between the probe and the write, which would leave a matched
-    // key's old row alive next to its inserted replacement
-    val src = source.localCheckpoint()
+    val schema = StructType(m.cols.map(c =>
+      StructField(c.logical, DataType.fromDDL(c.typeDdl), nullable = true)))
+    // the source is evaluated by several jobs (precheck, touched-file
+    // probe, rewrite) — materialize it once, typed as the table, so a
+    // nondeterministic input (limit without order, sampling, now()) cannot
+    // yield different key sets between the probe and the write, which
+    // would leave a matched key's old row alive next to its replacement
+    val src = source.select(m.cols.map(c =>
+      col(c.logical).cast(c.typeDdl).as(c.logical)): _*).localCheckpoint()
     requireChecks(m, src, s"$name merge source")
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    // data skipping: the probe scans only files whose per-file [min,max]
-    // intersects the source's key range — with stats on the key column a
-    // clustered table turns the probe from O(table) into O(overlap). No
-    // stats on any key: no bounds job.
-    val probeFiles = {
-      val statted = keyCols.flatMap(kc => m.cols.find(_.logical == kc))
-        .filter(c => m.statsCols.contains(c.physical))
-      if (statted.isEmpty) live
-      else {
-        // laid out (min_k0, max_k0, …) as keyBoundFilters reads it, each
-        // bound typed as the table column
-        val rangeAggs = statted.flatMap(c => Seq(
-          fmin(col(c.logical).cast(c.typeDdl)), fmax(col(c.logical).cast(c.typeDdl))))
-        val bounds = srcKeys.agg(rangeAggs.head, rangeAggs.tail: _*).head()
-        val schema = physicalSchema(statted)
-        val filters = MergeClauses.keyBoundFilters(bounds, statted.map(_.physical), schema)
-        live.filter(f => StatsSkip.keep(m.stats.get(f), filters, schema))
-      }
+    val upsert = Seq(MatchedUpdate(), NotMatchedInsert())
+    val toLogical = m.cols.map(c => c.physical -> c.logical).toMap
+    val touched = MergeClauses.touchedFiles[String](src, keyCols, upsert, schema,
+        live, f => m.stats.get(f).flatMap(TxLogTable.remap(_, toLogical)),
+        qualify(name, _), scan(name, m, _, withFile = true)) match {
+      case None => return
+      case Some(fs) => fs
     }
-    val touchedAbs =
-      if (probeFiles.isEmpty) Array.empty[String]
-      else readMapped(name, m.cols, probeFiles)
-        .withColumn("__file", input_file_name())
-        .join(srcKeys, keyCols, "left_semi")
-        .select("__file").distinct().collect().map(_.getString(0))
-    val touched = probeFiles.filter(f => touchedAbs.exists(_.endsWith("/" + f)))
-    val tableCols = m.cols.map(_.logical).toIndexedSeq
-    val survivors =
-      if (touched.isEmpty) src.select(tableCols.map(col): _*)
-      else readWithDeletes(name, m.cols, touched, m.edels)
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(src.select(tableCols.map(col): _*))
-    val added = writeBatch(name, survivors, m.cols)
+    val target =
+      if (touched.isEmpty) MergeClauses.emptyFrame(spark, schema)
+      else rows(name, m, touched)
+    val added = writeBatch(name, MergeClauses(target, src, keyCols, upsert, schema)._1, m.cols)
     val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols))
     if (!tryCommit(name, v + 1,
         renderM(withStats, live.filterNot(touched.contains) ++ added)))
@@ -877,8 +859,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * survive renames; files written before enablement that the backfill
     * missed (or all-NULL files) simply stay unprunable. */
   def setStatsColumns(name: String, logicalCols: Seq[String]): Unit = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val m = metaOf(name, v)
     val phys = logicalCols.map { lc =>
       m.cols.find(_.logical == lc).getOrElse(
@@ -901,8 +882,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def candidateFiles(name: String, logicalCol: String,
                      lo: String, hi: String): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, GreaterThanOrEqual, LessThanOrEqual, Literal}
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val m = metaOf(name, v)
     val c = m.cols.find(_.logical == logicalCol).getOrElse(
       throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
@@ -925,10 +905,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   /** Read only the files possibly relevant to `logicalCol` ∈ [lo, hi] — the
     * caller still applies its exact predicate; this prunes the scan. */
   def readPruned(name: String, logicalCol: String, lo: String, hi: String): DataFrame = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
-    readWithDeletes(name, mapping(name, v),
-      candidateFiles(name, logicalCol, lo, hi), equalityDeletes(name, v))
+    val v = latest(name)
+    rows(name, metaOf(name, v), candidateFiles(name, logicalCol, lo, hi))
   }
 
   // ---- per-file BLOOM FILTERS: point-lookup file skipping ----------------
@@ -987,26 +965,21 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * key-count rows. Shared by [[setBloomColumn]] and the compaction
     * rewrites (which must re-bloom the files they emit, or the skipping
     * property silently dies with the replaced files). */
-  private def buildFileBlooms(name: String, cols: Seq[ColMap], fs: Seq[String],
+  private def buildFileBlooms(name: String, m: Meta, fs: Seq[String],
                               physCol: String,
                               nbits: Int): Map[(String, String), String] = {
-    import org.apache.spark.sql.functions.{col => fcol, collect_set, explode, input_file_name}
+    import org.apache.spark.sql.functions.{collect_set, explode}
     if (fs.isEmpty) return Map.empty
-    val raw = readPhysical(name, cols, fs)
-      .select(input_file_name().as("__file"), fcol(physCol))
-    val posRows = raw.distinct()
-      .select(fcol("__file"), explode(bloomPosCols(fcol(physCol), nbits)).as("pos"))
-      .groupBy(fcol("__file")).agg(collect_set(fcol("pos")).as("ps"))
+    val manifestPath = byQualified(name, fs)
+    val posRows = relation(name, m, fs, withFile = true)
+      .select(col("__fp"), col(physCol)).distinct()
+      .select(col("__fp"), explode(bloomPosCols(col(physCol), nbits)).as("pos"))
+      .groupBy(col("__fp")).agg(collect_set(col("pos")).as("ps"))
       .collect()
     posRows.map { row =>
-      // map absolute → manifest-relative by suffix (clustered batches nest
-      // a partition dir, so the depth under the batch dir is not fixed)
-      val abs = row.getString(0)
-      val rel = fs.find(f => abs.endsWith("/" + f)).getOrElse(
-        throw new IllegalStateException(s"bloom build saw non-live file $abs"))
       val bits = new java.util.BitSet(nbits)
       row.getSeq[Int](1).foreach(bits.set)
-      (rel, physCol) ->
+      (manifestPath(row.getString(0)), physCol) ->
         java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
     }.toMap
   }
@@ -1021,7 +994,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
                             added: Seq[String]): Map[(String, String), String] =
     m.bloomCols.foldLeft(Map.empty[(String, String), String]) {
       case (acc, (physCol, nbits)) =>
-        acc ++ buildFileBlooms(name, m.cols, added, physCol, nbits)
+        acc ++ buildFileBlooms(name, m, added, physCol, nbits)
     }
 
   /** Enable a Bloom filter on `logicalCol` and build one per live file in
@@ -1029,24 +1002,21 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * metadata scale — ≤ nbits ints per file). `bitsPerKey` ≈ 20 gives
     * ~0.1% false-positive rate at 4 probes. */
   def setBloomColumn(name: String, logicalCol: String, bitsPerKey: Int = 20): Unit = {
-    import org.apache.spark.sql.functions.{approx_count_distinct, col => fcol, collect_set, explode, input_file_name}
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    import org.apache.spark.sql.functions.approx_count_distinct
+    val v = latest(name)
     val m = metaOf(name, v)
     val c = m.cols.find(_.logical == logicalCol).getOrElse(
       throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
     val live = files(name, v)
-    val raw = readPhysical(name, m.cols, live)
-      .select(input_file_name().as("__file"), fcol(c.physical))
     // sizing only needs an NDV ESTIMATE (an overshoot widens the filter, an
     // undershoot mildly raises FPR): approx_count_distinct is one map-side
     // HLL pass, where exact countDistinct shuffles every distinct key. The
     // 1.2 margin covers HLL's ~2% error band with room to spare.
-    val maxNdv = (raw.agg(approx_count_distinct(fcol(c.physical)))
-      .head().getLong(0) * 1.2).toLong
+    val maxNdv = (relation(name, m, live, withFile = false)
+      .agg(approx_count_distinct(col(c.physical))).head().getLong(0) * 1.2).toLong
     val nbits = math.max(1024L,
       java.lang.Long.highestOneBit(math.max(1L, maxNdv * bitsPerKey) * 2 - 1)).toInt
-    val byFile = buildFileBlooms(name, m.cols, live, c.physical, nbits)
+    val byFile = buildFileBlooms(name, m, live, c.physical, nbits)
     val m2 = m.copy(bloomCols = m.bloomCols + (c.physical -> nbits),
       blooms = m.blooms ++ byFile)
     if (!tryCommit(name, v + 1, renderM(m2, live)))
@@ -1059,8 +1029,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * one of the value's bit positions — no false negatives by
     * construction; files without a bloom stay candidates. */
   def bloomCandidateFiles(name: String, logicalCol: String, value: String): Seq[String] = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val m = metaOf(name, v)
     val c = m.cols.find(_.logical == logicalCol).getOrElse(
       throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
@@ -1074,41 +1043,41 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
           blooms.get((f, c.physical)) match {
             case None => true
             case Some(b64) =>
-              val bits = decodedBloom(name, v, f, c.physical, b64)
+              val bits = decodedBloom(name, f, c.physical, nbits, b64)
               pos.forall(bits.get)
           }
         }
     }
   }
 
-  /** decoded bitsets, memoized per (table, version, file, column): a
-    * bitset is hundreds of KB of base64 — decoding it once per PROBE
-    * instead of once per VERSION dominated point-lookup cost */
+  /** decoded bitsets, memoized per (table, file, column, size in bits):
+    * data files are immutable, so that key fixes the bitset in every
+    * version. A bitset is hundreds of KB of base64 — decoding it on every
+    * PROBE dominated point-lookup cost */
   private val bloomBitsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String, String), java.util.BitSet]()
+    (String, String, String, Int), java.util.BitSet]()
 
-  private def decodedBloom(name: String, v: Long, file: String,
-                           col: String, b64: String): java.util.BitSet = {
+  private def decodedBloom(name: String, file: String, col: String,
+                           nbits: Int, b64: String): java.util.BitSet = {
     // eviction outside the lambda — CHM forbids self-mutation in compute
     if (bloomBitsCache.size > 1024) bloomBitsCache.clear()
-    bloomBitsCache.computeIfAbsent((name, v, file, col), { _ =>
+    bloomBitsCache.computeIfAbsent((name, file, col, nbits), { _ =>
       java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(b64))
     })
   }
 
-  // ---- SQL-surface file skipping (the FileIndex seam) --------------------
-  // registerViews makes vault tables queryable from plain `spark.sql`, but
-  // candidateFiles / bloomCandidateFiles were store-API-only: a
-  // `SELECT … FROM t WHERE k = …` over a registered view scanned every
-  // live file. The Spark-first fix is the seam Delta (TahoeFileIndex) and
-  // Iceberg use on Spark: FileSourceScanExec hands its pushed-down data
+  // ---- file skipping on every scan (the FileIndex seam) ------------------
+  // Every TxLogTable read is a relation over this index, so the
+  // registered views and plain `spark.sql` reach the candidateFiles /
+  // bloomCandidateFiles economy: it is the seam Delta (TahoeFileIndex) and
+  // Iceberg use on Spark. FileSourceScanExec hands its pushed-down data
   // filters to FileIndex.listFiles, so a manifest-aware index prunes files
   // by min/max stats and per-file blooms BEFORE tasks are scheduled. At
   // 100 TB a point probe schedules O(candidate files) tasks instead of
   // O(table), and it composes with Catalyst for free — the predicate is
   // still applied exactly row-wise; the index only shrinks the scan.
 
-  private final class ManifestFileIndex(name: String, v: Long, m: Meta,
+  private final class ManifestFileIndex(name: String, m: Meta,
                                         live: Seq[String], dataSchema: StructType)
       extends org.apache.spark.sql.execution.datasources.FileIndex {
     import org.apache.spark.sql.catalyst.InternalRow
@@ -1137,7 +1106,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       m.bloomCols.get(a.name).forall { nbits =>
         (bloomKey(value, a.dataType), m.blooms.get((f, a.name))) match {
           case (Some(s), Some(b64)) =>
-            bloomPositions(s, nbits).forall(decodedBloom(name, v, f, a.name, b64).get)
+            bloomPositions(s, nbits).forall(decodedBloom(name, f, a.name, nbits, b64).get)
           case _ => true
         }
       }
@@ -1161,56 +1130,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     }
   }
 
-  /** The current snapshot as a DataFrame whose SCAN prunes files from the
-    * manifest's min/max stats and per-file blooms whenever Catalyst pushes
-    * a predicate down — [[read]]'s exact semantics (typed column mapping +
-    * delete-time-scoped equality deletes) over a skipping-capable
-    * FileIndex. [[registerViews]] registers THIS, so a plain
-    * `spark.sql("SELECT … FROM t WHERE k = 42")` schedules only candidate
-    * files — the store-API `candidateFiles`/`bloomCandidateFiles` economy
-    * reached from the dbt-user SQL surface. */
-  def sqlScan(name: String): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
-    val m = metaOf(name, v)
-    val live = files(name, v)
-    // legacy unmapped manifests and empty tables declare no physical
-    // schema — serve the plain snapshot read (nothing to prune anyway)
-    if (m.cols.isEmpty || live.isEmpty) return readVersion(name, v)
-    val dataSchema = physicalSchema(m.cols)
-    val idx = new ManifestFileIndex(name, v, m, live, dataSchema)
-    val rel = HadoopFsRelation(idx, new StructType(), dataSchema, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-    val base = spark.baseRelationToDataFrame(rel)
-    // equality deletes, scoped exactly as readWithDeletes: a tombstone
-    // kills a key only inside the files live at delete time, so a later
-    // re-insert of the key survives. File identity comes from
-    // input_file_name, made manifest-relative by a suffix extract (the
-    // table dir name is matched greedily, i.e. at its LAST occurrence).
-    val cleaned =
-      if (m.edels.isEmpty) base
-      else {
-        import org.apache.spark.sql.functions.{broadcast, input_file_name, regexp_extract}
-        val relCol = regexp_extract(input_file_name(),
-          ".*/" + java.util.regex.Pattern.quote(name) + "/(.+)$", 1)
-        m.edels.foldLeft(base.withColumn("__rel", relCol)) { (df, e) =>
-          val keys = deleteKeys(name, e).select(e.keyPhys.map(col): _*)
-          val cond = e.keyPhys.map(k => df(k) === keys(k)).reduce(_ && _) &&
-            df("__rel").isInCollection(e.scope)
-          df.join(broadcast(keys), cond, "left_anti")
-        }.drop("__rel")
-      }
-    cleaned.select(m.cols.map(c =>
-      col(c.physical).cast(c.typeDdl).as(c.logical)): _*)
-  }
-
-  /** vault-as-SQL surface over the skipping scan: every registered view's
-    * WHERE clause prunes files through [[sqlScan]]'s FileIndex */
-  override def registerViews(prefix: String = ""): Unit =
-    tables.foreach(n => sqlScan(n).createOrReplaceTempView(prefix + n))
-
   // ---- S9: metadata-only DDL (rehash_single_hub.sql:17-26,51-69) ---------
   // Each commits a new manifest and touches ZERO data files: logical names
   // map onto immutable physical names, so a rename is a header edit, an
@@ -1221,11 +1140,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   private def alterMapping(name: String, op: String)
                           (f: Seq[ColMap] => Seq[ColMap]): Unit = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val m = metaOf(name, v)
-    require(m.cols.nonEmpty, s"TxLogTable $name: $op needs a mapped table " +
-      "(legacy unmapped manifest — overwrite once to initialize the mapping)")
     val next = f(m.cols)
     // stats are keyed by physical name (rename-proof); entries for columns
     // no longer mapped (drops) fall away with the mapping
@@ -1240,7 +1156,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // contract on every DDL would be worse.
     val withStats = Meta(next,
       m.statsCols.filter(phys),
-      m.stats.flatMap { case (f, st) => TxLogTable.restrict(st, phys).map(f -> _) },
+      m.stats.flatMap { case (f, st) =>
+        TxLogTable.remap(st, phys.map(c => c -> c).toMap).map(f -> _) },
       m.txns, m.edels,
       m.bloomCols.filter { case (c, _) => phys(c) },
       m.blooms.filter { case ((_, c), _) => phys(c) },
@@ -1291,8 +1208,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * Returns (filesBefore, filesAfter). */
   def compact(name: String, targetFiles: Int = 1,
               clusterBy: Seq[String] = Nil): (Int, Int) = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val live = files(name, v)
     // pending equality deletes always warrant the rewrite (it materializes
     // them), even when the file count is already at target
@@ -1302,7 +1218,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val m = metaOf(name, v)
     // the rewrite MATERIALIZES pending equality deletes (tombstoned rows
     // are dropped from the new files) — so the new meta clears them
-    val all = readWithDeletes(name, m.cols, live, m.edels)
+    val all = rows(name, m, live)
     val compacted =
       if (clusterBy.isEmpty) all.repartition(math.max(1, targetFiles))
       else all.repartitionByRange(math.max(1, targetFiles), clusterBy.map(col): _*)
@@ -1332,11 +1248,10 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
                     zorderBy: Seq[String]): (Int, Int) = {
     require(zorderBy.nonEmpty && zorderBy.size <= 4,
       s"compactZOrder: 1-4 z-order columns, got ${zorderBy.size}")
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"TxLogTable $name does not exist"))
+    val v = latest(name)
     val live = files(name, v)
     val m = metaOf(name, v)
-    val all = readWithDeletes(name, m.cols, live, m.edels)
+    val all = rows(name, m, live)
     // shared deterministic z-layout core (graft.ops.ZCluster) — also
     // behind DeltaWrite.optimize; `all eq compacted` means empty table:
     // nothing to cluster, a rewrite would only churn the manifest
@@ -1430,10 +1345,11 @@ object TxLogTable {
   private val statsMapper = new com.fasterxml.jackson.databind.ObjectMapper()
     .enable(com.fasterxml.jackson.databind.DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
 
-  /** `st` over the columns `keep` accepts; None when no column is left */
-  private def restrict(st: FileStats, keep: String => Boolean): Option[FileStats] = {
-    val r = st.copy(min = st.min.filter(e => keep(e._1)), max = st.max.filter(e => keep(e._1)),
-      nullCount = st.nullCount.filter(e => keep(e._1)))
+  /** `st` over the columns `to` names, renamed to `to`'s names; None when
+    * no column is left */
+  private def remap(st: FileStats, to: Map[String, String]): Option[FileStats] = {
+    def re[V](m: Map[String, V]) = m.collect { case (c, x) if to.contains(c) => to(c) -> x }
+    val r = st.copy(min = re(st.min), max = re(st.max), nullCount = re(st.nullCount))
     if (r.min.isEmpty && r.nullCount.isEmpty) None else Some(r)
   }
 }

@@ -306,7 +306,7 @@ object TxPitCleaner {
   /** Returns (files rewritten, live files before). */
   def cleanUp(t: TxLogTable, pitTable: String, snapshotTable: String,
               sdts: String = "sdts", trigger: String = "is_active"): (Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, input_file_name, lit}
+    import org.apache.spark.sql.functions.{broadcast, lit}
     val active = t.read(snapshotTable).filter(col(trigger)).select(sdts).distinct()
     val v = t.currentVersion(pitTable).getOrElse(
       throw new IllegalStateException(s"TxLogTable $pitTable does not exist"))
@@ -353,14 +353,10 @@ object TxPitCleaner {
     def isActive(c: org.apache.spark.sql.Column) = c.isin(activeVals: _*)
     val doomedByProbe =
       if (unsure.isEmpty) Seq.empty[String]
-      else {
-        val probed = t.readFiles(pitTable, v, unsure)
-          .withColumn("__file", input_file_name())
-          .filter(col(sdts).isNotNull) // NOT IN never deletes NULL sdts
-        val abs = (if (inSet) probed.filter(!isActive(col(sdts)))
-                   else probed.join(broadcast(active), Seq(sdts), "left_anti"))
-          .select("__file").distinct().collect().map(_.getString(0))
-        unsure.filter(f => abs.exists(_.endsWith("/" + f)))
+      else t.filesHolding(pitTable, v, unsure) { rows =>
+        val probed = rows.filter(col(sdts).isNotNull) // NOT IN never deletes NULL sdts
+        if (inSet) probed.filter(!isActive(col(sdts)))
+        else probed.join(broadcast(active), Seq(sdts), "left_anti")
       }
     val touched = doomedByStats ++ doomedByProbe
     if (touched.nonEmpty)

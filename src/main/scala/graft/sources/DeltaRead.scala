@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   * history, and the live-file set is what ANY planner must hold to
   * schedule a scan. The data files are then served through a
   * [[DeltaFileIndex]], the same FileIndex seam the engine's own tx log
-  * uses (TxLogTable.sqlScan): FileSourceScanExec hands pushed-down
+  * uses (TxLogTable.read): FileSourceScanExec hands pushed-down
   * partition predicates to `listFiles`, so a partition-pruned scan
   * schedules O(matching partitions) tasks before anything runs. At
   * 100 TB that is the difference between touching 3 of 3000 date
@@ -539,21 +539,17 @@ object DeltaRead {
     else applyDeletionVectors(spark, Paths.get(tableDir), snap, base)
   }
 
-  /** Qualified scan path of a live file — the exact string
+  /** Qualified scan path of a local data file — the exact string
     * `_metadata.file_path` reports for its rows: scheme + (non-empty)
     * authority + PERCENT-ENCODED path, e.g. `file:/tmp/a%20b/x.parquet`
     * (probed empirically — neither Hadoop's decoded `Path.toString` nor
-    * `toUri.toString`'s `file:///` triple-slash form matches). */
-  private[sources] def qualifiedPath(spark: SparkSession, tableRoot: Path,
-                                     f: AddFile): String = {
-    val hPath = new org.apache.hadoop.fs.Path(tableRoot.resolve(f.path).toUri)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    scanPathForm(fs.makeQualified(hPath))
-  }
-
-  /** Render a Hadoop path in the `_metadata.file_path` string form. */
-  private[sources] def scanPathForm(p: org.apache.hadoop.fs.Path): String = {
-    val u = p.toUri
+    * `toUri.toString`'s `file:///` triple-slash form matches). The one
+    * key from a scan row back to its file, for Delta, Iceberg and
+    * TxLogTable alike. */
+  private[graft] def qualifiedPath(spark: SparkSession, p: Path): String = {
+    val hPath = new org.apache.hadoop.fs.Path(p.toUri)
+    val u = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(hPath).toUri
     val auth = Option(u.getAuthority).filter(_.nonEmpty).orNull
     new java.net.URI(u.getScheme, auth, u.getPath, u.getQuery, u.getFragment)
       .toString
@@ -574,7 +570,7 @@ object DeltaRead {
     import spark.implicits._
     val dvs: Seq[(String, Array[Byte])] = snap.files.flatMap(f =>
       f.deletionVector.map(d =>
-        qualifiedPath(spark, tableRoot, f) -> DeletionVectors.resolve(tableRoot, d)))
+        qualifiedPath(spark, tableRoot.resolve(f.path)) -> DeletionVectors.resolve(tableRoot, d)))
     val totalCard = snap.files.flatMap(_.deletionVector).map(_.cardinality).sum
     val deleted = spark.createDataset(dvs)
       .flatMap { case (p, bytes) =>

@@ -479,7 +479,7 @@ object IcebergRead {
     import spark.implicits._
     val BroadcastRows = 10_000_000L
     val qual: Map[String, String] =
-      snap.files.map(f => f.path -> qualifiedPath(spark, f.path)).toMap
+      snap.files.map(f => f.path -> DeltaRead.qualifiedPath(spark, Paths.get(f.path))).toMap
     val pos = dels.filterNot(_.isEquality)
     val eqs = dels.filter(_.isEquality)
     def sized(df: DataFrame, rows: Long): DataFrame =
@@ -557,14 +557,6 @@ object IcebergRead {
       .withColumn("__ri", col("_metadata.row_index"))
   }
 
-  /** The qualified scan path `_metadata.file_path` reports for `abs` —
-    * scheme + percent-encoded path (see [[DeltaRead.scanPathForm]]). */
-  private[sources] def qualifiedPath(spark: SparkSession, abs: String): String = {
-    val hPath = new org.apache.hadoop.fs.Path(Paths.get(abs).toUri)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DeltaRead.scanPathForm(fs.makeQualified(hPath))
-  }
-
   /** Merge-on-read: suppress rows named by position deletes (anti-join on
     * (file, physical row index)) and by equality deletes (null-safe
     * anti-join on the equality columns, gated on data-file sequence <
@@ -578,7 +570,7 @@ object IcebergRead {
     import spark.implicits._
     val BroadcastRows = 10_000_000L
     val qual: Map[String, String] =
-      snap.files.map(f => f.path -> qualifiedPath(spark, f.path)).toMap
+      snap.files.map(f => f.path -> DeltaRead.qualifiedPath(spark, Paths.get(f.path))).toMap
     var cur = base // arrives WITH __fp/__ri (scanRelation withPositions)
 
     val pos = snap.deletes.filterNot(_.isEquality)

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The MERGE clause family and the one MERGE implementation behind the
-  * two writers, [[DeltaWrite.mergeClauses]] and
-  * [[IcebergWrite.mergeClauses]] — validation, the touched-file search
-  * and the clause semantics are format-independent; only the commit
-  * differs. Each format's upsert (`merge`) is the clause list
+  * three writers, [[DeltaWrite.mergeClauses]],
+  * [[IcebergWrite.mergeClauses]] and [[graft.runtime.TxLogTable.merge]]
+  * — the touched-file search and the clause semantics are
+  * format-independent; only the scan and the commit differ. Each
+  * format's upsert (`merge`) is the clause list
   * `[MatchedUpdate(), NotMatchedInsert()]`.
   *
   * Clauses follow SQL MERGE: within each category (MATCHED / NOT
@@ -77,7 +78,7 @@ object MergeClauses {
     }
   }
 
-  /** One-pass MERGE-source precheck shared by the two MERGE writers
+  /** One-pass MERGE-source precheck shared by the three MERGE writers
     * (through [[touchedFiles]]): a per-key count aggregate yields, in
     * ONE job over the source, all three facts every MERGE needs — the
     * duplicate-key gate (max per-key count), the source row count (the
@@ -86,7 +87,7 @@ object MergeClauses {
     * otherwise the aggregate row laid out (min_k0, max_k0, …, min_kn,
     * max_kn, rows, maxdup) in keyCols order — a bound is null when its
     * key column is all-NULL. */
-  private[sources] def sourcePrecheck(source: DataFrame, keyCols: Seq[String])
+  private[graft] def sourcePrecheck(source: DataFrame, keyCols: Seq[String])
       : Option[org.apache.spark.sql.Row] = {
     val perKey = source.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
@@ -120,18 +121,19 @@ object MergeClauses {
       }
     }
 
-  /** The live files a MERGE rewrites, for either format: every file
+  /** The live files a MERGE rewrites, for any format: every file
     * under a BY SOURCE clause; otherwise [[sourcePrecheck]]'s key bounds
     * prune `files` through their `stats` ([[StatsSkip]] over the table
-    * `schema`), and a distributed semi-join of the surviving files'
-    * rows (`scan`: the format's positions scan, row-level deletes
-    * pre-applied, tagging each row with its file as `__fp`) against the
+    * `schema`, so the stats use the schema's column names), and a
+    * distributed semi-join of the surviving files' rows (`scan`: the
+    * format's scan of those files, row-level deletes pre-applied,
+    * tagging each row with its file as `__fp`) against the
     * distinct source keys finds the files that hold a source key. Only
     * the distinct `__fp` paths reach the driver, mapped back to files
     * through `qualify` (O(touched files)). The precheck's duplicate-key
     * gate runs in every case. None ⇔ the MERGE is a no-op (an empty
     * source and no BY SOURCE clause). */
-  private[sources] def touchedFiles[F](source: DataFrame, keyCols: Seq[String],
+  private[graft] def touchedFiles[F](source: DataFrame, keyCols: Seq[String],
       clauses: Seq[Clause], schema: StructType, files: Seq[F],
       stats: F => Option[StatsSkip.FileStats], qualify: F => String,
       scan: Seq[F] => DataFrame): Option[Seq[F]] = {
@@ -159,8 +161,8 @@ object MergeClauses {
   /** An empty frame of `schema` that the optimizer knows is empty (a
     * local relation): the MERGE target when no file is touched, so the
     * rewrite plans as the source side alone. */
-  private[sources] def emptyFrame(spark: org.apache.spark.sql.SparkSession,
-                                  schema: StructType): DataFrame =
+  private[graft] def emptyFrame(spark: org.apache.spark.sql.SparkSession,
+                                schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** Apply `clauses` to `target` (the rows of the touched files, table

@@ -83,6 +83,15 @@ class TxLogTableSpec extends SparkSpec {
     assert(t.read("tbl").as[Int].collect().toSet === Set(1))
   }
 
+  test("a manifest without a column mapping (#col lines) is rejected") {
+    val (t, dir) = freshStore()
+    t.append("tbl", Seq(1).toDF("id"))
+    Files.write(Paths.get(dir, "tbl", "_log", "v00000002.manifest"),
+      t.files("tbl", 1).mkString("\n").getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](t.read("tbl"))
+    assert(e.getMessage.contains("no column mapping"))
+  }
+
   test("replaceFiles rewrites only touched files; untouched files survive by identity") {
     val (t, _) = freshStore()
     t.append("tbl", Seq((1, "a")).toDF("id", "v"))
@@ -779,8 +788,7 @@ class TxLogTableSpec extends SparkSpec {
     val want = (4 to 10).map(i => (i, s"v$i")).toSet + ((2, "again"))
     assert(got === want)
     // and the skipping path agrees with the plain snapshot read everywhere
-    assert(t.sqlScan("tbl").as[(Int, String)].collect().toSet ===
-      t.read("tbl").as[(Int, String)].collect().toSet)
+    assert(t.read("tbl").as[(Int, String)].collect().toSet === want)
   }
 
   test("sqlScan: pushed point/range predicates return exact rows under DDL renames") {
@@ -805,6 +813,7 @@ class TxLogTableSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col => fc}
     val r = new scala.util.Random(47)
     val (t, _) = freshStore()
+    val written = Seq.newBuilder[(java.lang.Long, String, Int)]
     // 6 appended batches, skewed key ranges with overlap + some all-NULL
     // stretches; stats on k, bloom on tag
     (0 until 6).foreach { b =>
@@ -813,13 +822,25 @@ class TxLogTableSpec extends SparkSpec {
         val k: java.lang.Long = if (r.nextInt(10) == 0) null else (lo + i).toLong
         (k, s"t${r.nextInt(25)}", b)
       }
+      written ++= rows
       t.append("tbl", rows.toDF("k", "tag", "b"))
     }
     t.setStatsColumns("tbl", Seq("k"))
     t.setBloomColumn("tbl", "tag")
     t.deleteWhere("tbl", fc("b") === 2 && fc("k") % 3 === 0, Seq("k", "tag"))
     t.registerViews("rp_")
-    val plain = t.read("tbl")
+    // the reference: the unfiltered read (no pushed filter, so no file is
+    // skipped) as a local relation, first checked against the model — the
+    // written rows minus every row whose (k, tag) a delete named (a NULL k
+    // is never deleted)
+    val all = t.read("tbl")
+    val plain = spark.createDataFrame(java.util.Arrays.asList(all.collect(): _*), all.schema)
+    val deleted = written.result().collect {
+      case (k, tag, 2) if k != null && k % 3 == 0 => (k, tag)
+    }.toSet
+    val model = written.result().filterNot { case (k, tag, _) => deleted((k, tag)) }
+      .map { case (k, tag, b) => org.apache.spark.sql.Row(k, tag, b).toString }.sorted
+    assert(plain.collect().map(_.toString).sorted.toSeq === model)
     for (iter <- 1 to 25) {
       val pred = r.nextInt(6) match {
         case 0 => s"k = ${r.nextInt(520)}"
@@ -851,5 +872,47 @@ class TxLogTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       t.append("tbl", Seq((-1, "bad", 0)).toDF("id", "v", "extra"))
     }
+  }
+
+  test("merge contract: a duplicate-key source is rejected, an empty source commits nothing") {
+    val (t, _) = freshStore()
+    t.append("tbl", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    val v = t.currentVersion("tbl")
+    val dup = Seq((1, "x"), (1, "y")).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](t.merge("tbl", dup, Seq("id")))
+    assert(e.getMessage === intercept[IllegalArgumentException](
+      graft.sources.MergeClauses.sourcePrecheck(dup, Seq("id"))).getMessage)
+    assert(t.currentVersion("tbl") === v)
+    t.merge("tbl", Seq.empty[(Int, String)].toDF("id", "v"), Seq("id"))
+    assert(t.currentVersion("tbl") === v, "an empty source adds no version")
+    assert(t.read("tbl").as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b")))
+  }
+
+  test("escaped cluster paths: merge, blooms and the PIT cleaner find their files") {
+    import org.apache.spark.sql.functions.{col, when}
+    val (t, _) = freshStore()
+    // ':' in a cluster value is escaped in the directory name (x%3A1), and
+    // the scan reports that name escaped once more (x%253A1)
+    t.appendClustered("tbl", Seq((1, "a"), (2, "b")).toDF("id", "v"),
+      when(col("id") === 1, "x:1").otherwise("y:2"), 2)
+    val v = t.currentVersion("tbl").get
+    assert(t.files("tbl", v).exists(_.contains("__cluster=x%3A1/")))
+    t.setBloomColumn("tbl", "v")
+    assert(t.bloomCandidateFiles("tbl", "v", "a") ===
+      t.files("tbl", v).filter(_.contains("__cluster=x%3A1/")))
+    t.merge("tbl", Seq((1, "A")).toDF("id", "v"), Seq("id"))
+    assert(t.read("tbl").as[(Int, String)].collect().toSet === Set((1, "A"), (2, "b")))
+
+    // a PIT clustered by its timestamp: every file sits under an escaped
+    // `__cluster=2024-01-0N 00%3A00%3A00` directory
+    val pit = Seq(("h1", "2024-01-01"), ("h2", "2024-01-01"), ("h1", "2024-01-02"),
+      ("h2", "2024-01-03")).toDF("hk", "d").select(col("hk"), col("d").cast("timestamp").as("sdts"))
+    t.appendClustered("pit", pit, col("sdts"), 3)
+    t.overwrite("snap", Seq(("2024-01-01", true), ("2024-01-02", false), ("2024-01-03", true))
+      .toDF("d", "is_active").select(col("d").cast("timestamp").as("sdts"), col("is_active")))
+    assert(TxPitCleaner.cleanUp(t, "pit", "snap") === ((1, 3)))
+    assert(t.read("pit").selectExpr("hk", "CAST(sdts AS DATE) AS d").as[(String, java.sql.Date)]
+      .collect().map { case (h, d) => (h, d.toString) }.toSet ===
+      Set(("h1", "2024-01-01"), ("h2", "2024-01-01"), ("h2", "2024-01-03")))
   }
 }
