@@ -221,8 +221,9 @@ final class Runner(spark: SparkSession, store: VaultStore, models: Seq[VaultMode
     * serializing driver-side. Spark schedules the concurrent jobs fairly;
     * correctness is unchanged because two selected models never write the
     * same table and cross-model reads go through the completed parents'
-    * materialized state. */
-  /** `continueOnError = true` is dbt's run semantics: a failing model is
+    * materialized state.
+    *
+    * `continueOnError = true` is dbt's run semantics: a failing model is
     * recorded as an `error` step, its selected descendants as `skipped`
     * (never attempted — their inputs are missing or stale), and every
     * OTHER branch still loads. The default remains fail-fast: first
