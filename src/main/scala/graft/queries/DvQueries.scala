@@ -8,6 +8,7 @@ import graft.expr.SystemColumns._
 import graft.loaders._
 import graft.ops.Ops
 import graft.queries.{OracleSql => O}
+import graft.runtime.TxRehash
 
 /** One driver-checkable query: Spark implementation + DuckDB oracle SQL.
   * Column names MUST match between the two (driver compares by name). */
@@ -116,14 +117,14 @@ object DvQueries {
     * `ma_sat_incremental`, end-dating + join-back in `ma_sat_v1_order`).
     * At scale staging IS a written table consumed by many entities;
     * persist/localCheckpoint were measured dead ends, a parquet round-trip
-    * through [[graft.runtime.TableStore]] is not. */
+    * through [[graft.runtime.TxLogTable]] is not. */
   private val maStageCache = scala.collection.mutable.Map.empty[String, DataFrame]
   private def ordMaStageMat(s: SparkSession, dir: String): DataFrame =
     maStageCache.synchronized {
       maStageCache.getOrElseUpdate(dir, {
-        val store = new graft.runtime.TableStore(s, tmpWarehouse("graft_q_mastage"))
-        store.overwrite("ord_ma_stage", ordMaStage(s, dir))
-        store.read("ord_ma_stage")
+        val t = new graft.runtime.TxLogTable(s, tmpWarehouse("graft_q_mastage"))
+        t.overwrite("ord_ma_stage", ordMaStage(s, dir))
+        t.read("ord_ma_stage")
       })
     }
 
@@ -327,11 +328,13 @@ object DvQueries {
     // filter + key anti-join) and APPENDS the delta; the final hub is then
     // rewritten as a bucketed, ldts-sorted table (the 100 TB layout) and
     // read back THROUGH the bucket metadata, semi-joined on every column
-    // against the plain store read. Any write path that drops, duplicates,
+    // against the TxLogTable read. Any write path that drops, duplicates,
     // or mutates a row breaks the hash against the one-shot hub oracle.
     Q("store_roundtrip",
       (s, dir) => {
-        val store = new graft.runtime.TableStore(s, tmpWarehouse("graft_store_rt"))
+        val wh = tmpWarehouse("graft_store_rt")
+        val store = new graft.runtime.TxLogTable(s, wh)
+        val bucketed = new graft.runtime.Bucketed(s, wh)
         def srcs(f: DataFrame => DataFrame) = Seq(
           EntitySource(f(custStage(s, dir)), Some("hk_customer_h"), Seq("c_custkey")),
           EntitySource(f(ordStage(s, dir)), Some("hk_customer_h"), Seq("o_custkey")))
@@ -342,10 +345,10 @@ object DvQueries {
         val delta = HubLoader.records(srcs(identity),
           "hk_customer_h", Seq("custkey"), target = Some(store.read("hub_rt")))
         store.append("hub_rt", delta)
-        store.overwriteBucketed("graft_rt_hub_b", store.read("hub_rt"),
+        bucketed.overwrite("graft_rt_hub_b", store.read("hub_rt"),
           "hk_customer_h", 8, LdtsAlias)
         val cols = Seq("hk_customer_h", "custkey", LdtsAlias, RsrcAlias)
-        store.readTable("graft_rt_hub_b")
+        bucketed.read("graft_rt_hub_b")
           .join(store.read("hub_rt"), cols, "left_semi")
           .select(cols.map(col): _*)
       },
@@ -1438,13 +1441,13 @@ object DvQueries {
     // The same YAML mini-vault, but scheduled by the DAG Runner through the
     // YamlVault bridge (the dbt-manifest analogue): dependencies extracted
     // from the yaml documents themselves, models topologically ordered and
-    // materialized through a TableStore, PIT read back — byte-identical to
+    // materialized through a TxLogTable, PIT read back — byte-identical to
     // the hand-wired yaml_vault result (same oracle).
     Q("runner_yaml_vault",
       (s, dir) => {
         import graft.meta.YamlVault
         import graft.meta.YamlVault.ModelDef
-        val st = new graft.runtime.TableStore(s, tmpWarehouse("graft_q_ryaml"))
+        val st = new graft.runtime.TxLogTable(s, tmpWarehouse("graft_q_ryaml"))
         val defs = Seq(
           ModelDef("stage_customer", "stage",
             """ldts: "timestampadd(DAY, cast(c_custkey % 3 as int), timestamp'2024-01-01 00:00:00')"
@@ -1703,9 +1706,10 @@ object DvQueries {
               |  TRUE AS stable_under_evolution
               |FROM customer""".stripMargin)),
 
-    // S7 driver-verified — copy-on-write partition-pruned MERGE: replace
-    // matched keys, insert new ones, touching only the partitions the delta
-    // occupies; the returned table IS the post-merge state, oracle-checked.
+    // S7 oracle-checked — copy-on-write MERGE over a pday-clustered table:
+    // replace matched keys, insert new ones, rewriting only the files that
+    // hold a delta key; the returned table IS the post-merge state,
+    // oracle-checked.
     // The INSERT keys are shifted by max(o_orderkey)+1 derived from the
     // data on both engines — a fixed +1e7 collided with real orderkeys at
     // sf10 (dense keys reach 1.5e7), turning intended inserts into
@@ -1713,21 +1717,21 @@ object DvQueries {
     Q("merge_partitioned",
       (s, dir) => {
         val wh = tmpWarehouse("graft_q_merge")
-        val store = new graft.runtime.TableStore(s, wh)
+        val store = new graft.runtime.TxLogTable(s, wh)
         val keyOff = rd(s, dir, "orders")
           .agg(max(col("o_orderkey"))).head().getLong(0) + 1L
         val base = rd(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 4).cast("long").as("pday"))
-        store.overwritePartitioned("t", base, "pday")
-        // UPDATE every %10 key, INSERT a shifted copy of every %1000 key —
-        // pday is a stable function of the key (the pruned-MERGE contract)
+        store.appendClustered("t", base, col("pday"), 4)
+        // UPDATE every %10 key, INSERT a shifted copy of every %1000 key
+        // (unique source keys — the MERGE's duplicate-key gate)
         val delta = base.filter(col("o_orderkey") % 10 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + lit(10.0))
           .unionByName(
             base.filter(col("o_orderkey") % 1000 === 0)
               .select((col("o_orderkey") + keyOff).as("o_orderkey"), col("o_totalprice"),
                 ((col("o_orderkey") + keyOff) % 4).cast("long").as("pday")))
-        store.mergePartitioned("t", "pday", delta, Seq("o_orderkey"))
+        store.merge("t", delta, Seq("o_orderkey"))
         store.read("t").select(col("o_orderkey"), col("o_totalprice"),
           col("pday").cast("long").as("pday"))
       },
@@ -1969,28 +1973,27 @@ object DvQueries {
     // At 100 TB each refresh costs O(batch) + O(groups), never O(table).
     Q("incremental_agg_maintain",
       (s, dir) => {
-        val store = new graft.runtime.TableStore(s, tmpWarehouse("graft_aggmv"))
+        val store = new graft.runtime.TxLogTable(s, tmpWarehouse("graft_aggmv"))
         val src = rd(s, dir, "orders")
-        // each refresh WRITES A NEW VERSIONED TABLE: reading agg_mv while
-        // overwriting the same path is a read-under-overwrite race (the
-        // lazy merge plan scans files the write is deleting)
+        // each refresh overwrites agg_mv from its own read: the read pins
+        // a version whose files no commit deletes, and expectedVersion
+        // aborts the refresh if another commit landed in between
         (0 until 3).foreach { b =>
           val delta = src.filter(col("o_orderkey") % 3 === b)
             .groupBy(col("o_orderpriority"))
             .agg(count(lit(1)).as("n"),
               sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-          val merged =
-            if (b == 0) delta
-            else store.read(s"agg_mv_${b - 1}")
-              .select(col("o_orderpriority"), col("n").as("n0"), col("cents").as("c0"))
-              .join(delta.select(col("o_orderpriority"), col("n").as("n1"),
-                col("cents").as("c1")), Seq("o_orderpriority"), "full_outer")
-              .select(col("o_orderpriority"),
-                (coalesce(col("n0"), lit(0L)) + coalesce(col("n1"), lit(0L))).as("n"),
-                (coalesce(col("c0"), lit(0L)) + coalesce(col("c1"), lit(0L))).as("cents"))
-          store.overwrite(s"agg_mv_$b", merged)
+          val head = store.currentVersion("agg_mv")
+          val merged = head.fold(delta)(v => store.readVersion("agg_mv", v)
+            .select(col("o_orderpriority"), col("n").as("n0"), col("cents").as("c0"))
+            .join(delta.select(col("o_orderpriority"), col("n").as("n1"),
+              col("cents").as("c1")), Seq("o_orderpriority"), "full_outer")
+            .select(col("o_orderpriority"),
+              (coalesce(col("n0"), lit(0L)) + coalesce(col("n1"), lit(0L))).as("n"),
+              (coalesce(col("c0"), lit(0L)) + coalesce(col("c1"), lit(0L))).as("cents")))
+          store.overwrite("agg_mv", merged, head)
         }
-        store.read("agg_mv_2").select(col("o_orderpriority"), col("n"),
+        store.read("agg_mv").select(col("o_orderpriority"), col("n"),
           round(col("cents").cast("double") / 100.0, 2).as("total_price"))
       },
       Some("""SELECT o_orderpriority, cast(count(*) AS BIGINT) AS n,
@@ -2008,7 +2011,7 @@ object DvQueries {
     Q("bucketed_join_zero_shuffle",
       (s, dir) => {
         import s.implicits._
-        val store = new graft.runtime.TableStore(s, tmpWarehouse("graft_bjoin"))
+        val store = new graft.runtime.Bucketed(s, tmpWarehouse("graft_bjoin"))
         val hub = HubLoader.records(
           Seq(EntitySource(custStage(s, dir), Some("hk_customer_h"), Seq("c_custkey"))),
           "hk_customer_h", Seq("custkey"), target = None)
@@ -2018,18 +2021,18 @@ object DvQueries {
         val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try {
-          store.overwriteBucketed("graft_q_bjoin_hub", hub, "hk_customer_h", 8, LdtsAlias)
-          store.overwriteBucketed("graft_q_bjoin_sat", sat, "hk_customer_h", 8, LdtsAlias)
-          val j = store.readTable("graft_q_bjoin_hub")
+          store.overwrite("graft_q_bjoin_hub", hub, "hk_customer_h", 8, LdtsAlias)
+          store.overwrite("graft_q_bjoin_sat", sat, "hk_customer_h", 8, LdtsAlias)
+          val j = store.read("graft_q_bjoin_hub")
             .select(col("hk_customer_h"), col("custkey"))
-            .join(store.readTable("graft_q_bjoin_sat"), Seq("hk_customer_h"))
+            .join(store.read("graft_q_bjoin_sat"), Seq("hk_customer_h"))
           // count exchanges in the plan STRING: under AQE the executed plan
           // is an AdaptiveSparkPlanExec whose inner tree collect() skips,
           // which would make this proof vacuously pass with 0
           val nExch = "ShuffleExchange".r
             .findAllIn(j.queryExecution.executedPlan.toString).size
-          Seq((store.readTable("graft_q_bjoin_hub").count(),
-            store.readTable("graft_q_bjoin_sat").count(),
+          Seq((store.read("graft_q_bjoin_hub").count(),
+            store.read("graft_q_bjoin_sat").count(),
             j.count(), nExch.toLong))
             .toDF("n_hub", "n_sat", "n_joined", "n_exchanges")
         } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -2044,7 +2047,8 @@ object DvQueries {
     // RIGHT-TO-BE-FORGOTTEN erasure across the vault, driver-verified:
     // build hub + sat into a warehouse, then physically remove every row
     // of the forget-set keys (%97) from BOTH tables via one broadcast
-    // anti-join rewrite per table — the GDPR path a hash-keyed vault
+    // anti-join overwrite per table (a merge-on-read delete would leave
+    // the rows in the data files) — the GDPR path a hash-keyed vault
     // makes cheap: the business key never appears in satellites, so
     // erasing by hashkey sweeps every entity table without schema
     // knowledge. Emits per-table before/forgotten/after counts plus a
@@ -2053,7 +2057,7 @@ object DvQueries {
     Q("vault_forget",
       (s, dir) => {
         import s.implicits._
-        val store = new graft.runtime.TableStore(s, tmpWarehouse("graft_forget"))
+        val store = new graft.runtime.TxLogTable(s, tmpWarehouse("graft_forget"))
         val hub = HubLoader.records(
           Seq(EntitySource(custStage(s, dir), Some("hk_customer_h"), Seq("c_custkey"))),
           "hk_customer_h", Seq("custkey"), target = None)
@@ -2067,9 +2071,11 @@ object DvQueries {
           .select(Hashing.hashkey(Seq(col("c_custkey"))).as("hk_customer_h"))
           .distinct()
         def forget(table: String): (Long, Long, Long) = {
-          val before = store.read(table).count()
-          store.rewrite(table)(df =>
-            df.join(broadcast(forgetKeys), Seq("hk_customer_h"), "left_anti"))
+          val v = store.currentVersion(table).get
+          val old = store.readVersion(table, v)
+          val before = old.count()
+          store.overwrite(table,
+            old.join(broadcast(forgetKeys), Seq("hk_customer_h"), "left_anti"), Some(v))
           // ONE post-rewrite scan answers both "how many rows survive" and
           // "do any forgotten keys remain" (the probe the oracle checks) —
           // the separate count + left_semi pass was a second full scan
@@ -2360,14 +2366,14 @@ object DvQueries {
       },
       Some("SELECT * FROM nation")),
 
-    // The SQL-facing surface: a vault materialized through TableStore is
+    // The SQL-facing surface: a vault materialized through TxLogTable is
     // queryable from plain spark.sql via registerViews — the dbt-user
     // contract (models are tables you SELECT from). Views are lazy scans,
     // so the SQL join plans identically to the DataFrame equivalent.
     Q("vault_sql_views",
       (s, dir) => {
         val wh = tmpWarehouse("graft_q_sqlviews")
-        val store = new graft.runtime.TableStore(s, wh)
+        val store = new graft.runtime.TxLogTable(s, wh)
         val c = custStage(s, dir)
         store.overwrite("customer_h",
           c.select(col("hk_customer_h"), col("c_custkey"), col(LdtsAlias), col(RsrcAlias)))
@@ -2383,15 +2389,15 @@ object DvQueries {
       },
       Some("SELECT c_custkey, c_name, c_acctbal FROM customer")),
 
-    // S7/S9 driver-verified — whole-vault rehash MD5 → SHA256: hub map
-    // built, hub rewritten, satellite re-keyed via the map with its
-    // hashdiff recomputed under the new algorithm; the returned satellite
-    // is the post-rehash state, oracle-checked against directly-computed
-    // SHA256 hashes.
+    // S7/S9 oracle-checked — whole-vault rehash MD5 → SHA256: hub
+    // rehashed, satellite re-keyed through the hub's (deprecated → current)
+    // columns with its hashdiff recomputed under the new algorithm; the
+    // returned satellite is the post-rehash, post-cleanup state,
+    // oracle-checked against directly-computed SHA256 hashes.
     Q("rehash_vault",
       (s, dir) => {
         val wh = tmpWarehouse("graft_q_rehash")
-        val store = new graft.runtime.TableStore(s, wh)
+        val store = new graft.runtime.TxLogTable(s, wh)
         val sha = HashConfig(algorithm = "SHA256")
         val c = custStage(s, dir)
         store.overwrite("customer_h",
@@ -2401,12 +2407,11 @@ object DvQueries {
               Hashing.hashdiff(Seq(col("c_name"), col("c_acctbal"))))
             .select(col("hk_customer_h"), col("hd_customer_s"), col(LdtsAlias),
               col(RsrcAlias), col("c_name"), col("c_acctbal")))
-        graft.runtime.Rehasher.rehashAll(store,
-          hubs = Seq(graft.runtime.Rehasher.HubRehash("customer_h", "hk_customer_h", Seq("c_custkey"))),
-          links = Nil,
-          sats = Seq(graft.runtime.Rehasher.SatRehash("customer_s", "hk_customer_h",
-            Some("hd_customer_s"), Seq("c_name", "c_acctbal"), "customer_h")),
-          oldCfg = hc, newCfg = sha)
+        val hubs = Seq(TxRehash.HubRehash("customer_h", "hk_customer_h", Seq("c_custkey")))
+        val sats = Seq(TxRehash.SatRehash("customer_s", "hk_customer_h",
+          Some("hd_customer_s"), Seq("c_name", "c_acctbal"), "customer_h"))
+        TxRehash.rehashAll(store, hubs, Nil, sats, oldCfg = hc, newCfg = sha)
+        TxRehash.dropDeprecatedAll(store, hubs, Nil, sats)
         store.read("customer_s").select("hk_customer_h", "hd_customer_s", "c_name", "c_acctbal")
       },
       Some(s"""SELECT ${O.hashkeySha256("c_custkey")} AS hk_customer_h,
@@ -2437,15 +2442,15 @@ object DvQueries {
         t.overwrite("customer_order_l",
           ord.select("lk_customer_order_l", "hk_customer_h", "hk_order_h"))
         val hubs = Seq(
-          graft.runtime.Rehasher.HubRehash("customer_h", "hk_customer_h", Seq("c_custkey")),
-          graft.runtime.Rehasher.HubRehash("order_h", "hk_order_h", Seq("o_orderkey")))
-        val links = Seq(graft.runtime.Rehasher.LinkRehash(
+          TxRehash.HubRehash("customer_h", "hk_customer_h", Seq("c_custkey")),
+          TxRehash.HubRehash("order_h", "hk_order_h", Seq("o_orderkey")))
+        val links = Seq(TxRehash.LinkRehash(
           "customer_order_l", "lk_customer_order_l", Seq(
-            graft.runtime.Rehasher.LinkHubRef("hk_customer_h", "customer_h", Seq("c_custkey")),
-            graft.runtime.Rehasher.LinkHubRef("hk_order_h", "order_h", Seq("o_orderkey")))))
-        graft.runtime.TxRehash.rehashAll(t, hubs, links, Nil,
+            TxRehash.LinkHubRef("hk_customer_h", "customer_h", Seq("c_custkey")),
+            TxRehash.LinkHubRef("hk_order_h", "order_h", Seq("o_orderkey")))))
+        TxRehash.rehashAll(t, hubs, links, Nil,
           oldCfg = hc, newCfg = HashConfig(algorithm = "SHA256"))
-        graft.runtime.TxRehash.dropDeprecatedAll(t, hubs, links, Nil)
+        TxRehash.dropDeprecatedAll(t, hubs, links, Nil)
         t.read("customer_order_l")
       },
       Some(s"""SELECT ${O.hashkeySha256("o_custkey", "o_orderkey")} AS lk_customer_order_l,
@@ -2482,17 +2487,17 @@ object DvQueries {
           .withColumn("ldts", ldts)
           .select("hk_customer_h", "hd_orders_ms", "ldts",
             "o_orderkey", "o_orderstatus", "o_totalprice"))
-        val hubs = Seq(graft.runtime.Rehasher.HubRehash(
+        val hubs = Seq(TxRehash.HubRehash(
           "customer_h", "hk_customer_h", Seq("c_custkey")))
         val sats = Seq(
-          graft.runtime.Rehasher.SatRehash("customer_s", "hk_customer_h",
+          TxRehash.SatRehash("customer_s", "hk_customer_h",
             Some("hd_customer_s"), Seq("c_name", "c_acctbal"), "customer_h"),
-          graft.runtime.Rehasher.SatRehash("orders_ms", "hk_customer_h",
+          TxRehash.SatRehash("orders_ms", "hk_customer_h",
             Some("hd_orders_ms"), Seq("o_orderstatus", "o_totalprice"),
             "customer_h", maKeys = Seq("o_orderkey")))
-        graft.runtime.TxRehash.rehashAll(t, hubs, Nil, sats,
+        TxRehash.rehashAll(t, hubs, Nil, sats,
           oldCfg = hc, newCfg = HashConfig(algorithm = "SHA256"))
-        graft.runtime.TxRehash.dropDeprecatedAll(t, hubs, Nil, sats)
+        TxRehash.dropDeprecatedAll(t, hubs, Nil, sats)
         t.read("orders_ms")
           .join(t.read("customer_s")
             .select("hk_customer_h", "hd_customer_s", "c_name", "c_acctbal"),
@@ -2722,7 +2727,7 @@ object DvQueries {
       (s, dir) => {
         import graft.runtime.{Materialization, Runner, VaultModel}
         val wh = tmpWarehouse("graft_q_runner")
-        val store = new graft.runtime.TableStore(s, wh)
+        val store = new graft.runtime.TxLogTable(s, wh)
         val cust = rd(s, dir, "customer")
         val ord = rd(s, dir, "orders")
         def custBatch(base: String, evenOnly: Boolean, drift: Double) = {
@@ -2817,12 +2822,12 @@ object DvQueries {
     Q("ddl_lifecycle",
       (s, dir) => {
         val wh = tmpWarehouse("graft_q_ddl")
-        val store = new graft.runtime.TableStore(s, wh)
-        store.overwrite("t", rd(s, dir, "nation"))
-        graft.runtime.Rehasher.addColumn(store, "t", "n_comment_v2", "string")
-        graft.runtime.Rehasher.renameColumn(store, "t", "n_name", "nation_name")
-        graft.runtime.Rehasher.dropColumns(store, "t", "n_regionkey", "n_comment")
-        store.read("t")
+        val t = new graft.runtime.TxLogTable(s, wh)
+        t.overwrite("t", rd(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey"))
+        t.addColumn("t", "n_comment_v2", "string")
+        t.renameColumn("t", "n_name", "nation_name")
+        t.dropColumn("t", "n_regionkey")
+        t.read("t")
       },
       Some("""SELECT n_nationkey, n_name AS nation_name,
              |  cast(NULL AS varchar) AS n_comment_v2

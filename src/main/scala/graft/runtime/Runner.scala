@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** How a [[VaultModel]] lands in the [[TableStore]].
+/** How a [[VaultModel]] lands in the [[VaultStore]].
   *
   *  - [[Materialization.View]] — ephemeral: never written; rebuilt on demand
   *    when a downstream model resolves it (dbt's ephemeral/view staging

@@ -61,12 +61,11 @@ import graft.sources.StatsSkip.FileStats
   */
 final class TxLogTable(val spark: SparkSession, val baseDir: String) extends VaultStore {
 
-  // ---- VaultStore: the Runner schedules transactional vaults too --------
+  // ---- VaultStore: the store the Runner schedules -----------------------
   def readIfExists(name: String): Option[DataFrame] =
     currentVersion(name).map(readVersion(name, _))
-  /** non-CAS overwrite (VaultStore form): last writer wins, like
-    * [[TableStore.overwrite]]; pass `expectedVersion` for the guarded
-    * read-modify-overwrite contract */
+  /** non-CAS overwrite (VaultStore form): last writer wins; pass
+    * `expectedVersion` for the guarded read-modify-overwrite contract */
   def overwrite(name: String, df: DataFrame): Unit = overwrite(name, df, None)
 
   import TxLogTable.{ColMap, EqDelete}
@@ -469,7 +468,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       // physical key columns are always present: delete files are only
       // scoped to data files that were live (hence schema-complete for
       // the keys) when the delete committed
-      val keys = deleteKeys(name, e).select(e.keyPhys.map(col): _*)
+      val keys = deleteKeys(name, m, e)
       val scope = e.scope.intersect(scanned).toSeq.map(qualify(name, _))
       df.join(broadcast(keys), e.keyPhys.map(k => df(k) === keys(k)).reduce(_ && _) &&
         df("__fp").isInCollection(scope), "left_anti")
@@ -501,9 +500,14 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   }
 
   /** the deleted-key frame of one equality-delete file (physical key
-    * columns, as written at delete time) */
-  private def deleteKeys(name: String, e: EqDelete): DataFrame =
-    spark.read.parquet(root(name).resolve(e.file).toString)
+    * columns, as written at delete time), read under the mapping's types
+    * so no footer-inference job runs. Sound because a delete's scope never
+    * covers a retyped file: retype rewrites every live file, and rewritten
+    * files leave every scope. */
+  private def deleteKeys(name: String, m: Meta, e: EqDelete): DataFrame =
+    spark.read.schema(physicalSchema(m.cols.filter(c => e.keyPhys.contains(c.physical))))
+      .parquet(root(name).resolve(e.file).toString)
+      .select(e.keyPhys.map(col): _*)
 
   /** Read the current snapshot (resolves the manifest ONCE — concurrent
     * commits do not move this DataFrame's version). The scan prunes

@@ -1,12 +1,13 @@
 package graft.runtime
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.expr.{HashConfig, Hashing}
 
 /** The reference's single-entity rehash lifecycle
   * (`macros/rehashing/single_entities/databricks/rehash_single_hub.sql`) on
-  * the TRANSACTIONAL format — step for step:
+  * [[TxLogTable]] — step for step:
   *
   *   1. `ALTER TABLE ADD COLUMN <hk>_updated` (`:17-26`)   → metadata-only
   *   2. `MERGE INTO` computing the new hashes (`:84-111`)  → one file-level
@@ -50,14 +51,10 @@ object TxRehash {
     // 2. the one data pass: every live file rewritten in one atomic commit
     val v = t.currentVersion(table).get
     t.replaceFiles(table, t.files(table, v)) { df =>
-      val ghost = col(hashCol) === oldCfg.zeroKeyLit || col(hashCol) === oldCfg.errorKeyLit
-      val ghostValue = when(col(hashCol) === oldCfg.zeroKeyLit, newCfg.zeroKeyLit)
-        .otherwise(newCfg.errorKeyLit)
       // hashInputs = the same H7 datatype normalization staging applies —
       // a rehash must reproduce what the NEXT stage load will compute
-      df.withColumn(updated,
-        when(ghost, ghostValue)
-          .otherwise(Hashing.hashkey(Hashing.hashInputs(df, keyColumns))(newCfg)))
+      df.withColumn(updated, ghostGuard(hashCol, oldCfg, newCfg)(
+        Hashing.hashkey(Hashing.hashInputs(df, keyColumns))(newCfg)))
     }
     // 3./4. old values survive as _deprecated; new column takes the name
     t.renameColumn(table, hashCol, deprecated)
@@ -69,17 +66,42 @@ object TxRehash {
   def dropDeprecated(t: TxLogTable, table: String, hashCol: String): Unit =
     t.dropColumn(table, s"${hashCol}_deprecated")
 
-  // ---- whole-vault rehash on the transactional format --------------------
+  // ---- whole-vault rehash ------------------------------------------------
   // Reference `macros/rehashing/rehash_all_rdv_entities.sql:139-151`: hubs,
   // then links, then satellites, each through the single-entity MERGE + DDL
-  // lifecycle on a LIVE table. Unlike the plain-store `Rehasher.rehashAll`
-  // (which needs side checkpoint map tables because overwrite destroys the
-  // old hashes), the transactional lifecycle keeps every entity's old→new
-  // translation IN the entity itself as `<hk>_deprecated` — a crash between
-  // any two commits leaves a consistent, fully recoverable vault, and the
-  // children's re-key joins read the committed parent directly.
+  // lifecycle on a LIVE table. The lifecycle keeps every entity's old→new
+  // translation IN the entity itself as `<hk>_deprecated` (the column the
+  // reference keeps on rehashed parents, `rehash_single_satellite.sql`) —
+  // a crash between any two commits leaves a consistent, fully recoverable
+  // vault, and the children's re-key joins read the committed parent
+  // directly.
 
-  import Rehasher.{HubRehash, LinkRehash, SatRehash}
+  final case class HubRehash(name: String, hashkey: String, businessKeys: Seq[String])
+  final case class LinkHubRef(fkCol: String, hubName: String, businessKeys: Seq[String])
+  final case class LinkRehash(name: String, linkHashkey: String, hubRefs: Seq[LinkHubRef],
+                              additionalCols: Seq[String] = Nil)
+  /** maKeys non-empty ⇒ MA satellite (grouped hashdiff); hashdiff None ⇒
+    * NH satellite (hashkey only). */
+  final case class SatRehash(name: String, hashkey: String, hashdiff: Option[String],
+                             payload: Seq[String], parent: String, maKeys: Seq[String] = Nil)
+
+  /** Ghost records keep their zero/error keys, translated to `newCfg`'s
+    * (`rehash_single_hub.sql:84-111` — the MERGE's WHEN MATCHED guards on
+    * the ghost keys); every other row takes `recompute`. */
+  private def ghostGuard(hashCol: String, oldCfg: HashConfig, newCfg: HashConfig)(
+      recompute: Column): Column =
+    when(col(hashCol) === oldCfg.zeroKeyLit, newCfg.zeroKeyLit)
+      .when(col(hashCol) === oldCfg.errorKeyLit, newCfg.errorKeyLit)
+      .otherwise(recompute)
+
+  /** A child row whose parent-map join missed has NO valid new key: keeping
+    * the old one would commit a mixed-hash vault with no error raised.
+    * `raise_error` fails the rewrite job on the first orphan row — checked
+    * inline during the write, no extra counting pass. */
+  private def requireMapped(mapped: Column, old: Column, entity: String,
+                            parent: String): Column =
+    coalesce(mapped, raise_error(concat(
+      lit(s"rehash $entity: no $parent map row for key '"), old, lit("'"))))
 
   /** Rehash a whole raw vault on `t`. Per entity: one metadata-only ADD
     * COLUMN, ONE atomic data rewrite, two metadata-only RENAMEs — the exact
@@ -98,7 +120,7 @@ object TxRehash {
     //    (+ additional cols) in hub_config order (rehash_single_link
     //    semantics). A missing parent-map row fails the rewrite loudly —
     //    committing a mixed-hash vault silently is the one unrecoverable
-    //    outcome (Rehasher.requireMapped).
+    //    outcome (requireMapped).
     links.foreach(l => rehashLink(t, l, hubs, oldCfg, newCfg))
 
     // 3. satellites: re-keyed through the parent's (deprecated → current)
@@ -137,12 +159,12 @@ object TxRehash {
           bkCols ++= renamedBks.map(_._2)
         }
         df = df.withColumn(updated,
-          Rehasher.ghostGuard(l.linkHashkey, oldCfg, newCfg)(
+          ghostGuard(l.linkHashkey, oldCfg, newCfg)(
             Hashing.hashkey(Hashing.hashInputs(df, bkCols ++ l.additionalCols))(newCfg)))
         l.hubRefs.zipWithIndex.foreach { case (ref, i) =>
           df = df.withColumn(ref.fkCol,
-            Rehasher.ghostGuard(ref.fkCol, oldCfg, newCfg)(
-              Rehasher.requireMapped(col(s"__new_$i"), col(ref.fkCol), l.name, ref.hubName)))
+            ghostGuard(ref.fkCol, oldCfg, newCfg)(
+              requireMapped(col(s"__new_$i"), col(ref.fkCol), l.name, ref.hubName)))
         }
         df.select(df0.columns.map(col).toIndexedSeq: _*)
       }
@@ -178,15 +200,15 @@ object TxRehash {
               .agg(Hashing.maHashdiff(payloadIn, s.maKeys.map(col))(newCfg).as("__new_hd"))
             df = df.join(grouped,
               df(s.hashkey) === col("__g_hk") && df("ldts") === col("__g_ldts"), "left")
-              .withColumn(hd, Rehasher.ghostGuard(hd, oldCfg, newCfg)(col("__new_hd")))
+              .withColumn(hd, ghostGuard(hd, oldCfg, newCfg)(col("__new_hd")))
           } else {
             df = df.withColumn(hd,
-              Rehasher.ghostGuard(hd, oldCfg, newCfg)(Hashing.hashdiff(payloadIn)(newCfg)))
+              ghostGuard(hd, oldCfg, newCfg)(Hashing.hashdiff(payloadIn)(newCfg)))
           }
         }
         df.withColumn(updated,
-            Rehasher.ghostGuard(s.hashkey, oldCfg, newCfg)(
-              Rehasher.requireMapped(col("__new_hk"), col(s.hashkey), s.name, s.parent)))
+            ghostGuard(s.hashkey, oldCfg, newCfg)(
+              requireMapped(col("__new_hk"), col(s.hashkey), s.name, s.parent)))
           .select(df0.columns.map(col).toIndexedSeq: _*)
       }
       t.renameColumn(s.name, s.hashkey, deprecated)
@@ -200,6 +222,42 @@ object TxRehash {
     hubs.foreach(h => dropDeprecated(t, h.name, h.hashkey))
     links.foreach(l => dropDeprecated(t, l.name, l.linkHashkey))
     sats.foreach(s => dropDeprecated(t, s.name, s.hashkey))
+  }
+
+  /** YAML front end matching `rehash_all_rdv_entities.sql`'s document:
+    * sections hubs / links / satellites / ma_satellites / nh_satellites,
+    * run through [[rehashAll]]. */
+  def rehashAllFromYaml(t: TxLogTable, yaml: String,
+                        oldCfg: HashConfig, newCfg: HashConfig): Unit = {
+    val doc = graft.meta.YamlLite.parse(yaml).asInstanceOf[Map[String, Any]]
+    def list(k: String): Seq[Map[String, Any]] = doc.get(k) match {
+      case Some(l: List[_]) => l.map(_.asInstanceOf[Map[String, Any]])
+      case _ => Nil
+    }
+    def strs(v: Any): Seq[String] = v match {
+      case l: List[_] => l.map(_.toString)
+      case null => Nil
+      case s => Seq(s.toString)
+    }
+    val hubs = list("hubs").map(h =>
+      HubRehash(h("name").toString, h("hashkey").toString, strs(h("business_keys"))))
+    val links = list("links").map { l =>
+      LinkRehash(l("name").toString, l("link_hashkey").toString,
+        l("hub_config").asInstanceOf[List[Any]].map { hc =>
+          val m = hc.asInstanceOf[Map[String, Any]]
+          LinkHubRef(m("hub_hashkey").toString, m("hub_name").toString, strs(m("business_keys")))
+        },
+        strs(l.getOrElse("additional_hash_input_cols", Nil)))
+    }
+    val sats =
+      list("satellites").map(s => SatRehash(s("name").toString, s("hashkey").toString,
+        Some(s("hashdiff").toString), strs(s("payload")), s("parent_entity").toString)) ++
+      list("ma_satellites").map(s => SatRehash(s("name").toString, s("hashkey").toString,
+        Some(s("hashdiff").toString), strs(s("payload")), s("parent_entity").toString,
+        maKeys = strs(s("ma_keys")))) ++
+      list("nh_satellites").map(s => SatRehash(s("name").toString, s("hashkey").toString,
+        None, Nil, s("parent_entity").toString))
+    rehashAll(t, hubs, links, sats, oldCfg, newCfg)
   }
 
   // ---- crash recovery ----------------------------------------------------
@@ -284,7 +342,7 @@ object TxRehash {
   }
 }
 
-/** S8 — PIT cleanup on the TRANSACTIONAL format: the reference's
+/** S8 — PIT cleanup on [[TxLogTable]]: the reference's
   * `DELETE FROM pit WHERE sdts NOT IN (SELECT sdts FROM snap WHERE
   * is_active)` (`macros/hooks/clean_up_pits.sql:128-136`) compiled onto
   * [[TxLogTable.replaceFiles]].
@@ -296,8 +354,8 @@ object TxRehash {
   * (single sdts value: doomed iff that value is inactive) and never read.
   * On an sdts-clustered PIT ([[TxLogTable.compact]] with `clusterBy(sdts)`)
   * that is every file, so BOTH phases touch O(deactivated snapshots) files
-  * — the transactional analogue of `PitCleaner.cleanUpPartitioned`. Without
-  * stats the probe falls back to scanning (sdts, file) of all live files.
+  * — the cost of dropping whole `sdts` partitions. Without stats the probe
+  * falls back to scanning (sdts, file) of all live files.
   *
   * NULL semantics match the reference DELETE: `sdts NOT IN (...)` is never
   * true for a NULL sdts, so NULL-sdts rows are always kept. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.loaders.{EntitySource, HubLoader, SatV0Loader}
-import graft.runtime.{TableStore, TxLogTable}
+import graft.runtime.TxLogTable
 
 /** Structured-Streaming front ends for the incremental loaders.
   *
@@ -62,11 +62,14 @@ object StreamingLoaders {
     math.min(MaxStateShards.toLong,
       math.max(MinStateShards.toLong, approxStateRows / StateRowsPerShard)).toInt
 
-  /** Continuously load a hub from a streaming staged source.
-    * Usage: `hubSink(staged.writeStream, store, ...).start()` */
+  /** Continuously load a hub from a streaming staged source, exactly once:
+    * each micro-batch lands through [[TxLogTable.appendOnce]] under
+    * (`hub-sink:<checkpoint>`, batchId), so a replayed batch commits
+    * nothing.
+    * Usage: `hubSink(staged, table, ...).start()` */
   def hubSink(
       staged: DataFrame,
-      store: TableStore,
+      table: TxLogTable,
       targetName: String,
       hashkey: String,
       hkColumn: String,
@@ -77,23 +80,25 @@ object StreamingLoaders {
     staged.writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val recs = HubLoader.records(
           Seq(EntitySource(batch, Some(hkColumn), bkColumns)),
-          hashkey, businessKeys, store.readIfExists(targetName),
+          hashkey, businessKeys, table.readIfExists(targetName),
           // HWM is meaningless inside a single micro-batch — the anti-join
-          // carries the idempotence; checkpointing carries exactly-once
+          // carries the idempotence; the txn marker carries exactly-once
           disableHwm = true)
-        store.append(targetName, recs)
+        table.appendOnce(targetName, recs, s"hub-sink:$checkpoint", batchId): Unit
       }
 
-  /** Continuously load a v0 satellite. Change-dedup (LAG) runs within each
-    * micro-batch; the cross-batch change check is the anti-join against the
-    * target's latest (hashkey, hashdiff) — same contract as the batch
-    * loader's NOT EXISTS (sat_v0.sql:131-142). */
+  /** Continuously load a v0 satellite, exactly once (see [[hubSink]];
+    * appId `sat-sink:<checkpoint>`).
+    * Change-dedup (LAG) runs within each micro-batch; the cross-batch
+    * change check is the anti-join against the target's latest (hashkey,
+    * hashdiff) — same contract as the batch loader's NOT EXISTS
+    * (sat_v0.sql:131-142). */
   def satV0Sink(
       staged: DataFrame,
-      store: TableStore,
+      table: TxLogTable,
       targetName: String,
       hashkey: String,
       hashdiff: String,
@@ -103,10 +108,10 @@ object StreamingLoaders {
     staged.writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val recs = SatV0Loader.records(batch, Seq(hashkey), Some(hashdiff),
-          payload, store.readIfExists(targetName), disableHwm = true)
-        store.append(targetName, recs)
+          payload, table.readIfExists(targetName), disableHwm = true)
+        table.appendOnce(targetName, recs, s"sat-sink:$checkpoint", batchId): Unit
       }
 
   /** Streaming-native satellite change detection: the per-key "latest
@@ -150,22 +155,6 @@ object StreamingLoaders {
           kept.iterator
         })(Encoders.STRING, enc)
   }
-
-  /** Stateful satellite sink: change-detected rows append directly. */
-  def satV0StatefulSink(
-      staged: DataFrame,
-      store: TableStore,
-      targetName: String,
-      hashkey: String,
-      hashdiff: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    satV0ChangesStateful(staged, hashkey, hashdiff).writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.append(targetName, batch)
-      }
 
   /** Stateful satellite sink, exactly-once: change rows from
     * [[satV0ChangesStateful]] land through
@@ -536,36 +525,28 @@ object StreamingLoaders {
   }
 
   /** Streaming CHANGE-DATA-FEED materialization: each micro-batch is
-    * upserted into the maintained snapshot AND its I/U/D delta (computed
-    * by [[graft.runtime.Cdc.diff]] against the pre-merge snapshot) is
-    * appended to a `<table>_changes` feed — the continuous form of the
+    * upserted into the maintained snapshot AND its I/U delta (computed by
+    * [[graft.runtime.Cdc.diff]] against the pre-merge snapshot) is
+    * appended to a `<name>_changes` feed — the continuous form of the
     * batch txlog_cdc query, giving downstream consumers an incremental
-    * changelog without rescanning the table. Per batch: one full-outer
-    * diff + one merge, both O(batch + touched groups). Batch rows must
-    * carry the full row image (key + all value columns). */
-  def cdcSink(staged: DataFrame, store: graft.runtime.TableStore,
-              table: String, keys: Seq[String],
+    * changelog without rescanning the table. The first batch creates the
+    * snapshot; every later one is one [[TxLogTable.merge]] on `keys`, which
+    * rewrites only the files holding a batch key. Batch rows must carry
+    * the full row image (key + all value columns) and unique keys. */
+  def cdcSink(staged: DataFrame, table: TxLogTable,
+              name: String, keys: Seq[String],
               checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     staged.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // dedup within the batch (last writer wins is not definable
-        // without order — require unique keys per micro-batch instead)
-        val current = store.readIfExists(table)
-        val old = current.getOrElse(batch.limit(0))
-        val changes = graft.runtime.Cdc.diff(old, batch, keys)
+        val current = table.readIfExists(name)
+        val changes = graft.runtime.Cdc.diff(current.getOrElse(batch.limit(0)), batch, keys)
           // D here only means "absent from this batch" — a batch is a
           // partial upsert, not a full snapshot; drop the false deletes
-          .filter(org.apache.spark.sql.functions.col("op") =!= "D")
-        store.append(s"${table}_changes", changes)
-        val merged = current match {
-          case None => batch
-          case Some(cur) =>
-            cur.join(batch.select(keys.map(col): _*), keys, "left_anti")
-              .unionByName(batch)
-        }
-        store.overwrite(s"${table}_next", merged)
-        store.overwrite(table, store.read(s"${table}_next"))
+          .filter(col("op") =!= "D")
+        table.append(s"${name}_changes", changes)
+        if (current.isEmpty) table.overwrite(name, batch)
+        else table.merge(name, batch, keys)
       }
       .start()
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.LocalSpark
 import graft.expr.{HashConfig, SystemColumns}
 import graft.loaders._
-import graft.runtime.{Materialization, Runner, TableStore, VaultModel}
+import graft.runtime.{Materialization, Runner, TxLogTable, VaultModel}
 
 /** End-to-end drive of the core pipeline over real test data, scheduled by
   * the DAG [[Runner]]: stage(customer) → hub → sat v0 → sat v1, two
@@ -20,7 +20,7 @@ object Demo {
     spark.sparkContext.setLogLevel("WARN")
 
     val wh = java.nio.file.Files.createTempDirectory("graft_demo_wh").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val customer = spark.read.parquet(s"$sfDir/customer.parquet")
 
     // batch t: half the customers on day 1, all on day 2 (acctbal drifts)
@@ -85,19 +85,19 @@ object Demo {
     val hub = store.read("customer_h")
     println(s"[demo] customers=$nCust hub=${hub.count()} (hub == customers + 2 ghosts?)")
 
-    // the same hub on the TRANSACTIONAL format: versioned appends, a
-    // file-pruned MERGE, time travel back to v1, and an O(1) metadata DDL
-    val tx = new graft.runtime.TxLogTable(spark, wh + "_tx")
-    tx.append("customer_h", hub.filter(col(SystemColumns.LdtsAlias) <= "2024-01-01 12:00:00"))
-    tx.append("customer_h", hub.filter(col(SystemColumns.LdtsAlias) > "2024-01-01 12:00:00"))
-    val preMergeCount = tx.read("customer_h").count()
-    tx.merge("customer_h",
-      tx.read("customer_h").limit(5).withColumn(SystemColumns.RsrcAlias, lit("TPC_H/Customer/fix")),
+    // the same hub as a fresh table: versioned appends, a file-pruned
+    // MERGE, time travel back to v1, and an O(1) metadata DDL
+    val tx = "customer_h_tx"
+    store.append(tx, hub.filter(col(SystemColumns.LdtsAlias) <= "2024-01-01 12:00:00"))
+    store.append(tx, hub.filter(col(SystemColumns.LdtsAlias) > "2024-01-01 12:00:00"))
+    val preMergeCount = store.read(tx).count()
+    store.merge(tx,
+      store.read(tx).limit(5).withColumn(SystemColumns.RsrcAlias, lit("TPC_H/Customer/fix")),
       Seq("hk_customer_h"))
-    tx.addColumn("customer_h", "loaded_by", "string")
-    val v1Count = tx.readVersion("customer_h", 1).count()
-    println(s"[demo] txlog: versions=${tx.versions("customer_h").size} rows=${tx.read("customer_h").count()} " +
-      s"(want $preMergeCount) v1=$v1Count merged_rsrc=${tx.read("customer_h").filter(col(SystemColumns.RsrcAlias) === "TPC_H/Customer/fix").count()} (want 5)")
+    store.addColumn(tx, "loaded_by", "string")
+    val v1Count = store.readVersion(tx, 1).count()
+    println(s"[demo] txlog: versions=${store.versions(tx).size} rows=${store.read(tx).count()} " +
+      s"(want $preMergeCount) v1=$v1Count merged_rsrc=${store.read(tx).filter(col(SystemColumns.RsrcAlias) === "TPC_H/Customer/fix").count()} (want 5)")
     spark.stop()
   }
 }

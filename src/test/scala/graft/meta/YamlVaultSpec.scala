@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.expr.HashConfig
-import graft.runtime.{Runner, TableStore}
+import graft.runtime.{Runner, TxLogTable}
 
 /** yaml_metadata documents → Runner DAG: dependency extraction, topological
   * execution, selection-driven source pruning on a YAML-defined hub. */
@@ -15,7 +15,7 @@ class YamlVaultSpec extends SparkSpec {
   import spark.implicits._
   implicit val hc: HashConfig = HashConfig()
 
-  private def store() = new TableStore(spark, Files.createTempDirectory("yvault").toString)
+  private def store() = new TxLogTable(spark, Files.createTempDirectory("yvault").toString)
 
   test("dependencies are extracted from the yaml documents") {
     assert(YamlVault.dependencies("stage",

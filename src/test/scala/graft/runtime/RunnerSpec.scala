@@ -13,8 +13,8 @@ import graft.SparkSpec
 class RunnerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshStore(): TableStore =
-    new TableStore(spark, Files.createTempDirectory("runner").toString)
+  private def freshStore(): TxLogTable =
+    new TxLogTable(spark, Files.createTempDirectory("runner").toString)
 
   /** diamond with two prunable sources:
     *   src_a ─ stage_a ─┐

@@ -54,6 +54,28 @@ class TxLogTableSpec extends SparkSpec {
     assert(t.read("tbl").as[Int].collect().toSet === Set(1, 2))
   }
 
+  test("read-modify-overwrite: a frame derived from the table replaces it; a commit in between aborts it") {
+    val (t, _) = freshStore()
+    t.append("tbl", (1 to 10).map(i => (i, s"v$i")).toDF("id", "v"))
+    t.append("tbl", Seq((11, "v11")).toDF("id", "v"))
+    def f(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"id" % 3 =!= 0).withColumn("v", org.apache.spark.sql.functions.upper($"v"))
+    val want = (1 to 11).filter(_ % 3 != 0).map(i => (i, s"V$i")).toSet
+    // the overwrite's batch is computed from the very files it replaces
+    val v = t.currentVersion("tbl").get
+    t.overwrite("tbl", f(t.read("tbl")), expectedVersion = Some(v))
+    assert(t.read("tbl").as[(Int, String)].collect().toSet === want)
+    // a commit between the read and the overwrite aborts the overwrite
+    val v2 = t.currentVersion("tbl").get
+    val derived = f(t.read("tbl"))
+    t.append("tbl", Seq((12, "v12")).toDF("id", "v"))
+    val e = intercept[IllegalArgumentException] {
+      t.overwrite("tbl", derived, expectedVersion = Some(v2))
+    }
+    assert(e.getMessage.contains("concurrent commit"))
+    assert(t.read("tbl").as[(Int, String)].collect().toSet === want + ((12, "v12")))
+  }
+
   test("manifest CAS: a racing commit of the same version loses cleanly") {
     val (t, dir) = freshStore()
     t.append("tbl", Seq(1).toDF("id"))
@@ -427,6 +449,36 @@ class TxLogTableSpec extends SparkSpec {
     assert(t.read("tbl").as[(Int, String)].collect().toSet
       .contains((5, "back")), "a re-inserted deleted key must be visible")
     assert(t.read("tbl").count() === 17)
+  }
+
+  test("equality deletes: building a read over an in-scope delete starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (t, _) = freshStore()
+    t.overwrite("tbl", (1 to 20).map(i => (i, s"v$i")).toDF("id", "v"))
+    t.deleteWhere("tbl", $"id" % 5 === 0, Seq("id"))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("txlog-read", "build a read")
+      val df = try t.read("tbl") finally sc.clearJobGroup()
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every job the read could have started has been seen too
+      sc.setJobGroup("txlog-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("txlog-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("txlog-sentinel"))
+      assert(!groups.contains("txlog-read"),
+        "building the read ran a Spark job (delete-file schema inference?)")
+      assert(df.as[(Int, String)].collect().map(_._1).toSet === (1 to 20).filter(_ % 5 != 0).toSet)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("deleteWhereKeys: a 100k-key DataFrame forget set, zero driver-side keys") {

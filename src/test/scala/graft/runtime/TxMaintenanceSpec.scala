@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.expr.{HashConfig, Hashing}
-import graft.runtime.Rehasher.{HubRehash, LinkHubRef, LinkRehash, SatRehash}
+import graft.runtime.TxRehash.{HubRehash, LinkHubRef, LinkRehash, SatRehash}
 
 /** Whole-vault rehash + PIT cleanup on the TRANSACTIONAL format
   * (reference `rehash_all_rdv_entities.sql:139-151`, `clean_up_pits.sql:128-136`). */

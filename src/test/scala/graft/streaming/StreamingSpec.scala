@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.expr.HashConfig
-import graft.runtime.TableStore
+import graft.runtime.TxLogTable
 
 /** Structured-Streaming loader contract: micro-batches behave exactly like
   * incremental batch loads (idempotent, change-only). */
@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming hub sink: two micro-batches, replay-safe dedup") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val input = MemoryStream[(String, String)]
 
     val staged = input.toDF().toDF("bk", "ldts_s")
@@ -42,7 +42,8 @@ class StreamingSpec extends SparkSpec {
     val hub = store.read("hub_s")
     assert(hub.count() == 3)
     assert(hub.groupBy("hk").count().filter($"count" > 1).count() == 0)
-    store.drop("hub_s")
+    // both micro-batches landed through appendOnce (exactly-once markers)
+    assert(store.txnVersion("hub_s", s"hub-sink:$wh/_cp") == Some(1L))
   }
 
   test("withStateShards: shard count scopes the stream, restores the session, results identical") {
@@ -50,7 +51,7 @@ class StreamingSpec extends SparkSpec {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     def runAt(shards: Int): Seq[(String, Long)] = {
       val wh = Files.createTempDirectory("graft_shards").toString
-      val store = new TableStore(spark, wh)
+      val store = new TxLogTable(spark, wh)
       val input = MemoryStream[(String, String)]
       val staged = input.toDF().toDF("bk", "ldts_s")
         .withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
@@ -69,7 +70,6 @@ class StreamingSpec extends SparkSpec {
       val out = store.read("hub_s").select("bk", "ldts")
         .as[(String, java.sql.Timestamp)].collect().toSeq
         .map { case (bk, ts) => (bk, ts.getTime) }.sorted
-      store.drop("hub_s")
       out
     }
     // the production knob: the same stream at two shard settings yields
@@ -101,7 +101,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming sat v0 sink: cross-batch change detection holds") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val input = MemoryStream[(String, String, String)]
 
     val staged = input.toDF().toDF("bk", "ldts_s", "payload")
@@ -125,13 +125,12 @@ class StreamingSpec extends SparkSpec {
     query.processAllAvailable()
     query.stop()
     assert(store.read("sat_s").count() == 2)
-    store.drop("sat_s")
   }
 
   test("stateful sat sink: state store carries last hashdiff across batches") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream").toString
-    val store = new TableStore(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val input = MemoryStream[(String, String, String)]
 
     val staged = input.toDF().toDF("bk", "ldts_s", "payload")
@@ -140,7 +139,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("hk", graft.expr.Hashing.hashkey(Seq($"bk")))
       .withColumn("hd", graft.expr.Hashing.hashdiff(Seq($"payload")))
 
-    val query = StreamingLoaders.satV0StatefulSink(staged, store, "sat_st", "hk", "hd",
+    val query = StreamingLoaders.satV0StatefulTxSink(staged, store, "sat_st", "hk", "hd",
       checkpoint = s"$wh/_cp",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
 
@@ -158,7 +157,6 @@ class StreamingSpec extends SparkSpec {
     val out = store.read("sat_st")
     assert(out.count() == 3)
     assert(out.filter($"payload" === "B").count() == 1)
-    store.drop("sat_st")
   }
 
   test("stateful eff-sat: activation once, deactivation via event-time timeout") {
@@ -678,7 +676,7 @@ class StreamingSpec extends SparkSpec {
   test("cdc sink: changes feed accumulates I/U history, snapshot converges") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream").toString
-    val store = new graft.runtime.TableStore(spark, s"$wh/store")
+    val store = new TxLogTable(spark, s"$wh/store")
     val input = MemoryStream[(Long, String)]
     val staged = input.toDF().toDF("k", "v")
 
@@ -893,7 +891,7 @@ class StreamingSpec extends SparkSpec {
   test("quality router: keep/reject partition matches the batch gopher gate") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream").toString
-    val store = new graft.runtime.TxLogTable(spark, wh)
+    val store = new TxLogTable(spark, wh)
     val input = MemoryStream[(Long, String)]
     val staged = input.toDF().toDF("doc_id", "text")
 
@@ -945,7 +943,7 @@ class StreamingSpec extends SparkSpec {
   test("txlog sink: exactly-once across micro-batches and a simulated replay") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream_tx").toString
-    val t = new graft.runtime.TxLogTable(spark, wh)
+    val t = new TxLogTable(spark, wh)
     val input = MemoryStream[Long]
     val staged = input.toDF().toDF("id")
 
@@ -1011,7 +1009,7 @@ class StreamingSpec extends SparkSpec {
   test("nb score sink: streamed predictions equal the batch scorer") {
     implicit val sqlCtx = spark.sqlContext
     val wh = Files.createTempDirectory("graft_stream_nb").toString
-    val store = new graft.runtime.TxLogTable(spark, wh)
+    val store = new TxLogTable(spark, wh)
 
     // batch-train the model on a small labeled corpus
     val corpus = Seq(
