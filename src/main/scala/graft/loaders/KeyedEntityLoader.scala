@@ -48,6 +48,9 @@ object KeyedEntityLoader {
       multiSourceHwm: Boolean = true): DataFrame = {
 
     val dedupKeys = hashkeyAlias.map(Seq(_)).getOrElse(keyAliases)
+    // the target's global HWM: one max(ldts) probe per target, run only
+    // if a source takes that branch
+    lazy val hwm = target.flatMap(Ops.hwm(_))
 
     val perSource = sources.map { s =>
       val keyed = hashkeyAlias match {
@@ -64,7 +67,7 @@ object KeyedEntityLoader {
           // of their patterns yet) load fully (reference hub.sql:53-98 COUNT probe)
           val included = !t.filter(rs.map(col(RsrcAlias).like).reduce(_ || _)).isEmpty
           if (included) Ops.hwmPerRsrcStatic(proj, t, rs) else proj
-        case (Some(t), _) if sources.size == 1 || multiSourceHwm =>
+        case (Some(_), _) if sources.size == 1 || multiSourceHwm =>
           // P6 — global HWM applied to EVERY source, not only single-source
           // loads (the reference guards on `source_models | length == 1`,
           // hub.sql:173-179, and full-scans every source otherwise — at
@@ -73,7 +76,7 @@ object KeyedEntityLoader {
           // monotonicity the single-source HWM already assumes); a lagging
           // or backfilling source opts out via multiSourceHwm=false
           // (reference-exact guard) or disableHwm.
-          Ops.hwmFilter(proj, Some(t))
+          hwm.fold(proj)(h => proj.filter(col(LdtsAlias) > lit(h)))
         case _                  => proj
       }
     }

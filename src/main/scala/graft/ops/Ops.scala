@@ -87,12 +87,14 @@ object Ops {
     * scan (min/max page skipping) — strictly better at 100 TB than a join.
     */
   def hwmFilter(src: DataFrame, target: Option[DataFrame],
-                ldts: String = LdtsAlias): DataFrame = target match {
-    case None => src
-    case Some(t) =>
-      val hwmRow = t.filter(col(ldts) =!= endOfAllTimesTs).agg(max(col(ldts))).head()
-      if (hwmRow.isNullAt(0)) src
-      else src.filter(col(ldts) > lit(hwmRow.getTimestamp(0)))
+                ldts: String = LdtsAlias): DataFrame =
+    target.flatMap(hwm(_, ldts)).fold(src)(h => src.filter(col(ldts) > lit(h)))
+
+  /** The target's high-water mark for [[hwmFilter]]: its max ldts with
+    * end-of-all-times ghost rows excluded, None when it has no such row. */
+  private[graft] def hwm(target: DataFrame, ldts: String = LdtsAlias): Option[java.sql.Timestamp] = {
+    val row = target.filter(col(ldts) =!= endOfAllTimesTs).agg(max(col(ldts))).head()
+    if (row.isNullAt(0)) None else Some(row.getTimestamp(0))
   }
 
   /** J3/A1 — per-record-source high-water-marks (reference

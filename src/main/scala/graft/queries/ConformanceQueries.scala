@@ -459,7 +459,7 @@ object ConformanceQueries {
         // seam proof: the predicate must reach the scan as a PARTITION
         // filter over the custom index, not a post-scan row filter
         val plan = df.queryExecution.executedPlan.toString
-        val pruningPlanned = plan.contains("Location: DeltaFileIndex") &&
+        val pruningPlanned = plan.contains("Location: LogFileIndex") &&
           "PartitionFilters: \\[[^\\]]*1-URGENT".r.findFirstIn(plan).nonEmpty &&
           plan.contains("DataFilters: []")
         df.groupBy(col("o_orderpriority").as("priority"))
@@ -515,7 +515,7 @@ object ConformanceQueries {
         val filtered = DeltaRead.read(s, tbl)
           .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         val plan = filtered.queryExecution.executedPlan.toString
-        val pruningPlanned = plan.contains("Location: DeltaFileIndex") &&
+        val pruningPlanned = plan.contains("Location: LogFileIndex") &&
           "PartitionFilters: \\[[^\\]]*1-URGENT".r.findFirstIn(plan).nonEmpty &&
           plan.contains("DataFilters: []")
         val expectFiles = DeltaRead.candidateFiles(snap,
@@ -544,7 +544,7 @@ object ConformanceQueries {
 
     // DELTA STATS SKIPPING: the second scan-economy channel beside
     // partition pruning — DeltaWrite records per-file min/max/nullCount
-    // from the parquet footers into add.stats, and DeltaFileIndex tests
+    // from the parquet footers into add.stats, and LogFileIndex tests
     // each live file's interval against the pushed DATA predicates
     // (sources/StatsSkip), so a range-clustered table answers a key-range
     // query touching O(matching files), not O(table). The row writes
@@ -567,7 +567,7 @@ object ConformanceQueries {
         val cutoff = o.agg(max(col("o_orderkey"))).head().getLong(0) / 10L
         val filtered = DeltaRead.read(s, tbl).filter(col("o_orderkey") <= cutoff)
         val plan = filtered.queryExecution.executedPlan.toString
-        val pushed = plan.contains("Location: DeltaFileIndex") &&
+        val pushed = plan.contains("Location: LogFileIndex") &&
           "DataFilters: \\[[^\\]]*o_orderkey".r.findFirstIn(plan).nonEmpty
         val scanned = filtered.select(input_file_name()).distinct().count()
         val expected = snap.files.count(_.stats.exists(st =>
@@ -675,7 +675,7 @@ object ConformanceQueries {
         val df = DeltaRead.read(s, tbl)
           .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         val plan = df.queryExecution.executedPlan.toString
-        val pruned = plan.contains("Location: DeltaFileIndex") &&
+        val pruned = plan.contains("Location: LogFileIndex") &&
           "PartitionFilters: \\[[^\\]]*1-URGENT".r.findFirstIn(plan).nonEmpty
         df.groupBy(col("o_orderpriority").as("priority"))
           .agg(count(lit(1)).as("n_orders"),
@@ -1139,7 +1139,7 @@ object ConformanceQueries {
     // ICEBERG MANIFEST COLUMN-BOUNDS SKIPPING: the second scan-economy
     // channel beside identity-partition pruning — manifests carry
     // per-field-id lower_bounds/upper_bounds (single-value binary
-    // serialization, Table Spec Appendix D) that IcebergFileIndex tests
+    // serialization, Table Spec Appendix D) that LogFileIndex tests
     // against the pushed data predicates through the SAME StatsSkip
     // arithmetic Delta's add.stats uses. Fixture: an UNPARTITIONED table
     // whose 8 files are orderkey-range-clustered, so only bounds (not
@@ -1163,7 +1163,7 @@ object ConformanceQueries {
         val cutoff = maxKey / 10L
         val filtered = IcebergRead.read(s, tbl).filter(col("o_orderkey") <= cutoff)
         val plan = filtered.queryExecution.executedPlan.toString
-        val pushed = plan.contains("Location: IcebergFileIndex") &&
+        val pushed = plan.contains("Location: LogFileIndex") &&
           "DataFilters: \\[[^\\]]*o_orderkey".r.findFirstIn(plan).nonEmpty
         val scanned = filtered.select(input_file_name()).distinct().count()
         val expected = snap.files.count(_.stats.exists(st =>
@@ -1221,7 +1221,7 @@ object ConformanceQueries {
         // seam proof: custom index serving the scan, predicate pushed as
         // a data filter (Iceberg has no Spark partition columns)
         val plan = df.queryExecution.executedPlan.toString
-        val pruningPlanned = plan.contains("Location: IcebergFileIndex") &&
+        val pruningPlanned = plan.contains("Location: LogFileIndex") &&
           "DataFilters: \\[[^\\]]*AUTOMOBILE".r.findFirstIn(plan).nonEmpty
         df.groupBy(col("c_mktsegment").as("segment"))
           .agg(count(lit(1)).as("n_customers"),
@@ -1249,7 +1249,7 @@ object ConformanceQueries {
     // for AUTOMOBILE/BUILDING, s3 dynamic-overwrites FURNITURE with its
     // %3==0 subset. The oracle recomputes the final state from `customer`;
     // booleans pin snapshot numbering, data-filter pushdown through
-    // IcebergFileIndex, and pruning-arithmetic/actual-scan agreement.
+    // LogFileIndex, and pruning-arithmetic/actual-scan agreement.
     Q("iceberg_write_roundtrip",
       (s, dir) => {
         import graft.sources.{IcebergRead, IcebergWrite}
@@ -1270,7 +1270,7 @@ object ConformanceQueries {
         val filtered = IcebergRead.read(s, tbl)
           .filter(col("c_mktsegment").isin("AUTOMOBILE", "FURNITURE"))
         val plan = filtered.queryExecution.executedPlan.toString
-        val pushed = plan.contains("Location: IcebergFileIndex") &&
+        val pushed = plan.contains("Location: LogFileIndex") &&
           "DataFilters: \\[[^\\]]*AUTOMOBILE".r.findFirstIn(plan).nonEmpty
         val expected = IcebergRead.candidateFiles(snap,
           Map("c_mktsegment" -> Set("AUTOMOBILE", "FURNITURE"))).size.toLong
@@ -3027,7 +3027,7 @@ object ConformanceQueries {
     // bucket(N, key)) — at 100 TB an unpruned transformed table is a
     // full scan per query. IcebergWrite lays files out per TRANSFORMED
     // tuple (years + murmur3 bucket per the Table Spec, Appendix B hash)
-    // and IcebergFileIndex prunes pushed source-column predicates
+    // and LogFileIndex prunes pushed source-column predicates
     // through the same transform arithmetic. Two channels pinned
     // scanned == predicted from metadata alone: a timestamp range
     // (years — timestamps carry NO footer stats, so the transform is

@@ -218,10 +218,16 @@ final class Runner(spark: SparkSession, store: VaultStore, models: Seq[VaultMode
     * `--threads`): a model starts once every selected parent finished, so
     * sibling entities of a wide vault (dozens of hubs/sats off one staging
     * layer) load in parallel and keep the cluster busy instead of
-    * serializing driver-side. Spark schedules the concurrent jobs fairly;
-    * correctness is unchanged because two selected models never write the
-    * same table and cross-model reads go through the completed parents'
-    * materialized state.
+    * serializing driver-side. The concurrent models' jobs share Spark's
+    * scheduler, FIFO unless the session configures FAIR pools. Correctness
+    * is unchanged because two selected models never write the same table
+    * and cross-model reads go through the completed parents' materialized
+    * state. State the concurrent models do share: this run's `viewCache`
+    * (a view may be built twice, never half-built), the SparkContext's
+    * local properties (job group, description; the pool's threads inherit
+    * them from the thread that starts the run), and, with a
+    * [[TxLogTable]] store, its `manifestCache` and `bloomBitsCache`
+    * (concurrent maps of immutable entries).
     *
     * `continueOnError = true` is dbt's run semantics: a failing model is
     * recorded as an `error` step, its selected descendants as `skipped`

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.sources.{CommitCas, DeltaRead, DeltaWrite, MergeClauses, StatsSkip}
+import graft.sources.{CommitCas, DeltaWrite, LogFileIndex, LogScan, MergeClauses, StatsSkip}
 import graft.sources.StatsSkip.FileStats
 
 /** A minimal log-structured transactional table format over a Parquet
@@ -168,11 +168,16 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * later append that re-inserts a deleted key is visible. A delete
     * commits one key file + one manifest line and rewrites ZERO data
     * files — at 100 TB that turns "purge these ids" from a table rewrite
-    * into O(keys) + metadata. */
+    * into O(keys) + metadata. The line records the keys' types and row
+    * count; an older line without them takes the types from the mapping. */
   def equalityDeletes(name: String, v: Long): Seq[EqDelete] =
     manifestLines(name, v).filter(_.startsWith(EDelHeader)).map { l =>
       val p = l.stripPrefix(EDelHeader).split('\t')
-      EqDelete(p(0), p(1).split(',').toSeq, p(2).split(',').toSet)
+      val keys = p.lift(4).map(StructType.fromDDL).getOrElse {
+        val typed = physicalSchema(mapping(name, v))
+        StructType(p(1).split(',').toSeq.map(k => typed(k)))
+      }
+      EqDelete(p(0), keys, p(2).split(',').toSet, p.lift(3).fold(0L)(_.toLong))
     }
 
   /** the version's CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT`
@@ -206,8 +211,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       statsCols.map(c => s"$StatsColHeader$c") ++
       stats.toSeq.sortBy(_._1).map { case (f, st) => s"$FStatHeader$f\t${st.json}" } ++
       txns.toSeq.sorted.map { case (a, bv) => s"$TxnHeader$a\t$bv" } ++
-      edels.map(e =>
-        s"$EDelHeader${e.file}\t${e.keyPhys.mkString(",")}\t${e.scope.toSeq.sorted.mkString(",")}") ++
+      edels.map(e => s"$EDelHeader${e.file}\t${e.keyPhys.mkString(",")}\t" +
+        s"${e.scope.toSeq.sorted.mkString(",")}\t${e.rows}\t${e.keys.toDDL}") ++
       fs
 
   /** Publish `lines` as version `v` of `name`. Returns false when `v` was
@@ -429,52 +434,44 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     StructType(cols.map(c =>
       StructField(c.physical, DataType.fromDDL(c.typeDdl), nullable = true)))
 
-  /** The relation over exactly `fs` under the mapping's physical schema:
-    * a [[ManifestFileIndex]] (pushed data filters prune files by `m`'s
-    * stats and blooms). `withFile` adds each row's file as `__fp`, the
-    * `_metadata.file_path` string [[qualify]] gives — taken in the same
-    * projection as the relation, since `_metadata` does not survive an
-    * intervening Project, and only when asked: an unused `_metadata`
-    * still makes the scan build every metadata field. Files predating an
-    * added column null-fill; the schema comes from the mapping, so no
-    * footer inference runs. */
-  private def relation(name: String, m: Meta, fs: Seq[String],
-                       withFile: Boolean): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val dataSchema = physicalSchema(m.cols)
-    val rel = HadoopFsRelation(new ManifestFileIndex(name, m, fs, dataSchema),
-      new StructType(), dataSchema, None, new ParquetFileFormat(),
-      Map.empty[String, String])(spark)
-    val df = spark.baseRelationToDataFrame(rel)
-    if (withFile) df.select(col("*"), col("_metadata.file_path").as("__fp")) else df
+  /** The [[LogFileIndex]] relation over exactly `fs` under the mapping's
+    * physical schema, plus `extra` physical columns the mapping no longer
+    * holds (a dropped column an equality delete keys on): pushed data
+    * filters prune files by `m`'s stats and blooms. `withFile` adds each
+    * row's file as `__fp` ([[LogScan.FilePath]]). Files predating an added
+    * column null-fill; the schema comes from the mapping, so no footer
+    * inference runs. */
+  private def relation(name: String, m: Meta, fs: Seq[String], withFile: Boolean,
+                       extra: Seq[StructField] = Nil): DataFrame = {
+    val r = root(name)
+    LogScan.scan(spark, new LogFileIndex(spark, Seq(r),
+      fs.map(f => LogScan.LiveFile(r.resolve(f), stats = m.stats.get(f))),
+      StructType(physicalSchema(m.cols) ++ extra),
+      mayContain = lf => bloomKeep(name, m, r.relativize(lf.path).toString)),
+      if (withFile) Seq(LogScan.FilePath) else Nil)
   }
 
   /** The one TxLogTable scan: the LOGICAL rows of `fs` (typed column
     * mapping, renamed columns under their logical names) with the
     * equality deletes applied, plus `__fp` when `withFile`. Each delete
-    * is a broadcast anti-join on its PHYSICAL key columns — physical
-    * names are immutable, so deletes survive renames — gated to the
-    * files in its scope by `__fp`, so a key re-inserted after the delete
-    * stays visible. Every read, the registered views and `merge` go
-    * through it. */
+    * matches on its PHYSICAL key columns — physical names are immutable,
+    * so deletes survive renames, and a dropped key column is still read
+    * for them — gated to the files in its scope by `__fp`, so a key
+    * re-inserted after the delete stays visible. Every read, the
+    * registered views and `merge` go through it. */
   private def scan(name: String, m: Meta, fs: Seq[String],
                    withFile: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
     val scanned = fs.toSet
     val edels = m.edels.filter(_.scope.exists(scanned))
-    val base = relation(name, m, fs, withFile || edels.nonEmpty)
-    val cleaned = edels.foldLeft(base) { (df, e) =>
-      // physical key columns are always present: delete files are only
-      // scoped to data files that were live (hence schema-complete for
-      // the keys) when the delete committed
-      val keys = deleteKeys(name, m, e)
-      val scope = e.scope.intersect(scanned).toSeq.map(qualify(name, _))
-      df.join(broadcast(keys), e.keyPhys.map(k => df(k) === keys(k)).reduce(_ && _) &&
-        df("__fp").isInCollection(scope), "left_anti")
-    }
-    cleaned.select(m.cols.map(c => col(c.physical).cast(c.typeDdl).as(c.logical)) ++
-      (if (withFile) Seq(col("__fp")) else Nil): _*)
+    val mapped = m.cols.map(_.physical).toSet
+    val base = relation(name, m, fs, withFile || edels.nonEmpty,
+      edels.flatMap(_.keys).filterNot(k => mapped(k.name)).distinctBy(_.name))
+    LogScan.survivors(base, edels.map(e => LogScan.ByKey(deleteKeys(name, e), e.keyPhys,
+        nullSafe = false,
+        col("__fp").isInCollection(e.scope.intersect(scanned).toSeq.map(qualify(name, _))),
+        e.rows)))
+      .select(m.cols.map(c => col(c.physical).cast(c.typeDdl).as(c.logical)) ++
+        (if (withFile) Seq(col("__fp")) else Nil): _*)
   }
 
   /** [[scan]] without `__fp`: the rows a reader sees */
@@ -483,7 +480,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** the `_metadata.file_path` form of manifest path `f` */
   private def qualify(name: String, f: String): String =
-    DeltaRead.qualifiedPath(spark, root(name).resolve(f))
+    LogScan.qualifiedPath(spark, root(name).resolve(f))
 
   /** qualified path → manifest path, over `fs` */
   private def byQualified(name: String, fs: Seq[String]): Map[String, String] =
@@ -499,20 +496,19 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       .collect().map(r => manifestPath(r.getString(0))).toSeq
   }
 
-  /** the deleted-key frame of one equality-delete file (physical key
-    * columns, as written at delete time), read under the mapping's types
-    * so no footer-inference job runs. Sound because a delete's scope never
-    * covers a retyped file: retype rewrites every live file, and rewritten
-    * files leave every scope. */
-  private def deleteKeys(name: String, m: Meta, e: EqDelete): DataFrame =
-    spark.read.schema(physicalSchema(m.cols.filter(c => e.keyPhys.contains(c.physical))))
-      .parquet(root(name).resolve(e.file).toString)
-      .select(e.keyPhys.map(col): _*)
+  /** the deleted-key frame of one equality-delete file, its physical key
+    * columns renamed `__del_<key>`, read under the types the delete
+    * recorded so no footer-inference job runs. Sound because a delete's
+    * scope never covers a retyped file: retype rewrites every live file,
+    * and rewritten files leave every scope. */
+  private def deleteKeys(name: String, e: EqDelete): DataFrame =
+    spark.read.schema(e.keys).parquet(root(name).resolve(e.file).toString)
+      .select(e.keyPhys.map(k => col(k).as(s"__del_$k")): _*)
 
   /** Read the current snapshot (resolves the manifest ONCE — concurrent
     * commits do not move this DataFrame's version). The scan prunes
     * files by the manifest's min/max stats and per-file blooms whenever
-    * Catalyst pushes a predicate down ([[ManifestFileIndex]]), so a
+    * Catalyst pushes a predicate down ([[LogFileIndex]]), so a
     * plain `spark.sql("SELECT … FROM t WHERE k = 42")` over a registered
     * view schedules only candidate files. */
   def read(name: String): DataFrame = readVersion(name, latest(name))
@@ -605,7 +601,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       finally s.close()
     }
     val withDel = m.copy(edels =
-      m.edels :+ EqDelete(delFile, phys.map(_.physical), live.toSet))
+      m.edels :+ EqDelete(delFile, physicalSchema(phys), live.toSet, n))
     if (!tryCommit(name, v + 1, renderM(withDel, live)))
       throw new IllegalStateException(
         s"TxLogTable $name: lost commit race on deleteWhere — " +
@@ -1070,67 +1066,28 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     })
   }
 
-  // ---- file skipping on every scan (the FileIndex seam) ------------------
-  // Every TxLogTable read is a relation over this index, so the
-  // registered views and plain `spark.sql` reach the candidateFiles /
-  // bloomCandidateFiles economy: it is the seam Delta (TahoeFileIndex) and
-  // Iceberg use on Spark. FileSourceScanExec hands its pushed-down data
-  // filters to FileIndex.listFiles, so a manifest-aware index prunes files
-  // by min/max stats and per-file blooms BEFORE tasks are scheduled. At
-  // 100 TB a point probe schedules O(candidate files) tasks instead of
-  // O(table), and it composes with Catalyst for free — the predicate is
-  // still applied exactly row-wise; the index only shrinks the scan.
-
-  private final class ManifestFileIndex(name: String, m: Meta,
-                                        live: Seq[String], dataSchema: StructType)
-      extends org.apache.spark.sql.execution.datasources.FileIndex {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+  /** The Bloom channel of every scan's [[LogFileIndex]] (the
+    * `mayContain` of [[StatsSkip.keep]]) for `=`/IN on file `f`: a file is
+    * skipped before any task is scheduled when its bloom lacks the
+    * literal, rendered as the column's CAST AS STRING (the form the blooms
+    * were built from); a type without that rendering never prunes. */
+  private def bloomKeep(name: String, m: Meta, f: String)
+                       (a: org.apache.spark.sql.catalyst.expressions.AttributeReference,
+                        value: Any): Boolean = {
     import org.apache.spark.sql.types._
-
-    private val hRoot = new org.apache.hadoop.fs.Path(root(name).toUri)
-    private val statuses: Map[String, org.apache.hadoop.fs.FileStatus] = {
-      val fs = hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      live.map(f => f -> fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(root(name).resolve(f).toUri))).toMap
-    }
-
-    override def rootPaths: Seq[org.apache.hadoop.fs.Path] = Seq(hRoot)
-    override def partitionSchema: StructType = new StructType()
-    override def sizeInBytes: Long = statuses.values.map(_.getLen).sum
-    override def inputFiles: Array[String] =
-      live.map(f => root(name).resolve(f).toString).toArray
-    override def refresh(): Unit = ()
-
-    /** the Bloom channel of [[StatsSkip.keep]] for `=`/IN on file `f`: the
-      * literal renders as the column's CAST AS STRING, the form the blooms
-      * were built from; a type without that rendering never prunes. */
-    private def bloomKeep(f: String)(a: AttributeReference, value: Any): Boolean =
-      m.bloomCols.get(a.name).forall { nbits =>
-        (bloomKey(value, a.dataType), m.blooms.get((f, a.name))) match {
-          case (Some(s), Some(b64)) =>
-            bloomPositions(s, nbits).forall(decodedBloom(name, f, a.name, nbits, b64).get)
-          case _ => true
-        }
+    m.bloomCols.get(a.name).forall { nbits =>
+      val key = a.dataType match {
+        case StringType | ByteType | ShortType | IntegerType | LongType |
+             FloatType | DoubleType | _: DecimalType => Option(value).map(_.toString)
+        case DateType => Option(value).map(d =>
+          java.time.LocalDate.ofEpochDay(d.asInstanceOf[Int].toLong).toString)
+        case _ => None
       }
-
-    private def bloomKey(value: Any, dt: DataType): Option[String] = dt match {
-      case StringType | ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType | _: DecimalType => Option(value).map(_.toString)
-      case DateType => Option(value).map(d =>
-        java.time.LocalDate.ofEpochDay(d.asInstanceOf[Int].toLong).toString)
-      case _ => None
-    }
-
-    override def listFiles(partitionFilters: Seq[Expression],
-                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val cand =
-        if (dataFilters.isEmpty) live
-        else live.filter(f =>
-          StatsSkip.keep(m.stats.get(f), dataFilters, dataSchema, bloomKeep(f)))
-      Seq(PartitionDirectory(InternalRow.empty,
-        cand.map(f => FileStatusWithMetadata(statuses(f), Map.empty))))
+      (key, m.blooms.get((f, a.name))) match {
+        case (Some(k), Some(b64)) =>
+          bloomPositions(k, nbits).forall(decodedBloom(name, f, a.name, nbits, b64).get)
+        case _ => true
+      }
     }
   }
 
@@ -1152,7 +1109,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val phys = next.map(_.physical).toSet
     // equality deletes carry through DDL untouched: they anti-join on
     // PHYSICAL names inside the scoped files, which no mapping change
-    // moves (a renamed or even dropped key column still kills its rows).
+    // moves (a renamed or even dropped key column still kills its rows:
+    // the scan reads a dropped key under the type the delete recorded).
     // Blooms (physical-keyed, rename-proof like stats) and CHECK
     // constraints survive too — constraints reference LOGICAL names, so
     // renaming/dropping a constrained column leaves a constraint later
@@ -1338,11 +1296,13 @@ object TxLogTable {
     * catalogString, used to type NULLs for files that predate the column. */
   final case class ColMap(physical: String, logical: String, typeDdl: String)
 
-  /** One equality-delete (merge-on-read) tombstone file: `file` holds the
-    * deleted keys under PHYSICAL column names `keyPhys`; it applies only
-    * to the data files in `scope` (those live when the delete committed),
-    * so later appends can re-insert a key visibly. */
-  final case class EqDelete(file: String, keyPhys: Seq[String], scope: Set[String])
+  /** One equality-delete (merge-on-read) tombstone file: `file` holds
+    * `rows` deleted keys under the PHYSICAL key columns `keys`; it applies
+    * only to the data files in `scope` (those live when the delete
+    * committed), so later appends can re-insert a key visibly. */
+  final case class EqDelete(file: String, keys: StructType, scope: Set[String], rows: Long) {
+    def keyPhys: Seq[String] = keys.fieldNames.toSeq
+  }
 
   /** reads `#fstat` JSON with decimals as exact big-decimal nodes, the
     * encoding [[StatsSkip]] compares decimals on */

@@ -6,10 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Read-path interop for Delta Lake tables — open-spec `_delta_log`
@@ -34,15 +30,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   * the action count is bounded by checkpoint compaction, not table
   * history, and the live-file set is what ANY planner must hold to
   * schedule a scan. The data files are then served through a
-  * [[DeltaFileIndex]], the same FileIndex seam the engine's own tx log
-  * uses (TxLogTable.read): FileSourceScanExec hands pushed-down
+  * [[LogFileIndex]], the same FileIndex every format's reads plan over
+  * ([[LogScan]]): FileSourceScanExec hands pushed-down
   * partition predicates to `listFiles`, so a partition-pruned scan
   * schedules O(matching partitions) tasks before anything runs. At
   * 100 TB that is the difference between touching 3 of 3000 date
   * partitions and touching all of them.
   *
   * `add.stats`, when a writer recorded them, feed a second skipping
-  * channel beside partition pruning: [[DeltaFileIndex.listFiles]] tests
+  * channel beside partition pruning: [[LogFileIndex.listFiles]] tests
   * each surviving file's min/max/nullCount against the pushed data
   * predicates ([[StatsSkip]] — conservative, stats are optional in the
   * spec so absence only costs economy, never correctness).
@@ -112,17 +108,13 @@ object DeltaRead {
         f.copy(name = phys(f.name), metadata = md)
       })
     }
+    /** a scan's columns under their logical names, in schema order: data
+      * columns are read by physical name, partition columns come from
+      * the tuples */
+    def logicalColumns: Seq[org.apache.spark.sql.Column] =
+      schema.fieldNames.toSeq.map(n => org.apache.spark.sql.functions.col(
+        if (partitionColumns.contains(n)) n else columnMapping.getOrElse(n, n)).as(n))
   }
-
-  /** Id-mode reads resolve parquet columns by field id — a session conf
-    * gates that matcher on; it only activates for scans whose requested
-    * schema carries `parquet.field.id` metadata (exactly our id-mode
-    * scans). `ignoreMissing` stays at its strict default, so a file
-    * WITHOUT ids under an id-mode table fails loudly instead of silently
-    * projecting nulls. */
-  private def enableFieldIdReads(spark: SparkSession, snap: Snapshot): Unit =
-    if (snap.fieldIds.nonEmpty)
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
   private val mapper = new ObjectMapper()
 
@@ -158,7 +150,6 @@ object DeltaRead {
     * silently returning them would double-count. */
   def readAppends(spark: SparkSession, tableDir: String,
                   fromVersion: Long, toVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(fromVersion <= toVersion,
       s"readAppends: fromVersion $fromVersion > toVersion $toVersion")
     val snap = snapshotAt(tableDir, toVersion)
@@ -188,22 +179,23 @@ object DeltaRead {
           }
         }
     }
+    readFiles(spark, tableDir, snap, adds.toSeq)
+  }
+
+  /** The rows of log files `files` (log-relative path, partition tuple)
+    * under `snap`'s schema, in its column order, partition columns
+    * restored from the tuples — one [[LogFileIndex]] relation, the scan
+    * behind the incremental, change-feed and tail reads. `extra` data
+    * columns (a change file's `_change_type`) follow the table's. */
+  private[graft] def readFiles(spark: SparkSession, tableDir: String, snap: Snapshot,
+                               files: Seq[(String, Map[String, String])],
+                               extra: Seq[StructField] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val root = Paths.get(tableDir)
-    def phys(n: String): String = snap.columnMapping.getOrElse(n, n)
-    enableFieldIdReads(spark, snap)
-    val physData = snap.physDataSchema
-    if (adds.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snap.schema)
-    }
-    adds.groupBy(_._2).map { case (pv, fs) =>
-      val base = spark.read.schema(physData)
-        .parquet(fs.map(f => root.resolve(f._1).toString).toSeq: _*)
-        .select(snap.dataSchema.fields.toSeq.map(f => col(phys(f.name)).as(f.name)): _*)
-      snap.partitionColumns.foldLeft(base)((d, c) =>
-        d.withColumn(c, lit(pv.get(c).orNull).cast(snap.schema(c).dataType)))
-    }.reduce(_ unionByName _)
-      .select(snap.schema.fieldNames.map(col).toSeq: _*)
+    val idx = new LogFileIndex(spark, Seq(root),
+      files.map { case (p, pv) => LogScan.LiveFile(root.resolve(p), partition = pv) },
+      StructType(snap.physDataSchema.fields ++ extra), snap.partitionSchema, snap.partitionSchema)
+    LogScan.scan(spark, idx).select(snap.logicalColumns ++ extra.map(f => col(f.name)): _*)
   }
 
   /** Change Data Feed read: every row-level change committed in versions
@@ -226,7 +218,6 @@ object DeltaRead {
       s"readChangeFeed: fromVersion $fromVersion > toVersion $toVersion")
     val snap = snapshotAt(tableDir, toVersion)
     val logDir = Paths.get(tableDir, "_delta_log")
-    val root = Paths.get(tableDir)
     // remove actions carry no partitionValues — track each live file's
     // tuple through a forward replay so a synthesized delete can restore
     // them (fromVersion = -1 reads the feed from table creation)
@@ -235,10 +226,6 @@ object DeltaRead {
       snapshotAt(tableDir, fromVersion).files
         .foreach(f => pvByPath(f.path) = f.partitionValues)
     val toLogical: Map[String, String] = snap.columnMapping.map(_.swap)
-    def phys(n: String): String = snap.columnMapping.getOrElse(n, n)
-    enableFieldIdReads(spark, snap)
-    val physData = snap.physDataSchema
-    val physCdc = StructType(physData.fields :+ StructField("_change_type", StringType))
 
     def parsePv(a: JsonNode): Map[String, String] =
       Option(a.get("partitionValues")).map { o =>
@@ -247,8 +234,6 @@ object DeltaRead {
             (if (o.get(k).isNull) null else o.get(k).asText())).toMap
       }.getOrElse(Map.empty[String, String])
 
-    // (path, pv, changeTypeOrNull) groups per version; null changeType =
-    // a cdc file carrying its own _change_type column
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     ((fromVersion + 1) to toVersion).foreach { v =>
       val f = logDir.resolve(f"$v%020d.json")
@@ -257,28 +242,21 @@ object DeltaRead {
       val nodes = Files.readAllLines(f, StandardCharsets.UTF_8).asScala
         .filter(_.nonEmpty).map(mapper.readTree)
       val cdcs = nodes.flatMap(n => Option(n.get("cdc")))
+      // no change type = cdc files, which carry their own _change_type
       def buildFrames(files: Seq[(String, Map[String, String])],
-                      schema: StructType, changeType: Option[String]): Seq[DataFrame] =
-        files.groupBy(_._2).map { case (pv, fs) =>
-          val base = spark.read.schema(schema)
-            .parquet(fs.map(x => root.resolve(x._1).toString): _*)
-          val logical = snap.dataSchema.fields.toSeq
-            .map(fd => col(phys(fd.name)).as(fd.name)) ++
-            (if (changeType.isEmpty) Seq(col("_change_type")) else Nil)
-          val withCols = base.select(logical: _*)
-          val withPv = snap.partitionColumns.foldLeft(withCols)((d, c) =>
-            d.withColumn(c, lit(pv.get(c).orNull).cast(snap.schema(c).dataType)))
-          changeType.map(ct => withPv.withColumn("_change_type", lit(ct)))
-            .getOrElse(withPv)
-            .withColumn("_commit_version", lit(v))
-        }.toSeq
+                      changeType: Option[String]): Seq[DataFrame] =
+        if (files.isEmpty) Nil
+        else Seq(changeType.fold(readFiles(spark, tableDir, snap, files,
+            Seq(StructField("_change_type", StringType))))(ct =>
+              readFiles(spark, tableDir, snap, files).withColumn("_change_type", lit(ct)))
+          .withColumn("_commit_version", lit(v)))
       val adds = nodes.flatMap(n => Option(n.get("add")))
       val removes = nodes.flatMap(n => Option(n.get("remove")))
       if (cdcs.nonEmpty) {
         // cdc actions are authoritative for this commit's changes
         frames ++= buildFrames(
           cdcs.map(c => (decodePath(c.get("path").asText), parsePv(c))).toSeq,
-          physCdc, changeType = None)
+          changeType = None)
       } else {
         // synthesize ONLY from dataChange=true actions (PROTOCOL.md:
         // dataChange=false adds/removes rearrange existing rows — a
@@ -291,13 +269,13 @@ object DeltaRead {
             "actions — its suppressed rows cannot be reconstructed"))
         frames ++= buildFrames(
           dAdds.map(a => (decodePath(a.get("path").asText), parsePv(a))).toSeq,
-          physData, changeType = Some("insert"))
+          changeType = Some("insert"))
         frames ++= buildFrames(
           dRemoves.map { r =>
             val p = decodePath(r.get("path").asText)
             (p, pvByPath.getOrElse(p, parsePv(r)))
           }.toSeq,
-          physData, changeType = Some("delete"))
+          changeType = Some("delete"))
       }
       // keep the live-file tuple map current for later versions' removes
       adds.foreach(a =>
@@ -435,10 +413,7 @@ object DeltaRead {
         // absent stats degrade to "no skipping", never to an error
         val stats = Option(a.get("stats")).filter(_.isTextual).flatMap { s =>
           scala.util.Try(mapper.readTree(s.asText)).toOption.flatMap(StatsSkip.FileStats.parse)
-        }.map(st => st.copy(
-          min = st.min.map { case (k, v) => logicalKey(k) -> v },
-          max = st.max.map { case (k, v) => logicalKey(k) -> v },
-          nullCount = st.nullCount.map { case (k, v) => logicalKey(k) -> v }))
+        }.map(_.rename(logicalKey))
         val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
           DeletionVectors.Descriptor(d.get("storageType").asText,
             d.get("pathOrInlineDv").asText,
@@ -495,95 +470,55 @@ object DeltaRead {
 
   private[sources] def readSnapshot(spark: SparkSession, tableDir: String,
                                     snap: Snapshot): DataFrame =
-    if (snap.files.forall(_.deletionVector.isEmpty))
-      scanRelation(spark, tableDir, snap, withPositions = false)
+    if (snap.files.forall(_.deletionVector.isEmpty)) scan(spark, tableDir, snap, positions = false)
     else readWithPositions(spark, tableDir, snap).drop("__fp", "__ri")
 
-  /** The raw FileIndex-backed scan. With column mapping the parquet files
-    * store PHYSICAL column names, so the relation's data schema is the
-    * physical one and the result is aliased back to logical — user
-    * predicates push through the aliases down to the physical scan.
-    * `withPositions` adds `__fp`/`__ri` from the file-source metadata
-    * column (grabbed in the SAME projection — `_metadata` does not
-    * survive an intervening Project). */
-  private def scanRelation(spark: SparkSession, tableDir: String,
-                           snap: Snapshot, withPositions: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val idx = new DeltaFileIndex(spark, Paths.get(tableDir), snap)
-    def phys(n: String): String = snap.columnMapping.getOrElse(n, n)
-    enableFieldIdReads(spark, snap)
-    val physData = snap.physDataSchema
-    val rel = HadoopFsRelation(idx, snap.partitionSchema, physData, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-    val base = spark.baseRelationToDataFrame(rel)
-    if (snap.columnMapping.isEmpty && !withPositions) base
-    else {
-      val dataCols = snap.dataSchema.fields.toSeq.map(f => col(phys(f.name)).as(f.name))
-      val partCols = snap.partitionSchema.fieldNames.toSeq.map(col)
-      val posCols =
-        if (withPositions) Seq(col("_metadata.file_path").as("__fp"),
-          col("_metadata.row_index").as("__ri"))
-        else Nil
-      base.select(dataCols ++ partCols ++ posCols: _*)
-    }
+  /** The [[LogFileIndex]] over the snapshot's live files: one directory
+    * per partition tuple, stats renamed to the PHYSICAL names the scan
+    * reads (column mapping). */
+  private[graft] def fileIndex(spark: SparkSession, tableDir: String, snap: Snapshot): LogFileIndex = {
+    val root = Paths.get(tableDir)
+    new LogFileIndex(spark, Seq(root), snap.files.map(f => LogScan.LiveFile(root.resolve(f.path),
+        Some(f.size), f.partitionValues, f.stats.map(_.rename(n => snap.columnMapping.getOrElse(n, n))))),
+      snap.physDataSchema, snap.partitionSchema, snap.partitionSchema)
+  }
+
+  /** The snapshot's rows under logical names, plus `__fp`/`__ri` when
+    * `positions`. With column mapping the files store PHYSICAL names, so
+    * the relation reads those and aliases back — user predicates push
+    * through the aliases down to the physical scan. */
+  private def scan(spark: SparkSession, tableDir: String, snap: Snapshot,
+                   positions: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val base = LogScan.scan(spark, fileIndex(spark, tableDir, snap),
+      if (positions) LogScan.Positions else Nil)
+    if (snap.columnMapping.isEmpty) base
+    else base.select(snap.logicalColumns ++
+      (if (positions) Seq(col("__fp"), col("__ri")) else Nil): _*)
   }
 
   /** The snapshot scan with two extra columns — `__fp` (qualified file
     * path) and `__ri` (physical row index in that file) — and deletion
     * vectors already applied. The physical-position channel both the DV
-    * read path and [[DeltaWrite.deleteWhere]] build on. */
+    * read path and [[DeltaWrite.deleteWhere]] build on. Vectors are
+    * DECODED ON EXECUTORS: the driver holds only the descriptors and
+    * serialized bitmaps (the state any Delta planner materializes), so a
+    * billion-row delete never lists its positions on the driver. */
   private[sources] def readWithPositions(spark: SparkSession, tableDir: String,
                                          snap: Snapshot): DataFrame = {
-    val base = scanRelation(spark, tableDir, snap, withPositions = true)
-    if (snap.files.forall(_.deletionVector.isEmpty)) base
-    else applyDeletionVectors(spark, Paths.get(tableDir), snap, base)
-  }
-
-  /** Qualified scan path of a local data file — the exact string
-    * `_metadata.file_path` reports for its rows: scheme + (non-empty)
-    * authority + PERCENT-ENCODED path, e.g. `file:/tmp/a%20b/x.parquet`
-    * (probed empirically — neither Hadoop's decoded `Path.toString` nor
-    * `toUri.toString`'s `file:///` triple-slash form matches). The one
-    * key from a scan row back to its file, for Delta, Iceberg and
-    * TxLogTable alike. */
-  private[graft] def qualifiedPath(spark: SparkSession, p: Path): String = {
-    val hPath = new org.apache.hadoop.fs.Path(p.toUri)
-    val u = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(hPath).toUri
-    val auth = Option(u.getAuthority).filter(_.nonEmpty).orNull
-    new java.net.URI(u.getScheme, auth, u.getPath, u.getQuery, u.getFragment)
-      .toString
-  }
-
-  /** Suppress DV-flagged rows: an anti-join of (file, physical row index)
-    * against the decoded vectors. The DRIVER only ever holds the
-    * descriptors and serialized bitmaps (O(live files with DVs), the same
-    * state any Delta planner materializes); bitmaps are DECODED ON
-    * EXECUTORS via flatMap, so a billion-row delete never materializes
-    * its index list on the driver. Files without a DV pass through the
-    * anti-join untouched (no matching build rows). Broadcast when total
-    * cardinality is bounded; above that the shuffle anti-join is the
-    * right 100 TB shape and AQE picks the strategy. */
-  private def applyDeletionVectors(spark: SparkSession, tableRoot: Path,
-                                   snap: Snapshot, base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dvs: Seq[(String, Array[Byte])] = snap.files.flatMap(f =>
-      f.deletionVector.map(d =>
-        qualifiedPath(spark, tableRoot.resolve(f.path)) -> DeletionVectors.resolve(tableRoot, d)))
-    val totalCard = snap.files.flatMap(_.deletionVector).map(_.cardinality).sum
-    val deleted = spark.createDataset(dvs)
-      .flatMap { case (p, bytes) =>
-        DeletionVectors.deserialize(bytes).iterator.map(ri => (p, ri))
-      }
-      .toDF("__dv_fp", "__dv_ri")
-    val build = if (totalCard <= 10_000_000L) broadcast(deleted) else deleted
-    base.join(build, col("__fp") === col("__dv_fp") &&
-        col("__ri") === col("__dv_ri"), "left_anti")
+    val root = Paths.get(tableDir)
+    val base = scan(spark, tableDir, snap, positions = true)
+    val dvs = snap.files.flatMap(f => f.deletionVector.map(d =>
+      LogScan.qualifiedPath(spark, root.resolve(f.path)) -> DeletionVectors.resolve(root, d)))
+    if (dvs.isEmpty) base
+    else LogScan.survivors(base, Seq(LogScan.ByPosition(spark.createDataset(dvs)
+      .flatMap { case (p, bytes) => DeletionVectors.deserialize(bytes).iterator.map(ri => (p, ri)) }
+      .toDF("__del_fp", "__del_ri"), snap.files.flatMap(_.deletionVector).map(_.cardinality).sum)))
   }
 
   /** The live files a scan filtered by `partitionCol -> allowed values`
-    * must touch — the same pruning arithmetic [[DeltaFileIndex.listFiles]]
+    * must touch — the same pruning arithmetic [[LogFileIndex.listFiles]]
     * applies to pushed predicates, exposed so callers (and oracle rows)
     * can pin the pruned file count without executing a plan. */
   def candidateFiles(snap: Snapshot, keep: Map[String, Set[String]]): Seq[AddFile] =
@@ -674,7 +609,7 @@ object DeltaRead {
     }
     ref.v2Top match {
       case None =>
-        val df = spark.read.parquet(ref.parquetFiles.map(_.toString): _*)
+        val df = readParquet(spark, ref.parquetFiles)
         val hasMeta = df.columns.contains("metaData") ||
           df.columns.contains("protocol")
         if (hasMeta) {
@@ -690,7 +625,7 @@ object DeltaRead {
           if (file.getFileName.toString.endsWith(".json"))
             Files.readAllLines(file, StandardCharsets.UTF_8).asScala
               .filter(_.nonEmpty).map(mapper.readTree).toSeq
-          else spark.read.parquet(file.toString).toJSON.collect()
+          else readParquet(spark, Seq(file)).toJSON.collect()
             .toSeq.map(mapper.readTree)
         val cm = top.flatMap(n => Option(n.get("checkpointMetadata")))
           .filterNot(_.isNull)
@@ -711,8 +646,21 @@ object DeltaRead {
         meta.foreach(apply)
         rest.foreach(apply)
         if (sidecars.nonEmpty)
-          streamRows(spark.read.parquet(sidecars.map(_.toString): _*).toJSON)
+          streamRows(readParquet(spark, sidecars).toJSON)
     }
+  }
+
+  /** Checkpoint parquet files, read under the first file's footer schema
+    * taken on the driver: the footer Spark's own schema inference reads,
+    * without the inference job. */
+  private def readParquet(spark: SparkSession, files: Seq[Path]): DataFrame = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.toUri), spark.sparkContext.hadoopConfiguration))
+    val schema = try new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(r.getFooter.getFileMetaData.getSchema) finally r.close()
+    spark.read.schema(schema).parquet(files.map(_.toString): _*)
   }
 
   /** Log paths are RFC 2396 percent-encoded relative paths (or absolute
@@ -724,58 +672,4 @@ object DeltaRead {
       val u = new java.net.URI(raw)
       if (u.getPath == null || u.getPath.isEmpty) raw else u.getPath
     } catch { case _: java.net.URISyntaxException => raw }
-}
-
-/** FileIndex over a [[DeltaRead.Snapshot]]: one PartitionDirectory per
-  * distinct partitionValues tuple; pushed partition predicates are bound
-  * to the partition row and evaluated per directory — files in pruned
-  * partitions are never listed, so they are never scheduled. */
-final class DeltaFileIndex(spark: SparkSession, tableRoot: Path,
-                           snap: DeltaRead.Snapshot) extends FileIndex {
-
-  private val partSchema = snap.partitionSchema
-
-  private def statusOf(f: DeltaRead.AddFile) = {
-    val hPath = new org.apache.hadoop.fs.Path(tableRoot.resolve(f.path).toUri)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    FileStatusWithMetadata(fs.getFileStatus(hPath))
-  }
-
-  private lazy val groups: Seq[(InternalRow, Seq[DeltaRead.AddFile])] =
-    snap.files.groupBy(f => partSchema.fieldNames.toSeq.map(f.partitionValues.get))
-      .values.toSeq.map(fs => (PartitionPrune.partRow(partSchema,
-        fs.head.partitionValues, spark.sessionState.conf.sessionLocalTimeZone), fs))
-
-  override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
-    Seq(new org.apache.hadoop.fs.Path(tableRoot.toUri))
-  override def partitionSchema: StructType = partSchema
-  override def sizeInBytes: Long = snap.files.map(_.size).sum
-  override def inputFiles: Array[String] =
-    snap.files.map(f => tableRoot.resolve(f.path).toString).toArray
-  override def refresh(): Unit = ()
-
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // two independent skipping channels, matching Delta's own planner:
-    // partition predicates prune whole partitionValues groups, then each
-    // surviving file is tested against the pushed data predicates over its
-    // add.stats min/max/nullCount (StatsSkip is conservative — a file
-    // without stats is always scheduled). With column mapping the pushed
-    // filters reference PHYSICAL attribute names (the scan's schema);
-    // stats were normalized to logical at replay, so translate back.
-    val toLogical = snap.columnMapping.map(_.swap)
-    val logicalFilters =
-      if (toLogical.isEmpty) dataFilters
-      else dataFilters.map(_.transform {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if toLogical.contains(a.name) => a.withName(toLogical(a.name))
-      })
-    PartitionPrune.prune(partSchema, groups, partitionFilters)
-      .map { case (row, fs) =>
-        PartitionDirectory(row,
-          fs.filter(f => StatsSkip.keep(f.stats, logicalFilters, snap.dataSchema))
-            .map(statusOf))
-      }
-      .filter(_.files.nonEmpty)
-  }
 }

@@ -412,7 +412,7 @@ object DeltaWrite {
     val root = Paths.get(tableDir)
     val touched = MergeClauses.touchedFiles[DeltaRead.AddFile](source, keyCols,
         clauses, snap.schema, snap.files, _.stats,
-        f => DeltaRead.qualifiedPath(spark, root.resolve(f.path)),
+        f => LogScan.qualifiedPath(spark, root.resolve(f.path)),
         fs => DeltaRead.readWithPositions(spark, tableDir, snap.copy(files = fs))) match {
       case None => return snap.version
       case Some(fs) => fs
@@ -487,11 +487,11 @@ object DeltaWrite {
     val snap = DeltaRead.snapshot(tableDir)
     val root = Paths.get(tableDir)
     val byQualified: Map[String, DeltaRead.AddFile] =
-      snap.files.map(f => DeltaRead.qualifiedPath(spark, root.resolve(f.path)) -> f).toMap
+      snap.files.map(f => LogScan.qualifiedPath(spark, root.resolve(f.path)) -> f).toMap
     // existing serialized vectors, captured into the executor closure
     // (O(files-with-DVs) bitmap blobs — small, same state the planner holds)
     val existing: Map[String, Array[Byte]] = snap.files.flatMap(f =>
-      f.deletionVector.map(d => DeltaRead.qualifiedPath(spark, root.resolve(f.path)) ->
+      f.deletionVector.map(d => LogScan.qualifiedPath(spark, root.resolve(f.path)) ->
         DeletionVectors.resolve(root, d))).toMap
     val rootStr = root.toAbsolutePath.toString
     // (qualified path, dv uuid base85, offset, sizeInBytes, cardinality):

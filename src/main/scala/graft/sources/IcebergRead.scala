@@ -7,9 +7,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
@@ -35,10 +32,9 @@ import org.apache.spark.sql.types._
   * Iceberg differs from Delta in one load-bearing way: data files CONTAIN
   * the partition source columns (partitioning is a derived transform, not
   * a physical layout contract). So the scan relation exposes NO Spark
-  * partition columns; instead [[IcebergFileIndex]] prunes file groups on
+  * partition columns; instead its [[LogFileIndex]] prunes file groups on
   * the ordinary pushed dataFilters whose references are identity-partition
-  * source columns — same arithmetic as the Delta index, different filter
-  * channel, both through [[PartitionPrune]].
+  * source columns — the same tuple arithmetic as Delta's partitions.
   *
   * Format v2 row-level deletes (merge-on-read) are APPLIED, not rejected:
   * delete manifests (content=1) contribute position-delete files
@@ -51,7 +47,7 @@ import org.apache.spark.sql.types._
   *
   * Scope (declared): reads the current snapshot; format v1/v2; parquet
   * data and delete files; the FULL partition-transform family prunes
-  * (identity through [[PartitionPrune]]; bucket/truncate/year/month/
+  * (identity through the [[LogFileIndex]] tuple; bucket/truncate/year/month/
   * day/hour through [[IcebergTransforms.keepFile]] — equality/IN on
   * every transform, ranges on the order-preserving ones; an unknown
   * transform reads correct, just unpruned); non-primitive schema fields
@@ -99,14 +95,6 @@ object IcebergRead {
       }
   }
 
-  /** Field-id reads activate per scan whose requested schema carries
-    * `parquet.field.id` metadata; `ignoreMissing` stays strict, so an
-    * id-less file under an evolved table fails loudly instead of
-    * silently projecting nulls (same stance as Delta id-mode). */
-  private def enableFieldIdReads(spark: SparkSession, snap: Snapshot): Unit =
-    if (snap.resolveById)
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-
   private val mapper = new ObjectMapper()
 
   /** Parse the newest table metadata and resolve the current snapshot. */
@@ -147,8 +135,8 @@ object IcebergRead {
           .getOrElse(throw new IllegalArgumentException(s"default-spec-id $id not in partition-specs"))
           .get("fields")
       } else meta.get("partition-spec")
-    // the FULL partition spec: identity fields prune through
-    // PartitionPrune (whole predicates over typed tuples), transform
+    // the FULL partition spec: identity fields prune as LogFileIndex
+    // tuples (whole predicates over typed tuples), transform
     // fields through IcebergTransforms.keepFile (transform arithmetic
     // on pushed literals); an unknown transform degrades to Opaque —
     // the tuple stays metadata only, never wrong
@@ -210,24 +198,23 @@ object IcebergRead {
     * read semantics). */
   def readAppends(spark: SparkSession, tableDir: String,
                   fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val metaDir = Paths.get(tableDir, "metadata")
     val meta = mapper.readTree(Files.readString(currentMetadataFile(metaDir)))
-    val snap0 = snapshot(tableDir)
-    val schema = snap0.schema
-    enableFieldIdReads(spark, snap0)
-    val added = snapshotRange(tableDir, meta, "readAppends",
-      fromSnapshotId, toSnapshotId).flatMap(addedDataFiles(tableDir, _))
-    if (added.isEmpty)
-      spark.createDataFrame(spark.sparkContext
-        .emptyRDD[org.apache.spark.sql.Row], schema)
-    else added.groupBy(_._2).map { case (fmt, fs) =>
-      val rdr = spark.read.schema(snap0.scanSchema)
-      val paths = fs.map(_._1)
-      if (fmt == "orc") rdr.orc(paths: _*) else rdr.parquet(paths: _*)
-    }.reduce(_ unionByName _)
-      .select(schema.fieldNames.map(col).toSeq: _*)
+    readFiles(spark, snapshot(tableDir), snapshotRange(tableDir, meta, "readAppends",
+      fromSnapshotId, toSnapshotId).flatMap(addedDataFiles(tableDir, _)))
   }
+
+  /** The rows of data files `fs` (absolute path, file format) under
+    * `snap`'s scan schema, in its column order — one [[LogFileIndex]]
+    * relation per format, the scan behind the incremental and changelog
+    * reads and [[graft.streaming.IcebergTail]]. */
+  private[graft] def readFiles(spark: SparkSession, snap: Snapshot,
+                               fs: Seq[(String, String)]): DataFrame =
+    (if (fs.isEmpty) Seq(Seq.empty[(String, String)]) else fs.groupBy(_._2).values.toSeq)
+      .map(g => LogScan.scan(spark, indexOver(spark, snap, g.map(f => LogScan.LiveFile(Paths.get(f._1)))),
+        Nil, fileFormat(g.headOption.fold("parquet")(_._2))))
+      .reduce(_ unionByName _)
+      .select(snap.schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
 
   /** The snapshots strictly AFTER `fromSnapshotId` up to and including
     * `toSnapshotId`, oldest first — the shared range seam behind
@@ -387,14 +374,7 @@ object IcebergRead {
     val meta = mapper.readTree(Files.readString(currentMetadataFile(metaDir)))
     val snap0 = snapshot(tableDir)
     val schema = snap0.schema
-    enableFieldIdReads(spark, snap0)
     val snaps = meta.get("snapshots").elements().asScala.toSeq
-
-    def readFiles(fs: Seq[(String, String)]): DataFrame =
-      fs.groupBy(_._2).map { case (fmt, g) =>
-        val rdr = spark.read.schema(snap0.scanSchema)
-        if (fmt == "orc") rdr.orc(g.map(_._1): _*) else rdr.parquet(g.map(_._1): _*)
-      }.reduce(_ unionByName _).select(schema.fieldNames.map(col).toSeq: _*)
 
     val range = snapshotRange(tableDir, meta, "readChanges",
       fromSnapshotId, toSnapshotId)
@@ -421,7 +401,7 @@ object IcebergRead {
       op match {
         case "replace" => Nil // physical rearrangement only
         case "append" =>
-          if (added.isEmpty) Nil else Seq(stamp(readFiles(added), "insert"))
+          if (added.isEmpty) Nil else Seq(stamp(readFiles(spark, snap0, added), "insert"))
         case "overwrite" | "delete" =>
           val p = parent()
           val removedSet = removed.toSet
@@ -440,19 +420,24 @@ object IcebergRead {
             val posDel = newDels.filterNot(_.isEquality)
             val posTouched: Set[String] =
               if (posDel.isEmpty) Set.empty
-              else spark.read.parquet(posDel.map(_.path): _*)
+              else spark.read.schema(PositionDeleteSchema).parquet(posDel.map(_.path): _*)
                 .select(col("file_path")).distinct()
                 .collect().map(_.getString(0)).toSet
             val touchable = ps.files.filterNot(f => removedSet(f.path))
               .filter(f => posTouched.contains(f.path) ||
                 newDels.exists(d => d.isEquality && f.seq < d.seq))
             val sub = ps.copy(files = touchable)
+            // the rows the new deletes suppress: position kills, then the
+            // equality kills among the rest, so each row reports once
             val base = readWithPositions(spark, sub)
-            stamp(suppressedBy(spark, sub, newDels, base)
-              .select(schema.fieldNames.map(col).toSeq: _*), "delete")
+            val (pos, eq) = deletesOf(spark, sub, newDels)
+            stamp((pos.map(LogScan.deleteJoin(base, _, "left_semi")).toSeq ++
+                eq.map(seqGated(spark, sub, LogScan.survivors(base, pos.toSeq), _, "left_semi")))
+              .map(_.select(schema.fieldNames.map(col).toSeq: _*)).reduce(_ unionByName _),
+              "delete")
           }
           val ins = if (added.isEmpty) None
-            else Some(stamp(readFiles(added), "insert"))
+            else Some(stamp(readFiles(spark, snap0, added), "insert"))
           (delFromRemoved.toSeq ++ delFromNew.toSeq ++ ins.toSeq)
         case other => throw new IllegalArgumentException(
           s"snapshot $sid of $tableDir declares unknown operation '$other'")
@@ -469,59 +454,8 @@ object IcebergRead {
     else frames.reduce(_ unionByName _)
   }
 
-  /** The rows of `base` (a positions scan over `snap.files`) that
-    * `dels` SUPPRESS — [[applyDeletes]]'s complement (semi instead of
-    * anti, position kills excluded from the equality probe so a row is
-    * reported once). Same distributed-join shape and driver contract. */
-  private def suppressedBy(spark: SparkSession, snap: Snapshot,
-                           dels: Seq[DeleteFile], base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val BroadcastRows = 10_000_000L
-    val qual: Map[String, String] =
-      snap.files.map(f => f.path -> DeltaRead.qualifiedPath(spark, Paths.get(f.path))).toMap
-    val pos = dels.filterNot(_.isEquality)
-    val eqs = dels.filter(_.isEquality)
-    def sized(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= BroadcastRows) broadcast(df) else df
-    val pd = if (pos.isEmpty) None else Some {
-      val lk = qual.toSeq.toDF("__abs", "__qual")
-      sized(spark.read.parquet(pos.map(_.path): _*)
-        .select(col("file_path"), col("pos"))
-        .join(broadcast(lk), col("file_path") === col("__abs"))
-        .select(col("__qual").as("__del_fp"), col("pos").as("__del_ri")),
-        pos.map(_.recordCount).sum)
-    }
-    val posCond = col("__fp") === col("__del_fp") && col("__ri") === col("__del_ri")
-    val byPos = pd.map(p => base.join(p, posCond, "left_semi"))
-    val byEq = if (eqs.isEmpty) None else Some {
-      val idSets = eqs.map(_.equalityIds).distinct
-      require(idSets.size == 1,
-        s"multiple distinct equality_ids sets are not supported: $idSets")
-      val names = idSets.head.map(id => snap.fieldIdToName.getOrElse(id,
-        throw new IllegalArgumentException(s"equality_ids field $id not in schema")))
-      val ed = sized(eqs.map(f => spark.read.parquet(f.path)
-          .select(names.map(n => col(n).as(s"__del_$n")): _*)
-          .withColumn("__del_seq", lit(f.seq)))
-        .reduce(_ unionByName _), eqs.map(_.recordCount).sum)
-      val seqDf = snap.files.map(f => (qual(f.path), f.seq))
-        .toDF("__sq_fp", "__data_seq")
-      val cond = names.map(n => col(n) <=> col(s"__del_$n")).reduce(_ && _) &&
-        col("__data_seq") < col("__del_seq")
-      val survivors = pd.map(p => base.join(p, posCond, "left_anti"))
-        .getOrElse(base)
-      survivors.join(broadcast(seqDf), col("__fp") === col("__sq_fp"))
-        .join(ed, cond, "left_semi")
-        .drop("__sq_fp", "__data_seq")
-    }
-    (byPos.toSeq ++ byEq.toSeq)
-      .map(_.drop("__fp", "__ri"))
-      .reduceOption(_ unionByName _)
-      .getOrElse(base.limit(0).drop("__fp", "__ri"))
-  }
-
   private def readSnap(spark: SparkSession, snap: Snapshot): DataFrame =
-    if (snap.deletes.isEmpty) scanRelation(spark, snap, withPositions = false)
+    if (snap.deletes.isEmpty) snapScan(spark, snap, Nil)
     else readWithPositions(spark, snap).drop("__fp", "__ri")
       .select(snap.schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
 
@@ -530,85 +464,96 @@ object IcebergRead {
     * position channel [[IcebergWrite.deleteWhere]] builds on. */
   private[sources] def readWithPositions(spark: SparkSession,
                                          snap: Snapshot): DataFrame = {
-    val base = scanRelation(spark, snap, withPositions = true)
-    if (snap.deletes.isEmpty) base else applyDeletes(spark, snap, base)
+    val (pos, eq) = deletesOf(spark, snap, snap.deletes)
+    val base = LogScan.survivors(snapScan(spark, snap, LogScan.Positions), pos.toSeq)
+    eq.fold(base)(seqGated(spark, snap, base, _, "left_anti"))
   }
 
-  private def scanRelation(spark: SparkSession, snap: Snapshot,
-                           withPositions: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val idx = new IcebergFileIndex(spark, snap)
+  /** The [[LogFileIndex]] over the snapshot's live data files. No Spark
+    * partition columns (they live in the data files): pushed DATA
+    * filters on identity-partition source columns prune the tuples —
+    * sound because every row in a file carries exactly the file's tuple
+    * for those columns — and the transform channel
+    * ([[IcebergTransforms.keepFile]]) prunes bucket/truncate/temporal
+    * tuples. */
+  private[graft] def fileIndex(spark: SparkSession, snap: Snapshot): LogFileIndex =
+    indexOver(spark, snap, snap.files.map(f =>
+      LogScan.LiveFile(Paths.get(f.path), Some(f.size), f.partitionValues, f.stats)))
+
+  private def indexOver(spark: SparkSession, snap: Snapshot,
+                        files: Seq[LogScan.LiveFile]): LogFileIndex =
+    new LogFileIndex(spark, files.headOption.toSeq.map(_.path.getParent), files,
+      snap.scanSchema, tupleSchema = snap.partitionTupleSchema,
+      channel = (f, filters) =>
+        IcebergTransforms.keepFile(snap.partitionFields, snap.schema, f.partition, filters))
+
+  private def snapScan(spark: SparkSession, snap: Snapshot,
+                       meta: Seq[org.apache.spark.sql.Column]): DataFrame = {
     // one FileFormat per snapshot: mixed-format snapshots (legal in the
     // spec, rare in practice) are rejected loudly rather than mis-read
     val fmts = snap.files.map(_.format).distinct
     require(fmts.size <= 1,
       s"mixed data-file formats in one snapshot are not supported: $fmts")
-    val fileFormat: org.apache.spark.sql.execution.datasources.FileFormat =
-      if (fmts.headOption.contains("orc"))
-        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-      else new ParquetFileFormat()
-    // data files CONTAIN partition columns → no Spark-side partition schema
-    enableFieldIdReads(spark, snap)
-    val rel = HadoopFsRelation(idx, new StructType(), snap.scanSchema, None,
-      fileFormat, Map.empty[String, String])(spark)
-    val base = spark.baseRelationToDataFrame(rel)
-    if (!withPositions) base
-    else base.withColumn("__fp", col("_metadata.file_path"))
-      .withColumn("__ri", col("_metadata.row_index"))
+    LogScan.scan(spark, fileIndex(spark, snap), meta, fileFormat(fmts.headOption.getOrElse("parquet")))
   }
 
-  /** Merge-on-read: suppress rows named by position deletes (anti-join on
-    * (file, physical row index)) and by equality deletes (null-safe
-    * anti-join on the equality columns, gated on data-file sequence <
-    * delete sequence). The driver holds only file METADATA; the delete
-    * parquet content streams through distributed joins — broadcast when
-    * the manifests' record counts say the build side is small, shuffle
-    * otherwise (the correct 100 TB shape either way). */
-  private def applyDeletes(spark: SparkSession, snap: Snapshot,
-                           base: DataFrame): DataFrame = {
+  private def fileFormat(fmt: String): org.apache.spark.sql.execution.datasources.FileFormat =
+    if (fmt == "orc") new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
+    else new ParquetFileFormat()
+
+  /** The spec's position-delete columns */
+  private val PositionDeleteSchema =
+    StructType(Seq(StructField("file_path", StringType), StructField("pos", LongType)))
+
+  /** Merge-on-read: `dels` in the applier's two forms, read under known
+    * schemas (the spec's position-delete columns, the snapshot's types for
+    * the equality columns), so building a read starts no Spark job.
+    * Position deletes name data files by manifest path, translated to the
+    * scan's qualified form through a tiny broadcast lookup (O(live
+    * files)); equality deletes match null-safe (the spec's rule), gated
+    * to data files whose sequence number is below the delete's
+    * ([[seqGated]]). The driver holds only file METADATA; the delete
+    * content streams through distributed joins, broadcast when the
+    * manifests' record counts say it is small. */
+  private def deletesOf(spark: SparkSession, snap: Snapshot, dels: Seq[DeleteFile])
+      : (Option[LogScan.ByPosition], Option[LogScan.ByKey]) = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val BroadcastRows = 10_000_000L
-    val qual: Map[String, String] =
-      snap.files.map(f => f.path -> DeltaRead.qualifiedPath(spark, Paths.get(f.path))).toMap
-    var cur = base // arrives WITH __fp/__ri (scanRelation withPositions)
-
-    val pos = snap.deletes.filterNot(_.isEquality)
-    if (pos.nonEmpty) {
-      // manifest paths are absolute; translate to the scan's qualified
-      // form through a tiny broadcast lookup (O(live files))
-      val lk = qual.toSeq.toDF("__abs", "__qual")
-      val pd = spark.read.parquet(pos.map(_.path): _*)
-        .select(col("file_path"), col("pos"))
-        .join(broadcast(lk), col("file_path") === col("__abs"))
-        .select(col("__qual").as("__del_fp"), col("pos").as("__del_ri"))
-      val build = if (pos.map(_.recordCount).sum <= BroadcastRows) broadcast(pd) else pd
-      cur = cur.join(build,
-        col("__fp") === col("__del_fp") && col("__ri") === col("__del_ri"),
-        "left_anti")
-    }
-
-    val eqs = snap.deletes.filter(_.isEquality)
-    if (eqs.nonEmpty) {
+    val pos = dels.filterNot(_.isEquality)
+    val eqs = dels.filter(_.isEquality)
+    val byPos = if (pos.isEmpty) None else Some(LogScan.ByPosition(
+      spark.read.schema(PositionDeleteSchema).parquet(pos.map(_.path): _*)
+        .join(broadcast(snap.files.map(f => (f.path,
+          LogScan.qualifiedPath(spark, Paths.get(f.path)))).toDF("__abs", "__qual")),
+          col("file_path") === col("__abs"))
+        .select(col("__qual").as("__del_fp"), col("pos").as("__del_ri")),
+      pos.map(_.recordCount).sum))
+    val byKey = if (eqs.isEmpty) None else Some {
       val idSets = eqs.map(_.equalityIds).distinct
       require(idSets.size == 1,
         s"multiple distinct equality_ids sets are not supported: $idSets")
       val names = idSets.head.map(id => snap.fieldIdToName.getOrElse(id,
         throw new IllegalArgumentException(s"equality_ids field $id not in schema")))
-      val ed = eqs.map(f => spark.read.parquet(f.path)
-          .select(names.map(n => col(n).as(s"__del_$n")): _*)
-          .withColumn("__del_seq", lit(f.seq)))
-        .reduce(_ unionByName _)
-      val seqDf = snap.files.map(f => (qual(f.path), f.seq))
-        .toDF("__sq_fp", "__data_seq")
-      val cond = names.map(n => col(n) <=> col(s"__del_$n")).reduce(_ && _) &&
-        col("__data_seq") < col("__del_seq")
-      val build = if (eqs.map(_.recordCount).sum <= BroadcastRows) broadcast(ed) else ed
-      cur = cur.join(broadcast(seqDf), col("__fp") === col("__sq_fp"))
-        .join(build, cond, "left_anti")
-        .drop("__sq_fp", "__data_seq")
+      val keySchema = StructType(names.map(snap.schema(_)))
+      LogScan.ByKey(eqs.map(f => spark.read.schema(keySchema).parquet(f.path)
+          .select(names.map(n => col(n).as(s"__del_$n")) :+ lit(f.seq).as("__del_seq"): _*))
+        .reduce(_ unionByName _), names, nullSafe = true,
+        col("__data_seq") < col("__del_seq"), eqs.map(_.recordCount).sum)
     }
-    cur // positions retained; readSnap drops them
+    (byPos, byKey)
+  }
+
+  /** `base` (a positions scan over `snap.files`) joined `how` against
+    * equality deletes `e`, each row carrying its file's sequence number
+    * (`__data_seq`) for the gate. */
+  private def seqGated(spark: SparkSession, snap: Snapshot, base: DataFrame,
+                       e: LogScan.ByKey, how: String): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import spark.implicits._
+    val seqs = snap.files.map(f => (LogScan.qualifiedPath(spark, Paths.get(f.path)), f.seq))
+      .toDF("__sq_fp", "__data_seq")
+    LogScan.deleteJoin(base.join(broadcast(seqs), col("__fp") === col("__sq_fp")), e, how)
+      .drop("__sq_fp", "__data_seq")
   }
 
   /** Iceberg METADATA TABLES — the debugging surface every Iceberg user
@@ -692,7 +637,7 @@ object IcebergRead {
   }
 
   /** Files a scan filtered to `col -> allowed values` must touch — the
-    * pruning arithmetic of [[IcebergFileIndex.listFiles]], pinnable by an
+    * pruning arithmetic of [[LogFileIndex.listFiles]], pinnable by an
     * oracle row without executing a plan. */
   def candidateFiles(snap: Snapshot, keep: Map[String, Set[String]]): Seq[DataFile] =
     snap.files.filter(f => keep.forall { case (c, vs) =>
@@ -931,67 +876,4 @@ object IcebergRead {
     else if (raw.startsWith("/")) Paths.get(raw)
     else Paths.get(tableDir).resolve(raw)
   }
-}
-
-/** FileIndex over an Iceberg snapshot. No Spark partition columns (they
-  * live in the data files); pruning happens on pushed DATA filters whose
-  * references are identity-partition source columns — sound because every
-  * row in a file carries exactly the file's partition tuple for those
-  * columns. */
-final class IcebergFileIndex(spark: SparkSession, snap: IcebergRead.Snapshot)
-    extends FileIndex {
-
-  private val tupleSchema = snap.partitionTupleSchema
-
-  // files from an EVOLVED-AWAY partition spec (foreign tables: each
-  // manifest binds to the spec it was written under) LACK the current
-  // spec's tuple keys — they must never enter identity-tuple pruning,
-  // where the missing key would read as a null tuple and a pushed
-  // `par = 'x'` would wrongly skip the file. A key present with a
-  // null VALUE is different: that is a genuine all-null source column
-  // and prunes exactly.
-  private lazy val (tupleComplete, tupleIncomplete) =
-    snap.files.partition(f =>
-      tupleSchema.fieldNames.forall(f.partitionValues.contains))
-
-  private lazy val groups: Seq[(InternalRow, Seq[IcebergRead.DataFile])] =
-    tupleComplete.groupBy(f => tupleSchema.fieldNames.toSeq.map(f.partitionValues.get))
-      .values.toSeq.map(fs => (PartitionPrune.partRow(tupleSchema,
-        fs.head.partitionValues, spark.sessionState.conf.sessionLocalTimeZone), fs))
-
-  private def statusOf(f: IcebergRead.DataFile) = {
-    val hPath = new org.apache.hadoop.fs.Path(Paths.get(f.path).toUri)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    FileStatusWithMetadata(fs.getFileStatus(hPath))
-  }
-
-  override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
-    snap.files.headOption.toSeq.map(f =>
-      new org.apache.hadoop.fs.Path(Paths.get(f.path).getParent.toUri))
-  override def partitionSchema: StructType = new StructType()
-  override def sizeInBytes: Long = snap.files.map(_.size).sum
-  override def inputFiles: Array[String] = snap.files.map(_.path).toArray
-  override def refresh(): Unit = ()
-
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    // empty partition schema ⇒ pruning predicates arrive as dataFilters;
-    // three channels, all conservative: PartitionPrune evaluates whole
-    // predicates over the identity tuple columns, IcebergTransforms
-    // prunes bucket/truncate/temporal tuples by applying the transform
-    // to pushed literals, and StatsSkip tests the manifest column
-    // bounds — mirroring Delta's skipping (partition tuples + add.stats)
-    // with the transform channel Iceberg adds on top
-    (PartitionPrune.prune(tupleSchema, groups, dataFilters).map(_._2) ++
-      // old-spec files skip the identity channel; the stats and
-      // transform channels below are absence-safe (missing key/stat
-      // keeps), so they stay exactly as prunable as their metadata
-      // allows
-      (if (tupleIncomplete.isEmpty) Nil else Seq(tupleIncomplete)))
-      .map { fs => PartitionDirectory(InternalRow.empty,
-        fs.filter(f => StatsSkip.keep(f.stats, dataFilters, snap.schema) &&
-            IcebergTransforms.keepFile(snap.partitionFields, snap.schema,
-              f.partitionValues, dataFilters))
-          .map(statusOf)) }
-      .filter(_.files.nonEmpty)
 }

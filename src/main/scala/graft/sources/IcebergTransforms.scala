@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    TRANSFORMED value, so one distributed `partitionBy` stage lays
   *    files out per transformed tuple while the data files keep the
   *    source columns (the spec's contract);
-  *  - **read pruning** ([[IcebergFileIndex.listFiles]]): pushed data
+  *  - **read pruning** ([[LogFileIndex.listFiles]]): pushed data
   *    predicates over the SOURCE columns are evaluated against each
   *    file's transformed partition tuple — equality/IN prune through
   *    every transform (bucket included), ranges prune through the
@@ -311,7 +311,7 @@ object IcebergTransforms {
 
   /** true ⇔ the file with transformed tuple `pv` may contain a row
     * satisfying every pushed conjunct. Identity fields are excluded —
-    * [[PartitionPrune]] evaluates full predicates on them; this channel
+    * the [[LogFileIndex]] tuple evaluates full predicates on them; this channel
     * covers the non-identity transforms. */
   def keepFile(fields: Seq[PartField], schema: StructType,
                pv: Map[String, String], filters: Seq[Expression]): Boolean = {

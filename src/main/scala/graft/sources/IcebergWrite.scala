@@ -291,7 +291,7 @@ object IcebergWrite {
       IcebergRead.readWithPositions(spark, snap.copy(files = files))
     val touched = MergeClauses.touchedFiles[IcebergRead.DataFile](source, keyCols,
         clauses, snap.schema, snap.files, _.stats,
-        f => DeltaRead.qualifiedPath(spark, Paths.get(f.path)), scan) match {
+        f => LogScan.qualifiedPath(spark, Paths.get(f.path)), scan) match {
       case None => return snap.snapshotId
       case Some(fs) => fs
     }
@@ -333,7 +333,7 @@ object IcebergWrite {
     // reverse map: qualified scan path → the manifest's absolute path
     // (delete files reference data files by their manifest path form)
     val toAbs: Map[String, String] =
-      snap.files.map(f => DeltaRead.qualifiedPath(spark, Paths.get(f.path)) -> f.path).toMap
+      snap.files.map(f => LogScan.qualifiedPath(spark, Paths.get(f.path)) -> f.path).toMap
     val absLk = {
       import spark.implicits._
       toAbs.toSeq.toDF("__q", "file_path")

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * The one min/max evaluator of all three formats: Iceberg manifest bounds
   * and TxLogTable's `#fstat` lines are read into the same [[FileStats]].
   *
-  * [[DeltaFileIndex.listFiles]] receives the scan's pushed dataFilters and
+  * [[LogFileIndex.listFiles]] receives the scan's pushed dataFilters and
   * asks, per live file, "can any row of this file satisfy them?" — a file
   * whose [min, max] interval provably excludes every matching value is
   * never scheduled. At 100 TB this is the scan economy for NON-partition
@@ -48,6 +48,10 @@ object StatsSkip {
       val nc = n.putObject("nullCount"); nullCount.foreach { case (k, v) => nc.put(k, v) }
       mapper.writeValueAsString(n)
     }
+    /** the same stats with every column renamed by `f` */
+    def rename(f: String => String): FileStats =
+      copy(min = min.map { case (k, v) => f(k) -> v }, max = max.map { case (k, v) => f(k) -> v },
+        nullCount = nullCount.map { case (k, v) => f(k) -> v })
   }
 
   object FileStats {

@@ -44,17 +44,6 @@ object DeltaTail {
   def stream(spark: SparkSession, tableDir: String, checkpoint: String,
              sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val snap0 = DeltaRead.snapshot(tableDir)
-    val schema = snap0.schema
-    val partCols = snap0.partitionColumns
-    def phys(n: String): String = snap0.columnMapping.getOrElse(n, n)
-    // column-mapped tables store PHYSICAL names in the parquet files —
-    // reading them with the logical schema would silently project nulls;
-    // id-mode tables additionally resolve by parquet field id
-    if (snap0.fieldIds.nonEmpty)
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val physData = snap0.physDataSchema
-    val logicalData = snap0.dataSchema
-    val root = java.nio.file.Paths.get(tableDir)
 
     val lines = spark.readStream
       .option("maxFilesPerTrigger", 1)
@@ -99,20 +88,9 @@ object DeltaTail {
               }
             }
           }
-          if (adds.nonEmpty) {
-            // one distributed read per partition tuple in the commit, with
-            // the log's partition values restored as typed literal columns
-            val df = adds.groupBy(_._2).map { case (pv, fs) =>
-              val base = spark.read.schema(physData)
-                .parquet(fs.map(f => root.resolve(f._1).toString).toSeq: _*)
-                .select(logicalData.fields.toSeq.map(f =>
-                  col(phys(f.name)).as(f.name)): _*)
-              partCols.foldLeft(base)((d, c) =>
-                d.withColumn(c, lit(pv.get(c).orNull).cast(schema(c).dataType)))
-            }.reduce(_ unionByName _)
-              .select(schema.fieldNames.map(col).toSeq: _*)
-            sink(df, version)
-          }
+          // one distributed read of the commit's files, under the pinned
+          // schema, partition values restored from the log
+          if (adds.nonEmpty) sink(DeltaRead.readFiles(spark, tableDir, snap0, adds.toSeq), version)
         }
       }
       .start()

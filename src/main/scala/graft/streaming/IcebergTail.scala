@@ -30,8 +30,8 @@ import graft.sources.IcebergRead
   * a status-2 (DELETED) entry or an added delete manifest in a new
   * snapshot raises loudly rather than silently streaming rows a
   * concurrent DELETE/OVERWRITE suppressed; carried (status 0) entries
-  * pass through as no-ops. Schema is pinned at stream start; appended
-  * columns added later read as NULLs through the name-resolving scan.
+  * pass through as no-ops. Schema is pinned at stream start: the batch
+  * is [[IcebergRead.readFiles]] under that snapshot's scan schema.
   * Exactly-once lands on the snapshot id handed to `sink` (monotone per
   * table), e.g. `TxLogTable.appendOnce(_, _, appId, snapshotId)`. */
 object IcebergTail {
@@ -43,7 +43,7 @@ object IcebergTail {
     * must already exist — its schema is pinned at this call. */
   def stream(spark: SparkSession, tableDir: String, checkpoint: String,
              sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val schema = IcebergRead.snapshot(tableDir).schema
+    val snap0 = IcebergRead.snapshot(tableDir)
     val metaDir = java.nio.file.Paths.get(tableDir).resolve("metadata")
 
     val arrivals = spark.readStream
@@ -64,15 +64,8 @@ object IcebergTail {
         versions.foreach { v =>
           newSnapshots(metaDir, v).foreach { sn =>
             val added = IcebergRead.addedDataFiles(tableDir, sn)
-            if (added.nonEmpty) {
-              val df = added.groupBy(_._2).map { case (fmt, fs) =>
-                val rdr = spark.read.schema(schema)
-                val paths = fs.map(_._1)
-                if (fmt == "orc") rdr.orc(paths: _*) else rdr.parquet(paths: _*)
-              }.reduce(_ unionByName _)
-                .select(schema.fieldNames.map(col).toSeq: _*)
-              sink(df, sn.get("snapshot-id").asLong)
-            }
+            if (added.nonEmpty)
+              sink(IcebergRead.readFiles(spark, snap0, added), sn.get("snapshot-id").asLong)
           }
         }
       }

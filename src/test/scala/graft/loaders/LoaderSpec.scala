@@ -145,6 +145,47 @@ class LoaderSpec extends SparkSpec {
     assert(pushed >= 2, s"expected pushed-down ldts filters on both scans; plan:\n$plan")
   }
 
+  test("a two-source hub's incremental build probes the target's HWM once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val store = new TxLogTable(spark, Files.createTempDirectory("graft_hwm_once").toString)
+    store.append("h", HubLoader.records(
+      Seq(EntitySource(aabSource, Some("hk"), Seq("bk"))), "hk", Seq("bk"), None))
+    val target = store.read("h")
+    def src(k: String): EntitySource = EntitySource(Seq((k, "2024-02-01 00:00:00"))
+      .toDF("bk", "ldts_s").withColumn("ldts", to_timestamp($"ldts_s")).drop("ldts_s")
+      .withColumn("rsrc", lit("TEST")).withColumn("hk", graft.expr.Hashing.hashkey(Seq($"bk"))),
+      Some("hk"), Seq("bk"))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // the eager jobs of building (not running) a hub delta over `sources`
+    def buildJobs(group: String, sources: Seq[EntitySource]): DataFrame = {
+      sc.setJobGroup(group, group)
+      try HubLoader.records(sources, "hk", Seq("bk"), Some(target)) finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      buildJobs("hwm-one", Seq(src("n1")))
+      val delta = buildJobs("hwm-two", Seq(src("n1"), src("n2")))
+      // listener events arrive in order: once the sentinel's start is seen,
+      // every job the builds started has been seen too
+      sc.setJobGroup("hwm-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("hwm-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      def jobs(g: String) = groups.toArray.count(_ == g)
+      assert(jobs("hwm-one") > 0, "the one-source build probes the HWM")
+      assert(jobs("hwm-two") === jobs("hwm-one"),
+        "a second source must not repeat the target's max(ldts) probe")
+      assert(delta.select("bk").as[String].collect().toSet === Set("n1", "n2"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("sat v1 ledts chain: contiguous, ends at end-of-all-times") {
     val v0 = SatV0Loader.records(aabSource, Seq("hk"), Some("hd"), Seq("payload"), None)
     val v1 = SatV1Loader.build(v0, "hk", Some("hd"), addIsCurrentFlag = true)

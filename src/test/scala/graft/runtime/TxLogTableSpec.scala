@@ -451,6 +451,18 @@ class TxLogTableSpec extends SparkSpec {
     assert(t.read("tbl").count() === 17)
   }
 
+  test("equality deletes: dropping the key column keeps the deleted rows deleted") {
+    val (t, _) = freshStore()
+    t.overwrite("tbl", (1 to 20).map(i => (i, s"v$i")).toDF("id", "v"))
+    t.deleteWhere("tbl", $"id" % 5 === 0, Seq("id"))
+    t.dropColumn("tbl", "id")
+    val rows = t.read("tbl")
+    assert(rows.columns.toSeq === Seq("v"))
+    assert(rows.as[String].collect().toSet ===
+      (1 to 20).filter(_ % 5 != 0).map(i => s"v$i").toSet)
+    assert(t.read("tbl").count() === 16)
+  }
+
   test("equality deletes: building a read over an in-scope delete starts no Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (t, _) = freshStore()

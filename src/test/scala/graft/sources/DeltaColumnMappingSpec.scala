@@ -50,7 +50,7 @@ class DeltaColumnMappingSpec extends SparkSpec {
     assert(df.as[(Long, String, String)].collect().toSet ==
       Set((3L, "b", "x"), (4L, "b", "y")))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Location: DeltaFileIndex"))
+    assert(plan.contains("Location: LogFileIndex"))
     assert("PartitionFilters: \\[[^\\]]*b".r.findFirstIn(plan).nonEmpty,
       s"partition predicate must prune at the index, plan was:\n$plan")
     // the scan touches only the b file

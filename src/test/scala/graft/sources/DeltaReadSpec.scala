@@ -59,7 +59,7 @@ class DeltaReadSpec extends SparkSpec {
   test("partition pruning: pushed predicate reaches listFiles; pruned groups never listed") {
     val (tbl, _) = fixture()
     val snap = DeltaRead.snapshot(tbl)
-    val idx = new DeltaFileIndex(spark, Paths.get(tbl), snap)
+    val idx = DeltaRead.fileIndex(spark, tbl, snap)
     val pAttr = AttributeReference("p", StringType)()
     val all = idx.listFiles(Nil, Nil)
     val onlyB = idx.listFiles(Seq(EqualTo(pAttr, Literal("b"))), Nil)
@@ -70,7 +70,7 @@ class DeltaReadSpec extends SparkSpec {
     // with no row-level DataFilters left over
     val plan = DeltaRead.read(spark, tbl).filter($"p" === "b")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("Location: DeltaFileIndex"))
+    assert(plan.contains("Location: LogFileIndex"))
     assert("PartitionFilters: \\[[^\\]]*p#\\d+ = b".r.findFirstIn(plan).nonEmpty, plan)
     assert(plan.contains("DataFilters: []"), plan)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.SparkSpec
 
 /** Contract of `add.stats` file skipping: DeltaWrite extracts footer
-  * stats, DeltaRead parses them back, DeltaFileIndex prunes files whose
+  * stats, DeltaRead parses them back, its LogFileIndex prunes files whose
   * [min, max] / nullCount provably exclude the pushed data predicates —
   * and everything stays conservative when stats are absent. */
 class DeltaStatsSpec extends SparkSpec {
@@ -39,7 +39,7 @@ class DeltaStatsSpec extends SparkSpec {
   private def listedFiles(spark0: org.apache.spark.sql.SparkSession,
                           t: String, snap: DeltaRead.Snapshot,
                           dataFilters: Seq[Expression]): Int =
-    new DeltaFileIndex(spark0, java.nio.file.Paths.get(t), snap)
+    DeltaRead.fileIndex(spark0, t, snap)
       .listFiles(Nil, dataFilters).map(_.files.size).sum
 
   test("writer emits footer stats; reader parses them back") {

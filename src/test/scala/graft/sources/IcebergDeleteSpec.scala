@@ -62,6 +62,38 @@ class IcebergDeleteSpec extends SparkSpec {
       Set(0L, 20L, 30L, 50L, 60L, 70L, 80L, 90L))
   }
 
+  test("building a read over position and equality deletes starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (t, f) = seeded()
+    IcebergFixture.positionDeleteSnapshot(spark, t, 2L, Seq(f -> 1L)) // id 10
+    IcebergFixture.equalityDeleteSnapshot(spark, t, 3L, Seq("id"),
+      Seq(40L).toDF("id"))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("ice-read", "build a read")
+      val df = try IcebergRead.read(spark, t) finally sc.clearJobGroup()
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every job the read could have started has been seen too
+      sc.setJobGroup("ice-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("ice-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("ice-sentinel"))
+      assert(!groups.contains("ice-read"),
+        "building the read ran a Spark job (delete-file schema inference?)")
+      assert(df.select("id").as[Long].collect().toSet ==
+        Set(0L, 20L, 30L, 50L, 60L, 70L, 80L, 90L))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("record counts and accounting: logical = physical - deletes applied") {
     val (t, f) = seeded()
     IcebergFixture.positionDeleteSnapshot(spark, t, 2L, Seq(f -> 0L, f -> 1L))

@@ -48,7 +48,7 @@ class IcebergReadSpec extends SparkSpec {
   test("pruning rides dataFilters over identity tuple columns; non-tuple conjuncts never prune") {
     val (tbl, _) = fixture()
     val snap = IcebergRead.snapshot(tbl)
-    val idx = new IcebergFileIndex(spark, snap)
+    val idx = IcebergRead.fileIndex(spark, snap)
     val p = AttributeReference("p", StringType)()
     val v = AttributeReference("v", StringType)()
     assert(idx.listFiles(Nil, Nil).map(_.files.size).sum == 2)
@@ -61,7 +61,7 @@ class IcebergReadSpec extends SparkSpec {
     assert(IcebergRead.candidateFiles(snap, Map("p" -> Set("b"))).size == 1)
     val plan = IcebergRead.read(spark, tbl).filter($"p" === "b")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("Location: IcebergFileIndex"), plan)
+    assert(plan.contains("Location: LogFileIndex"), plan)
     // end-to-end: the filtered scan returns only partition-b rows
     assert(IcebergRead.read(spark, tbl).filter($"p" === "b").count() == 2)
   }

@@ -82,7 +82,7 @@ class IcebergSpecEvolutionPruneSpec extends SparkSpec {
       fieldIdToName = Map(1 -> "id", 2 -> "par"),
       partitionFields = Seq(IcebergTransforms.PartField("par", "par",
         IcebergTransforms.Identity)))
-    val idx = new IcebergFileIndex(spark, snap)
+    val idx = IcebergRead.fileIndex(spark, snap)
     val parAttr = AttributeReference("par", StringType)()
     def scheduled(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
       idx.listFiles(Nil, filters).flatMap(_.files).map(_.getPath.toString)
