@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.sources.{CommitCas, DeltaWrite, LogFileIndex, LogScan, MergeClauses, StatsSkip}
+import graft.sources.{CommitCas, DataFiles, LogFileIndex, LogScan, MergeClauses, StatsSkip}
 import graft.sources.StatsSkip.FileStats
 
 /** A minimal log-structured transactional table format over a Parquet
@@ -30,7 +30,7 @@ import graft.sources.StatsSkip.FileStats
   * in Delta `add.stats` shape over PHYSICAL column names:
   * `{"numRecords":n,"minValues":{..},"maxValues":{..},"nullCount":{..}}`.
   * Values are typed as the shared footer reader gives them
-  * ([[graft.sources.DeltaWrite.footerRanges]]): integral and fractional
+  * ([[graft.sources.DataFiles.footerRanges]]): integral and fractional
   * numbers, strings, booleans, dates as ISO text, decimals as exact JSON
   * numbers and timestamps as integral epoch micros; [[StatsSkip]] prunes
   * on them. Older manifests carried one `#fstat <file> <col> <min> <max>`
@@ -220,6 +220,13 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   private def tryCommit(name: String, v: Long, lines: Seq[String]): Boolean =
     CommitCas.publish(manifestPath(name, v), lines.mkString("\n").getBytes("UTF-8"))
 
+  /** [[tryCommit]] for a writer that does not retry: a lost CAS fails
+    * loudly, naming the operation `op` and what the caller should do. */
+  private def commitOr(name: String, v: Long, lines: Seq[String], op: String,
+                       hint: String = "retry"): Unit =
+    if (!tryCommit(name, v, lines))
+      throw new IllegalStateException(s"TxLogTable $name: lost commit race on $op — $hint")
+
   /** identity mapping for a table born from `df`'s schema */
   private def identityMapping(df: DataFrame): Seq[ColMap] =
     df.schema.fields.toIndexedSeq.map(f =>
@@ -282,18 +289,14 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       rows(name, m, files(name, v)),
       s"$name: existing rows reject new constraint")
     val m2 = m.copy(checks = m.checks + (constraintName -> sql))
-    if (!tryCommit(name, v + 1, renderM(m2, files(name, v))))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on addCheckConstraint — retry")
+    commitOr(name, v + 1, renderM(m2, files(name, v)), "addCheckConstraint")
   }
 
   def dropCheckConstraint(name: String, constraintName: String): Unit = {
     val v = latest(name)
     val m = metaOf(name, v)
-    if (!tryCommit(name, v + 1,
-        renderM(m.copy(checks = m.checks - constraintName), files(name, v))))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on dropCheckConstraint — retry")
+    commitOr(name, v + 1,
+      renderM(m.copy(checks = m.checks - constraintName), files(name, v)), "dropCheckConstraint")
   }
 
   private def renderM(m: Meta, fs: Seq[String]): Seq[String] = {
@@ -314,7 +317,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** Per-file stats of the stats columns for a just-written batch, read
     * from the parquet FOOTERS through the shared typed reader
-    * ([[DeltaWrite.footerRanges]]) — driver-side metadata work, one footer
+    * ([[DataFiles.footerRanges]]) — driver-side metadata work, one footer
     * per file, no Spark job. Types [[StatsSkip]] cannot compare get no
     * stats (unprunable, safe). A file whose footer holds values without
     * usable bounds for a stats column (INT96 timestamps, a writer that
@@ -326,7 +329,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val schema = StructType(physicalSchema(cols).filter(f => statsCols.contains(f.name)))
     val conf = spark.sparkContext.hadoopConfiguration
     val footers = batchFiles.map(f => f ->
-      DeltaWrite.footerRanges(conf, root(name).resolve(f), schema).filter(_.unbounded.isEmpty))
+      DataFiles.footerRanges(conf, root(name).resolve(f), schema).filter(_.unbounded.isEmpty))
     val needScan = footers.collect { case (f, None) => f }
     if (needScan.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
@@ -338,7 +341,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** The footer fallback: one column-pruned Spark scan over `fs` (the
     * [[relation]], no deletes) collecting per-file count/min/max/nulls,
-    * read as Catalyst values and typed like [[DeltaWrite.footerRanges]]. */
+    * read as Catalyst values and typed like [[DataFiles.footerRanges]]. */
   private def scanStats(name: String, fs: Seq[String], cols: Seq[ColMap],
                         schema: StructType): Map[String, FileStats] = {
     import org.apache.spark.sql.catalyst.expressions.RowOrdering
@@ -357,7 +360,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
           val mx = typedValue(r.get(3 + 3 * i, c.dataType), c.dataType)
           if (mn == null || mx == null) None else Some((c.name, mn, mx))
         }
-        manifestPath(r.getUTF8String(0).toString) -> DeltaWrite.FooterRanges(n,
+        manifestPath(r.getUTF8String(0).toString) -> DataFiles.FooterRanges(n,
           ranges.map(x => x._1 -> x._2).toMap, ranges.map(x => x._1 -> x._3).toMap,
           use.zipWithIndex.map { case (c, i) => c.name -> (n - r.getLong(4 + 3 * i)) }.toMap,
           Set.empty).stats
@@ -365,7 +368,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   }
 
   /** one Catalyst value in the typed stats domain of
-    * [[DeltaWrite.FooterRanges]]; null for types stats do not carry */
+    * [[DataFiles.FooterRanges]]; null for types stats do not carry */
   private def typedValue(v: Any, dt: DataType): Any = {
     import org.apache.spark.sql.types._
     (dt, v) match {
@@ -389,12 +392,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val physical = df.select(cols.map(c =>
       col(c.logical).cast(c.typeDdl).as(c.physical)): _*)
     val batch = s"d-${UUID.randomUUID()}"
-    val dir = root(name).resolve(batch)
-    physical.write.mode("overwrite").parquet(dir.toString)
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(_.endsWith(".parquet")).map(f => s"$batch/$f").toSeq
-    finally s.close()
+    DataFiles.write(physical, root(name).resolve(batch), Nil).map(w => s"$batch/${w.rel}")
   }
 
   /** Clustered batch write: ONE Spark job whose output files each hold
@@ -415,14 +413,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       col(c.logical).cast(c.typeDdl).as(c.physical)) :+ col("__cluster"): _*)
       .repartition(buckets, col("__cluster"))
     val batch = s"d-${UUID.randomUUID()}"
-    val dir = root(name).resolve(batch)
-    physical.write.mode("overwrite").partitionBy("__cluster")
-      .parquet(dir.toString)
-    val s = Files.walk(dir)
-    try s.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => root(name).relativize(p).toString).toSeq.sorted
-    finally s.close()
+    DataFiles.write(physical, root(name).resolve(batch), Seq("__cluster"))
+      .map(w => s"$batch/${w.rel}")
   }
 
   /** The physical parquet schema a mapping implies. Sound because physical
@@ -530,9 +522,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       s"TxLogTable $name: version $toVersion is not retained " +
         s"(have ${versions(name)})")
     if (toVersion == head) return
-    if (!tryCommit(name, head + 1, manifestLines(name, toVersion)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on restore — retry")
+    commitOr(name, head + 1, manifestLines(name, toVersion), "restore")
   }
 
   /** read a SUBSET of a version's live files under that version's column
@@ -592,20 +582,12 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val n = keys.count()
     if (n == 0) return 0L
     val batch = s"ed-${UUID.randomUUID()}"
-    val dir = root(name).resolve(batch)
-    keys.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val delFile = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).map(f => s"$batch/$f").toSeq.head
-      finally s.close()
-    }
+    val delFile = DataFiles.write(keys.coalesce(1), root(name).resolve(batch), Nil)
+      .map(w => s"$batch/${w.rel}").head
     val withDel = m.copy(edels =
       m.edels :+ EqDelete(delFile, physicalSchema(phys), live.toSet, n))
-    if (!tryCommit(name, v + 1, renderM(withDel, live)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on deleteWhere — " +
-          "re-derive from the new head and retry")
+    commitOr(name, v + 1, renderM(withDel, live), "deleteWhere",
+      "re-derive from the new head and retry")
     n
   }
 
@@ -762,9 +744,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // still be recognized after someone rebuilds the table
     val m = Meta(cols, statsCols, batchStats(name, added, cols, statsCols),
       head.map(txnVersions(name, _)).getOrElse(Map.empty), checks = checks)
-    if (!tryCommit(name, head.getOrElse(0L) + 1, renderM(m, added)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on overwrite — re-derive and retry")
+    commitOr(name, head.getOrElse(0L) + 1, renderM(m, added), "overwrite",
+      "re-derive and retry")
   }
 
   /** S7 — file-level MERGE, the primitive a row-level MERGE compiles to:
@@ -801,10 +782,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val next = live.filterNot(touched.contains) ++ added
     val withStats = m.copy(cols = newCols,
       stats = m.stats ++ batchStats(name, added, newCols, m.statsCols))
-    if (!tryCommit(name, v + 1, renderM(withStats, next)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on replaceFiles — " +
-          "re-derive from the new head and retry")
+    commitOr(name, v + 1, renderM(withStats, next), "replaceFiles",
+      "re-derive from the new head and retry")
   }
 
   /** S7 — row-level MERGE compiled onto [[replaceFiles]]' primitive: rows of
@@ -846,11 +825,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       else rows(name, m, touched)
     val added = writeBatch(name, MergeClauses(target, src, keyCols, upsert, schema)._1, m.cols)
     val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols))
-    if (!tryCommit(name, v + 1,
-        renderM(withStats, live.filterNot(touched.contains) ++ added)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on merge — " +
-          "re-derive from the new head and retry")
+    commitOr(name, v + 1, renderM(withStats, live.filterNot(touched.contains) ++ added),
+      "merge", "re-derive from the new head and retry")
   }
 
   /** Enable per-file min/max stats on `logicalCols` (Delta/Iceberg-style
@@ -869,9 +845,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val live = files(name, v)
     val withStats = m.copy(statsCols = phys.distinct,
       stats = batchStats(name, live, m.cols, phys.distinct))
-    if (!tryCommit(name, v + 1, renderM(withStats, live)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on setStatsColumns — retry")
+    commitOr(name, v + 1, renderM(withStats, live), "setStatsColumns")
   }
 
   /** The files of the current version possibly holding a `logicalCol` value
@@ -1019,9 +993,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val byFile = buildFileBlooms(name, m, live, c.physical, nbits)
     val m2 = m.copy(bloomCols = m.bloomCols + (c.physical -> nbits),
       blooms = m.blooms ++ byFile)
-    if (!tryCommit(name, v + 1, renderM(m2, live)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on setBloomColumn — retry")
+    commitOr(name, v + 1, renderM(m2, live), "setBloomColumn")
   }
 
   /** The current version's files possibly containing `value` in
@@ -1124,9 +1096,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       m.bloomCols.filter { case (c, _) => phys(c) },
       m.blooms.filter { case ((_, c), _) => phys(c) },
       m.checks)
-    if (!tryCommit(name, v + 1, renderM(withStats, files(name, v))))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on $op — retry")
+    commitOr(name, v + 1, renderM(withStats, files(name, v)), op)
   }
 
   /** ALTER TABLE ADD COLUMN (typed NULL for all existing rows). The
@@ -1188,9 +1158,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val added = writeBatch(name, compacted, m.cols)
     val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
       blooms = rebuiltBlooms(name, m, added), edels = Nil)
-    if (!tryCommit(name, v + 1, renderM(withStats, added)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on compact — retry")
+    commitOr(name, v + 1, renderM(withStats, added), "compact")
     (live.size, added.size)
   }
 
@@ -1223,9 +1191,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val withStats = m.copy(
       stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
       blooms = rebuiltBlooms(name, m, added), edels = Nil)
-    if (!tryCommit(name, v + 1, renderM(withStats, added)))
-      throw new IllegalStateException(
-        s"TxLogTable $name: lost commit race on compactZOrder — retry")
+    commitOr(name, v + 1, renderM(withStats, added), "compactZOrder")
     (live.size, added.size)
   }
 

@@ -1,10 +1,10 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Emits a PROTOCOL.md-conformant Delta table for the read-interop row and
@@ -60,22 +60,14 @@ object DeltaFixture {
     }
     val written = adds.zipWithIndex.map { case ((pv, rows), i) =>
       val rel = pathFor(partCols, pv, version, i)
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      val tmp = Files.createTempDirectory("graft_delta_add").toString
-      rows.select(schema.fieldNames.filterNot(partCols.contains)
-          .map(org.apache.spark.sql.functions.col).toSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no parquet written in $tmp"))
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+      val size = DataFiles.writeOne(rows.select(schema.fieldNames
+        .filterNot(partCols.contains).map(col).toSeq: _*), root.resolve(rel))
       val n = mapper.createObjectNode()
       val add = n.putObject("add")
       add.put("path", pathEnc(rel))
       val pvn = add.putObject("partitionValues")
       pv.foreach { case (k, v) => pvn.put(k, v) }
-      add.put("size", Files.size(target))
+      add.put("size", size)
       add.put("modificationTime", 0L)
       add.put("dataChange", true)
       lines += mapper.writeValueAsString(n)
@@ -107,16 +99,8 @@ object DeltaFixture {
     val root = Paths.get(tableDir)
     val logDir = root.resolve("_delta_log")
     val rel = pathFor(partCols, pv, version, 0)
-    val target = root.resolve(rel)
-    Files.createDirectories(target.getParent)
-    val tmp = Files.createTempDirectory("graft_delta_opt").toString
-    rows.select(schema.fieldNames.filterNot(partCols.contains)
-        .map(org.apache.spark.sql.functions.col).toSeq: _*)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no parquet written in $tmp"))
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    val size = DataFiles.writeOne(rows.select(schema.fieldNames
+      .filterNot(partCols.contains).map(col).toSeq: _*), root.resolve(rel))
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     removes.foreach { r =>
       val n = mapper.createObjectNode()
@@ -131,7 +115,7 @@ object DeltaFixture {
     add.put("path", pathEnc(rel))
     val pvn = add.putObject("partitionValues")
     pv.foreach { case (k, v) => pvn.put(k, v) }
-    add.put("size", Files.size(target))
+    add.put("size", size)
     add.put("modificationTime", 0L)
     add.put("dataChange", false)
     lines += mapper.writeValueAsString(n)
@@ -169,23 +153,14 @@ object DeltaFixture {
     val logDir = root.resolve("_delta_log")
     Files.createDirectories(logDir)
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def writeOne(rows: DataFrame, rel: String, dropPart: Boolean): Long = {
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      val tmp = Files.createTempDirectory("graft_delta_cdc").toString
-      val cols = rows.columns.filterNot(c => dropPart && partCols.contains(c))
-      rows.select(cols.map(org.apache.spark.sql.functions.col).toSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      Files.size(target)
-    }
+    def writeOne(rows: DataFrame, rel: String): Long = DataFiles.writeOne(
+      rows.select(rows.columns.filterNot(partCols.contains).map(col).toSeq: _*),
+      root.resolve(rel))
     cdc.zipWithIndex.foreach { case ((pv, rows), i) =>
       require(rows.columns.contains("_change_type"),
         "cdc rows must carry a _change_type column")
       val rel = f"_change_data/cdc-$version%05d-$i%03d.parquet"
-      val size = writeOne(rows, rel, dropPart = true)
+      val size = writeOne(rows, rel)
       val n = mapper.createObjectNode()
       val c = n.putObject("cdc")
       c.put("path", pathEnc(rel))
@@ -197,7 +172,7 @@ object DeltaFixture {
     }
     adds.zipWithIndex.foreach { case ((pv, rows), i) =>
       val rel = pathFor(partCols, pv, version, i)
-      val size = writeOne(rows, rel, dropPart = true)
+      val size = writeOne(rows, rel)
       val n = mapper.createObjectNode()
       val add = n.putObject("add")
       add.put("path", pathEnc(rel))
@@ -262,22 +237,15 @@ object DeltaFixture {
     val written = adds.zipWithIndex.map { case ((pv, rows), i) =>
       val rel = pathFor(partCols.map(mapping), pv.map { case (k, v) => mapping(k) -> v },
         version, i)
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      val tmp = Files.createTempDirectory("graft_delta_cm").toString
-      rows.select(schema.fieldNames.filterNot(partCols.contains)
-          .map(n => org.apache.spark.sql.functions.col(n).as(mapping(n))).toSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no parquet written in $tmp"))
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+      val size = DataFiles.writeOne(rows.select(schema.fieldNames
+        .filterNot(partCols.contains).map(n => col(n).as(mapping(n))).toSeq: _*),
+        root.resolve(rel))
       val n = mapper.createObjectNode()
       val add = n.putObject("add")
       add.put("path", pathEnc(rel))
       val pvn = add.putObject("partitionValues")
       pv.foreach { case (k, v) => pvn.put(mapping(k), v) } // PHYSICAL keys
-      add.put("size", Files.size(target))
+      add.put("size", size)
       add.put("modificationTime", 0L)
       add.put("dataChange", true)
       lines += mapper.writeValueAsString(n)
@@ -334,26 +302,18 @@ object DeltaFixture {
     val written = adds.zipWithIndex.map { case ((pv, rows), i) =>
       val rel = pathFor(partCols.map(mapping), pv.map { case (k, v) => mapping(k) -> v },
         version, i)
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      val tmp = Files.createTempDirectory("graft_delta_id").toString
       // ORIGINAL names + field ids in the data pages (fieldId.write is on
       // by default when the schema metadata carries parquet.field.id)
-      rows.select(schema.fieldNames.filterNot(partCols.contains)
-          .map(n => org.apache.spark.sql.functions.col(n).as(n,
-            new MetadataBuilder().putLong("parquet.field.id", fieldId(n)).build()))
-          .toSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no parquet written in $tmp"))
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+      val size = DataFiles.writeOne(rows.select(schema.fieldNames
+        .filterNot(partCols.contains).map(n => col(n).as(n,
+          new MetadataBuilder().putLong("parquet.field.id", fieldId(n)).build()))
+        .toSeq: _*), root.resolve(rel))
       val n = mapper.createObjectNode()
       val add = n.putObject("add")
       add.put("path", pathEnc(rel))
       val pvn = add.putObject("partitionValues")
       pv.foreach { case (k, v) => pvn.put(mapping(k), v) } // PHYSICAL keys
-      add.put("size", Files.size(target))
+      add.put("size", size)
       add.put("modificationTime", 0L)
       add.put("dataChange", true)
       lines += mapper.writeValueAsString(n)
@@ -394,13 +354,8 @@ object DeltaFixture {
       actions += mapper.writeValueAsString(n)
     }
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_delta_cp").toString
-    spark.read.json(actions.toSeq.toDS()).coalesce(1)
-      .write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.move(part, logDir.resolve(f"${snap.version}%020d.checkpoint.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
+    DataFiles.writeOne(spark.read.json(actions.toSeq.toDS()),
+      logDir.resolve(f"${snap.version}%020d.checkpoint.parquet"))
     Files.writeString(logDir.resolve("_last_checkpoint"),
       s"""{"version":${snap.version},"size":${actions.size}}""")
     snap.version

@@ -1,12 +1,11 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 
 /** Write-path interop for Delta Lake tables — the distributed complement
@@ -14,17 +13,17 @@ import org.apache.spark.sql.types._
   * Everything derives from the published Delta Transaction Log Protocol
   * (github.com/delta-io/delta PROTOCOL.md); no Delta library.
   *
-  * The DATA write is one distributed `df.write.partitionBy(...)` into a
-  * per-commit staging directory — every executor writes its own files in
-  * parallel, exactly like a native parquet sink (the per-partition
-  * `coalesce(1)` loop in [[DeltaFixture]] is test scaffolding, not this).
-  * Hive-style `col=value` directories come out of the writer already
-  * matching the protocol's recommended layout, with the partition columns
-  * dropped from the data files; the staged files are then MOVED (same
-  * filesystem, metadata-only) under the table root and recorded as `add`
-  * actions. The commit JSON is written last, to a temp name renamed into
-  * `%020d.json` — readers replaying the log can never observe a commit
-  * whose data files are not in place.
+  * The DATA write is [[DataFiles.stage]]: one distributed
+  * `df.write.partitionBy(...)` into a per-attempt staging directory under
+  * the table root — every executor writes its own files in parallel,
+  * exactly like a native parquet sink. Hive-style `col=value` directories
+  * come out of the writer already matching the protocol's recommended
+  * layout, with the partition columns dropped from the data files; the
+  * staged files are then MOVED (same filesystem, metadata-only) under the
+  * table root and recorded as `add` actions, and the staging directory is
+  * removed even when the write fails. The commit JSON is written last, to
+  * a temp name renamed into `%020d.json` — readers replaying the log can
+  * never observe a commit whose data files are not in place.
   *
   * Three modes, mirroring the writer semantics a Delta user relies on:
   *  - `append`        — add actions only.
@@ -37,7 +36,7 @@ import org.apache.spark.sql.types._
   * Per-file `add.stats` (numRecords / minValues / maxValues / nullCount)
   * are extracted from each written file's parquet footer and carried
   * through checkpoints, feeding [[StatsSkip]]'s file skipping on the read
-  * side — see [[portableType]] for the emitted type coverage.
+  * side — see [[DataFiles.portableRanges]] for the emitted type coverage.
   *
   * Scope (declared): optimistic single-attempt writer — version =
   * head + 1 published through a hard-link CAS, so a racing writer LOSES
@@ -69,7 +68,6 @@ object DeltaWrite {
             mode: String = "append", mergeSchema: Boolean = false): Long = {
     require(Set("append", "overwrite", "overwritePartitions")(mode),
       s"unknown Delta write mode '$mode'")
-    val spark = df.sparkSession
     val root = Paths.get(tableDir)
     val logDir = root.resolve("_delta_log")
     val existing =
@@ -122,7 +120,7 @@ object DeltaWrite {
         (df, cols, StructType(
           df.schema.fields.filterNot(f => cols.contains(f.name))))
     }
-    val adds = stageDataFiles(staged, root, version, physCols, dataSchema)
+    val adds = stageDataFiles(staged, root, physCols, dataSchema)
 
     val toLogical: Map[String, String] = mapping.map(_.swap)
     val removes: Seq[String] = mode match {
@@ -224,49 +222,20 @@ object DeltaWrite {
     * physical layout — the shared staging seam for rewrites ([[optimize]]
     * and [[mergeClauses]]) on mapped and unmapped tables alike. */
   private def stagePhysical(snap: DeltaRead.Snapshot, out: DataFrame,
-                            root: Path, version: Long): Seq[Add] =
-    stageDataFiles(toPhysical(snap, out), root, version,
+                            root: Path): Seq[Add] =
+    stageDataFiles(toPhysical(snap, out), root,
       snap.partitionColumns.map(n => snap.columnMapping.getOrElse(n, n)),
       if (snap.columnMapping.isEmpty) snap.dataSchema else snap.physDataSchema)
 
-  /** Distributed DATA write into a staging dir the log never references
-    * (uuid: racing writers must not stage into / sweep each other's dir;
-    * staged part names carry Spark's task uuids, so the moved data files
-    * never collide either), then metadata-move every staged file under
-    * the table root. Returns one `add` action per file, its stats from
-    * the file's footer — the shared staging seam behind [[write]],
-    * [[optimize]] and [[mergeClauses]]. */
-  private def stageDataFiles(df: DataFrame, root: Path, version: Long,
-                             cols: Seq[String], dataSchema: StructType): Seq[Add] = {
-    val spark = df.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val staging = root.resolve(
-      f"_staging_$version%020d-${java.util.UUID.randomUUID().toString.take(8)}")
-    val writer = df.write.mode("overwrite")
-    (if (cols.nonEmpty) writer.partitionBy(cols: _*) else writer)
-      .parquet(staging.toString)
-    val staged = listParquet(staging)
-    val adds = staged.map { p =>
-      val rel = staging.relativize(p)
-      val segs = (0 until rel.getNameCount).map(rel.getName(_).toString)
-      val pv = segs.dropRight(1).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"staged path $rel is not hive-layout under partitionBy")
-        val raw = ExternalCatalogUtils.unescapePathName(seg.substring(eq + 1))
-        seg.substring(0, eq) ->
-          (if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else raw)
-      }.toMap
-      require(pv.keySet == cols.toSet,
-        s"staged path $rel carries partitions ${pv.keySet}, expected $cols")
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
-      Add(segs.mkString("/"), pv, Files.size(target),
-        stats = portableRanges(hadoopConf, target, dataSchema).map(_.stats.json))
-    }
-    deleteRecursively(staging)
-    adds
-  }
+  /** The `add` actions of `df` staged under the table root through
+    * [[DataFiles.stage]], each with `stats` from its footer — the shared
+    * staging seam behind [[write]], [[optimize]] and [[mergeClauses]].
+    * Staged paths are kept as the table-relative paths: part names carry
+    * Spark's task uuids, so racing writers' files never collide. */
+  private def stageDataFiles(df: DataFrame, root: Path, cols: Seq[String],
+                             dataSchema: StructType): Seq[Add] =
+    DataFiles.stage(df, root, cols, Some(dataSchema))((w, _) => w.rel).map(s =>
+      Add(s.rel, s.partition, s.size, stats = s.ranges.map(_.stats.json)))
 
   /** OPTIMIZE — physical-layout maintenance that changes NO logical row,
     * committed with `dataChange = false` add/remove actions exactly as
@@ -338,7 +307,7 @@ object DeltaWrite {
       }
 
     val version = snap.version + 1
-    val adds = stagePhysical(snap, laid, root, version)
+    val adds = stagePhysical(snap, laid, root)
     val actions = CommitInfo("OPTIMIZE") +:
       (rewritten.map(f => Remove(f.path, dataChange = false)) ++
         adds.map(_.copy(dataChange = false)))
@@ -426,7 +395,7 @@ object DeltaWrite {
       MergeClauses(target, source, keyCols, clauses, snap.schema, aliases)
 
     val version = snap.version + 1
-    val adds = stagePhysical(snap, out, root, version)
+    val adds = stagePhysical(snap, out, root)
     if (touched.isEmpty && adds.isEmpty) return snap.version
     val actions = CommitInfo("MERGE") +: (touched.map(f => Remove(f.path)) ++
       adds ++ cdcActions(snap, root, changes))
@@ -568,40 +537,9 @@ object DeltaWrite {
       // columns become hive dirs (dropped from data pages)
       val changeDf = changes.select((snap.dataSchema.fieldNames.toSeq ++
         snap.partitionColumns).map(col) :+ col("_change_type"): _*)
-      stageAndEmit(changeDf, root, "_change_data", snap.partitionColumns)
-        .map { case (rel, pv, size) => Cdc(rel, pv, size) }
+      DataFiles.stage(changeDf, root, snap.partitionColumns)(
+        (w, _) => s"_change_data/${w.rel}").map(s => Cdc(s.rel, s.partition, s.size))
     }
-
-  /** Stage `df` (hive-partitioned by `partCols`) and move the files under
-    * `root/subdir`, returning (table-relative path, partitionValues,
-    * size) per file — the shared write shape of change data and any
-    * other auxiliary file family. */
-  private def stageAndEmit(df: DataFrame, root: Path, subdir: String,
-                           partCols: Seq[String])
-      : Seq[(String, Map[String, String], Long)] = {
-    val staging = root.resolve(
-      s"_staging_${subdir.stripPrefix("_")}-${java.util.UUID.randomUUID().toString.take(8)}")
-    val writer = df.write.mode("overwrite")
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(staging.toString)
-    val out = listParquet(staging).map { p =>
-      val rel = staging.relativize(p)
-      val segs = (0 until rel.getNameCount).map(rel.getName(_).toString)
-      val pv = segs.dropRight(1).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"staged path $rel is not hive-layout under partitionBy")
-        val raw = ExternalCatalogUtils.unescapePathName(seg.substring(eq + 1))
-        seg.substring(0, eq) ->
-          (if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else raw)
-      }.toMap
-      val target = root.resolve(subdir).resolve(rel)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
-      (s"$subdir/${segs.mkString("/")}", pv, Files.size(target))
-    }
-    deleteRecursively(staging)
-    out
-  }
 
   /** ALTER TABLE SET TBLPROPERTIES: commit a metaData action carrying the
     * merged configuration (the protocol's property-change mechanism).
@@ -787,19 +725,6 @@ object DeltaWrite {
     org.apache.spark.sql.Row(appId, java.lang.Long.valueOf(v),
       java.lang.Long.valueOf(0L))
 
-  /** Write `rows` under `schema` as ONE parquet file at `target`. */
-  private def writeOneParquetFile(spark: org.apache.spark.sql.SparkSession,
-                                  rows: Seq[org.apache.spark.sql.Row],
-                                  schema: StructType, target: Path): Unit = {
-    val tmp = Files.createTempDirectory("graft_delta_cp").toString
-    spark.createDataFrame(rows.asJava, schema).coalesce(1)
-      .write.mode("overwrite").parquet(tmp)
-    Files.createDirectories(target.getParent)
-    Files.move(listParquet(Paths.get(tmp)).head, target,
-      StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(Paths.get(tmp))
-  }
-
   def checkpoint(spark: org.apache.spark.sql.SparkSession, tableDir: String,
                  parts: Int = 1): Long = {
     import org.apache.spark.sql.Row
@@ -830,7 +755,7 @@ object DeltaWrite {
         if (parts == 1) logDir.resolve(f"${snap.version}%020d.checkpoint.parquet")
         else logDir.resolve(
           f"${snap.version}%020d.checkpoint.${i + 1}%010d.$parts%010d.parquet")
-      writeOneParquetFile(spark, g, checkpointSchema, target)
+      DataFiles.writeOne(spark.createDataFrame(g.asJava, checkpointSchema), target)
     }
     val partsField = if (parts == 1) "" else s""","parts":$parts"""
     Files.writeString(logDir.resolve("_last_checkpoint"),
@@ -880,7 +805,7 @@ object DeltaWrite {
         case (r, j) if j % sidecars == i => r
       }
       val target = sidecarDir.resolve(s"${java.util.UUID.randomUUID()}.parquet")
-      writeOneParquetFile(spark, g, sidecarSchema, target)
+      DataFiles.writeOne(spark.createDataFrame(g.asJava, sidecarSchema), target)
       Row(sidecarDir.relativize(target).toString,
         java.lang.Long.valueOf(Files.size(target)), java.lang.Long.valueOf(0L))
     }
@@ -906,7 +831,7 @@ object DeltaWrite {
         sidecarEntries.map(s => Row(null, null, null, null, s))
     val top = logDir.resolve(
       f"${snap.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")
-    writeOneParquetFile(spark, topRows, v2TopSchema, top)
+    DataFiles.writeOne(spark.createDataFrame(topRows.asJava, v2TopSchema), top)
     Files.writeString(logDir.resolve("_last_checkpoint"),
       s"""{"version":${snap.version},"size":${topRows.size + fileRows.size}}""")
     snap.version
@@ -1018,182 +943,7 @@ object DeltaWrite {
     mapper.writeValueAsString(m)
   }
 
-  /** Typed per-file statistics from one parquet footer — the ONE footer
-    * reader behind Delta `add.stats`, Iceberg manifest
-    * `lower_bounds`/`upper_bounds` and TxLogTable's `#fstat` lines,
-    * driver-side and bounded by #files-per-commit. Row-group chunk
-    * statistics are VALID BOUNDS by the parquet spec even when the writer
-    * truncated them (min rounds down, max rounds up), so [[StatsSkip]]'s
-    * interval tests stay sound. Values: Long (integrals), Double
-    * (fractionals), String (strings; dates as ISO), Boolean,
-    * java.math.BigDecimal (decimals) and Long epoch micros (timestamps,
-    * with or without time zone). A column that is all-null in the file
-    * gets no min/max but a full nullCount, which is exactly what IsNotNull
-    * skipping needs; `unbounded` names the columns that hold values but
-    * whose footer gives no usable bounds (INT96 timestamps, NANOS, a
-    * writer that dropped stats). */
-  private[graft] final case class FooterRanges(numRecords: Long,
-      mins: Map[String, Any], maxs: Map[String, Any],
-      nulls: Map[String, Long], unbounded: Set[String]) {
-    def stats: StatsSkip.FileStats = {
-      import com.fasterxml.jackson.databind.JsonNode
-      import com.fasterxml.jackson.databind.node.{BooleanNode, DecimalNode, DoubleNode, LongNode, TextNode}
-      def conv(m: Map[String, Any]): Map[String, JsonNode] = m.flatMap {
-        case (k, l: java.lang.Long) => Some(k -> LongNode.valueOf(l))
-        case (k, d: java.lang.Double) => Some(k -> DoubleNode.valueOf(d))
-        case (k, b: java.lang.Boolean) => Some(k -> BooleanNode.valueOf(b))
-        case (k, s: String) => Some(k -> TextNode.valueOf(s))
-        case (k, d: java.math.BigDecimal) => Some(k -> DecimalNode.valueOf(d))
-        case _ => None
-      }
-      StatsSkip.FileStats(numRecords, conv(mins), conv(maxs), nulls)
-    }
-  }
-
-  /** the column types Delta `add.stats` and Iceberg bounds carry:
-    * integral, float/double, string, boolean, date (ISO). Timestamps,
-    * decimals, binary and nested types are omitted — a missing stat
-    * never skips. */
-  private def portableType(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | StringType | BooleanType | DateType => true
-    case _ => false
-  }
-
-  /** [[footerRanges]] over the [[portableType]] columns only. */
-  private[sources] def portableRanges(conf: org.apache.hadoop.conf.Configuration,
-                                      file: Path,
-                                      dataSchema: StructType): Option[FooterRanges] =
-    footerRanges(conf, file, StructType(dataSchema.filter(f => portableType(f.dataType))))
-
-  private[graft] def footerRanges(conf: org.apache.hadoop.conf.Configuration,
-                                  file: Path,
-                                  dataSchema: StructType): Option[FooterRanges] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val supported = dataSchema.fields.filter(f => portableType(f.dataType) ||
-      (f.dataType match {
-        case _: DecimalType | TimestampType | TimestampNTZType => true
-        case _ => false
-      }))
-    val hPath = new org.apache.hadoop.fs.Path(file.toUri)
-    val rdr = try ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-    catch { case _: Exception => return None }
-    try {
-      val blocks = rdr.getFooter.getBlocks
-      val numRecords = blocks.asScala.map(_.getRowCount).sum
-      val mins = scala.collection.mutable.LinkedHashMap[String, Any]()
-      val maxs = scala.collection.mutable.LinkedHashMap[String, Any]()
-      val nulls = scala.collection.mutable.LinkedHashMap[String, Long]()
-      val unbounded = Set.newBuilder[String]
-      supported.foreach { f =>
-        var nullCount = 0L
-        var nullsKnown = true
-        var lo: Any = null
-        var hi: Any = null
-        var rangeKnown = true
-        var hasValues = false
-        var prim: org.apache.parquet.schema.PrimitiveType = null
-        blocks.asScala.foreach { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == f.name) match {
-            case None => nullsKnown = false; rangeKnown = false
-            case Some(c) =>
-              prim = c.getPrimitiveType
-              val st = c.getStatistics
-              if (st == null || st.isEmpty) {
-                nullsKnown = false; rangeKnown = false
-                if (b.getRowCount > 0) hasValues = true
-              } else {
-                if (st.isNumNullsSet) nullCount += st.getNumNulls else nullsKnown = false
-                if (st.hasNonNullValue) {
-                  hasValues = true
-                  val (mn, mx) = (st.genericGetMin, st.genericGetMax)
-                  if (lo == null || cmpStat(mn, lo, f.dataType) < 0) lo = mn
-                  if (hi == null || cmpStat(mx, hi, f.dataType) > 0) hi = mx
-                } else if (!st.isNumNullsSet || st.getNumNulls < b.getRowCount) {
-                  rangeKnown = false // values exist but no bounds — unusable
-                  hasValues = true
-                }
-              }
-          }
-        }
-        val (mn, mx) =
-          if (rangeKnown && lo != null)
-            (typedStat(lo, f.dataType, prim), typedStat(hi, f.dataType, prim))
-          else (null, null)
-        if (mn != null && mx != null) { mins(f.name) = mn; maxs(f.name) = mx }
-        else if (hasValues) unbounded += f.name
-        if (nullsKnown) nulls(f.name) = nullCount
-      }
-      Some(FooterRanges(numRecords, mins.toMap, maxs.toMap, nulls.toMap,
-        unbounded.result()))
-    } catch { case _: Exception => None }
-    finally rdr.close()
-  }
-
-  /** parquet footer min/max values are Comparable within a column's
-    * physical type — except Binary, whose order depends on the column:
-    * strings combine in UNSIGNED lexicographic order (Spark's string
-    * order; Binary.compareTo has had signed-byte history across
-    * parquet-mr versions), while a DECIMAL stored as binary is a SIGNED
-    * big-endian two's-complement integer — combining those unsigned would
-    * let mixed-sign row groups store min > true min. */
-  private def cmpStat(a: Any, b: Any, dt: DataType): Int = (a, b) match {
-    case (x: org.apache.parquet.io.api.Binary, y: org.apache.parquet.io.api.Binary) =>
-      if (dt.isInstanceOf[DecimalType])
-        new java.math.BigInteger(x.getBytes).compareTo(new java.math.BigInteger(y.getBytes))
-      else org.apache.spark.unsafe.types.UTF8String.fromBytes(x.getBytes)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromBytes(y.getBytes))
-    case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
-  }
-
-  /** footer value → the typed domain of [[FooterRanges]]; null when the
-    * physical encoding does not match the column type exactly (the
-    * column then counts as unbounded). */
-  private def typedStat(v: Any, dt: DataType,
-                        prim: org.apache.parquet.schema.PrimitiveType): Any = {
-    import org.apache.parquet.io.api.Binary
-    import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
-    (dt, v, prim.getLogicalTypeAnnotation) match {
-      case (DateType, i: Number, _) =>
-        java.time.LocalDate.ofEpochDay(i.longValue).toString
-      case (StringType, b: Binary, _) => b.toStringUsingUTF8
-      case (ByteType | ShortType | IntegerType | LongType, n: Number, _) =>
-        java.lang.Long.valueOf(n.longValue)
-      case (FloatType | DoubleType, n: Number, _) =>
-        java.lang.Double.valueOf(n.doubleValue)
-      case (BooleanType, b: java.lang.Boolean, _) => b
-      case (_: DecimalType, n: Number, d: DecimalLogicalTypeAnnotation) =>
-        java.math.BigDecimal.valueOf(n.longValue, d.getScale)
-      case (_: DecimalType, b: Binary, d: DecimalLogicalTypeAnnotation) =>
-        new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), d.getScale)
-      case (TimestampType | TimestampNTZType, n: java.lang.Long, t: TimestampLogicalTypeAnnotation)
-          if t.isAdjustedToUTC == (dt == TimestampType) =>
-        t.getUnit match {
-          case TimeUnit.MICROS => n
-          case TimeUnit.MILLIS => java.lang.Long.valueOf(Math.multiplyExact(n.longValue, 1000L))
-          case _ => null // NANOS: Spark reads these as BIGINT, not timestamps
-        }
-      case _ => null
-    }
-  }
-
   /** Log paths are RFC 2396 percent-encoded relative paths. */
   private def pathEnc(decoded: String): String =
     new java.net.URI(null, null, decoded, null).getRawPath
-
-  private def listParquet(dir: Path): Seq[Path] = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.toString)
-    finally s.close()
-  }
-
-  private def deleteRecursively(dir: Path): Unit = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally s.close()
-  }
 }

@@ -1,9 +1,12 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Emits a Table-Spec-conformant Iceberg table for the read-interop row
@@ -33,45 +36,41 @@ object IcebergFixture {
     val root = Paths.get(tableDir)
 
     // ---- data files -------------------------------------------------
+    val conf = spark.sparkContext.hadoopConfiguration
     val written = adds.zipWithIndex.map { case ((pv, rows), i) =>
       val dirs = partCols.map(c => s"$c=${pv(c)}")
-      val rel = ("data" +: dirs).mkString("/") +
-        f"/part-$snapshotId%05d-$i%03d.$format"
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      val tmp = Files.createTempDirectory("graft_ice_add").toString
-      val w = rows.select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-        .coalesce(1).write.mode("overwrite")
-      if (format == "orc") w.orc(tmp) else w.parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.endsWith(s".$format")).get
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      // record count from the just-written footer (driver-side metadata,
-      // exact) instead of a rows.count() Spark job — commitSnapshot opens
-      // the same footer for column bounds anyway, so the count job was a
-      // full extra pass per fixture file (guide §1.2). ORC adds keep the
-      // count job (no footer helper; only the interop fixture writes ORC).
-      val n = if (format == "parquet")
-        IcebergWrite.rowCount(
-          spark.sparkContext.hadoopConfiguration, target)
-      else rows.count()
-      (target.toString, pv, n, Files.size(target))
+      val target = root.resolve(("data" +: dirs).mkString("/") +
+        f"/part-$snapshotId%05d-$i%03d.$format")
+      val frame = rows.select(schema.fieldNames.map(col).toSeq: _*)
+      if (format == "parquet") {
+        val size = DataFiles.writeOne(frame, target)
+        // record count and column bounds from the just-written footer,
+        // read once (driver-side metadata, exact) instead of a
+        // rows.count() Spark job
+        val ranges = DataFiles.portableRanges(conf, target, schema)
+          .getOrElse(throw new IllegalStateException(s"unreadable footer of $target"))
+        IcebergWrite.AddedFile(target.toString, pv, ranges.numRecords, size,
+          Some(ranges.stats))
+      } else {
+        // ORC (only this fixture writes it): one file staged beside the
+        // target; no footer helper, so the count is a Spark job and the
+        // manifest entry carries no bounds
+        val staging = target.resolveSibling(s"_staging_${UUID.randomUUID()}")
+        try {
+          frame.coalesce(1).write.orc(staging.toString)
+          val s = Files.list(staging)
+          val part = try s.iterator().asScala.find(_.toString.endsWith(".orc")).get
+            finally s.close()
+          Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+        } finally FileUtils.deleteDirectory(staging.toFile)
+        IcebergWrite.AddedFile(target.toString, pv, rows.count(), Files.size(target), None)
+      }
     }
 
     IcebergWrite.commitSnapshot(tableDir, schema,
       partCols.map(IcebergTransforms.parseField), snapshotId, written,
       removes.toSet, addFormat = format)
-    written.map(_._1)
-  }
-
-  private def writeOneParquet(df: DataFrame,
-                              target: java.nio.file.Path): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = Files.createTempDirectory("graft_ice_del").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    written.map(_.path)
   }
 
   /** Commit a v2 POSITION-delete snapshot: `deletes` are (absolute
@@ -85,11 +84,11 @@ object IcebergFixture {
     val prev = IcebergRead.snapshot(tableDir)
     val target = Paths.get(tableDir)
       .resolve(f"data/delete-$snapshotId%05d-pos.parquet")
-    writeOneParquet(deletes.toDF("file_path", "pos"), target)
+    val size = DataFiles.writeOne(deletes.toDF("file_path", "pos"), target)
     IcebergWrite.commitSnapshot(tableDir, prev.schema, prev.partitionFields,
       snapshotId, Nil, Set.empty,
       Seq(IcebergWrite.DeleteSpec(target.toString, isEquality = false, Nil,
-        deletes.size.toLong, Files.size(target))), operation = "delete")
+        deletes.size.toLong, size)), operation = "delete")
   }
 
   /** Commit a v2 EQUALITY-delete snapshot: rows whose `eqCols` values
@@ -105,16 +104,14 @@ object IcebergFixture {
       throw new IllegalArgumentException(s"equality column $c not in schema")))
     val target = Paths.get(tableDir)
       .resolve(f"data/delete-$snapshotId%05d-eq.parquet")
-    val proj = rows.select(eqCols.map(org.apache.spark.sql.functions.col): _*)
-    writeOneParquet(proj, target)
+    val size = DataFiles.writeOne(rows.select(eqCols.map(col): _*), target)
     // count from the written footer — one fewer Spark job per delete
-    // snapshot, identical value (guide §1.2)
-    val n = IcebergWrite.rowCount(
-      spark.sparkContext.hadoopConfiguration, target)
+    // snapshot, identical value
+    val n = DataFiles.rowCount(spark.sparkContext.hadoopConfiguration, target)
     IcebergWrite.commitSnapshot(tableDir, prev.schema, prev.partitionFields,
       snapshotId, Nil, Set.empty,
       Seq(IcebergWrite.DeleteSpec(target.toString, isEquality = true, ids, n,
-        Files.size(target))), operation = "delete")
+        size)), operation = "delete")
   }
 
 }

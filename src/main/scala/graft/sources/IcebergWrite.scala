@@ -1,14 +1,13 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -59,7 +58,6 @@ object IcebergWrite {
             mode: String = "append", mergeSchema: Boolean = false): Long = {
     require(Set("append", "overwrite", "overwritePartitions")(mode),
       s"unknown Iceberg write mode '$mode'")
-    val spark = df.sparkSession
     val root = Paths.get(tableDir)
     val existing =
       if (Files.exists(root.resolve("metadata/version-hint.text")))
@@ -96,7 +94,7 @@ object IcebergWrite {
       case "append" => Set.empty
       case "overwrite" => existing.toSeq.flatMap(_.files.map(_.path)).toSet
       case "overwritePartitions" =>
-        val touched = added.map(_._2).toSet
+        val touched = added.map(_.partition).toSet
         existing.toSeq.flatMap(_.files
           .filter(f => touched(f.partitionValues)).map(_.path)).toSet
     }
@@ -107,20 +105,16 @@ object IcebergWrite {
     snapshotId
   }
 
-  /** Distributed stage of `df`'s data files, the shared seam behind
-    * [[write]], [[rewriteDataFiles]], and [[mergeClauses]]: shadow partition
-    * columns keep the real ones in the data files as the spec requires;
-    * per-attempt uuid staging dir (racing writers must not stage into —
-    * or sweep — each other's directory); staged files are metadata-moved
-    * under `data/<c>=<v>/`. Returns (absolute path, partition tuple,
-    * record count, size) per file. */
+  /** Distributed stage of `df`'s data files through [[DataFiles.stage]],
+    * the shared seam behind [[write]], [[rewriteDataFiles]], and
+    * [[mergeClauses]]: shadow partition columns keep the real ones in the
+    * data files as the spec requires; staged files move under
+    * `data/<c>=<v>/` and each footer is read once, for the record count
+    * and the column bounds. */
   private def stageDataFiles(df: DataFrame, root: Path,
                              fields: Seq[IcebergTransforms.PartField],
-                             snapshotId: Long)
-      : Seq[(String, Map[String, String], Long, Long)] = {
-    val spark = df.sparkSession
-    val staging = root.resolve(
-      f"_staging_$snapshotId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
+                             snapshotId: Long): Seq[AddedFile] = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     // stamp the table's STABLE field ids into the staged parquet
     // (spark.sql.parquet.fieldId.write.enabled is on by default): after
     // a rename/drop the reader resolves columns by id, and files
@@ -133,48 +127,27 @@ object IcebergWrite {
       col(f.name).as(f.name, md)
     }: _*)
     val shadows = fields.map(f => s"__part_${f.name}")
-    val staged0 = fields.foldLeft(stamped)((d, f) => d.withColumn(
+    val staged = fields.foldLeft(stamped)((d, f) => d.withColumn(
       s"__part_${f.name}", IcebergTransforms.shadowColumn(f, df.schema)))
-    val writer = staged0.write.mode("overwrite")
-    (if (shadows.nonEmpty) writer.partitionBy(shadows: _*) else writer)
-      .parquet(staging.toString)
-
-    val fieldNames = fields.map(_.name)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val added = listParquet(staging).zipWithIndex.map { case (p, i) =>
-      val rel = staging.relativize(p)
-      val segs = (0 until rel.getNameCount).map(rel.getName(_).toString)
-      val pv = segs.dropRight(1).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"staged path $rel is not hive-layout under partitionBy")
-        val c = seg.substring(0, eq).stripPrefix("__part_")
-        val raw = ExternalCatalogUtils.unescapePathName(seg.substring(eq + 1))
-        // a null source value transforms to a NULL tuple — the spec
-        // stores it as such (manifest partition field is optional); the
-        // dir name keeps hive's sentinel, the manifest is authoritative
-        c -> (if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-              else raw)
-      }.toMap
-      require(pv.keySet == fieldNames.toSet,
-        s"staged path $rel carries partitions ${pv.keySet}, expected $fieldNames")
-      // re-escape when composing the target path: pv holds UNESCAPED
-      // values, and a raw '/' (or '..') in a value would nest extra
-      // directories / escape the table root. Same hive escaping the
-      // staged writer used, so the layout matches what DeltaWrite keeps.
-      val dirs = fieldNames.map(c => s"$c=${ExternalCatalogUtils.escapePathName(
-        Option(pv(c)).getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))}")
+    DataFiles.stage(staged, root, shadows, Some(df.schema)) { (w, i) =>
+      // the staged directories, already hive-escaped by the writer (a raw
+      // '/' or '..' in a value cannot nest or escape the table root);
       // uuid in the name: racing writers that both computed snapshotId
       // must not overwrite each other's data files before the metadata
       // CAS decides the winner
-      val relOut = ("data" +: dirs).mkString("/") +
+      val dirs = w.rel.split('/').dropRight(1).map(_.stripPrefix("__part_"))
+      ("data" +: dirs).mkString("/") +
         f"/part-$snapshotId%05d-$i%05d-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      val target = root.resolve(relOut)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
-      (target.toString, pv, rowCount(conf, target), Files.size(target))
+    }.map { s =>
+      // a null source value transforms to a NULL tuple — the spec
+      // stores it as such (manifest partition field is optional); the
+      // dir name keeps hive's sentinel, the manifest is authoritative
+      val path = root.resolve(s.rel)
+      AddedFile(path.toString,
+        s.partition.map { case (c, v) => c.stripPrefix("__part_") -> v },
+        s.ranges.fold(DataFiles.rowCount(conf, path))(_.numRecords), s.size,
+        s.ranges.map(_.stats))
     }
-    deleteRecursively(staging)
-    added
   }
 
   /** rewriteDataFiles — Iceberg's compaction maintenance action, the
@@ -349,20 +322,14 @@ object IcebergWrite {
     val snapshotId = nextSnapshotId(tableDir)
     val root = Paths.get(tableDir)
     val target = root.resolve(f"data/delete-$snapshotId%05d-pos.parquet")
-    Files.createDirectories(target.getParent)
-    val tmp = Files.createTempDirectory("graft_ice_delw").toString
     // spec recommendation: sort position deletes by (file_path, pos) so
     // readers can merge-scan them
-    matches.orderBy("file_path", "pos").coalesce(1)
-      .write.mode("overwrite").parquet(tmp)
-    val part = listParquet(Paths.get(tmp)).head
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(Paths.get(tmp))
+    val size = DataFiles.writeOne(matches.orderBy("file_path", "pos"), target)
 
     commitSnapshot(tableDir, snap.schema,
       snap.partitionFields, snapshotId, Nil, Set.empty,
-      Seq(DeleteSpec(target.toString, isEquality = false, Nil,
-        n, Files.size(target))), operation = "delete")
+      Seq(DeleteSpec(target.toString, isEquality = false, Nil, n, size)),
+      operation = "delete")
     snapshotId
   }
 
@@ -812,6 +779,13 @@ object IcebergWrite {
     assignFieldIds(Some(meta), Some(idToName), schema)
   }
 
+  /** A data file to register: absolute path, partition tuple, record
+    * count, size, and its column statistics when its footer gave them
+    * (none for ORC). */
+  private[sources] final case class AddedFile(path: String,
+      partition: Map[String, String], records: Long, size: Long,
+      stats: Option[StatsSkip.FileStats])
+
   /** A v2 delete file to register: absolute path, kind, equality field
     * ids (equality deletes only), record count, size. */
   private[sources] final case class DeleteSpec(path: String, isEquality: Boolean,
@@ -821,14 +795,13 @@ object IcebergWrite {
     * (and [[IcebergFixture]]'s test-authoring snapshots): carried-forward
     * manifest entries + this snapshot's adds/removes (+ optional v2
     * delete files in a content=1 manifest), manifest list, and the next
-    * versioned metadata JSON. `added` rows are
-    * (absolutePath, partitionValues, recordCount, sizeBytes). Sequence
-    * numbers follow the spec: this snapshot's manifests carry
-    * sequence_number = snapshotId; ADDED entries inherit it, carried
-    * (EXISTING) entries keep their ORIGINAL sequence explicitly. */
+    * versioned metadata JSON. Sequence numbers follow the spec: this
+    * snapshot's manifests carry sequence_number = snapshotId; ADDED
+    * entries inherit it, carried (EXISTING) entries keep their ORIGINAL
+    * sequence explicitly. */
   private[sources] def commitSnapshot(tableDir: String, schema: StructType,
       partFields: Seq[IcebergTransforms.PartField], snapshotId: Long,
-      added0: Seq[(String, Map[String, String], Long, Long)],
+      adds: Seq[AddedFile],
       removePaths: Set[String],
       deleteAdds: Seq[DeleteSpec] = Nil,
       addFormat: String = "parquet",
@@ -860,7 +833,6 @@ object IcebergWrite {
     val matchingSpec = prevSpecs.find(specFieldsOf(_) == wantSpecFields)
     val currentSpecId = matchingSpec.map(_.get("spec-id").asInt).getOrElse(
       prevSpecs.map(_.get("spec-id").asInt).maxOption.map(_ + 1).getOrElse(0))
-    val written = added0
 
     // ---- manifest: carried-forward state + this snapshot's changes ---
     val mSchema = manifestSchema(schema, partFields)
@@ -1030,17 +1002,8 @@ object IcebergWrite {
       }
     }
 
-    // column bounds for the added files come from their parquet footers
-    // (same seam as Delta add.stats); ORC adds carry none — conservative
-    val hadoopConf = new org.apache.hadoop.conf.Configuration()
-    val added = written.map { case (p, pv, n, size) =>
-      val st =
-        if (addFormat == "parquet")
-          DeltaWrite.portableRanges(hadoopConf, Paths.get(p), schema)
-            .map(_.stats)
-        else None
-      entry(1, p, pv, n, size, fmt = addFormat, stats = st)
-    }
+    val added = adds.map(a =>
+      entry(1, a.path, a.partition, a.records, a.size, fmt = addFormat, stats = a.stats))
     if (added.nonEmpty || mlEntries.isEmpty) {
       // the new-files manifest (also written empty for a first, empty
       // snapshot so the list is never zero-manifest)
@@ -1178,30 +1141,5 @@ object IcebergWrite {
           s"($target exists) — re-read the table and retry")
     Files.write(metaDir.resolve("version-hint.text"),
       newVersion.toString.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private[sources] def rowCount(conf: org.apache.hadoop.conf.Configuration,
-                                file: Path): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val rdr = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf))
-    try rdr.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally rdr.close()
-  }
-
-  private def listParquet(dir: Path): Seq[Path] = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.toString)
-    finally s.close()
-  }
-
-  private def deleteRecursively(dir: Path): Unit = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally s.close()
   }
 }

@@ -95,6 +95,25 @@ class TxLogTableSpec extends SparkSpec {
     } finally s.close()
   }
 
+  test("manifest CAS: a delete that loses the race fails loudly, naming the operation") {
+    val (t, dir) = freshStore()
+    t.append("tbl", Seq(1, 2).toDF("id"))
+    val v1 = Paths.get(dir, "tbl", "_log", "v00000001.manifest").toString
+    val v2 = Paths.get(dir, "tbl", "_log", "v00000002.manifest").toString
+    // another writer publishes v2 while the delete derives its keys
+    val race = org.apache.spark.sql.functions.udf { (id: Int) =>
+      if (!Files.exists(Paths.get(v2))) Files.copy(Paths.get(v1), Paths.get(v2))
+      id
+    }.asNondeterministic()
+    val e = intercept[IllegalStateException] {
+      t.deleteWhereKeys("tbl", Seq(1).toDF("id").select(race($"id").as("id")), Seq("id"))
+    }
+    assert(e.getMessage === "TxLogTable tbl: lost commit race on deleteWhere — " +
+      "re-derive from the new head and retry")
+    assert(t.versions("tbl") === Seq(1L, 2L))
+    assert(t.read("tbl").as[Int].collect().toSet === Set(1, 2))
+  }
+
   test("crash mid-commit: an orphaned tmp manifest is invisible") {
     val (t, dir) = freshStore()
     t.append("tbl", Seq(1).toDF("id"))
