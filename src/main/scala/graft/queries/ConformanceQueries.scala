@@ -435,7 +435,7 @@ object ConformanceQueries {
     // pinned file counts go red if pruning or replay miscounts.
     Q("delta_read_interop",
       (s, dir) => {
-        import graft.sources.{DeltaFixture, DeltaRead}
+        import graft.sources.{DeltaFixture, DeltaRead, LogScan}
         val wh = DvQueries.tmpWarehouse("graft_delta_interop")
         val tbl = s"$wh/orders_delta"
         val o = rd(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
@@ -450,12 +450,11 @@ object ConformanceQueries {
             o.filter(col("o_orderpriority") === p && col("o_orderkey") % 2 === 1)),
           removes = Seq(c0(prios.indexOf("5-LOW"))))
         val snap = DeltaRead.snapshot(tbl)
-        // the same pruning arithmetic listFiles applies to pushed
-        // predicates, pinned as a count the oracle hardcodes
-        val scanned = DeltaRead.candidateFiles(snap,
-          Map("o_orderpriority" -> Set("1-URGENT", "5-LOW"))).size
         val df = DeltaRead.read(s, tbl)
           .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
+        // the files the planned scan keeps, pinned as a count the oracle
+        // hardcodes
+        val scanned = LogScan.keptFiles(df).size
         // seam proof: the predicate must reach the scan as a PARTITION
         // filter over the custom index, not a post-scan row filter
         val plan = df.queryExecution.executedPlan.toString
@@ -491,11 +490,11 @@ object ConformanceQueries {
     // write path that drops a commit, mis-tombstones on the partition
     // overwrite, or mis-encodes partition values (`4-NOT SPECIFIED` has a
     // space) goes red on values; the booleans pin checkpoint resume,
-    // FileIndex pruning, and pruning-arithmetic/actual-scan agreement
+    // FileIndex pruning, and kept-files/actual-scan agreement
     // (file COUNTS aren't pinned — they vary with input split counts).
     Q("delta_write_roundtrip",
       (s, dir) => {
-        import graft.sources.{DeltaRead, DeltaWrite}
+        import graft.sources.{DeltaRead, DeltaWrite, LogScan}
         val wh = DvQueries.tmpWarehouse("graft_delta_write")
         val tbl = s"$wh/orders_delta"
         val o = rd(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
@@ -511,15 +510,14 @@ object ConformanceQueries {
           tbl, mode = "overwritePartitions")
         val snap = DeltaRead.snapshot(tbl)
         val versionsOk = v0 == 0L && v1 == 1L && v2 == 2L && snap.version == 2L
-        // pruning arithmetic vs the files the pruned scan actually touches
+        // the files the planned scan keeps vs the files its rows come from
         val filtered = DeltaRead.read(s, tbl)
           .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         val plan = filtered.queryExecution.executedPlan.toString
         val pruningPlanned = plan.contains("Location: LogFileIndex") &&
           "PartitionFilters: \\[[^\\]]*1-URGENT".r.findFirstIn(plan).nonEmpty &&
           plan.contains("DataFilters: []")
-        val expectFiles = DeltaRead.candidateFiles(snap,
-          Map("o_orderpriority" -> Set("1-URGENT", "2-HIGH"))).size.toLong
+        val expectFiles = LogScan.keptFiles(filtered).size.toLong
         val scannedFiles = filtered.select(input_file_name()).distinct().count()
         DeltaRead.read(s, tbl)
           .groupBy(col("o_orderpriority").as("priority"))
@@ -1018,8 +1016,8 @@ object ConformanceQueries {
         DeltaWrite.write(o.filter(col("o_orderkey") % 2 === 1 &&
           col("o_orderpriority").isin("1-URGENT", "5-LOW")), tbl)
         val snap = DeltaRead.snapshot(tbl)
-        val lowFiles = DeltaRead.candidateFiles(snap,
-          Map("o_orderpriority" -> Set("5-LOW"))).map(_.path)
+        val lowFiles = snap.files
+          .filter(_.partitionValues.get("o_orderpriority").contains("5-LOW")).map(_.path)
         // the 5-LOW partition holds evens (v0) + odds (v1) = ALL 5-LOW rows
         val lowRows = o.filter(col("o_orderpriority") === "5-LOW")
           .withColumn("_change_type", lit("delete"))
@@ -1199,7 +1197,7 @@ object ConformanceQueries {
     // live/scanned file counts + plan proof, oracle-gated.
     Q("iceberg_read_interop",
       (s, dir) => {
-        import graft.sources.{IcebergFixture, IcebergRead}
+        import graft.sources.{IcebergFixture, IcebergRead, LogScan}
         val wh = DvQueries.tmpWarehouse("graft_iceberg_interop")
         val tbl = s"$wh/customer_iceberg"
         val c = rd(s, dir, "customer").select(col("c_custkey"), col("c_name"),
@@ -1214,10 +1212,9 @@ object ConformanceQueries {
             c.filter(col("c_mktsegment") === g && col("c_custkey") % 2 === 1)),
           removes = Seq(s1(segs.indexOf("AUTOMOBILE"))))
         val snap = IcebergRead.snapshot(tbl)
-        val scanned = IcebergRead.candidateFiles(snap,
-          Map("c_mktsegment" -> Set("AUTOMOBILE", "BUILDING"))).size
         val df = IcebergRead.read(s, tbl)
           .filter(col("c_mktsegment").isin("AUTOMOBILE", "BUILDING"))
+        val scanned = LogScan.keptFiles(df).size
         // seam proof: custom index serving the scan, predicate pushed as
         // a data filter (Iceberg has no Spark partition columns)
         val plan = df.queryExecution.executedPlan.toString
@@ -1249,10 +1246,10 @@ object ConformanceQueries {
     // for AUTOMOBILE/BUILDING, s3 dynamic-overwrites FURNITURE with its
     // %3==0 subset. The oracle recomputes the final state from `customer`;
     // booleans pin snapshot numbering, data-filter pushdown through
-    // LogFileIndex, and pruning-arithmetic/actual-scan agreement.
+    // LogFileIndex, and kept-files/actual-scan agreement.
     Q("iceberg_write_roundtrip",
       (s, dir) => {
-        import graft.sources.{IcebergRead, IcebergWrite}
+        import graft.sources.{IcebergRead, IcebergWrite, LogScan}
         val wh = DvQueries.tmpWarehouse("graft_ice_write")
         val tbl = s"$wh/customer_iceberg"
         val c = rd(s, dir, "customer").select(col("c_custkey"), col("c_name"),
@@ -1272,8 +1269,7 @@ object ConformanceQueries {
         val plan = filtered.queryExecution.executedPlan.toString
         val pushed = plan.contains("Location: LogFileIndex") &&
           "DataFilters: \\[[^\\]]*AUTOMOBILE".r.findFirstIn(plan).nonEmpty
-        val expected = IcebergRead.candidateFiles(snap,
-          Map("c_mktsegment" -> Set("AUTOMOBILE", "FURNITURE"))).size.toLong
+        val expected = LogScan.keptFiles(filtered).size.toLong
         val scanned = filtered.select(input_file_name()).distinct().count()
         IcebergRead.read(s, tbl)
           .groupBy(col("c_mktsegment").as("segment"))

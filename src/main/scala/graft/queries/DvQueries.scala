@@ -2322,11 +2322,12 @@ object DvQueries {
       Some("SELECT nation.*, cast(1 AS BIGINT) AS files_after FROM nation")),
 
     // Per-file min/max data skipping, driver-verified: three
-    // key-range-disjoint single-file batches, a stats-pruned range read
-    // that provably scans ONE of the three files (`files_scanned` emitted
-    // as a column against the oracle's constant), and the exact predicate
-    // re-applied on top — the contract every lake format's skipping
-    // follows (prune is a superset, the filter is still yours).
+    // key-range-disjoint single-file batches and a range read whose
+    // planned scan keeps ONE of the three files (`files_scanned`, from
+    // LogScan.keptFiles, emitted as a column against the oracle's
+    // constant); the read still applies the exact predicate — the
+    // contract every lake format's skipping follows (prune is a
+    // superset, the filter still runs).
     Q("txlog_skipping",
       (s, dir) => {
         val wh = tmpWarehouse("graft_q_txskip")
@@ -2337,11 +2338,10 @@ object DvQueries {
         t.append("t", base.filter(col("o_orderkey").between(5000, 9999)).coalesce(1))
         t.append("t", base.filter(col("o_orderkey") >= 10000).coalesce(1))
         val live = t.files("t", t.currentVersion("t").get).size
-        val cand = t.candidateFiles("t", "o_orderkey", "6000", "7000").size
-        t.readPruned("t", "o_orderkey", "6000", "7000")
-          .filter(col("o_orderkey").between(6000, 7000))
+        val ranged = t.read("t").where(col("o_orderkey").between(6000, 7000))
+        ranged
           .withColumn("files_live", lit(live.toLong))
-          .withColumn("files_scanned", lit(cand.toLong))
+          .withColumn("files_scanned", lit(graft.sources.LogScan.keptFiles(ranged).size.toLong))
       },
       Some("""SELECT orders.*, cast(3 AS BIGINT) AS files_live,
              |  cast(1 AS BIGINT) AS files_scanned

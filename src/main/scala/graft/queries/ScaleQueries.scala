@@ -13,6 +13,11 @@ object ScaleQueries {
   private def rd(s: SparkSession, dir: String, t: String): DataFrame =
     s.read.parquet(s"$dir/$t.parquet")
 
+  /** the files the planned scan of TxLogTable `t` keeps for `c` BETWEEN
+    * 100 AND 120 — the z-order queries' narrow probe */
+  private def rangeProbe(store: graft.runtime.TxLogTable, t: String, c: String): Int =
+    graft.sources.LogScan.keptFiles(store.read(t).where(col(c).between(100, 120))).size
+
   /** Portable multiplicative mix (same arithmetic both engines, every
     * intermediate far below 2^63) used for the reproducible shuffle. */
   private def mix(k: String, e: String): String =
@@ -771,7 +776,8 @@ object ScaleQueries {
     // the file-skipping payoff. Two physical layouts of the same rows —
     // (a) 16 files by interleaved-bit z-bucket of (custkey, price), (b)
     // 16 files by custkey range alone — both with min/max stats on both
-    // dims, probed by candidateFiles with a narrow range on EACH dim.
+    // dims, probed by the planned scan's kept files (LogScan.keptFiles)
+    // with a narrow range on EACH dim.
     // The z layout prunes BOTH probes to ≤ 5/16 files; the single-dim
     // sort answers the custkey probe with 1 file but must scan ALL 16
     // for the price probe. Deterministic: explicit per-bucket appends
@@ -795,8 +801,7 @@ object ScaleQueries {
           store.setStatsColumns(t, Seq("x", "y"))
         }
         def probes(t: String): (Int, Int) = (
-          store.candidateFiles(t, "x", "100", "120").size,
-          store.candidateFiles(t, "y", "100", "120").size)
+          rangeProbe(store, t, "x"), rangeProbe(store, t, "y"))
         val (zx, zy) = probes("z_layout")
         val (xx, xy) = probes("x_layout")
         s.range(1).select(
@@ -1087,12 +1092,12 @@ object ScaleQueries {
         // unclustered arrival order: 4 row-hash batches in one job
         store.appendClustered("t", o, pmod(hash(col("x"), col("y")), lit(4)), 4)
         store.setStatsColumns("t", Seq("x", "y"))
-        val preX = store.candidateFiles("t", "x", "100", "120").size
-        val preY = store.candidateFiles("t", "y", "100", "120").size
+        val preX = rangeProbe(store, "t", "x")
+        val preY = rangeProbe(store, "t", "y")
         val (before, after) = store.compactZOrder("t", 16, Seq("x", "y"))
         store.setStatsColumns("t", Seq("x", "y"))
-        val postX = store.candidateFiles("t", "x", "100", "120").size
-        val postY = store.candidateFiles("t", "y", "100", "120").size
+        val postX = rangeProbe(store, "t", "x")
+        val postY = rangeProbe(store, "t", "y")
         store.read("t")
           .agg(count(lit(1)).as("n_rows"), sum(col("x")).as("sum_x"),
             sum(col("y")).as("sum_y"))
@@ -1119,8 +1124,8 @@ object ScaleQueries {
 
     // PER-FILE BLOOM-FILTER SKIPPING for point lookups: min/max stats
     // prune ranges but are blind to equality probes into an UNCLUSTERED
-    // table (every file's [min,max] spans the key domain — candidateFiles
-    // returns everything). A per-file Bloom (Iceberg Puffin / Parquet
+    // table (every file's [min,max] spans the key domain — the scan
+    // keeps everything). A per-file Bloom (Iceberg Puffin / Parquet
     // footer idea; ~20 bits/key, 4 probes ≈ 0.1% fp) prunes the probe to
     // the one file actually holding the key, layout-independent. 40
     // present keys + 40 absent keys probed: every present key found in
@@ -1137,33 +1142,20 @@ object ScaleQueries {
         // one clustered write job lays out the 4 key-sliced files
         store.appendClustered(t, base, col("o_orderkey") % 4, 4)
         store.setBloomColumn(t, "o_orderkey")
-        val v = store.currentVersion(t).get
-        val nFiles = store.files(t, v).size
+        val nFiles = store.files(t, store.currentVersion(t).get).size
         val present = (0 until 40).map(i => 13L + 371L * i)
         // negative keys are outside the TPC-H keyspace at EVERY sf
         // (1000000 + 97i collided at sf1, where orderkeys reach 6M)
         val absent = (0 until 40).map(i => -(13L + 97L * i))
-        // bloom checks are driver-side manifest reads (cheap); the ROW
-        // probe is ONE Spark job over the union of candidate files
-        // semi-joined with the key set — a bloom filter has no false
-        // negatives, so every file holding key k is in k's candidate set
-        // and the union-count equals the sum of per-key candidate counts
-        // (round 6 ran 40 jobs here, one count() per key: 16 s → <1 s)
+        // a key's files are the kept files of its planned point lookup
+        // (the scan's bloom channel; planning only, no Spark job); the
+        // rows come from ONE IN read, whose scan keeps the union of those
+        // files — a bloom filter has no false negatives, so every file
+        // holding key k is kept for k
         def probe(keys: Seq[Long]): (Long, Long) = {
-          val cands = keys.map(k =>
-            k -> store.bloomCandidateFiles(t, "o_orderkey", k.toString))
-          val scanned = cands.map(_._2.size.toLong).sum
-          val needed = cands.flatMap(_._2).distinct
-          val found =
-            if (needed.isEmpty) 0L
-            else {
-              import s.implicits._
-              store.readFiles(t, v, needed)
-                .join(broadcast(keys.toDF("o_orderkey")), Seq("o_orderkey"),
-                  "left_semi")
-                .count()
-            }
-          (scanned, found)
+          val scanned = keys.map(k => graft.sources.LogScan.keptFiles(
+            store.read(t).where(col("o_orderkey") === k)).size.toLong).sum
+          (scanned, store.read(t).where(col("o_orderkey").isin(keys: _*)).count())
         }
         val (ps, pf) = probe(present)
         val (as_, af) = probe(absent)

@@ -525,17 +525,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     commitOr(name, head + 1, manifestLines(name, toVersion), "restore")
   }
 
-  /** read a SUBSET of a version's live files under that version's column
-    * mapping — the primitive behind file-pruned probes (the caller still
-    * applies its exact predicate; this only shrinks the scan). */
-  def readFiles(name: String, v: Long, subset: Seq[String]): DataFrame = {
-    val live = files(name, v)
-    require(subset.forall(live.contains),
-      s"TxLogTable $name: readFiles over non-live files " +
-        s"${subset.filterNot(live.contains)}")
-    rows(name, metaOf(name, v), subset)
-  }
-
   /** MERGE-ON-READ row-level DELETE (Iceberg equality deletes / Delta
     * deletion vectors): rows of the current snapshot matching `cond` have
     * their `keyCols` written to ONE key file; no data file is touched.
@@ -848,41 +837,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     commitOr(name, v + 1, renderM(withStats, live), "setStatsColumns")
   }
 
-  /** The files of the current version possibly holding a `logicalCol` value
-    * in [lo, hi]. The bounds are cast to the column's type (timestamps in
-    * the session time zone); a bound that does not cast prunes nothing.
-    * Complete by construction: a file is only skipped when its stats
-    * provably exclude the interval. */
-  def candidateFiles(name: String, logicalCol: String,
-                     lo: String, hi: String): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, GreaterThanOrEqual, LessThanOrEqual, Literal}
-    val v = latest(name)
-    val m = metaOf(name, v)
-    val c = m.cols.find(_.logical == logicalCol).getOrElse(
-      throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
-    val live = files(name, v)
-    val dt = DataType.fromDDL(c.typeDdl)
-    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    def typed(b: String): Option[Literal] =
-      scala.util.Try(Cast(Literal(b), dt, tz).eval()).toOption
-        .filter(_ != null).map(Literal(_, dt))
-    (typed(lo), typed(hi)) match {
-      case (Some(l), Some(h)) =>
-        val a = AttributeReference(c.physical, dt)()
-        val filters = Seq(GreaterThanOrEqual(a, l), LessThanOrEqual(a, h))
-        val schema = physicalSchema(Seq(c))
-        live.filter(f => StatsSkip.keep(m.stats.get(f), filters, schema))
-      case _ => live
-    }
-  }
-
-  /** Read only the files possibly relevant to `logicalCol` ∈ [lo, hi] — the
-    * caller still applies its exact predicate; this prunes the scan. */
-  def readPruned(name: String, logicalCol: String, lo: String, hi: String): DataFrame = {
-    val v = latest(name)
-    rows(name, metaOf(name, v), candidateFiles(name, logicalCol, lo, hi))
-  }
-
   // ---- per-file BLOOM FILTERS: point-lookup file skipping ----------------
   // min/max stats prune RANGE predicates but are useless for equality
   // probes into an unclustered table (every file's [min,max] spans the key
@@ -904,10 +858,11 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       p(0) -> p(1).toInt
     }.toMap
 
-  /** per-file bloom bitsets: (file, physicalCol) → base64 bitset */
+  /** per-file bloom bitsets: (file, physicalCol) → base64 bitset (empty
+    * for a file whose column is all NULL) */
   def fileBlooms(name: String, v: Long): Map[(String, String), String] =
     manifestLines(name, v).filter(_.startsWith(FBloomHeader)).map { l =>
-      val p = l.stripPrefix(FBloomHeader).split('\t')
+      val p = l.stripPrefix(FBloomHeader).split("\t", -1)
       (p(0), p(1)) -> p(2)
     }.toMap
 
@@ -960,9 +915,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** Fresh blooms for every enabled bloom column over a rewrite's output
     * files. Compaction replaces EVERY data file, so carrying the old
-    * per-file blooms forward would leave zero live bloom entries and
-    * [[bloomCandidateFiles]] would silently degrade to "all files" while
-    * bloomCols still advertises skipping. Same nbits as the original
+    * per-file blooms forward would leave zero live bloom entries and the
+    * scan's bloom channel ([[bloomKeep]]) would silently keep every file
+    * while bloomCols still advertises skipping. Same nbits as the original
     * enablement (NDV is unchanged by a rewrite). */
   private def rebuiltBlooms(name: String, m: Meta,
                             added: Seq[String]): Map[(String, String), String] =
@@ -994,32 +949,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val m2 = m.copy(bloomCols = m.bloomCols + (c.physical -> nbits),
       blooms = m.blooms ++ byFile)
     commitOr(name, v + 1, renderM(m2, live), "setBloomColumn")
-  }
-
-  /** The current version's files possibly containing `value` in
-    * `logicalCol`: a file is skipped only when its bloom provably lacks
-    * one of the value's bit positions — no false negatives by
-    * construction; files without a bloom stay candidates. */
-  def bloomCandidateFiles(name: String, logicalCol: String, value: String): Seq[String] = {
-    val v = latest(name)
-    val m = metaOf(name, v)
-    val c = m.cols.find(_.logical == logicalCol).getOrElse(
-      throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
-    val nbitsOpt = bloomColumns(name, v).get(c.physical)
-    val blooms = fileBlooms(name, v)
-    nbitsOpt match {
-      case None => files(name, v)
-      case Some(nbits) =>
-        val pos = bloomPositions(value, nbits)
-        files(name, v).filter { f =>
-          blooms.get((f, c.physical)) match {
-            case None => true
-            case Some(b64) =>
-              val bits = decodedBloom(name, f, c.physical, nbits, b64)
-              pos.forall(bits.get)
-          }
-        }
-    }
   }
 
   /** decoded bitsets, memoized per (table, file, column, size in bits):

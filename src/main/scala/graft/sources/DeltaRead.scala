@@ -401,7 +401,7 @@ object DeltaRead {
         val a = node.get("add")
         // with column mapping, partitionValues and stats keys are the
         // PHYSICAL names — normalize to logical here so every downstream
-        // consumer (pruning, stats skipping, candidateFiles) stays logical
+        // consumer (partition pruning, stats skipping) stays logical
         val toLogical: Map[String, String] = colMap.map(_.swap)
         def logicalKey(k: String): String = toLogical.getOrElse(k, k)
         val pv = Option(a.get("partitionValues")).map { o =>
@@ -516,15 +516,6 @@ object DeltaRead {
       .flatMap { case (p, bytes) => DeletionVectors.deserialize(bytes).iterator.map(ri => (p, ri)) }
       .toDF("__del_fp", "__del_ri"), snap.files.flatMap(_.deletionVector).map(_.cardinality).sum)))
   }
-
-  /** The live files a scan filtered by `partitionCol -> allowed values`
-    * must touch — the same pruning arithmetic [[LogFileIndex.listFiles]]
-    * applies to pushed predicates, exposed so callers (and oracle rows)
-    * can pin the pruned file count without executing a plan. */
-  def candidateFiles(snap: Snapshot, keep: Map[String, Set[String]]): Seq[AddFile] =
-    snap.files.filter(f => keep.forall { case (c, vs) =>
-      f.partitionValues.get(c).exists(vs.contains)
-    })
 
   /** An add/remove action's dataChange flag — required by the protocol,
     * but a lax writer may omit it; absent means "changes data" (the

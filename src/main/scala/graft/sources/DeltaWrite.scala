@@ -146,7 +146,8 @@ object DeltaWrite {
       existing.map(_.configuration).getOrElse(Map.empty)))
     val actions = CommitInfo(if (mode == "append") "WRITE" else "OVERWRITE") +:
       (removes.map(Remove(_)) ++ adds)
-    commitCas(logDir, version, lines.toSeq ++ actions.map(render))
+    commitCas(logDir, version, lines.toSeq ++ actions.map(render),
+      adds.map(a => root.resolve(a.path)))
     version
   }
 
@@ -311,7 +312,8 @@ object DeltaWrite {
     val actions = CommitInfo("OPTIMIZE") +:
       (rewritten.map(f => Remove(f.path, dataChange = false)) ++
         adds.map(_.copy(dataChange = false)))
-    commitCas(root.resolve("_delta_log"), version, actions.map(render))
+    commitCas(root.resolve("_delta_log"), version, actions.map(render),
+      adds.map(a => root.resolve(a.path)))
     (before, before - rewritten.size + adds.size)
   }
 
@@ -397,25 +399,30 @@ object DeltaWrite {
     val version = snap.version + 1
     val adds = stagePhysical(snap, out, root)
     if (touched.isEmpty && adds.isEmpty) return snap.version
-    val actions = CommitInfo("MERGE") +: (touched.map(f => Remove(f.path)) ++
-      adds ++ cdcActions(snap, root, changes))
-    commitCas(root.resolve("_delta_log"), version, actions.map(render))
+    val cdc = cdcActions(snap, root, changes)
+    val actions = CommitInfo("MERGE") +: (touched.map(f => Remove(f.path)) ++ adds ++ cdc)
+    commitCas(root.resolve("_delta_log"), version, actions.map(render),
+      (adds.map(_.path) ++ cdc.map(_.path)).map(p => root.resolve(p)))
     version
   }
 
   /** Publish `lines` as commit `version` iff no other writer claimed it
     * ([[CommitCas]]). Commit visibility is this publish, after every data
-    * file is in place. A losing writer gets a loud
-    * ConcurrentModificationException with the log intact — re-read the
+    * file is in place. A losing writer first deletes `placed`, the files
+    * this attempt put under the root (data, deletion-vector and change
+    * files — never a re-added live file), then gets a loud
+    * ConcurrentModificationException with the log intact: re-read the
     * head and retry with a fresh version. */
   private[sources] def commitCas(logDir: Path, version: Long,
-                                 lines: Seq[String]): Unit = {
+                                 lines: Seq[String], placed: Seq[Path] = Nil): Unit = {
     val target = logDir.resolve(f"$version%020d.json")
     if (!CommitCas.publish(target,
-        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)))
+        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))) {
+      placed.foreach(Files.deleteIfExists)
       throw new java.util.ConcurrentModificationException(
         s"Delta version $version was committed concurrently ($target exists) — " +
           "re-read the head and retry")
+    }
   }
 
   /** Merge-on-read DELETE via deletion vectors: rows matching `condition`
@@ -515,7 +522,9 @@ object DeltaWrite {
     // consumable as a feed
     val cdc = cdcActions(snap, root, DeltaRead.readWithPositions(spark, tableDir, snap)
       .filter(condition).drop("__fp", "__ri").withColumn("_change_type", lit("delete")))
-    commitCas(logDir, version, protocol ++ (actions ++ cdc).map(render))
+    commitCas(logDir, version, protocol ++ (actions ++ cdc).map(render),
+      (touched.map(t => DeletionVectors.relativePathOf(t._2)).distinct.toSeq ++
+        cdc.map(_.path)).map(p => root.resolve(p)))
     version
   }
 

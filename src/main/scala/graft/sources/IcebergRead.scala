@@ -636,17 +636,6 @@ object IcebergRead {
     }
   }
 
-  /** Files a scan filtered to `col -> allowed values` must touch — the
-    * pruning arithmetic of [[LogFileIndex.listFiles]], pinnable by an
-    * oracle row without executing a plan. */
-  def candidateFiles(snap: Snapshot, keep: Map[String, Set[String]]): Seq[DataFile] =
-    snap.files.filter(f => keep.forall { case (c, vs) =>
-      f.partitionValues.get(c) match {
-        case None => true // old-spec file: no tuple for c — unprunable
-        case Some(v) => v != null && vs.contains(v)
-      }
-    })
-
   // ---- metadata internals --------------------------------------------
 
   private def currentMetadataFile(metaDir: Path): Path = {

@@ -321,7 +321,11 @@ object IcebergWrite {
 
     val snapshotId = nextSnapshotId(tableDir)
     val root = Paths.get(tableDir)
-    val target = root.resolve(f"data/delete-$snapshotId%05d-pos.parquet")
+    // uuid in the name, as for data files: a racing writer that computed
+    // the same snapshotId must not replace (or, losing the CAS, delete)
+    // the winner's delete file
+    val target = root.resolve(
+      f"data/delete-$snapshotId%05d-${java.util.UUID.randomUUID().toString.take(8)}-pos.parquet")
     // spec recommendation: sort position deletes by (file_path, pos) so
     // readers can merge-scan them
     val size = DataFiles.writeOne(matches.orderBy("file_path", "pos"), target)
@@ -725,13 +729,6 @@ object IcebergWrite {
     }
   }
 
-  private def writeAvro(file: java.nio.file.Path, schema: Schema,
-                        rows: Seq[GenericRecord]): Unit = {
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, file.toFile)
-    try rows.foreach(w.append) finally w.close()
-  }
-
   /** Stable field-id assignment (the spec's evolution contract): names
     * the table already knows keep their ids, new names allocate past
     * `last-column-id`; a fresh table gets positional 1..N. Shared by
@@ -913,6 +910,14 @@ object IcebergWrite {
     // Per-attempt unique side-file names: a racing writer must never
     // overwrite the winner's manifests before losing the metadata CAS.
     val attempt = java.util.UUID.randomUUID().toString.take(8)
+    // the avro side files this attempt writes, deleted again if it loses
+    val written = scala.collection.mutable.ArrayBuffer[Path]()
+    def writeSide(file: Path, schema: Schema, rows: Seq[GenericRecord]): Unit = {
+      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
+      w.create(schema, file.toFile)
+      written += file
+      try rows.foreach(w.append) finally w.close()
+    }
     val mlEntries = scala.collection.mutable.ArrayBuffer[GenericRecord]()
     def mlEntry(path: java.nio.file.Path, content: Int, nAdded: Int,
                 nExisting: Int, nDeleted: Int,
@@ -995,7 +1000,7 @@ object IcebergWrite {
           val target = metaDir.resolve(
             f"m-$snapshotId%05d-rw$rewriteIdx%03d-$attempt.avro")
           rewriteIdx += 1
-          writeAvro(target, entrySchema, newRows)
+          writeSide(target, entrySchema, newRows)
           mlEntries += mlEntry(target, 0, 0, nEx, nDel,
             specId = mlInt(m, "partition_spec_id").getOrElse(0))
         }
@@ -1008,7 +1013,7 @@ object IcebergWrite {
       // the new-files manifest (also written empty for a first, empty
       // snapshot so the list is never zero-manifest)
       val manifestPath = metaDir.resolve(f"m-$snapshotId%05d-$attempt.avro")
-      writeAvro(manifestPath, mSchema, added)
+      writeSide(manifestPath, mSchema, added)
       mlEntries += mlEntry(manifestPath, 0, added.size, 0, 0)
     }
     val addedDels = deleteAdds.map { d =>
@@ -1017,12 +1022,12 @@ object IcebergWrite {
     }
     if (addedDels.nonEmpty) {
       val delManifestPath = metaDir.resolve(f"md-$snapshotId%05d-$attempt.avro")
-      writeAvro(delManifestPath, mSchema, addedDels)
+      writeSide(delManifestPath, mSchema, addedDels)
       mlEntries += mlEntry(delManifestPath, 1, addedDels.size, 0, 0)
     }
 
     val mlPath = metaDir.resolve(f"snap-$snapshotId%05d-$attempt.avro")
-    writeAvro(mlPath, manifestListSchema, mlEntries.toSeq)
+    writeSide(mlPath, manifestListSchema, mlEntries.toSeq)
 
     // ---- versioned table metadata ------------------------------------
     val meta = mapper.createObjectNode()
@@ -1119,26 +1124,31 @@ object IcebergWrite {
 
     val newVersion = prevMetaNode.map(_ =>
       Files.readString(metaDir.resolve("version-hint.text")).trim.toInt + 1).getOrElse(1)
-    commitMetadataVersion(metaDir, newVersion, meta)
+    commitMetadataVersion(metaDir, newVersion, meta,
+      (adds.map(_.path) ++ deleteAdds.map(_.path)).map(Paths.get(_)) ++ written)
   }
 
   /** The versioned-metadata CAS every Iceberg commit path shares
     * ([[commitSnapshot]], [[rollback]], [[expireSnapshots]]) — the table's single most
     * safety-critical primitive, kept in ONE place. The commit point is
     * creating `v<N>.metadata.json` through [[CommitCas]] — a racing
-    * writer that computed the same N fails loudly with the winner's
-    * state intact. The version hint is advisory (readers fall back to
-    * the max-v* scan), so the winner updating it after the CAS is
-    * safe. */
+    * writer that computed the same N first deletes `placed`, the files
+    * its attempt wrote (data and delete files, manifests, manifest list),
+    * then fails loudly with the winner's state intact. The version hint
+    * is advisory (readers fall back to the max-v* scan), so the winner
+    * updating it after the CAS is safe. */
   private[sources] def commitMetadataVersion(metaDir: java.nio.file.Path,
       newVersion: Int,
-      meta: com.fasterxml.jackson.databind.JsonNode): Unit = {
+      meta: com.fasterxml.jackson.databind.JsonNode,
+      placed: Seq[java.nio.file.Path] = Nil): Unit = {
     val target = metaDir.resolve(s"v$newVersion.metadata.json")
     if (!CommitCas.publish(target, mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8)))
+        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8))) {
+      placed.foreach(Files.deleteIfExists)
       throw new java.util.ConcurrentModificationException(
         s"Iceberg metadata version $newVersion was committed concurrently " +
           s"($target exists) — re-read the table and retry")
+    }
     Files.write(metaDir.resolve("version-hint.text"),
       newVersion.toString.getBytes(StandardCharsets.UTF_8))
   }

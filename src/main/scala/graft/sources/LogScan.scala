@@ -1,10 +1,11 @@
 package graft.sources
 
-import java.nio.file.Path
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BasePredicate, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BasePredicate, BoundReference, Cast, Expression, Literal, PlanExpression, Predicate}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
@@ -21,6 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    tuples and per-file min/max stats prune files before any task is
   *    scheduled, plus the format's own channel (Iceberg partition
   *    transforms, TxLogTable blooms);
+  *  - [[keptFiles]], the files that index keeps for a planned frame —
+  *    the pruned file counts oracle rows and tests pin;
   *  - [[scan]], the one relation builder, which also turns on field-id
   *    reads when the schema asks for them;
   *  - [[deleteJoin]], the one row-level-delete applier: deleted rows come
@@ -60,6 +63,25 @@ private[graft] object LogScan {
     val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
       index.partitionSchema, index.dataSchema, None, format, Map.empty[String, String])(spark))
     if (meta.isEmpty) df else df.select(col("*") +: meta: _*)
+  }
+
+  /** The files the planned scan of `df` reads — the one answer to "which
+    * files does this predicate read" on all three formats. `df` is
+    * planned (before adaptive execution), its one [[LogFileIndex]] scan
+    * found, and that index asked with the scan's own partition and data
+    * filters: the call the scan makes, without dynamic-pruning filters.
+    * A plan with no or several such scans is rejected
+    * (IllegalArgumentException). */
+  def keptFiles(df: DataFrame): Seq[Path] = {
+    val scans = df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec if s.relation.location.isInstanceOf[LogFileIndex] => s
+    }
+    require(scans.size == 1,
+      s"keptFiles needs exactly one LogFileIndex scan in the plan, found ${scans.size}")
+    val s = scans.head
+    def static(fs: Seq[Expression]) = fs.filterNot(_.exists(_.isInstanceOf[PlanExpression[_]]))
+    s.relation.location.listFiles(static(s.partitionFilters), static(s.dataFilters))
+      .flatMap(_.files).map(f => Paths.get(f.getPath.toUri))
   }
 
   /** Qualified scan path of a local data file — the exact string

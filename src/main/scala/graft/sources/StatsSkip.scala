@@ -23,9 +23,12 @@ import scala.jdk.CollectionConverters._
   * spec, so a reader must stay correct when they're absent):
   *  - unknown expression shape, missing stat, unsupported type ⇒ KEEP;
   *  - And/Or recurse; Not and casts are kept conservatively;
-  *  - string bounds compare in UTF8 binary order (Spark's own ordering),
-  *    and a truncated bound is only ever used prefix-wise (StartsWith) —
-  *    [[DeltaWrite]] omits the stat entirely rather than truncate.
+  *  - string bounds compare in UTF8 binary order (Spark's own ordering);
+  *    a bound only has to BOUND the file's values, so a truncated one
+  *    (min rounded down, max rounded up — what the parquet spec demands
+  *    of truncated chunk statistics, read by [[DataFiles.FooterRanges]])
+  *    is as sound as an exact one, for the interval tests and for
+  *    StartsWith's prefix-wise compare alike.
   *
   * Null semantics: comparisons/EqualTo are null-rejecting, so a file whose
   * column is ALL null (nullCount == numRecords) can be skipped for them;

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampType}
 
 import graft.SparkSpec
+import graft.sources.LogScan
 import graft.sources.StatsSkip.FileStats
 
 /** batchStats reads per-file stats from parquet FOOTERS (driver-side
@@ -19,6 +20,11 @@ class TxFooterStatsSpec extends SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft_footer_stats").toString
+
+  /** the manifest paths of the files the planned scan of `df` (a read of
+    * `name`) keeps */
+  private def kept(t: TxLogTable, name: String, df: DataFrame): Seq[String] =
+    LogScan.keptFiles(df).map(t.root(name).relativize(_).toString)
 
   /** the reference computation: per-file min/max via a typed scan, in the
     * stats value domain (integrals as Long, other numbers by value, dates
@@ -156,8 +162,15 @@ class TxFooterStatsSpec extends SparkSpec {
     val v = t.currentVersion("tbl").get
     val got = minMax(t.fileStats("tbl", v))
     assert(got.keys.map(_._2).toSet === Set("id"), "all-NULL column must carry no entry")
-    assert(t.candidateFiles("tbl", "s", "zzz", "zzz") === t.files("tbl", v),
-      "missing stats must never prune")
+    // IS NULL may match: the file stays a candidate
+    val nulls = t.read("tbl").where($"s".isNull)
+    assert(kept(t, "tbl", nulls) === t.files("tbl", v), "missing min/max must never prune")
+    assert(nulls.count() === 2)
+    // a value predicate rejects NULL, and the null count says every row is
+    // NULL: the scan's IsNotNull drops the file, soundly
+    val ranged = t.read("tbl").where($"s".between("zzz", "zzz"))
+    assert(kept(t, "tbl", ranged).isEmpty)
+    assert(ranged.count() === 0)
   }
 
   test("multi-rowgroup binary decimal stats combine in SIGNED order") {
@@ -220,13 +233,12 @@ class TxFooterStatsSpec extends SparkSpec {
     // both files carry id stats; only the post-DDL file carries extra stats
     assert(got.keys.count(_._2 == "id") === 2)
     assert(got.keys.count(_._2.startsWith("extra")) === 1)
-    // pruning on extra keeps the pre-DDL file as a candidate (safe)
-    assert(t.candidateFiles("tbl", "extra", "100", "200").size === live.size - 1 ||
-      t.candidateFiles("tbl", "extra", "100", "200").size === live.size)
-    assert(t.candidateFiles("tbl", "extra", "30", "40").size === live.size)
-    // a bound that does not cast to the column type prunes nothing
-    assert(t.candidateFiles("tbl", "id", "3", "4").size === 1)
-    assert(t.candidateFiles("tbl", "id", "three", "4").size === live.size)
+    // pruning on extra keeps the pre-DDL file as a candidate (safe) and
+    // drops the post-DDL file whose [30, 40] misses the range
+    def where(p: Column) = kept(t, "tbl", t.read("tbl").where(p))
+    assert(where($"extra".between(100, 200)) === t.files("tbl", 1))
+    assert(where($"extra".between(30, 40)).size === live.size)
+    assert(where($"id".between(3, 4)).size === 1)
   }
 
   test("older per-column string #fstat lines read as no stats and never prune") {
@@ -237,7 +249,8 @@ class TxFooterStatsSpec extends SparkSpec {
     t.setStatsColumns("tbl", Seq("id"))
     val v = t.currentVersion("tbl").get
     val live = t.files("tbl", v)
-    assert(t.candidateFiles("tbl", "id", "8", "9").size === 1)
+    def high = t.read("tbl").where($"id".between(8, 9))
+    assert(kept(t, "tbl", high).size === 1)
     // the next version carries the manifest as the parent format wrote it:
     // one `#fstat file col min max` line per column, CAST-AS-STRING values
     val log = java.nio.file.Paths.get(t.baseDir, "tbl", "_log")
@@ -252,7 +265,7 @@ class TxFooterStatsSpec extends SparkSpec {
       }
     Files.write(log.resolve(f"v${v + 1}%08d.manifest"), old.mkString("\n").getBytes("UTF-8"))
     assert(t.fileStats("tbl", v + 1).isEmpty)
-    assert(t.candidateFiles("tbl", "id", "8", "9") === live)
+    assert(kept(t, "tbl", high) === live)
     t.registerViews("oldfs_")
     assert(spark.sql("SELECT id FROM oldfs_tbl WHERE id >= 8").as[Long].collect().sorted
       .toSeq === Seq(8L, 9L))

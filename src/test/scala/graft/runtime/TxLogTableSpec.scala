@@ -2,7 +2,10 @@ package graft.runtime
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
+import graft.sources.LogScan
 
 class TxLogTableSpec extends SparkSpec {
   import spark.implicits._
@@ -11,6 +14,11 @@ class TxLogTableSpec extends SparkSpec {
     val dir = Files.createTempDirectory("txlog").toString
     (new TxLogTable(spark, dir), dir)
   }
+
+  /** the manifest paths of the files the planned scan of `df` (a read of
+    * `name`) keeps */
+  private def kept(t: TxLogTable, name: String, df: DataFrame): Seq[String] =
+    LogScan.keptFiles(df).map(t.root(name).relativize(_).toString)
 
   test("append then read: versions accumulate, contents union") {
     val (t, _) = freshStore()
@@ -265,7 +273,7 @@ class TxLogTableSpec extends SparkSpec {
     assert(e.getMessage.contains("_deprecated"))
   }
 
-  test("data skipping: candidateFiles prunes by per-file min/max, stays complete") {
+  test("data skipping: the scan prunes by per-file min/max, stays complete") {
     val (t, _) = freshStore()
     // three disjoint key ranges, one batch (→ file set) each
     t.append("tbl", Seq((1L, "a"), (5L, "b")).toDF("id", "v"))
@@ -275,13 +283,12 @@ class TxLogTableSpec extends SparkSpec {
     val v = t.currentVersion("tbl").get
     val (b1, b2, b3) = (t.files("tbl", 1), t.files("tbl", 2).diff(t.files("tbl", 1)),
       t.files("tbl", 3).diff(t.files("tbl", 2)))
-    val cand = t.candidateFiles("tbl", "id", "100", "200")
+    val ranged = t.read("tbl").where($"id".between(100, 200))
+    val cand = kept(t, "tbl", ranged)
     assert(b2.forall(cand.contains), "files overlapping the range must remain")
     assert(!b1.exists(cand.contains) && !b3.exists(cand.contains),
       s"disjoint-range files must be pruned: got $cand")
-    // the pruned read sees exactly the middle batch's rows
-    assert(t.readPruned("tbl", "id", "100", "200").as[(Long, String)]
-      .collect().toSet === Set((100L, "c"), (150L, "d")))
+    assert(ranged.as[(Long, String)].collect().toSet === Set((100L, "c"), (150L, "d")))
     assert(t.read("tbl").count() === 5, "full read unaffected")
     assert(t.files("tbl", v).toSet === (b1 ++ b2 ++ b3).toSet)
   }
@@ -301,7 +308,7 @@ class TxLogTableSpec extends SparkSpec {
       Set((1L, "a"), (5L, "B"), (100L, "c")))
     // stats were refreshed for the rewritten batch: a follow-up range read
     // over the low range still finds the updated row
-    assert(t.readPruned("tbl", "id", "0", "10").as[(Long, String)]
+    assert(t.read("tbl").where($"id".between(0, 10)).as[(Long, String)]
       .collect().toSet.contains((5L, "B")))
   }
 
@@ -310,8 +317,8 @@ class TxLogTableSpec extends SparkSpec {
     t.append("tbl", Seq((1L, "a")).toDF("id", "v"))
     t.setStatsColumns("tbl", Seq("id"))
     t.renameColumn("tbl", "id", "key")
-    assert(t.candidateFiles("tbl", "key", "0", "2").nonEmpty)
-    assert(t.candidateFiles("tbl", "key", "5", "9").isEmpty,
+    assert(kept(t, "tbl", t.read("tbl").where($"key".between(0, 2))).nonEmpty)
+    assert(kept(t, "tbl", t.read("tbl").where($"key".between(5, 9))).isEmpty,
       "stats keyed by physical name must keep pruning after a rename")
     t.dropColumn("tbl", "key")
     val v = t.currentVersion("tbl").get
@@ -331,7 +338,7 @@ class TxLogTableSpec extends SparkSpec {
     assert(before.as[(Long, String)].collect().size === 5,
       "pre-compact snapshot stays readable")
     // stats were recomputed for the compacted file: range pruning still works
-    assert(t.readPruned("tbl", "id", "2", "2").as[(Long, String)]
+    assert(t.read("tbl").where($"id" === 2L).as[(Long, String)]
       .collect().toSet.contains((2L, "v2")))
     // idempotent: already at target → no-op
     assert(t.compact("tbl", 1) === (1, 1))
@@ -345,16 +352,16 @@ class TxLogTableSpec extends SparkSpec {
       t.append("tbl",
         (0 until 25).map(j => (j * 4L + i, s"v$i-$j")).toDF("id", "v").coalesce(1)))
     t.setStatsColumns("tbl", Seq("id"))
-    assert(t.candidateFiles("tbl", "id", "0", "3").size ===
+    def low = t.read("tbl").where($"id".between(0, 3))
+    assert(kept(t, "tbl", low).size ===
       t.files("tbl", t.currentVersion("tbl").get).size,
       "interleaved files all overlap every range")
     // cluster by key into 4 range-disjoint files
     val (_, nAfter) = t.compact("tbl", targetFiles = 4, clusterBy = Seq("id"))
     assert(nAfter === 4)
-    val cand = t.candidateFiles("tbl", "id", "0", "3")
+    val cand = kept(t, "tbl", low)
     assert(cand.size === 1, s"a 4-key range should hit one clustered file, got $cand")
-    assert(t.readPruned("tbl", "id", "0", "3").as[(Long, String)].collect()
-      .map(_._1).toSet.intersect(Set(0L, 1L, 2L, 3L)) === Set(0L, 1L, 2L, 3L))
+    assert(low.as[(Long, String)].collect().map(_._1).toSet === Set(0L, 1L, 2L, 3L))
     assert(t.read("tbl").count() === 100)
   }
 
@@ -603,30 +610,24 @@ class TxLogTableSpec extends SparkSpec {
         .map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
     }
     t.setBloomColumn("tbl", "id")
-    val v = t.currentVersion("tbl").get
-    // every present key must be found through its candidate set
+    // every present key must be found in the files its point lookup
+    // keeps (the read scans only those)
+    def point(k: Int) = t.read("tbl").where($"id" === k)
     Seq(1, 50, 151, 299).foreach { k =>
-      val cand = t.bloomCandidateFiles("tbl", "id", k.toString)
-      assert(cand.nonEmpty, s"key $k must have candidates")
-      val hit = t.readFiles("tbl", v, cand).filter($"id" === k).count()
-      assert(hit === 1, s"key $k must be found via its bloom candidates")
+      assert(kept(t, "tbl", point(k)).nonEmpty, s"key $k must have candidates")
+      assert(point(k).count() === 1, s"key $k must be found via its bloom candidates")
     }
     // a file appended AFTER bloom enablement has no bloom: it must remain
     // a candidate for any probe (safe default), and its rows reachable
     t.append("tbl", Seq((9999, "new")).toDF("id", "v"))
     val v2 = t.currentVersion("tbl").get
-    val cand2 = t.bloomCandidateFiles("tbl", "id", "9999")
-    assert(t.readFiles("tbl", v2, cand2).filter($"id" === 9999).count() === 1,
-      "a bloom-less appended file must stay a candidate")
+    assert(point(9999).count() === 1, "a bloom-less appended file must stay a candidate")
     // blooms survive unrelated commits (the append above) for old files
     assert(t.fileBlooms("tbl", v2).size === 3)
     // deleted rows stay dead even when the bloom still claims their file
     t.deleteWhere("tbl", $"id" === 50, Seq("id"))
-    val v3 = t.currentVersion("tbl").get
-    val cand3 = t.bloomCandidateFiles("tbl", "id", "50")
-    assert(cand3.nonEmpty, "the bloom (built pre-delete) still flags the file")
-    assert(t.readFiles("tbl", v3, cand3).filter($"id" === 50).count() === 0,
-      "the tombstone must win over the stale bloom")
+    assert(kept(t, "tbl", point(50)).nonEmpty, "the bloom (built pre-delete) still flags the file")
+    assert(point(50).count() === 0, "the tombstone must win over the stale bloom")
   }
 
   test("bloom skipping survives compaction: rewrites re-bloom their output files") {
@@ -643,13 +644,12 @@ class TxLogTableSpec extends SparkSpec {
     val v = t.currentVersion("tbl").get
     assert(t.fileBlooms("tbl", v).size === after,
       "every compacted output file must carry a fresh bloom")
-    val candAbsent = t.bloomCandidateFiles("tbl", "id", "999999")
+    def point(k: Int) = t.read("tbl").where($"id" === k)
+    val candAbsent = kept(t, "tbl", point(999999))
     assert(candAbsent.size < after,
       s"an absent key must prune post-compaction, got ${candAbsent.size} of $after")
     Seq(1, 300, 600).foreach { k =>
-      val cand = t.bloomCandidateFiles("tbl", "id", k.toString)
-      assert(t.readFiles("tbl", v, cand).filter($"id" === k).count() === 1,
-        s"key $k must be found via post-compaction bloom candidates")
+      assert(point(k).count() === 1, s"key $k must be found via post-compaction bloom candidates")
     }
     // compactZOrder re-blooms too
     val (_, after2) = t.compactZOrder("tbl", 2, Seq("id"))
@@ -736,17 +736,16 @@ class TxLogTableSpec extends SparkSpec {
     val fs = t.files("tbl", v)
     assert(fs.size === 4, s"expected 4 one-bucket files, got $fs")
     // each file holds exactly one id-range bucket
-    fs.foreach { f =>
-      val buckets = t.readFiles("tbl", v, Seq(f))
-        .selectExpr("id DIV 100 AS b").distinct().as[Long].collect().toSet
-      assert(buckets.size === 1, s"file $f spans buckets $buckets")
-    }
+    val buckets = t.read("tbl").selectExpr("input_file_name() AS f", "id DIV 100 AS b")
+      .distinct().groupBy("f").count().as[(String, Long)].collect()
+    assert(buckets.length === 4 && buckets.forall(_._2 == 1),
+      s"files span several buckets: ${buckets.toSeq}")
     // read-back is the full input, __cluster never surfaces
     assert(t.read("tbl").columns.toSeq === Seq("id", "v"))
     assert(t.read("tbl").count() === 400)
     // per-file min/max stats over the clustered layout prune point probes
     t.setStatsColumns("tbl", Seq("id"))
-    assert(t.candidateFiles("tbl", "id", "8", "8").size === 1,
+    assert(kept(t, "tbl", t.read("tbl").where($"id" === 8L)).size === 1,
       "a point probe on the cluster key must prune to one file")
     // a later plain append composes (mixed flat + clustered batches)
     t.append("tbl", Seq((1000L, "x")).toDF("id", "v"))
@@ -757,8 +756,8 @@ class TxLogTableSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val grid = (0 until 4096).map(i => (i.toLong % 64, i.toLong / 64))
     def probeCounts(t: TxLogTable, tbl: String): (Int, Int) = (
-      t.candidateFiles(tbl, "x", "0", "7").size,
-      t.candidateFiles(tbl, "y", "0", "7").size)
+      kept(t, tbl, t.read(tbl).where(col("x").between(0, 7))).size,
+      kept(t, tbl, t.read(tbl).where(col("y").between(0, 7))).size)
 
     val (tz, _) = freshStore()
     tz.overwrite("g", grid.toDF("x", "y"))
@@ -799,16 +798,16 @@ class TxLogTableSpec extends SparkSpec {
       val (_, after) = t.compactZOrder("z", 16, Seq("x", "y"))
       t.setStatsColumns("z", Seq("x", "y"))
       assert(after === 16)
-      // layout fingerprint: candidate-file counts over a sweep of probe
-      // slabs on both dimensions (pure metadata — no Spark jobs). File
-      // names are UUIDs, so counts are the cross-store-comparable signal.
+      // layout fingerprint: kept-file counts over a sweep of probe slabs
+      // on both dimensions (planning only — no Spark jobs). File names
+      // are UUIDs, so counts are the cross-store-comparable signal.
+      def probe(c: String, lo: Int, hi: Int): Int =
+        kept(t, "z", t.read("z").where(col(c).between(lo, hi))).size
       val sweep = (0 until 16).flatMap { s =>
         val (lo, hi) = (s * 64, s * 64 + 63)
-        Seq(t.candidateFiles("z", "x", lo.toString, hi.toString).size,
-          t.candidateFiles("z", "y", lo.toString, hi.toString).size)
+        Seq(probe("x", lo, hi), probe("y", lo, hi))
       }
-      (sweep, t.candidateFiles("z", "x", "100", "120").size,
-        t.candidateFiles("z", "y", "100", "120").size)
+      (sweep, probe("x", 100, 120), probe("y", 100, 120))
     }
     val first = layout()
     (1 to 4).foreach { i =>
@@ -981,7 +980,7 @@ class TxLogTableSpec extends SparkSpec {
     val v = t.currentVersion("tbl").get
     assert(t.files("tbl", v).exists(_.contains("__cluster=x%3A1/")))
     t.setBloomColumn("tbl", "v")
-    assert(t.bloomCandidateFiles("tbl", "v", "a") ===
+    assert(kept(t, "tbl", t.read("tbl").where(col("v") === "a")) ===
       t.files("tbl", v).filter(_.contains("__cluster=x%3A1/")))
     t.merge("tbl", Seq((1, "A")).toDF("id", "v"), Seq("id"))
     assert(t.read("tbl").as[(Int, String)].collect().toSet === Set((1, "A"), (2, "b")))

@@ -9,7 +9,7 @@ import graft.SparkSpec
 /** Contract of NAME-mode column mapping: parquet files store physical
   * (uuid-ish) column names, the log keys partitionValues by them, and the
   * reader presents LOGICAL names everywhere — values, filters, pruning,
-  * candidateFiles. Id mode is rejected loudly. */
+  * the planned scan's kept files. Id mode is rejected loudly. */
 class DeltaColumnMappingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,9 +44,8 @@ class DeltaColumnMappingSpec extends SparkSpec {
     val t = tbl()
     DeltaFixture.commitMapped(spark, t, base.schema, Seq("p"), 0L, mapping,
       Seq("a", "b").map(p => Map("p" -> p) -> base.filter($"p" === p)))
-    val snap = DeltaRead.snapshot(t)
-    assert(DeltaRead.candidateFiles(snap, Map("p" -> Set("b"))).size == 1)
     val df = DeltaRead.read(spark, t).filter($"p" === "b")
+    assert(LogScan.keptFiles(df).size == 1)
     assert(df.as[(Long, String, String)].collect().toSet ==
       Set((3L, "b", "x"), (4L, "b", "y")))
     val plan = df.queryExecution.executedPlan.toString
@@ -116,8 +115,9 @@ class DeltaColumnMappingSpec extends SparkSpec {
     assert(back.as[(Long, String, String)].collect().toSet ==
       Set((1L, "a", "x"), (2L, "a", "y"), (3L, "b", "x"), (4L, "b", "y")))
     // logical partition predicate still prunes
-    assert(DeltaRead.candidateFiles(snap, Map("p" -> Set("b"))).size == 1)
-    assert(DeltaRead.read(spark, t).filter($"p" === "b").count() == 2)
+    val onlyB = DeltaRead.read(spark, t).filter($"p" === "b")
+    assert(LogScan.keptFiles(onlyB).size == 1)
+    assert(onlyB.count() == 2)
   }
 
   test("id mode composes with deletion vectors and checkpoints") {

@@ -65,7 +65,7 @@ class DeltaReadSpec extends SparkSpec {
     val onlyB = idx.listFiles(Seq(EqualTo(pAttr, Literal("b"))), Nil)
     assert(all.map(_.files.size).sum == 2)
     assert(onlyB.map(_.files.size).sum == 1, "p='b' must list exactly the b file")
-    assert(DeltaRead.candidateFiles(snap, Map("p" -> Set("b"))).size == 1)
+    assert(LogScan.keptFiles(DeltaRead.read(spark, tbl).filter($"p" === "b")).size == 1)
     // end-to-end seam: the filter lands as PartitionFilters on the scan,
     // with no row-level DataFilters left over
     val plan = DeltaRead.read(spark, tbl).filter($"p" === "b")

@@ -58,12 +58,12 @@ class IcebergReadSpec extends SparkSpec {
     // must be ignored by pruning (rows still filtered after the scan)
     assert(idx.listFiles(Nil, Seq(EqualTo(v, Literal("x")), EqualTo(p, Literal("b"))))
       .map(_.files.size).sum == 1)
-    assert(IcebergRead.candidateFiles(snap, Map("p" -> Set("b"))).size == 1)
-    val plan = IcebergRead.read(spark, tbl).filter($"p" === "b")
-      .queryExecution.executedPlan.toString
+    val onlyB = IcebergRead.read(spark, tbl).filter($"p" === "b")
+    assert(LogScan.keptFiles(onlyB).size == 1)
+    val plan = onlyB.queryExecution.executedPlan.toString
     assert(plan.contains("Location: LogFileIndex"), plan)
     // end-to-end: the filtered scan returns only partition-b rows
-    assert(IcebergRead.read(spark, tbl).filter($"p" === "b").count() == 2)
+    assert(onlyB.count() == 2)
   }
 
   test("manifest column bounds skip files on non-partition predicates") {

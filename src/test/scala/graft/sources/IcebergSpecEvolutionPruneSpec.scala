@@ -94,10 +94,10 @@ class IcebergSpecEvolutionPruneSpec extends SparkSpec {
       s"old-spec file wrongly pruned (or new kept): $kept")
     // no filters: both scheduled
     assert(scheduled(Nil).size == 2)
-    // candidateFiles (the oracle arithmetic) agrees
-    assert(IcebergRead.candidateFiles(snap, Map("par" -> Set("b")))
-      .map(_.path) == Seq(fOld))
-    assert(IcebergRead.candidateFiles(snap, Map("par" -> Set("a", "b")))
-      .map(_.path).toSet == Set(fNew, fOld))
+    // the planned scan over the same index keeps the same files
+    def keptFor(vs: String*) = LogScan.keptFiles(LogScan.scan(spark, idx)
+      .where($"par".isin(vs: _*))).map(_.toString)
+    assert(keptFor("b") == Seq(fOld))
+    assert(keptFor("a", "b").toSet == Set(fNew, fOld))
   }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -52,6 +54,73 @@ class InteropConcurrencySpec extends SparkSpec {
       "the winner's metadata must not be replaced")
     // hint still names a readable version; the reader resolves cleanly
     assert(IcebergRead.read(spark, t).count() == 10L)
+  }
+
+  /** the parquet files under table root `t`, Delta's log excluded */
+  private def parquetUnder(t: String): Set[Path] = files(Paths.get(t), ".parquet")
+    .filterNot(_.startsWith(Paths.get(t, "_delta_log")))
+
+  private def files(dir: Path, suffix: String): Set[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_.toString.endsWith(suffix)).toSet finally s.close()
+  }
+
+  /** a pass-through UDF that, on its first evaluation, publishes `content`
+    * at `target` — another writer claiming the version this write
+    * computed, while the write runs */
+  private def claiming(target: Path, content: String) = {
+    val at = target.toString
+    udf { (x: Long) =>
+      try Files.writeString(Paths.get(at), content, StandardOpenOption.CREATE_NEW)
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      x
+    }.asNondeterministic()
+  }
+
+  test("Delta: a writer that loses the commit race deletes the files it placed") {
+    val t = tbl("graft_delta_lost")
+    val logDir = Paths.get(t, "_delta_log")
+    val foreign = """{"commitInfo":{"operation":"WRITE","engineInfo":"other-engine"}}"""
+    def claim(v: Long) = claiming(logDir.resolve(f"$v%020d.json"), foreign)
+    DeltaWrite.write(spark.range(0, 10).select($"id"), t)
+    DeltaWrite.setProperties(spark, t, Map("delta.enableChangeDataFeed" -> "true"))
+    def live = DeltaRead.snapshot(t).files.map(f => Paths.get(t).resolve(f.path)).toSet
+    // data files
+    intercept[java.util.ConcurrentModificationException] {
+      DeltaWrite.write(spark.range(10, 20).select(claim(2L)($"id").as("id")), t)
+    }
+    assert(parquetUnder(t) === live)
+    // a deletion-vector file and `_change_data` files
+    intercept[java.util.ConcurrentModificationException] {
+      DeltaWrite.deleteWhere(spark, t, claim(3L)($"id") < 3)
+    }
+    assert(parquetUnder(t) === live)
+    assert(files(Paths.get(t), ".bin").isEmpty)
+    assert(DeltaRead.read(spark, t).count() === 10L)
+  }
+
+  test("Iceberg: a writer that loses the metadata CAS deletes its data files and manifests") {
+    val t = tbl("graft_ice_lost")
+    val metaDir = Paths.get(t, "metadata")
+    IcebergWrite.write(spark.range(0, 10).select($"id"), t)
+    val avro = files(metaDir, ".avro")
+    def live = IcebergRead.snapshot(t).files.map(f => Paths.get(f.path)).toSet
+    def claim(v: Int) = claiming(metaDir.resolve(s"v$v.metadata.json"),
+      Files.readString(metaDir.resolve("v1.metadata.json")))
+    // data files, the new-files manifest and the manifest list
+    intercept[java.util.ConcurrentModificationException] {
+      IcebergWrite.write(spark.range(10, 20).select(claim(2)($"id").as("id")), t)
+    }
+    assert(parquetUnder(t) === live)
+    assert(files(metaDir, ".avro") === avro)
+    // a position-delete file and its delete manifest
+    Files.delete(metaDir.resolve("v2.metadata.json"))
+    intercept[java.util.ConcurrentModificationException] {
+      IcebergWrite.deleteWhere(spark, t, claim(2)($"id") < 3)
+    }
+    assert(parquetUnder(t) === live)
+    assert(files(metaDir, ".avro") === avro)
+    assert(IcebergRead.read(spark, t).count() === 10L)
   }
 
   test("Delta: N racing writers — winners commit, losers fail, history contiguous") {
