@@ -582,7 +582,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
 
   /** S6 — incremental insert: appends never conflict semantically, so a
     * lost CAS re-reads the head and retries against it. */
-  def append(name: String, df: DataFrame): Unit = { appendTxn(name, df, None); () }
+  def append(name: String, df: DataFrame): Unit = {
+    appendTxn(name, df, None, writeBatch(name, df, _)); ()
+  }
 
   /** Append `df` as one CLUSTERED batch: a single write job that lays the
     * rows out one-cluster-value-per-file (see writeClusteredBatch). The
@@ -592,25 +594,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * columns. */
   def appendClustered(name: String, df: DataFrame, cluster: Column,
                       buckets: Int): Unit = {
-    var done = false
-    var batch: Option[(Seq[ColMap], Seq[String])] = None
-    while (!done) {
-      val head = currentVersion(name)
-      val m = head.map(metaOf(name, _))
-        .getOrElse(Meta(identityMapping(df), Nil, Map.empty))
-      requireChecks(m, df, s"$name appendClustered")
-      val added = batch match {
-        case Some((c, fs)) if c == m.cols => fs
-        case _ =>
-          val fs = writeClusteredBatch(name, df, m.cols, cluster, buckets)
-          batch = Some((m.cols, fs)); fs
-      }
-      val base = head.map(files(name, _)).getOrElse(Seq.empty)
-      val withStats =
-        m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols))
-      done = tryCommit(name, head.getOrElse(0L) + 1,
-        renderM(withStats, base ++ added))
-    }
+    appendTxn(name, df, None, writeClusteredBatch(name, df, _, cluster, buckets)); ()
   }
 
   /** Append with AUTOMATIC SCHEMA EVOLUTION (Delta's schema-merging
@@ -659,11 +643,14 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // (txnVersions split, or a bogus un-prefixed "file" line)
     require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"appendOnce: appId must be non-empty and free of tabs/line breaks, got ${appId.map(c => if (c.isControl) f"\\u${c.toInt}%04x" else c.toString).mkString}")
-    appendTxn(name, df, Some(appId -> batchVersion))
+    appendTxn(name, df, Some(appId -> batchVersion), writeBatch(name, df, _))
   }
 
-  private def appendTxn(name: String, df: DataFrame,
-                        txn: Option[(String, Long)]): Boolean = {
+  /** The one append commit loop: `write` the batch under the head's
+    * mapping, commit it as the next version, and on a lost CAS re-read
+    * the head and retry against it. */
+  private def appendTxn(name: String, df: DataFrame, txn: Option[(String, Long)],
+                        write: Seq[ColMap] => Seq[String]): Boolean = {
     var done = false
     var batch: Option[(Seq[ColMap], Seq[String])] = None
     while (!done) {
@@ -692,7 +679,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         // head changed the mapping out from under us (DDL race): physical
         // names could differ, so rewrite under the new mapping
         case Some((c, fs)) if c == m.cols => fs
-        case _ => val fs = writeBatch(name, df, m.cols); batch = Some((m.cols, fs)); fs
+        case _ => val fs = write(m.cols); batch = Some((m.cols, fs)); fs
       }
       val base = head.map(files(name, _)).getOrElse(Seq.empty)
       val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),

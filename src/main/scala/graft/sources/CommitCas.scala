@@ -10,7 +10,12 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOptio
   * fails when the target exists, where a rename would silently REPLACE the
   * winner's commit). Without hard links an exists-check plus ATOMIC_MOVE
   * stands in (POSIX rename still replaces, so the check is the best
-  * fence). A crash leaves only an ignorable tmp file. */
+  * fence). A crash leaves only an ignorable tmp file.
+  *
+  * Durability: the tmp file is written with `Files.write` and never
+  * fsynced, nor is its directory. A published commit survives a crash of
+  * the writing process (the bytes sit in the OS page cache), but not an
+  * OS crash or a power loss, which can lose or truncate it. */
 object CommitCas {
 
   /** true: this writer won; false: `target` was already committed (the
@@ -30,4 +35,17 @@ object CommitCas {
         catch { case _: FileAlreadyExistsException => lost() }
     }
   }
+
+  /** [[publish]] for a writer that loses loudly: on a lost CAS it first
+    * deletes `placed`, the files its attempt put under the table root,
+    * then throws a ConcurrentModificationException saying `what` was
+    * committed concurrently and what the caller should do (`retry`); the
+    * winner's commit stays intact. */
+  def publishOrFail(target: Path, bytes: Array[Byte], placed: Seq[Path],
+                    what: String, retry: String): Unit =
+    if (!publish(target, bytes)) {
+      placed.foreach(Files.deleteIfExists)
+      throw new java.util.ConcurrentModificationException(
+        s"$what was committed concurrently ($target exists) — $retry")
+    }
 }

@@ -153,34 +153,45 @@ object DeltaRead {
     require(fromVersion <= toVersion,
       s"readAppends: fromVersion $fromVersion > toVersion $toVersion")
     val snap = snapshotAt(tableDir, toVersion)
-    val logDir = Paths.get(tableDir, "_delta_log")
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String])]()
-    val toLogical: Map[String, String] = snap.columnMapping.map(_.swap)
-    ((fromVersion + 1) to toVersion).foreach { v =>
-      val f = logDir.resolve(f"$v%020d.json")
-      require(Files.exists(f),
-        s"commit $v of $tableDir is missing — cannot enumerate its appends")
-      Files.readAllLines(f, StandardCharsets.UTF_8).asScala
-        .filter(_.nonEmpty).foreach { l =>
-          val node = mapper.readTree(l)
-          require(!node.has("remove") || !dataChange(node.get("remove")),
-            s"readAppends: version $v carries a dataChange remove action " +
-              "(overwrite/delete) — appends-since is not well-defined across a rewrite")
-          if (node.has("add") && dataChange(node.get("add"))) {
-            val a = node.get("add")
-            require(!a.has("deletionVector") || a.get("deletionVector").isNull,
-              s"readAppends: version $v adds a deletion vector")
-            val pv = Option(a.get("partitionValues")).map { o =>
-              o.fieldNames().asScala.map(k =>
-                toLogical.getOrElse(k, k) ->
-                  (if (o.get(k).isNull) null else o.get(k).asText())).toMap
-            }.getOrElse(Map.empty[String, String])
-            adds += ((decodePath(a.get("path").asText), pv))
-          }
-        }
-    }
-    readFiles(spark, tableDir, snap, adds.toSeq)
+    readFiles(spark, tableDir, snap, appendedFiles(tableDir, snap.columnMapping, fromVersion, toVersion))
   }
+
+  /** The data files versions `(fromVersion, toVersion]` appended, as
+    * (log-relative path, partition tuple) with the tuple keys logical
+    * under `columnMapping` — the one append decision behind
+    * [[readAppends]] and [[graft.streaming.DeltaTail.stream]]. Only
+    * `dataChange=true` adds count; a dataChange remove or a deletion
+    * vector in the range fails loudly. */
+  private[graft] def appendedFiles(tableDir: String, columnMapping: Map[String, String],
+                                   fromVersion: Long, toVersion: Long)
+      : Seq[(String, Map[String, String])] = {
+    val toLogical = columnMapping.map(_.swap)
+    ((fromVersion + 1) to toVersion).flatMap { v =>
+      commitActions(tableDir, v, "appends").flatMap { node =>
+        require(!node.has("remove") || !dataChange(node.get("remove")),
+          s"append-only read: version $v carries a dataChange remove action " +
+            "(overwrite/delete) — appends-since is not well-defined across a rewrite; " +
+            "read the change feed instead")
+        Option(node.get("add")).filter(dataChange).map { a =>
+          require(!a.has("deletionVector") || a.get("deletionVector").isNull,
+            s"append-only read: version $v adds a deletion vector")
+          fileAction(a, toLogical)
+        }
+      }
+    }
+  }
+
+  /** The actions of commit `v`, one JSON node per log line; a missing
+    * commit fails loudly, naming the `what` it was read for. */
+  private def commitActions(tableDir: String, v: Long, what: String): Seq[JsonNode] = {
+    val f = Paths.get(tableDir, "_delta_log").resolve(f"$v%020d.json")
+    require(Files.exists(f), s"commit $v of $tableDir is missing — cannot enumerate its $what")
+    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.filter(_.nonEmpty).map(mapper.readTree).toSeq
+  }
+
+  /** The version of a `_delta_log` file name, when it names a JSON commit. */
+  private[graft] def commitVersion(fileName: String): Option[Long] =
+    if (fileName.matches("\\d{20}\\.json")) Some(fileName.stripSuffix(".json").toLong) else None
 
   /** The rows of log files `files` (log-relative path, partition tuple)
     * under `snap`'s schema, in its column order, partition columns
@@ -217,7 +228,6 @@ object DeltaRead {
     require(fromVersion <= toVersion,
       s"readChangeFeed: fromVersion $fromVersion > toVersion $toVersion")
     val snap = snapshotAt(tableDir, toVersion)
-    val logDir = Paths.get(tableDir, "_delta_log")
     // remove actions carry no partitionValues — track each live file's
     // tuple through a forward replay so a synthesized delete can restore
     // them (fromVersion = -1 reads the feed from table creation)
@@ -227,20 +237,9 @@ object DeltaRead {
         .foreach(f => pvByPath(f.path) = f.partitionValues)
     val toLogical: Map[String, String] = snap.columnMapping.map(_.swap)
 
-    def parsePv(a: JsonNode): Map[String, String] =
-      Option(a.get("partitionValues")).map { o =>
-        o.fieldNames().asScala.map(k =>
-          toLogical.getOrElse(k, k) ->
-            (if (o.get(k).isNull) null else o.get(k).asText())).toMap
-      }.getOrElse(Map.empty[String, String])
-
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     ((fromVersion + 1) to toVersion).foreach { v =>
-      val f = logDir.resolve(f"$v%020d.json")
-      require(Files.exists(f),
-        s"commit $v of $tableDir is missing — cannot enumerate its changes")
-      val nodes = Files.readAllLines(f, StandardCharsets.UTF_8).asScala
-        .filter(_.nonEmpty).map(mapper.readTree)
+      val nodes = commitActions(tableDir, v, "changes")
       val cdcs = nodes.flatMap(n => Option(n.get("cdc")))
       // no change type = cdc files, which carry their own _change_type
       def buildFrames(files: Seq[(String, Map[String, String])],
@@ -254,9 +253,7 @@ object DeltaRead {
       val removes = nodes.flatMap(n => Option(n.get("remove")))
       if (cdcs.nonEmpty) {
         // cdc actions are authoritative for this commit's changes
-        frames ++= buildFrames(
-          cdcs.map(c => (decodePath(c.get("path").asText), parsePv(c))).toSeq,
-          changeType = None)
+        frames ++= buildFrames(cdcs.map(fileAction(_, toLogical)), changeType = None)
       } else {
         // synthesize ONLY from dataChange=true actions (PROTOCOL.md:
         // dataChange=false adds/removes rearrange existing rows — a
@@ -267,19 +264,16 @@ object DeltaRead {
           !a.has("deletionVector") || a.get("deletionVector").isNull,
           s"readChangeFeed: version $v adds a deletion vector without cdc " +
             "actions — its suppressed rows cannot be reconstructed"))
-        frames ++= buildFrames(
-          dAdds.map(a => (decodePath(a.get("path").asText), parsePv(a))).toSeq,
-          changeType = Some("insert"))
+        frames ++= buildFrames(dAdds.map(fileAction(_, toLogical)), changeType = Some("insert"))
         frames ++= buildFrames(
           dRemoves.map { r =>
-            val p = decodePath(r.get("path").asText)
-            (p, pvByPath.getOrElse(p, parsePv(r)))
-          }.toSeq,
+            val (p, pv) = fileAction(r, toLogical)
+            (p, pvByPath.getOrElse(p, pv))
+          },
           changeType = Some("delete"))
       }
       // keep the live-file tuple map current for later versions' removes
-      adds.foreach(a =>
-        pvByPath(decodePath(a.get("path").asText)) = parsePv(a))
+      adds.foreach(a => pvByPath += fileAction(a, toLogical))
       removes.foreach(r => pvByPath.remove(decodePath(r.get("path").asText)))
     }
     val outSchema = StructType(snap.schema.fields ++ Seq(
@@ -333,6 +327,7 @@ object DeltaRead {
     var partCols: Seq[String] = Nil
     var protocol: Protocol = Protocol(1, 2)
     var colMap: Map[String, String] = Map.empty // logical -> physical
+    var toLogical: Map[String, String] = Map.empty
     var fieldIds: Map[String, Long] = Map.empty // logical -> parquet field id
     var configuration: Map[String, String] = Map.empty
     // last action per path wins — LinkedHashMap keeps add order stable
@@ -396,24 +391,19 @@ object DeltaRead {
             throw new IllegalArgumentException(
               s"unsupported delta.columnMapping.mode '$other' (supported: none, name, id)")
         }
+        toLogical = colMap.map(_.swap)
       }
       if (node.has("add")) {
         val a = node.get("add")
         // with column mapping, partitionValues and stats keys are the
         // PHYSICAL names — normalize to logical here so every downstream
         // consumer (partition pruning, stats skipping) stays logical
-        val toLogical: Map[String, String] = colMap.map(_.swap)
-        def logicalKey(k: String): String = toLogical.getOrElse(k, k)
-        val pv = Option(a.get("partitionValues")).map { o =>
-          o.fieldNames().asScala.map(k =>
-            logicalKey(k) -> (if (o.get(k).isNull) null else o.get(k).asText())).toMap
-        }.getOrElse(Map.empty[String, String])
-        val path = decodePath(a.get("path").asText)
+        val (path, pv) = fileAction(a, toLogical)
         // add.stats is a JSON STRING per the protocol; unparseable or
         // absent stats degrade to "no skipping", never to an error
         val stats = Option(a.get("stats")).filter(_.isTextual).flatMap { s =>
           scala.util.Try(mapper.readTree(s.asText)).toOption.flatMap(StatsSkip.FileStats.parse)
-        }.map(_.rename(logicalKey))
+        }.map(_.rename(k => toLogical.getOrElse(k, k)))
         val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
           DeletionVectors.Descriptor(d.get("storageType").asText,
             d.get("pathOrInlineDv").asText,
@@ -516,6 +506,16 @@ object DeltaRead {
       .flatMap { case (p, bytes) => DeletionVectors.deserialize(bytes).iterator.map(ri => (p, ri)) }
       .toDF("__del_fp", "__del_ri"), snap.files.flatMap(_.deletionVector).map(_.cardinality).sum)))
   }
+
+  /** An add/cdc/remove action's decoded path and partition tuple, the
+    * tuple keys renamed through `toLogical` (column mapping stores them
+    * PHYSICAL); a null value stays null. */
+  private def fileAction(a: JsonNode, toLogical: Map[String, String])
+      : (String, Map[String, String]) =
+    (decodePath(a.get("path").asText), Option(a.get("partitionValues")).map { o =>
+      o.fieldNames().asScala.map(k =>
+        toLogical.getOrElse(k, k) -> (if (o.get(k).isNull) null else o.get(k).asText())).toMap
+    }.getOrElse(Map.empty[String, String]))
 
   /** An add/remove action's dataChange flag — required by the protocol,
     * but a lax writer may omit it; absent means "changes data" (the

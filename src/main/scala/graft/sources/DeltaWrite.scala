@@ -407,23 +407,17 @@ object DeltaWrite {
   }
 
   /** Publish `lines` as commit `version` iff no other writer claimed it
-    * ([[CommitCas]]). Commit visibility is this publish, after every data
-    * file is in place. A losing writer first deletes `placed`, the files
-    * this attempt put under the root (data, deletion-vector and change
-    * files — never a re-added live file), then gets a loud
-    * ConcurrentModificationException with the log intact: re-read the
-    * head and retry with a fresh version. */
+    * ([[CommitCas.publishOrFail]]). Commit visibility is this publish,
+    * after every data file is in place. A losing writer first deletes
+    * `placed`, the files this attempt put under the root (data,
+    * deletion-vector and change files — never a re-added live file), then
+    * gets a loud ConcurrentModificationException with the log intact:
+    * re-read the head and retry with a fresh version. */
   private[sources] def commitCas(logDir: Path, version: Long,
-                                 lines: Seq[String], placed: Seq[Path] = Nil): Unit = {
-    val target = logDir.resolve(f"$version%020d.json")
-    if (!CommitCas.publish(target,
-        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))) {
-      placed.foreach(Files.deleteIfExists)
-      throw new java.util.ConcurrentModificationException(
-        s"Delta version $version was committed concurrently ($target exists) — " +
-          "re-read the head and retry")
-    }
-  }
+                                 lines: Seq[String], placed: Seq[Path] = Nil): Unit =
+    CommitCas.publishOrFail(logDir.resolve(f"$version%020d.json"),
+      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8), placed,
+      s"Delta version $version", "re-read the head and retry")
 
   /** Merge-on-read DELETE via deletion vectors: rows matching `condition`
     * are suppressed WITHOUT rewriting any data file — each touched file

@@ -112,9 +112,9 @@ object IcebergRead {
     readSnap(spark, snapshotAt(tableDir, snapshotId))
 
   private def snapshotImpl(tableDir: String, asOf: Option[Long]): Snapshot = {
-    val metaDir = Paths.get(tableDir, "metadata")
-    require(Files.isDirectory(metaDir), s"$tableDir has no metadata/ — not an Iceberg table")
-    val meta = mapper.readTree(Files.readString(currentMetadataFile(metaDir)))
+    require(Files.isDirectory(Paths.get(tableDir, "metadata")),
+      s"$tableDir has no metadata/ — not an Iceberg table")
+    val meta = currentMetadata(tableDir)
     val fv = meta.get("format-version").asInt
     require(fv == 1 || fv == 2, s"unsupported Iceberg format-version $fv")
 
@@ -197,12 +197,9 @@ object IcebergRead {
     * surface as NULLs for pre-evolution files, the spec's add-column
     * read semantics). */
   def readAppends(spark: SparkSession, tableDir: String,
-                  fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    val metaDir = Paths.get(tableDir, "metadata")
-    val meta = mapper.readTree(Files.readString(currentMetadataFile(metaDir)))
-    readFiles(spark, snapshot(tableDir), snapshotRange(tableDir, meta, "readAppends",
-      fromSnapshotId, toSnapshotId).flatMap(addedDataFiles(tableDir, _)))
-  }
+                  fromSnapshotId: Long, toSnapshotId: Long): DataFrame =
+    readFiles(spark, snapshot(tableDir), snapshotRange(tableDir, currentMetadata(tableDir),
+      "readAppends", fromSnapshotId, toSnapshotId).flatMap(addedDataFiles(tableDir, _)))
 
   /** The rows of data files `fs` (absolute path, file format) under
     * `snap`'s scan schema, in its column order — one [[LogFileIndex]]
@@ -369,89 +366,91 @@ object IcebergRead {
     * full-table diff. */
   def readChanges(spark: SparkSession, tableDir: String,
                   fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val metaDir = Paths.get(tableDir, "metadata")
-    val meta = mapper.readTree(Files.readString(currentMetadataFile(metaDir)))
-    val snap0 = snapshot(tableDir)
-    val schema = snap0.schema
-    val snaps = meta.get("snapshots").elements().asScala.toSeq
+    val head = snapshot(tableDir)
+    val frames = snapshotRange(tableDir, currentMetadata(tableDir), "readChanges",
+      fromSnapshotId, toSnapshotId).flatMap(snapshotChanges(spark, tableDir, head, _))
+    if (frames.nonEmpty) frames.reduce(_ unionByName _)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(head.schema.fields ++ Seq(
+        StructField("_change_type", StringType, nullable = false),
+        StructField("_snapshot_id", LongType, nullable = false))))
+  }
 
-    val range = snapshotRange(tableDir, meta, "readChanges",
-      fromSnapshotId, toSnapshotId)
-    val frames = range.flatMap { sn =>
-      val sid = sn.get("snapshot-id").asLong
-      val op = Option(sn.get("summary")).flatMap(s => Option(s.get("operation")))
-        .map(_.asText).getOrElse(throw new IllegalArgumentException(
-          s"snapshot $sid of $tableDir has no summary.operation — " +
-            "a changelog cannot classify it"))
-      def stamp(df: DataFrame, tpe: String): DataFrame =
-        df.withColumn("_change_type", lit(tpe))
-          .withColumn("_snapshot_id", lit(sid))
-      // delete rows are computed against the TRUE parent's state —
-      // `parent-snapshot-id` when recorded (correct across rollback),
-      // array predecessor only as the linear-lineage fallback
-      def parent(): Option[Snapshot] = {
-        val i = snaps.indexWhere(_.get("snapshot-id").asLong == sid)
-        Option(sn.get("parent-snapshot-id")).map(_.asLong)
-          .orElse(if (i > 0) Some(snaps(i - 1).get("snapshot-id").asLong)
-                  else None)
-          .map(snapshotAt(tableDir, _))
-      }
-      val (added, removed, newDels) = snapshotDelta(tableDir, sn)
-      op match {
-        case "replace" => Nil // physical rearrangement only
-        case "append" =>
-          if (added.isEmpty) Nil else Seq(stamp(readFiles(spark, snap0, added), "insert"))
-        case "overwrite" | "delete" =>
-          val p = parent()
-          val removedSet = removed.toSet
-          val delFromRemoved = p.filter(_ => removedSet.nonEmpty).map { ps =>
-            val sub = ps.copy(files = ps.files.filter(f => removedSet(f.path)))
-            stamp(readWithPositions(spark, sub).drop("__fp", "__ri")
-              .select(schema.fieldNames.map(col).toSeq: _*), "delete")
-          }
-          val delFromNew = p.filter(_ => newDels.nonEmpty).map { ps =>
-            // base = parent rows still visible (parent deletes applied)
-            // in files the new deletes can touch, minus files already
-            // counted through removedSet. Position deletes NAME their
-            // files — collect the distinct referenced paths (driver
-            // state O(touched files)) so a one-file delete never scans
-            // the whole parent snapshot.
-            val posDel = newDels.filterNot(_.isEquality)
-            val posTouched: Set[String] =
-              if (posDel.isEmpty) Set.empty
-              else spark.read.schema(PositionDeleteSchema).parquet(posDel.map(_.path): _*)
-                .select(col("file_path")).distinct()
-                .collect().map(_.getString(0)).toSet
-            val touchable = ps.files.filterNot(f => removedSet(f.path))
-              .filter(f => posTouched.contains(f.path) ||
-                newDels.exists(d => d.isEquality && f.seq < d.seq))
-            val sub = ps.copy(files = touchable)
-            // the rows the new deletes suppress: position kills, then the
-            // equality kills among the rest, so each row reports once
-            val base = readWithPositions(spark, sub)
-            val (pos, eq) = deletesOf(spark, sub, newDels)
-            stamp((pos.map(LogScan.deleteJoin(base, _, "left_semi")).toSeq ++
-                eq.map(seqGated(spark, sub, LogScan.survivors(base, pos.toSeq), _, "left_semi")))
-              .map(_.select(schema.fieldNames.map(col).toSeq: _*)).reduce(_ unionByName _),
-              "delete")
-          }
-          val ins = if (added.isEmpty) None
-            else Some(stamp(readFiles(spark, snap0, added), "insert"))
-          (delFromRemoved.toSeq ++ delFromNew.toSeq ++ ins.toSeq)
-        case other => throw new IllegalArgumentException(
-          s"snapshot $sid of $tableDir declares unknown operation '$other'")
-      }
+  /** The changelog of ONE snapshot node `sn` — [[readChanges]]' per-snapshot
+    * body, and what [[graft.streaming.IcebergTail.streamChanges]] runs for
+    * each new snapshot: the table schema (inserts read under `head`'s) plus
+    * `_change_type`/`_snapshot_id`, classified by `summary.operation` as
+    * [[readChanges]] describes; None when the snapshot changes no rows by
+    * construction (`replace`, or an append of no files). */
+  private[graft] def snapshotChanges(spark: SparkSession, tableDir: String, head: Snapshot,
+                                     sn: JsonNode): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val schema = head.schema
+    val sid = sn.get("snapshot-id").asLong
+    val op = Option(sn.get("summary")).flatMap(s => Option(s.get("operation")))
+      .map(_.asText).getOrElse(throw new IllegalArgumentException(
+        s"snapshot $sid of $tableDir has no summary.operation — " +
+          "a changelog cannot classify it"))
+    def stamp(df: DataFrame, tpe: String): DataFrame =
+      df.withColumn("_change_type", lit(tpe))
+        .withColumn("_snapshot_id", lit(sid))
+    // delete rows are computed against the TRUE parent's state —
+    // `parent-snapshot-id` when recorded (correct across rollback),
+    // array predecessor only as the linear-lineage fallback
+    def parent(): Option[Snapshot] =
+      Option(sn.get("parent-snapshot-id")).map(_.asLong)
+        .orElse {
+          val snaps = currentMetadata(tableDir).get("snapshots").elements().asScala.toSeq
+          val i = snaps.indexWhere(_.get("snapshot-id").asLong == sid)
+          if (i > 0) Some(snaps(i - 1).get("snapshot-id").asLong) else None
+        }
+        .map(snapshotAt(tableDir, _))
+    val (added, removed, newDels) = snapshotDelta(tableDir, sn)
+    val frames = op match {
+      case "replace" => Nil // physical rearrangement only
+      case "append" =>
+        if (added.isEmpty) Nil else Seq(stamp(readFiles(spark, head, added), "insert"))
+      case "overwrite" | "delete" =>
+        val p = parent()
+        val removedSet = removed.toSet
+        val delFromRemoved = p.filter(_ => removedSet.nonEmpty).map { ps =>
+          val sub = ps.copy(files = ps.files.filter(f => removedSet(f.path)))
+          stamp(readWithPositions(spark, sub).drop("__fp", "__ri")
+            .select(schema.fieldNames.map(col).toSeq: _*), "delete")
+        }
+        val delFromNew = p.filter(_ => newDels.nonEmpty).map { ps =>
+          // base = parent rows still visible (parent deletes applied)
+          // in files the new deletes can touch, minus files already
+          // counted through removedSet. Position deletes NAME their
+          // files — collect the distinct referenced paths (driver
+          // state O(touched files)) so a one-file delete never scans
+          // the whole parent snapshot.
+          val posDel = newDels.filterNot(_.isEquality)
+          val posTouched: Set[String] =
+            if (posDel.isEmpty) Set.empty
+            else spark.read.schema(PositionDeleteSchema).parquet(posDel.map(_.path): _*)
+              .select(col("file_path")).distinct()
+              .collect().map(_.getString(0)).toSet
+          val touchable = ps.files.filterNot(f => removedSet(f.path))
+            .filter(f => posTouched.contains(f.path) ||
+              newDels.exists(d => d.isEquality && f.seq < d.seq))
+          val sub = ps.copy(files = touchable)
+          // the rows the new deletes suppress: position kills, then the
+          // equality kills among the rest, so each row reports once
+          val base = readWithPositions(spark, sub)
+          val (pos, eq) = deletesOf(spark, sub, newDels)
+          stamp((pos.map(LogScan.deleteJoin(base, _, "left_semi")).toSeq ++
+              eq.map(seqGated(spark, sub, LogScan.survivors(base, pos.toSeq), _, "left_semi")))
+            .map(_.select(schema.fieldNames.map(col).toSeq: _*)).reduce(_ unionByName _),
+            "delete")
+        }
+        val ins = if (added.isEmpty) None
+          else Some(stamp(readFiles(spark, head, added), "insert"))
+        delFromRemoved.toSeq ++ delFromNew.toSeq ++ ins.toSeq
+      case other => throw new IllegalArgumentException(
+        s"snapshot $sid of $tableDir declares unknown operation '$other'")
     }
-    val outSchema = org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("_snapshot_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    if (frames.isEmpty)
-      spark.createDataFrame(spark.sparkContext
-        .emptyRDD[org.apache.spark.sql.Row], outSchema)
-    else frames.reduce(_ unionByName _)
+    frames.reduceOption(_ unionByName _)
   }
 
   private def readSnap(spark: SparkSession, snap: Snapshot): DataFrame =
@@ -575,8 +574,7 @@ object IcebergRead {
   def metadataTable(spark: SparkSession, tableDir: String,
                     table: String): DataFrame = {
     import spark.implicits._
-    val metaDir = Paths.get(tableDir, "metadata")
-    lazy val meta = mapper.readTree(Files.readString(currentMetadataFile(metaDir)))
+    lazy val meta = currentMetadata(tableDir)
     lazy val snaps = meta.get("snapshots").elements().asScala.toSeq
     def parentOf(sn: JsonNode): Option[Long] =
       Option(sn.get("parent-snapshot-id")).map(_.asLong)
@@ -637,6 +635,33 @@ object IcebergRead {
   }
 
   // ---- metadata internals --------------------------------------------
+
+  /** The snapshot nodes metadata version `v` carries that version `v-1`
+    * did not, by id, in array order, each with its id — what one commit
+    * added to the lineage (nothing for a property change, a rollback or
+    * an expiry). Version 1 contributes everything. Reads the previous
+    * version from disk: the spec keeps superseded metadata files in place,
+    * so the diff is restart-safe without stream-side state. */
+  private[graft] def newSnapshots(tableDir: String, v: Long): Seq[(Long, JsonNode)] = {
+    def snaps(version: Long): Seq[(Long, JsonNode)] = {
+      val p = Paths.get(tableDir, "metadata", s"v$version.metadata.json")
+      if (!Files.exists(p)) Nil
+      else Option(mapper.readTree(Files.readString(p)).get("snapshots")).toSeq
+        .flatMap(_.elements().asScala.map(sn => sn.get("snapshot-id").asLong -> sn))
+    }
+    val prevIds = if (v <= 1) Set.empty[Long] else snaps(v - 1).map(_._1).toSet
+    snaps(v).filterNot { case (id, _) => prevIds(id) }
+  }
+
+  /** The version of a `metadata/` file name, when it names a versioned
+    * table-metadata file (`v<N>.metadata.json`). */
+  private[graft] def metadataVersion(fileName: String): Option[Long] =
+    if (fileName.matches("v\\d+\\.metadata\\.json"))
+      Some(fileName.stripPrefix("v").stripSuffix(".metadata.json").toLong)
+    else None
+
+  private def currentMetadata(tableDir: String): JsonNode =
+    mapper.readTree(Files.readString(currentMetadataFile(Paths.get(tableDir, "metadata"))))
 
   private def currentMetadataFile(metaDir: Path): Path = {
     val hint = metaDir.resolve("version-hint.text")

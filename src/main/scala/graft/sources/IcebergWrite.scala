@@ -1131,7 +1131,7 @@ object IcebergWrite {
   /** The versioned-metadata CAS every Iceberg commit path shares
     * ([[commitSnapshot]], [[rollback]], [[expireSnapshots]]) — the table's single most
     * safety-critical primitive, kept in ONE place. The commit point is
-    * creating `v<N>.metadata.json` through [[CommitCas]] — a racing
+    * creating `v<N>.metadata.json` through [[CommitCas.publishOrFail]] — a racing
     * writer that computed the same N first deletes `placed`, the files
     * its attempt wrote (data and delete files, manifests, manifest list),
     * then fails loudly with the winner's state intact. The version hint
@@ -1141,14 +1141,10 @@ object IcebergWrite {
       newVersion: Int,
       meta: com.fasterxml.jackson.databind.JsonNode,
       placed: Seq[java.nio.file.Path] = Nil): Unit = {
-    val target = metaDir.resolve(s"v$newVersion.metadata.json")
-    if (!CommitCas.publish(target, mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8))) {
-      placed.foreach(Files.deleteIfExists)
-      throw new java.util.ConcurrentModificationException(
-        s"Iceberg metadata version $newVersion was committed concurrently " +
-          s"($target exists) — re-read the table and retry")
-    }
+    CommitCas.publishOrFail(metaDir.resolve(s"v$newVersion.metadata.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
+        .getBytes(StandardCharsets.UTF_8), placed,
+      s"Iceberg metadata version $newVersion", "re-read the table and retry")
     Files.write(metaDir.resolve("version-hint.text"),
       newVersion.toString.getBytes(StandardCharsets.UTF_8))
   }

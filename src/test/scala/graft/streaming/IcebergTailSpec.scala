@@ -83,4 +83,46 @@ class IcebergTailSpec extends SparkSpec {
         Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(ex).exists(_.contains("append-only")))
   }
+
+  /** a frame's column names and its rows, sorted, for an exact comparison */
+  private def frame(df: DataFrame): (Seq[String], Seq[String]) =
+    (df.columns.toSeq, df.collect().map(_.toString).sorted.toSeq)
+
+  test("each tail batch equals the batch read of its snapshot, across a rollback") {
+    val (t, cp) = dirs()
+    IcebergWrite.write(rows(1 to 10), t)  // s1
+    IcebergWrite.write(rows(11 to 15), t) // s2, rolled over below
+    IcebergWrite.rollback(t, 1L)
+    val s3 = IcebergWrite.write(rows(16 to 18), t) // parent s1, array predecessor s2
+    val appended = scala.collection.mutable.LinkedHashMap[Long, (Seq[String], Seq[String])]()
+    val q = IcebergTail.stream(spark, t, cp,
+      (df: DataFrame, sid: Long) => appended.synchronized { appended(sid) = frame(df) })
+    try q.processAllAvailable() finally q.stop()
+
+    IcebergWrite.merge(spark, t, Seq((1L, "patched"), (100L, "new")).toDF("id", "s"),
+      Seq("id"))                                        // overwrite, parent s3
+    IcebergWrite.deleteWhere(spark, t, col("id") === 12L || col("id") === 17L) // MoR delete
+    val changed = scala.collection.mutable.LinkedHashMap[Long, (Seq[String], Seq[String])]()
+    val qc = IcebergTail.streamChanges(spark, t, s"$cp-changes",
+      (df: DataFrame, sid: Long) => changed.synchronized { changed(sid) = frame(df) })
+    try qc.processAllAvailable() finally qc.stop()
+
+    val parent = IcebergRead.metadataTable(spark, t, "snapshots")
+      .select("snapshot_id", "parent_id").as[(Long, Option[Long])].collect().toMap
+    assert(parent(s3).contains(1L))
+    assert(appended.keys.toSeq == Seq(1L, 2L, s3))
+    appended.foreach { case (sid, got) =>
+      assert(got == frame(IcebergRead.readAppends(spark, t, parent(sid).getOrElse(0L), sid)),
+        s"snapshot $sid")
+    }
+    assert(changed.keys.toSeq == parent.keys.toSeq.sorted)
+    changed.foreach { case (sid, got) =>
+      assert(got == frame(IcebergRead.readChanges(spark, t, parent(sid).getOrElse(0L), sid)),
+        s"snapshot $sid")
+    }
+    // the merge diffs against its parent's rows (s1's, through s3), never s2's
+    val merged = parent.collectFirst { case (id, Some(p)) if p == s3 => id }.get
+    assert(changed(merged)._2.exists(_.startsWith("[1,v1,delete,")))
+    assert(!changed(merged)._2.exists(_.contains("v11")))
+  }
 }
