@@ -2154,8 +2154,8 @@ object DvQueries {
           val remaining = store.read(table)
             .join(forgetHks, Seq("hk_customer_h"), "leftsemi").count()
           store.compact(table, targetFiles = 1)
-          val erased = store.equalityDeletes(table,
-            store.currentVersion(table).get).isEmpty &&
+          val erased = store.manifest(table,
+            store.currentVersion(table).get).edels.isEmpty &&
             store.read(table).count() == after
           (before, nDel, after, remaining, untouched, erased)
         }

@@ -672,7 +672,7 @@ object ScaleQueries {
         val unchanged = store.read(t).count() == nClean
         s.range(1).select(
           lit(refused).as("bad_constraint_refused"),
-          lit(store.checkConstraints(t, vAfter).size.toLong)
+          lit(store.manifest(t, vAfter).checks.size.toLong)
             .as("n_constraints"),
           lit(nClean).as("n_rows_after_clean_append"),
           lit(rejected).as("violating_append_rejected"),
@@ -1217,11 +1217,11 @@ object ScaleQueries {
             org.apache.spark.sql.functions.lit(0L).as("cents")))
         val nReinsertVisible = store.read(t)
           .filter(col("o_orderpriority") === "REINSERT").count()
-        val tombsBefore = store.equalityDeletes(t,
-          store.currentVersion(t).get).size
+        val tombsBefore = store.manifest(t,
+          store.currentVersion(t).get).edels.size
         store.compact(t, targetFiles = 2)
-        val tombsAfter = store.equalityDeletes(t,
-          store.currentVersion(t).get).size
+        val tombsAfter = store.manifest(t,
+          store.currentVersion(t).get).edels.size
         val nAfterCompact = store.read(t).count()
         s.range(1).select(
           lit(nAfterDelete).as("n_after_delete"),

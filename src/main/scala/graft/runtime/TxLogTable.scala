@@ -20,22 +20,16 @@ import graft.sources.StatsSkip.FileStats
   *
   * Layout:
   * {{{
-  *   <base>/<name>/_log/v00000001.manifest   # header: column mapping
-  *                                           # body: one line per live file
+  *   <base>/<name>/_log/v00000001.manifest   # one line per live file plus
+  *                                           # #-headed metadata lines
   *   <base>/<name>/d-<uuid>/part-*.parquet   # immutable data-file batches
   * }}}
   *
-  * Per-file statistics of the stats columns ([[setStatsColumns]]) are one
-  * header line per file, `#fstat <file> <json>` (tab-separated), the JSON
-  * in Delta `add.stats` shape over PHYSICAL column names:
-  * `{"numRecords":n,"minValues":{..},"maxValues":{..},"nullCount":{..}}`.
-  * Values are typed as the shared footer reader gives them
-  * ([[graft.sources.DataFiles.footerRanges]]): integral and fractional
-  * numbers, strings, booleans, dates as ISO text, decimals as exact JSON
-  * numbers and timestamps as integral epoch micros; [[StatsSkip]] prunes
-  * on them. Older manifests carried one `#fstat <file> <col> <min> <max>`
-  * line per column in CAST-AS-STRING form; those read as "no stats",
-  * which never prunes.
+  * A manifest is one [[TxLogTable.Manifest]] value: the column mapping,
+  * the live files, per-file stats and blooms, equality deletes, CHECK
+  * constraints and txn markers. `Manifest.parse` is the one decoder and
+  * `Manifest.lines` the one encoder; every operation reads its head's
+  * manifest ([[manifest]], cached parsed) and commits a copy of it.
   *
   * Properties, each asserted by `TxLogTableSpec`:
   *  - **Atomic commits**: a manifest is staged as `.tmp-*` and published via
@@ -68,7 +62,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * `expectedVersion` for the guarded read-modify-overwrite contract */
   def overwrite(name: String, df: DataFrame): Unit = overwrite(name, df, None)
 
-  import TxLogTable.{ColMap, EqDelete}
+  import TxLogTable.{ColMap, EqDelete, Manifest, physicalSchema}
 
   def root(name: String): Path = Paths.get(baseDir, name)
   private def logDir(name: String): Path = root(name).resolve("_log")
@@ -79,12 +73,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   // advance past later commits).
 
   private val ManifestRe = raw"v(\d{8})\.manifest".r
-  private val ColHeader = "#col\t"
-  private val StatsColHeader = "#statscol\t"
-  private val FStatHeader = "#fstat\t"
-  private val TxnHeader = "#txn\t"
-  private val EDelHeader = "#edel\t"
-  private val CheckHeader = "#check\t"
 
   /** committed versions, ascending (tmp/garbage ignored) */
   def versions(name: String): Seq[Long] = {
@@ -108,123 +96,50 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     logDir(name).resolve(f"v$v%08d.manifest")
 
   /** A committed manifest is immutable (writers only ever tryCommit a NEW
-    * version), so (name, v) → lines is a pure function — memoize it. A
-    * single metadata op reads the manifest several times (metaOf parses 8
-    * sections) and a point-probe workload calls metadata ops per key;
-    * uncached, 40 bloom probes re-read a multi-MB manifest ~400 times
-    * (round-6 bench: >7 s of the bloom query was manifest re-parsing).
-    * Bounded: manifests of old versions fall out once the cache grows. */
+    * version), so (name, v) → [[Manifest]] is a pure function — memoize
+    * the PARSED value: every operation reads its head's manifest, and a
+    * point-probe workload calls metadata ops per key; uncached, 40 bloom
+    * probes re-read a multi-MB manifest ~400 times (round-6 bench: >7 s of
+    * the bloom query was manifest re-parsing). Parsed once, the `#fstat`
+    * JSON of a version is read once. Bounded: manifests of old versions
+    * fall out once the cache grows. */
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[String]]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), Manifest]()
 
-  private def manifestLines(name: String, v: Long): Seq[String] = {
+  /** version `v` of `name`; throws when it carries no column mapping
+    * (every writer records one) */
+  def manifest(name: String, v: Long): Manifest = {
     // Eviction happens OUTSIDE the computeIfAbsent lambda: the CHM
     // contract forbids the mapping function from mutating the map, and a
     // clear() inside it can livelock/corrupt under concurrent metadata
     // ops (exercised by concurrent appends, TxLogTableSpec).
     if (manifestCache.size > 64) manifestCache.clear()
-    manifestCache.computeIfAbsent((name, v), { _ =>
-      Files.readAllLines(manifestPath(name, v)).asScala.toSeq.filter(_.nonEmpty)
+    val m = manifestCache.computeIfAbsent((name, v), { _ =>
+      Manifest.parse(Files.readAllLines(manifestPath(name, v)).asScala.toSeq)
     })
+    if (m.cols.isEmpty)
+      throw new IllegalStateException(
+        s"TxLogTable $name: version $v has no column mapping (#col lines)")
+    m
   }
 
   /** live data files of a version, relative to the table root */
-  def files(name: String, v: Long): Seq[String] =
-    manifestLines(name, v).filterNot(_.startsWith("#"))
-
-  /** the version's logical→physical column mapping, one `#col` line per
-    * column (every writer records it; [[read]] rejects a manifest
-    * without one) */
-  def mapping(name: String, v: Long): Seq[ColMap] =
-    manifestLines(name, v).filter(_.startsWith(ColHeader)).map { l =>
-      // tab-separated: physical \t logical \t catalogString (type strings
-      // contain ':' and ',', so '\t' is the only safe delimiter)
-      val parts = l.stripPrefix(ColHeader).split('\t')
-      ColMap(parts(0), parts(1), parts(2))
-    }
-
-  /** physical columns with per-file min/max stats collection enabled */
-  def statsColumns(name: String, v: Long): Seq[String] =
-    manifestLines(name, v).filter(_.startsWith(StatsColHeader))
-      .map(_.stripPrefix(StatsColHeader))
-
-  /** per-file stats of the stats columns (physical names): file → stats,
-    * typed as [[StatsSkip]] evaluates them. Files/columns without an entry
-    * are simply unprunable — the safe default. */
-  def fileStats(name: String, v: Long): Map[String, FileStats] =
-    manifestLines(name, v).filter(_.startsWith(FStatHeader)).flatMap { l =>
-      l.stripPrefix(FStatHeader).split("\t", -1) match {
-        case Array(f, js) if js.startsWith("{") =>
-          scala.util.Try(TxLogTable.statsMapper.readTree(js)).toOption
-            .flatMap(FileStats.parse).map(f -> _)
-        case _ => None // the older per-column string form: no stats
-      }
-    }.toMap
-
-  /** the version's EQUALITY DELETE files (merge-on-read row-level deletes,
-    * Iceberg's equality-delete / Delta's deletion-vector idea): each holds
-    * the deleted KEYS (physical column names — immutable under renames)
-    * and is SCOPED to the data files live when the delete committed, so a
-    * later append that re-inserts a deleted key is visible. A delete
-    * commits one key file + one manifest line and rewrites ZERO data
-    * files — at 100 TB that turns "purge these ids" from a table rewrite
-    * into O(keys) + metadata. The line records the keys' types and row
-    * count; an older line without them takes the types from the mapping. */
-  def equalityDeletes(name: String, v: Long): Seq[EqDelete] =
-    manifestLines(name, v).filter(_.startsWith(EDelHeader)).map { l =>
-      val p = l.stripPrefix(EDelHeader).split('\t')
-      val keys = p.lift(4).map(StructType.fromDDL).getOrElse {
-        val typed = physicalSchema(mapping(name, v))
-        StructType(p(1).split(',').toSeq.map(k => typed(k)))
-      }
-      EqDelete(p(0), keys, p(2).split(',').toSet, p.lift(3).fold(0L)(_.toLong))
-    }
-
-  /** the version's CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT`
-    * semantics): name → SQL predicate over LOGICAL column names, enforced
-    * on every row-adding write. */
-  def checkConstraints(name: String, v: Long): Map[String, String] =
-    manifestLines(name, v).filter(_.startsWith(CheckHeader)).map { l =>
-      val p = l.stripPrefix(CheckHeader).split('\t')
-      p(0) -> p(1)
-    }.toMap
-
-  /** committed (appId → latest batchVersion) transaction markers — the
-    * exactly-once bookkeeping streaming sinks read (cf. Delta's
-    * txnAppId/txnVersion) */
-  def txnVersions(name: String, v: Long): Map[String, Long] =
-    manifestLines(name, v).filter(_.startsWith(TxnHeader)).map { l =>
-      val p = l.stripPrefix(TxnHeader).split('\t')
-      p(0) -> p(1).toLong
-    }.toMap
+  def files(name: String, v: Long): Seq[String] = manifest(name, v).files
 
   /** the latest committed batchVersion for `appId`, if any */
   def txnVersion(name: String, appId: String): Option[Long] =
-    currentVersion(name).flatMap(v => txnVersions(name, v).get(appId))
+    currentVersion(name).flatMap(v => manifest(name, v).txns.get(appId))
 
-  private def render(cols: Seq[ColMap], fs: Seq[String],
-                     statsCols: Seq[String] = Nil,
-                     stats: Map[String, FileStats] = Map.empty,
-                     txns: Map[String, Long] = Map.empty,
-                     edels: Seq[EqDelete] = Nil): Seq[String] =
-    cols.map(c => s"$ColHeader${c.physical}\t${c.logical}\t${c.typeDdl}") ++
-      statsCols.map(c => s"$StatsColHeader$c") ++
-      stats.toSeq.sortBy(_._1).map { case (f, st) => s"$FStatHeader$f\t${st.json}" } ++
-      txns.toSeq.sorted.map { case (a, bv) => s"$TxnHeader$a\t$bv" } ++
-      edels.map(e => s"$EDelHeader${e.file}\t${e.keyPhys.mkString(",")}\t" +
-        s"${e.scope.toSeq.sorted.mkString(",")}\t${e.rows}\t${e.keys.toDDL}") ++
-      fs
-
-  /** Publish `lines` as version `v` of `name`. Returns false when `v` was
+  /** Publish `m` as version `v` of `name`. Returns false when `v` was
     * committed concurrently by another writer (CAS lost — re-read, retry). */
-  private def tryCommit(name: String, v: Long, lines: Seq[String]): Boolean =
-    CommitCas.publish(manifestPath(name, v), lines.mkString("\n").getBytes("UTF-8"))
+  private def tryCommit(name: String, v: Long, m: Manifest): Boolean =
+    CommitCas.publish(manifestPath(name, v), m.lines.mkString("\n").getBytes("UTF-8"))
 
   /** [[tryCommit]] for a writer that does not retry: a lost CAS fails
     * loudly, naming the operation `op` and what the caller should do. */
-  private def commitOr(name: String, v: Long, lines: Seq[String], op: String,
+  private def commitOr(name: String, v: Long, m: Manifest, op: String,
                        hint: String = "retry"): Unit =
-    if (!tryCommit(name, v, lines))
+    if (!tryCommit(name, v, m))
       throw new IllegalStateException(s"TxLogTable $name: lost commit race on $op — $hint")
 
   /** identity mapping for a table born from `df`'s schema */
@@ -232,47 +147,28 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     df.schema.fields.toIndexedSeq.map(f =>
       ColMap(f.name, f.name, f.dataType.catalogString))
 
-  /** the full metadata of one version */
-  private case class Meta(cols: Seq[ColMap], statsCols: Seq[String],
-                          stats: Map[String, FileStats],
-                          txns: Map[String, Long] = Map.empty,
-                          edels: Seq[EqDelete] = Nil,
-                          bloomCols: Map[String, Int] = Map.empty,
-                          blooms: Map[(String, String), String] = Map.empty,
-                          checks: Map[String, String] = Map.empty)
-
-  private def metaOf(name: String, v: Long): Meta = {
-    val cols = mapping(name, v)
-    if (cols.isEmpty)
-      throw new IllegalStateException(
-        s"TxLogTable $name: version $v has no column mapping (#col lines)")
-    Meta(cols, statsColumns(name, v), fileStats(name, v),
-      txnVersions(name, v), equalityDeletes(name, v),
-      bloomColumns(name, v), fileBlooms(name, v), checkConstraints(name, v))
-  }
-
   /** the current version; throws when the table does not exist */
   private def latest(name: String): Long = currentVersion(name).getOrElse(
     throw new IllegalStateException(s"TxLogTable $name does not exist"))
 
-  /** enforce the version's CHECK constraints on rows about to be written:
+  /** enforce CHECK constraints `checks` on rows about to be written:
     * a row violates when the predicate is FALSE **or NULL** (Delta's
     * constraint semantics — an unknown is not proof of validity). Throws
     * with the per-constraint violation counts; costs one pass over the
     * BATCH, never the table. */
-  private def requireChecks(m: Meta, df: DataFrame, what: String): Unit = {
-    if (m.checks.isEmpty) return
-    import org.apache.spark.sql.functions.{coalesce => fcoalesce, count => fcount, expr, lit => flit, sum => fsum, when => fwhen}
-    val aggs = m.checks.toSeq.sortBy(_._1).map { case (n, sql) =>
+  private def requireChecks(checks: Map[String, String], df: DataFrame, what: String): Unit = {
+    if (checks.isEmpty) return
+    import org.apache.spark.sql.functions.{coalesce => fcoalesce, expr, lit => flit, sum => fsum, when => fwhen}
+    val aggs = checks.toSeq.sortBy(_._1).map { case (n, sql) =>
       fsum(fwhen(!fcoalesce(expr(sql), flit(false)), 1L).otherwise(0L)).as(n)
     }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val bad = m.checks.keys.toSeq.sorted.zipWithIndex
+    val bad = checks.keys.toSeq.sorted.zipWithIndex
       .map { case (n, i) => n -> row.getLong(i) }.filter(_._2 > 0)
     if (bad.nonEmpty)
       throw new IllegalArgumentException(
         s"CHECK constraint violation on $what: " +
-          bad.map { case (n, c) => s"$n (${m.checks(n)}): $c rows" }.mkString("; "))
+          bad.map { case (n, c) => s"$n (${checks(n)}): $c rows" }.mkString("; "))
   }
 
   /** ALTER TABLE ADD CONSTRAINT: validates the EXISTING rows first (a
@@ -284,35 +180,17 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       !sql.exists(c => c == '\t' || c == '\n'),
       "constraint name/expression must be free of tabs and line breaks")
     val v = latest(name)
-    val m = metaOf(name, v)
-    requireChecks(m.copy(checks = Map(constraintName -> sql)),
-      rows(name, m, files(name, v)),
+    val m = manifest(name, v)
+    requireChecks(Map(constraintName -> sql), rows(name, m, m.files),
       s"$name: existing rows reject new constraint")
-    val m2 = m.copy(checks = m.checks + (constraintName -> sql))
-    commitOr(name, v + 1, renderM(m2, files(name, v)), "addCheckConstraint")
+    commitOr(name, v + 1, m.copy(checks = m.checks + (constraintName -> sql)),
+      "addCheckConstraint")
   }
 
   def dropCheckConstraint(name: String, constraintName: String): Unit = {
     val v = latest(name)
-    val m = metaOf(name, v)
-    commitOr(name, v + 1,
-      renderM(m.copy(checks = m.checks - constraintName), files(name, v)), "dropCheckConstraint")
-  }
-
-  private def renderM(m: Meta, fs: Seq[String]): Seq[String] = {
-    val liveSet = fs.toSet
-    // delete files scope-narrow to the surviving data files; a delete
-    // whose entire scope was rewritten/removed carries nothing and drops
-    val live = m.edels
-      .map(e => e.copy(scope = e.scope.intersect(liveSet)))
-      .filter(_.scope.nonEmpty)
-    render(m.cols, fs, m.statsCols,
-      m.stats.filter { case (f, _) => liveSet(f) }, m.txns, live) ++
-      m.bloomCols.toSeq.sorted.map { case (pc, n) => s"$BloomColHeader$pc\t$n" } ++
-      m.blooms.toSeq.sortBy(_._1).collect {
-        case ((f, pc), b64) if liveSet(f) => s"$FBloomHeader$f\t$pc\t$b64"
-      } ++
-      m.checks.toSeq.sorted.map { case (n, sql) => s"$CheckHeader$n\t$sql" }
+    val m = manifest(name, v)
+    commitOr(name, v + 1, m.copy(checks = m.checks - constraintName), "dropCheckConstraint")
   }
 
   /** Per-file stats of the stats columns for a just-written batch, read
@@ -351,7 +229,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val aggs = count(lit(1)) +: use.flatMap(f =>
       Seq(fmin(col(f.name)), fmax(col(f.name)), count(col(f.name))))
     val manifestPath = byQualified(name, fs)
-    relation(name, Meta(cols, Nil, Map.empty), fs, withFile = true).groupBy(col("__fp"))
+    relation(name, Manifest(Nil, cols), fs, withFile = true).groupBy(col("__fp"))
       .agg(aggs.head, aggs.tail: _*)
       .queryExecution.toRdd.map(_.copy()).collect().toSeq.map { r =>
         val n = r.getLong(1)
@@ -417,15 +295,6 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       .map(w => s"$batch/${w.rel}")
   }
 
-  /** The physical parquet schema a mapping implies. Sound because physical
-    * types are immutable per live set: writeBatch casts to the mapping's
-    * typeDdl, retype rewrites every live file atomically, and evolution
-    * never retypes — so every live file either carries a column at exactly
-    * this type or lacks it entirely (and the reader null-fills it). */
-  private def physicalSchema(cols: Seq[ColMap]): StructType =
-    StructType(cols.map(c =>
-      StructField(c.physical, DataType.fromDDL(c.typeDdl), nullable = true)))
-
   /** The [[LogFileIndex]] relation over exactly `fs` under the mapping's
     * physical schema, plus `extra` physical columns the mapping no longer
     * holds (a dropped column an equality delete keys on): pushed data
@@ -433,7 +302,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * row's file as `__fp` ([[LogScan.FilePath]]). Files predating an added
     * column null-fill; the schema comes from the mapping, so no footer
     * inference runs. */
-  private def relation(name: String, m: Meta, fs: Seq[String], withFile: Boolean,
+  private def relation(name: String, m: Manifest, fs: Seq[String], withFile: Boolean,
                        extra: Seq[StructField] = Nil): DataFrame = {
     val r = root(name)
     LogScan.scan(spark, new LogFileIndex(spark, Seq(r),
@@ -451,7 +320,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * for them — gated to the files in its scope by `__fp`, so a key
     * re-inserted after the delete stays visible. Every read, the
     * registered views and `merge` go through it. */
-  private def scan(name: String, m: Meta, fs: Seq[String],
+  private def scan(name: String, m: Manifest, fs: Seq[String],
                    withFile: Boolean): DataFrame = {
     val scanned = fs.toSet
     val edels = m.edels.filter(_.scope.exists(scanned))
@@ -467,7 +336,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   }
 
   /** [[scan]] without `__fp`: the rows a reader sees */
-  private def rows(name: String, m: Meta, fs: Seq[String]): DataFrame =
+  private def rows(name: String, m: Manifest, fs: Seq[String]): DataFrame =
     scan(name, m, fs, withFile = false)
 
   /** the `_metadata.file_path` form of manifest path `f` */
@@ -484,7 +353,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   private[graft] def filesHolding(name: String, v: Long, subset: Seq[String])
                                  (keep: DataFrame => DataFrame): Seq[String] = {
     val manifestPath = byQualified(name, subset)
-    keep(scan(name, metaOf(name, v), subset, withFile = true)).select("__fp").distinct()
+    keep(scan(name, manifest(name, v), subset, withFile = true)).select("__fp").distinct()
       .collect().map(r => manifestPath(r.getString(0))).toSeq
   }
 
@@ -506,11 +375,13 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def read(name: String): DataFrame = readVersion(name, latest(name))
 
   /** time travel */
-  def readVersion(name: String, v: Long): DataFrame =
-    rows(name, metaOf(name, v), files(name, v))
+  def readVersion(name: String, v: Long): DataFrame = {
+    val m = manifest(name, v)
+    rows(name, m, m.files)
+  }
 
   /** RESTORE TABLE ... TO VERSION (Delta RESTORE): re-commit an old
-    * version's manifest verbatim as the NEW head — a metadata-only undo
+    * version's manifest as the NEW head — a metadata-only undo
     * that touches zero data files and preserves the full history (the
     * bad versions stay time-travelable until vacuum's horizon reclaims
     * them; data files of the restored version are re-referenced, so the
@@ -522,7 +393,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       s"TxLogTable $name: version $toVersion is not retained " +
         s"(have ${versions(name)})")
     if (toVersion == head) return
-    commitOr(name, head + 1, manifestLines(name, toVersion), "restore")
+    commitOr(name, head + 1, manifest(name, toVersion), "restore")
   }
 
   /** MERGE-ON-READ row-level DELETE (Iceberg equality deletes / Delta
@@ -559,12 +430,11 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   private def deleteKeysOf(name: String, keyCols: Seq[String])
       (restrict: DataFrame => DataFrame): Long = {
     val v = latest(name)
-    val m = metaOf(name, v)
-    val live = files(name, v)
+    val m = manifest(name, v)
     val phys = keyCols.map(kc => m.cols.find(_.logical == kc).getOrElse(
       throw new IllegalArgumentException(
         s"TxLogTable $name: no column $kc")))
-    val keys = restrict(rows(name, m, live))
+    val keys = restrict(rows(name, m, m.files))
       .select(phys.map(c => col(c.logical).cast(c.typeDdl).as(c.physical)): _*)
       .distinct()
       .localCheckpoint()
@@ -573,9 +443,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val batch = s"ed-${UUID.randomUUID()}"
     val delFile = DataFiles.write(keys.coalesce(1), root(name).resolve(batch), Nil)
       .map(w => s"$batch/${w.rel}").head
-    val withDel = m.copy(edels =
-      m.edels :+ EqDelete(delFile, physicalSchema(phys), live.toSet, n))
-    commitOr(name, v + 1, renderM(withDel, live), "deleteWhere",
+    commitOr(name, v + 1,
+      m.copy(edels = m.edels :+ EqDelete(delFile, physicalSchema(phys), m.files.toSet, n)),
+      "deleteWhere",
       "re-derive from the new head and retry")
     n
   }
@@ -607,7 +477,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     currentVersion(name) match {
       case None => append(name, df)
       case Some(v) =>
-        val m = metaOf(name, v)
+        val m = manifest(name, v)
         val incoming = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
         m.cols.foreach { c =>
           incoming.get(c.logical).foreach { t =>
@@ -619,7 +489,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         val newCols = df.schema.fields
           .filter(f => !m.cols.exists(_.logical == f.name))
         newCols.foreach(f => addColumn(name, f.name, f.dataType.catalogString))
-        val after = metaOf(name, currentVersion(name).get)
+        val after = manifest(name, currentVersion(name).get)
         val aligned = df.select(after.cols.map { c =>
           if (incoming.contains(c.logical)) col(c.logical)
           else lit(null).cast(c.typeDdl).as(c.logical)
@@ -655,8 +525,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     var batch: Option[(Seq[ColMap], Seq[String])] = None
     while (!done) {
       val head = currentVersion(name)
-      val m = head.map(metaOf(name, _))
-        .getOrElse(Meta(identityMapping(df), Nil, Map.empty))
+      val m = head.map(manifest(name, _)).getOrElse(Manifest(Nil, identityMapping(df)))
       // a skipped replay can leave an already-written batch from a lost
       // CAS iteration as orphan files — vacuum's orphan-grace sweep
       // reclaims them, same as any crashed append
@@ -673,7 +542,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         if (batch.isEmpty) df.write.format("noop").mode("overwrite").save()
         return false // replay — skip
       }
-      requireChecks(m, df, s"$name append")
+      requireChecks(m.checks, df, s"$name append")
       val added = batch match {
         // reuse the already-written batch on a lost CAS — unless the new
         // head changed the mapping out from under us (DDL race): physical
@@ -681,11 +550,9 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         case Some((c, fs)) if c == m.cols => fs
         case _ => val fs = write(m.cols); batch = Some((m.cols, fs)); fs
       }
-      val base = head.map(files(name, _)).getOrElse(Seq.empty)
-      val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
-        txns = m.txns ++ txn)
-      done = tryCommit(name, head.getOrElse(0L) + 1,
-        renderM(withStats, base ++ added))
+      done = tryCommit(name, head.getOrElse(0L) + 1, m.copy(files = m.files ++ added,
+        stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
+        txns = m.txns ++ txn))
     }
     true
   }
@@ -706,22 +573,19 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
         s"TxLogTable $name: expected version $ev but head is $head — " +
           "concurrent commit detected, re-derive and retry")
     }
-    // stats columns survive a full refresh where the (reset, physical =
-    // logical) schema still carries them
-    val statsCols = head.map(statsColumns(name, _)).getOrElse(Nil)
-      .filter(sc => cols.exists(_.physical == sc))
-    // CHECK constraints survive a full refresh (Delta table-property
-    // semantics) and the replacement rows must already satisfy them
-    val checks = head.map(checkConstraints(name, _)).getOrElse(Map.empty)
-    requireChecks(Meta(cols, Nil, Map.empty, checks = checks), df,
-      s"$name overwrite")
+    // the (reset, physical = logical) schema keeps the stats and bloom
+    // columns it still carries; CHECK constraints (Delta table-property
+    // semantics: the replacement rows must already satisfy them) and txn
+    // markers (a replayed streaming batch must still be recognized after
+    // someone rebuilds the table) survive a full refresh
+    val m = head.map(manifest(name, _)).getOrElse(Manifest(Nil, cols))
+    requireChecks(m.checks, df, s"$name overwrite")
     val added = writeBatch(name, df, cols)
-    // txn markers survive a full refresh: a replayed streaming batch must
-    // still be recognized after someone rebuilds the table
-    val m = Meta(cols, statsCols, batchStats(name, added, cols, statsCols),
-      head.map(txnVersions(name, _)).getOrElse(Map.empty), checks = checks)
-    commitOr(name, head.getOrElse(0L) + 1, renderM(m, added), "overwrite",
-      "re-derive and retry")
+    val phys = cols.map(_.physical).toSet
+    commitOr(name, head.getOrElse(0L) + 1, rewritten(name, m.copy(cols = cols,
+      statsCols = m.statsCols.filter(phys),
+      bloomCols = m.bloomCols.filter { case (c, _) => phys(c) }), added),
+      "overwrite", "re-derive and retry")
   }
 
   /** S7 — file-level MERGE, the primitive a row-level MERGE compiles to:
@@ -733,8 +597,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
                    retype: Map[String, String] = Map.empty)
                   (rewrite: DataFrame => DataFrame): Unit = {
     val v = latest(name)
-    val live = files(name, v)
-    val m = metaOf(name, v)
+    val m = manifest(name, v)
+    val live = m.files
     require(touched.forall(live.contains),
       s"TxLogTable $name: replaceFiles over non-live files " +
         s"${touched.filterNot(live.contains)}")
@@ -751,14 +615,13 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val added =
       if (touched.isEmpty) Seq.empty
       // the rewrite sees the DELETE-APPLIED rows of the touched files (and
-      // its output files leave every delete's scope via renderM), so
+      // its output files leave every delete's scope), so
       // tombstoned rows can never be resurrected by a rewrite
       else writeBatch(name,
         rewrite(rows(name, m, touched)), newCols)
-    val next = live.filterNot(touched.contains) ++ added
-    val withStats = m.copy(cols = newCols,
-      stats = m.stats ++ batchStats(name, added, newCols, m.statsCols))
-    commitOr(name, v + 1, renderM(withStats, next), "replaceFiles",
+    commitOr(name, v + 1, m.copy(files = live.filterNot(touched.contains) ++ added,
+      cols = newCols, stats = m.stats ++ batchStats(name, added, newCols, m.statsCols)),
+      "replaceFiles",
       "re-derive from the new head and retry")
   }
 
@@ -776,8 +639,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def merge(name: String, source: DataFrame, keyCols: Seq[String]): Unit = {
     import MergeClauses.{MatchedUpdate, NotMatchedInsert}
     val v = latest(name)
-    val live = files(name, v)
-    val m = metaOf(name, v)
+    val m = manifest(name, v)
     val schema = StructType(m.cols.map(c =>
       StructField(c.logical, DataType.fromDDL(c.typeDdl), nullable = true)))
     // the source is evaluated by several jobs (precheck, touched-file
@@ -787,11 +649,11 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // would leave a matched key's old row alive next to its replacement
     val src = source.select(m.cols.map(c =>
       col(c.logical).cast(c.typeDdl).as(c.logical)): _*).localCheckpoint()
-    requireChecks(m, src, s"$name merge source")
+    requireChecks(m.checks, src, s"$name merge source")
     val upsert = Seq(MatchedUpdate(), NotMatchedInsert())
     val toLogical = m.cols.map(c => c.physical -> c.logical).toMap
     val touched = MergeClauses.touchedFiles[String](src, keyCols, upsert, schema,
-        live, f => m.stats.get(f).flatMap(TxLogTable.remap(_, toLogical)),
+        m.files, f => m.stats.get(f).flatMap(TxLogTable.remap(_, toLogical)),
         qualify(name, _), scan(name, m, _, withFile = true)) match {
       case None => return
       case Some(fs) => fs
@@ -800,8 +662,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
       if (touched.isEmpty) MergeClauses.emptyFrame(spark, schema)
       else rows(name, m, touched)
     val added = writeBatch(name, MergeClauses(target, src, keyCols, upsert, schema)._1, m.cols)
-    val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols))
-    commitOr(name, v + 1, renderM(withStats, live.filterNot(touched.contains) ++ added),
+    commitOr(name, v + 1, m.copy(files = m.files.filterNot(touched.contains) ++ added,
+      stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols)),
       "merge", "re-derive from the new head and retry")
   }
 
@@ -812,16 +674,14 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * missed (or all-NULL files) simply stay unprunable. */
   def setStatsColumns(name: String, logicalCols: Seq[String]): Unit = {
     val v = latest(name)
-    val m = metaOf(name, v)
+    val m = manifest(name, v)
     val phys = logicalCols.map { lc =>
       m.cols.find(_.logical == lc).getOrElse(
         throw new IllegalArgumentException(
           s"TxLogTable $name: no column $lc")).physical
     }
-    val live = files(name, v)
-    val withStats = m.copy(statsCols = phys.distinct,
-      stats = batchStats(name, live, m.cols, phys.distinct))
-    commitOr(name, v + 1, renderM(withStats, live), "setStatsColumns")
+    commitOr(name, v + 1, m.copy(statsCols = phys.distinct,
+      stats = batchStats(name, m.files, m.cols, phys.distinct)), "setStatsColumns")
   }
 
   // ---- per-file BLOOM FILTERS: point-lookup file skipping ----------------
@@ -834,24 +694,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   // manifest sizes. Missing blooms (files appended after enablement) are
   // simply unprunable — the same safe default as missing stats.
 
-  private val BloomColHeader = "#bloomcol\t"
-  private val FBloomHeader = "#fbloom\t"
   private val BloomSeeds = 4
-
-  /** enabled bloom columns: physical name → filter size in bits */
-  def bloomColumns(name: String, v: Long): Map[String, Int] =
-    manifestLines(name, v).filter(_.startsWith(BloomColHeader)).map { l =>
-      val p = l.stripPrefix(BloomColHeader).split('\t')
-      p(0) -> p(1).toInt
-    }.toMap
-
-  /** per-file bloom bitsets: (file, physicalCol) → base64 bitset (empty
-    * for a file whose column is all NULL) */
-  def fileBlooms(name: String, v: Long): Map[(String, String), String] =
-    manifestLines(name, v).filter(_.startsWith(FBloomHeader)).map { l =>
-      val p = l.stripPrefix(FBloomHeader).split("\t", -1)
-      (p(0), p(1)) -> p(2)
-    }.toMap
 
   /** the BloomSeeds bit positions of a value — MUST match [[bloomPosCols]]
     * (same md5-of-"value:seed" derivation on both the build expression and
@@ -881,7 +724,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * key-count rows. Shared by [[setBloomColumn]] and the compaction
     * rewrites (which must re-bloom the files they emit, or the skipping
     * property silently dies with the replaced files). */
-  private def buildFileBlooms(name: String, m: Meta, fs: Seq[String],
+  private def buildFileBlooms(name: String, m: Manifest, fs: Seq[String],
                               physCol: String,
                               nbits: Int): Map[(String, String), String] = {
     import org.apache.spark.sql.functions.{collect_set, explode}
@@ -906,12 +749,19 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * scan's bloom channel ([[bloomKeep]]) would silently keep every file
     * while bloomCols still advertises skipping. Same nbits as the original
     * enablement (NDV is unchanged by a rewrite). */
-  private def rebuiltBlooms(name: String, m: Meta,
+  private def rebuiltBlooms(name: String, m: Manifest,
                             added: Seq[String]): Map[(String, String), String] =
     m.bloomCols.foldLeft(Map.empty[(String, String), String]) {
       case (acc, (physCol, nbits)) =>
         acc ++ buildFileBlooms(name, m, added, physCol, nbits)
     }
+
+  /** `m` after a rewrite replaced every live file with `added`: stats
+    * and fresh blooms for the new files, and no equality deletes — the
+    * rewrite materialized them (tombstoned rows are not in `added`) */
+  private def rewritten(name: String, m: Manifest, added: Seq[String]): Manifest =
+    m.copy(files = added, stats = batchStats(name, added, m.cols, m.statsCols),
+      blooms = rebuiltBlooms(name, m, added), edels = Nil)
 
   /** Enable a Bloom filter on `logicalCol` and build one per live file in
     * a single pass (distinct bit positions per file, collected at
@@ -920,22 +770,20 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def setBloomColumn(name: String, logicalCol: String, bitsPerKey: Int = 20): Unit = {
     import org.apache.spark.sql.functions.approx_count_distinct
     val v = latest(name)
-    val m = metaOf(name, v)
+    val m = manifest(name, v)
     val c = m.cols.find(_.logical == logicalCol).getOrElse(
       throw new IllegalArgumentException(s"TxLogTable $name: no column $logicalCol"))
-    val live = files(name, v)
     // sizing only needs an NDV ESTIMATE (an overshoot widens the filter, an
     // undershoot mildly raises FPR): approx_count_distinct is one map-side
     // HLL pass, where exact countDistinct shuffles every distinct key. The
     // 1.2 margin covers HLL's ~2% error band with room to spare.
-    val maxNdv = (relation(name, m, live, withFile = false)
+    val maxNdv = (relation(name, m, m.files, withFile = false)
       .agg(approx_count_distinct(col(c.physical))).head().getLong(0) * 1.2).toLong
     val nbits = math.max(1024L,
       java.lang.Long.highestOneBit(math.max(1L, maxNdv * bitsPerKey) * 2 - 1)).toInt
-    val byFile = buildFileBlooms(name, m, live, c.physical, nbits)
-    val m2 = m.copy(bloomCols = m.bloomCols + (c.physical -> nbits),
-      blooms = m.blooms ++ byFile)
-    commitOr(name, v + 1, renderM(m2, live), "setBloomColumn")
+    commitOr(name, v + 1, m.copy(bloomCols = m.bloomCols + (c.physical -> nbits),
+      blooms = m.blooms ++ buildFileBlooms(name, m, m.files, c.physical, nbits)),
+      "setBloomColumn")
   }
 
   /** decoded bitsets, memoized per (table, file, column, size in bits):
@@ -959,7 +807,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     * skipped before any task is scheduled when its bloom lacks the
     * literal, rendered as the column's CAST AS STRING (the form the blooms
     * were built from); a type without that rendering never prunes. */
-  private def bloomKeep(name: String, m: Meta, f: String)
+  private def bloomKeep(name: String, m: Manifest, f: String)
                        (a: org.apache.spark.sql.catalyst.expressions.AttributeReference,
                         value: Any): Boolean = {
     import org.apache.spark.sql.types._
@@ -990,7 +838,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   private def alterMapping(name: String, op: String)
                           (f: Seq[ColMap] => Seq[ColMap]): Unit = {
     val v = latest(name)
-    val m = metaOf(name, v)
+    val m = manifest(name, v)
     val next = f(m.cols)
     // stats are keyed by physical name (rename-proof); entries for columns
     // no longer mapped (drops) fall away with the mapping
@@ -1004,15 +852,11 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // renaming/dropping a constrained column leaves a constraint later
     // appends fail loudly on (drop it first); silently shedding the
     // contract on every DDL would be worse.
-    val withStats = Meta(next,
-      m.statsCols.filter(phys),
-      m.stats.flatMap { case (f, st) =>
+    commitOr(name, v + 1, m.copy(cols = next, statsCols = m.statsCols.filter(phys),
+      stats = m.stats.flatMap { case (f, st) =>
         TxLogTable.remap(st, phys.map(c => c -> c).toMap).map(f -> _) },
-      m.txns, m.edels,
-      m.bloomCols.filter { case (c, _) => phys(c) },
-      m.blooms.filter { case ((_, c), _) => phys(c) },
-      m.checks)
-    commitOr(name, v + 1, renderM(withStats, files(name, v)), op)
+      bloomCols = m.bloomCols.filter { case (c, _) => phys(c) },
+      blooms = m.blooms.filter { case ((_, c), _) => phys(c) }), op)
   }
 
   /** ALTER TABLE ADD COLUMN (typed NULL for all existing rows). The
@@ -1057,24 +901,21 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
   def compact(name: String, targetFiles: Int = 1,
               clusterBy: Seq[String] = Nil): (Int, Int) = {
     val v = latest(name)
-    val live = files(name, v)
+    val m = manifest(name, v)
+    val live = m.files
     // pending equality deletes always warrant the rewrite (it materializes
     // them), even when the file count is already at target
-    if (live.size <= math.max(1, targetFiles) && clusterBy.isEmpty &&
-        equalityDeletes(name, v).isEmpty)
+    if (live.size <= math.max(1, targetFiles) && clusterBy.isEmpty && m.edels.isEmpty)
       return (live.size, live.size)
-    val m = metaOf(name, v)
     // the rewrite MATERIALIZES pending equality deletes (tombstoned rows
-    // are dropped from the new files) — so the new meta clears them
+    // are dropped from the new files) — so the new manifest clears them
     val all = rows(name, m, live)
     val compacted =
       if (clusterBy.isEmpty) all.repartition(math.max(1, targetFiles))
       else all.repartitionByRange(math.max(1, targetFiles), clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
     val added = writeBatch(name, compacted, m.cols)
-    val withStats = m.copy(stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
-      blooms = rebuiltBlooms(name, m, added), edels = Nil)
-    commitOr(name, v + 1, renderM(withStats, added), "compact")
+    commitOr(name, v + 1, rewritten(name, m, added), "compact")
     (live.size, added.size)
   }
 
@@ -1095,8 +936,8 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     require(zorderBy.nonEmpty && zorderBy.size <= 4,
       s"compactZOrder: 1-4 z-order columns, got ${zorderBy.size}")
     val v = latest(name)
-    val live = files(name, v)
-    val m = metaOf(name, v)
+    val m = manifest(name, v)
+    val live = m.files
     val all = rows(name, m, live)
     // shared deterministic z-layout core (graft.ops.ZCluster) — also
     // behind DeltaWrite.optimize; `all eq compacted` means empty table:
@@ -1104,10 +945,7 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val compacted = graft.ops.ZCluster.layout(all, zorderBy, targetFiles)
     if (compacted eq all) return (live.size, live.size)
     val added = writeBatch(name, compacted, m.cols)
-    val withStats = m.copy(
-      stats = m.stats ++ batchStats(name, added, m.cols, m.statsCols),
-      blooms = rebuiltBlooms(name, m, added), edels = Nil)
-    commitOr(name, v + 1, renderM(withStats, added), "compactZOrder")
+    commitOr(name, v + 1, rewritten(name, m, added), "compactZOrder")
     (live.size, added.size)
   }
 
@@ -1125,8 +963,11 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     val (expired, retained) = vs.splitAt(math.max(0, vs.size - math.max(1, retainVersions)))
     // retained manifests pin their data files AND their equality-delete
     // key files — an in-horizon reader needs both to reconstruct rows
-    val keep = retained.flatMap(v => files(name, v) ++
-      equalityDeletes(name, v).map(_.file)).toSet
+    def referenced(v: Long): Seq[String] = {
+      val m = manifest(name, v)
+      m.files ++ m.edels.map(_.file)
+    }
+    val keep = retained.flatMap(referenced).toSet
     // batches whose expired files THIS pass deletes: deleting a child
     // bumps the dir's mtime to "now", so the grace check below would
     // see the dir as freshly modified and skip it (leaving .crc
@@ -1135,11 +976,10 @@ final class TxLogTable(val spark: SparkSession, val baseDir: String) extends Vau
     // reclaim them regardless of mtime.
     val emptiedBatches = scala.collection.mutable.Set[String]()
     expired.foreach { v =>
-      (files(name, v) ++ equalityDeletes(name, v).map(_.file))
-        .filterNot(keep).foreach { f =>
-          Files.deleteIfExists(root(name).resolve(f)): Unit
-          emptiedBatches += f.split('/').head
-        }
+      referenced(v).filterNot(keep).foreach { f =>
+        Files.deleteIfExists(root(name).resolve(f)): Unit
+        emptiedBatches += f.split('/').head
+      }
       Files.deleteIfExists(manifestPath(name, v)): Unit
     }
     val referencedBatches = keep.map(_.split('/').head)
@@ -1186,10 +1026,145 @@ object TxLogTable {
     def keyPhys: Seq[String] = keys.fieldNames.toSeq
   }
 
-  /** reads `#fstat` JSON with decimals as exact big-decimal nodes, the
-    * encoding [[StatsSkip]] compares decimals on */
-  private val statsMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    .enable(com.fasterxml.jackson.databind.DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+  /** One version of a table: the parsed `_log/v<N>.manifest`, one line
+    * per entry, tab-separated (type strings hold ':' and ',', so '\t' is
+    * the only safe delimiter). [[Manifest.parse]] is the one decoder and
+    * [[lines]] the one encoder.
+    *
+    * @param files     live data files, relative to the table root (the
+    *                  lines without a `#` header), in commit order
+    * @param cols      the logical→physical column mapping, `#col
+    *                  <physical> <logical> <type>`; every writer records it
+    * @param statsCols physical columns with per-file stats, `#statscol`
+    * @param stats     per-file stats of the stats columns, `#fstat <file>
+    *                  <json>`: Delta `add.stats` JSON over PHYSICAL names,
+    *                  typed as [[graft.sources.DataFiles.footerRanges]]
+    *                  reads them (dates as ISO text, decimals as exact
+    *                  numbers, timestamps as epoch micros). A file without
+    *                  an entry is unprunable — the safe default; the older
+    *                  per-column `#fstat <file> <col> <min> <max>` form
+    *                  reads as no stats.
+    * @param txns      appId → latest committed batchVersion, `#txn` (the
+    *                  exactly-once markers of `appendOnce`, cf. Delta's
+    *                  txnAppId/txnVersion)
+    * @param edels     equality deletes (merge-on-read, Iceberg's equality
+    *                  deletes / Delta's deletion vectors), `#edel <file>
+    *                  <keys> <scope> <rows> <key DDL>`; each is scoped to
+    *                  the data files live when it committed, so a later
+    *                  append that re-inserts a deleted key is visible. An
+    *                  older line without the key DDL takes the types from
+    *                  the mapping.
+    * @param bloomCols physical column → bloom filter size in bits,
+    *                  `#bloomcol`
+    * @param blooms    (file, physical column) → base64 bitset, `#fbloom`
+    *                  (empty for a file whose column is all NULL)
+    * @param checks    CHECK constraints (Delta `ADD CONSTRAINT`): name →
+    *                  SQL predicate over LOGICAL names, `#check` */
+  final case class Manifest(files: Seq[String], cols: Seq[ColMap],
+                            statsCols: Seq[String] = Nil,
+                            stats: Map[String, FileStats] = Map.empty,
+                            txns: Map[String, Long] = Map.empty,
+                            edels: Seq[EqDelete] = Nil,
+                            bloomCols: Map[String, Int] = Map.empty,
+                            blooms: Map[(String, String), String] = Map.empty,
+                            checks: Map[String, String] = Map.empty) {
+    import Manifest._
+
+    /** The manifest's lines, in a fixed order. Stats and blooms are kept
+      * for live files only, and each delete's scope narrows to the live
+      * files: a delete whose scope was entirely rewritten or removed
+      * carries nothing and drops. */
+    def lines: Seq[String] = {
+      val live = files.toSet
+      def line(header: String, fields: Any*) = (header +: fields).mkString("\t")
+      cols.map(c => line(Col, c.physical, c.logical, c.typeDdl)) ++
+        statsCols.map(line(StatsCol, _)) ++
+        stats.toSeq.filter(x => live(x._1)).sortBy(_._1)
+          .map { case (f, st) => line(FStat, f, st.json) } ++
+        txns.toSeq.sorted.map { case (a, bv) => line(Txn, a, bv) } ++
+        edels.flatMap { e =>
+          val scope = e.scope.intersect(live)
+          if (scope.isEmpty) None
+          else Some(line(EDel, e.file, e.keyPhys.mkString(","),
+            scope.toSeq.sorted.mkString(","), e.rows, e.keys.toDDL))
+        } ++
+        files ++
+        bloomCols.toSeq.sorted.map { case (c, n) => line(BloomCol, c, n) } ++
+        blooms.toSeq.sortBy(_._1).collect { case ((f, c), b64) if live(f) => line(FBloom, f, c, b64) } ++
+        checks.toSeq.sorted.map { case (n, sql) => line(Check, n, sql) }
+    }
+  }
+
+  object Manifest {
+    private val Col = "#col"
+    private val StatsCol = "#statscol"
+    private val FStat = "#fstat"
+    private val Txn = "#txn"
+    private val EDel = "#edel"
+    private val Check = "#check"
+    private val BloomCol = "#bloomcol"
+    private val FBloom = "#fbloom"
+
+    /** reads `#fstat` JSON with decimals as exact big-decimal nodes, the
+      * encoding [[StatsSkip]] compares decimals on */
+    private val statsMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+
+    /** The one decoder, one pass over `lines`: empty lines and headers it
+      * does not know are skipped. */
+    def parse(lines: Seq[String]): Manifest = {
+      val files, statsCols = Vector.newBuilder[String]
+      val cols = Vector.newBuilder[ColMap]
+      val stats = Map.newBuilder[String, FileStats]
+      val txns = Map.newBuilder[String, Long]
+      val edels = Vector.newBuilder[Array[String]]
+      val bloomCols = Map.newBuilder[String, Int]
+      val blooms = Map.newBuilder[(String, String), String]
+      val checks = Map.newBuilder[String, String]
+      lines.foreach { l =>
+        val tab = l.indexOf('\t')
+        if (l.isEmpty) ()
+        else if (!l.startsWith("#")) files += l
+        else if (tab > 0) {
+          val p = l.substring(tab + 1).split("\t", -1)
+          l.substring(0, tab) match {
+            case Col => cols += ColMap(p(0), p(1), p(2))
+            case StatsCol => statsCols += p(0)
+            case FStat => p match {
+              case Array(f, js) if js.startsWith("{") =>
+                scala.util.Try(statsMapper.readTree(js)).toOption
+                  .flatMap(FileStats.parse).foreach(st => stats += f -> st)
+              case _ => // the older per-column string form: no stats
+            }
+            case Txn => txns += p(0) -> p(1).toLong
+            case EDel => edels += p
+            case Check => checks += p(0) -> p(1)
+            case BloomCol => bloomCols += p(0) -> p(1).toInt
+            case FBloom => blooms += (p(0), p(1)) -> p(2)
+            case _ =>
+          }
+        }
+      }
+      val mapping = cols.result()
+      lazy val typed = physicalSchema(mapping)
+      Manifest(files.result(), mapping, statsCols.result(), stats.result(), txns.result(),
+        edels.result().map { p =>
+          val keys = p.lift(4).map(StructType.fromDDL)
+            .getOrElse(StructType(p(1).split(',').toSeq.map(k => typed(k))))
+          EqDelete(p(0), keys, p(2).split(',').toSet, p.lift(3).fold(0L)(_.toLong))
+        },
+        bloomCols.result(), blooms.result(), checks.result())
+    }
+  }
+
+  /** The physical parquet schema a mapping implies. Sound because physical
+    * types are immutable per live set: writeBatch casts to the mapping's
+    * typeDdl, retype rewrites every live file atomically, and evolution
+    * never retypes — so every live file either carries a column at exactly
+    * this type or lacks it entirely (and the reader null-fills it). */
+  private def physicalSchema(cols: Seq[ColMap]): StructType =
+    StructType(cols.map(c =>
+      StructField(c.physical, DataType.fromDDL(c.typeDdl), nullable = true)))
 
   /** `st` over the columns `to` names, renamed to `to`'s names; None when
     * no column is left */

@@ -368,14 +368,15 @@ object TxPitCleaner {
     val active = t.read(snapshotTable).filter(col(trigger)).select(sdts).distinct()
     val v = t.currentVersion(pitTable).getOrElse(
       throw new IllegalStateException(s"TxLogTable $pitTable does not exist"))
-    val live = t.files(pitTable, v)
-    val sdtsMap = t.mapping(pitTable, v).find(_.logical == sdts)
+    val m = t.manifest(pitTable, v)
+    val live = m.files
+    val sdtsMap = m.cols.find(_.logical == sdts)
     // the active set is snapshot metadata — O(log t) rows under logarithmic
     // retention — so it is collected once, typed as the PIT column, for the
     // stat skip and the probe/rewrite predicate
     val activeVals = active.select(sdtsMap.fold(col(sdts))(c => col(sdts).cast(c.typeDdl)))
       .collect().flatMap(r => Option(r.get(0))).toSeq
-    val stats = t.fileStats(pitTable, v)
+    val stats = m.stats
     // min == max is the only SOUND stat skip for a set-membership DELETE: a
     // wider [min,max] can hide a doomed middle value even when both
     // endpoints are active. A single-valued file is decided when the stats

@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * trigger, so micro-batches align with committed versions and the
   * file-stream checkpoint provides resume. Each micro-batch's file names
   * map to versions through `version` (None: not a version file), and
-  * `each` runs once per version, in order. Driver-bounded: one row per
-  * log line, never table data. */
+  * `each` runs once per version, in order. Driver-bounded: `wholetext`
+  * reads each log file as one row, so a batch collects one row per new
+  * log file, never one per log line and never table data. */
 private[graft] object LogTail {
 
   def apply(spark: SparkSession, dir: String, glob: String, checkpoint: String,
@@ -18,6 +19,7 @@ private[graft] object LogTail {
     spark.readStream
       .option("maxFilesPerTrigger", 1)
       .option("pathGlobFilter", glob)
+      .option("wholetext", "true")
       .text(dir)
       .select(col("_metadata.file_path"))
       .writeStream

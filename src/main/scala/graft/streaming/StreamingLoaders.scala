@@ -77,18 +77,10 @@ object StreamingLoaders {
       bkColumns: Seq[String],
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    staged.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val recs = HubLoader.records(
-          Seq(EntitySource(batch, Some(hkColumn), bkColumns)),
-          hashkey, businessKeys, table.readIfExists(targetName),
-          // HWM is meaningless inside a single micro-batch — the anti-join
-          // carries the idempotence; the txn marker carries exactly-once
-          disableHwm = true)
-        table.appendOnce(targetName, recs, s"hub-sink:$checkpoint", batchId): Unit
-      }
+    exactlyOnce(staged, checkpoint, trigger) { (batch, batchId) =>
+      appendHub(table, targetName, batch, batchId, s"hub-sink:$checkpoint",
+        hashkey, hkColumn, businessKeys, bkColumns)
+    }
 
   /** Continuously load a v0 satellite, exactly once (see [[hubSink]];
     * appId `sat-sink:<checkpoint>`).
@@ -105,14 +97,42 @@ object StreamingLoaders {
       payload: Seq[String],
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
+    exactlyOnce(staged, checkpoint, trigger) { (batch, batchId) =>
+      appendSatV0(table, targetName, batch, batchId, s"sat-sink:$checkpoint",
+        hashkey, hashdiff, payload)
+    }
+
+  /** The per-batch hub body of [[hubSink]] and [[vaultSink]]: the batch
+    * loader over one micro-batch, landed through `appendOnce`. HWM is
+    * meaningless inside a single micro-batch — the anti-join carries the
+    * idempotence; the txn marker carries exactly-once. */
+  private def appendHub(table: TxLogTable, targetName: String, batch: DataFrame,
+                        batchId: Long, app: String, hashkey: String, hkColumn: String,
+                        businessKeys: Seq[String], bkColumns: Seq[String]): Unit = {
+    val recs = HubLoader.records(
+      Seq(EntitySource(batch, Some(hkColumn), bkColumns)),
+      hashkey, businessKeys, table.readIfExists(targetName), disableHwm = true)
+    table.appendOnce(targetName, recs, app, batchId): Unit
+  }
+
+  /** The per-batch v0-satellite body of [[satV0Sink]] and [[vaultSink]] */
+  private def appendSatV0(table: TxLogTable, targetName: String, batch: DataFrame,
+                          batchId: Long, app: String, hashkey: String,
+                          hashdiff: String, payload: Seq[String]): Unit = {
+    val recs = SatV0Loader.records(batch, Seq(hashkey), Some(hashdiff),
+      payload, table.readIfExists(targetName), disableHwm = true)
+    table.appendOnce(targetName, recs, app, batchId): Unit
+  }
+
+  /** The one sink shape: `body` runs per micro-batch of `staged` under
+    * `checkpoint`; exactly-once comes from the `appendOnce` markers
+    * `body` commits. */
+  private def exactlyOnce(staged: DataFrame, checkpoint: String, trigger: Trigger)
+                         (body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     staged.writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val recs = SatV0Loader.records(batch, Seq(hashkey), Some(hashdiff),
-          payload, table.readIfExists(targetName), disableHwm = true)
-        table.appendOnce(targetName, recs, s"sat-sink:$checkpoint", batchId): Unit
-      }
+      .foreachBatch(body)
 
   /** Streaming-native satellite change detection: the per-key "latest
     * hashdiff" lives in the STATE STORE (flatMapGroupsWithState) instead of
@@ -171,15 +191,9 @@ object StreamingLoaders {
       hashdiff: String,
       checkpoint: String,
       appId: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
-    val app = appId.getOrElse(s"sat-stateful:$checkpoint")
-    satV0ChangesStateful(staged, hashkey, hashdiff).writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        table.appendOnce(targetName, batch, app, batchId): Unit
-      }
-  }
+      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
+    txLogSink(satV0ChangesStateful(staged, hashkey, hashdiff), table, targetName,
+      checkpoint, Some(appId.getOrElse(s"sat-stateful:$checkpoint")), trigger)
 
   /** One effectivity status row (activation or deactivation) — the
     * streaming shape of the eff-sat record (hk, ldts, rsrc, is_active). */
@@ -773,12 +787,9 @@ object StreamingLoaders {
                 name: String, checkpoint: String, appId: Option[String] = None,
                 trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
     val app = appId.getOrElse(s"txlog-sink:$checkpoint")
-    staged.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        table.appendOnce(name, batch, app, batchId): Unit
-      }
+    exactlyOnce(staged, checkpoint, trigger) { (batch, batchId) =>
+      table.appendOnce(name, batch, app, batchId): Unit
+    }
   }
 
   /** One streaming sink loading a hub AND a v0 satellite from the same
@@ -797,20 +808,10 @@ object StreamingLoaders {
       checkpoint: String, appId: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
     val app = appId.getOrElse(s"vault-sink:$checkpoint")
-    staged.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hubRecs = HubLoader.records(
-          Seq(EntitySource(batch, Some(hashkey), bkColumns)),
-          hashkey, businessKeys, table.readIfExists(hubName),
-          disableHwm = true)
-        table.appendOnce(hubName, hubRecs, app, batchId): Unit
-        val satRecs = SatV0Loader.records(batch, Seq(hashkey),
-          Some(hashdiff), payload, table.readIfExists(satName),
-          disableHwm = true)
-        table.appendOnce(satName, satRecs, app, batchId): Unit
-      }
+    exactlyOnce(staged, checkpoint, trigger) { (batch, batchId) =>
+      appendHub(table, hubName, batch, batchId, app, hashkey, hashkey, businessKeys, bkColumns)
+      appendSatV0(table, satName, batch, batchId, app, hashkey, hashdiff, payload)
+    }
   }
 
   final case class ReservoirRow(group: String, id: Long, weight: Long, key: Double)

@@ -103,7 +103,7 @@ class TxFooterStatsSpec extends SparkSpec {
     t.append("tbl", df.repartition(2))
     t.setStatsColumns("tbl", Seq("id", "s", "d", "dt", "dec", "b"))
     val v = t.currentVersion("tbl").get
-    val got = minMax(t.fileStats("tbl", v))
+    val got = minMax(t.manifest("tbl", v).stats)
     val want = scanReference(t, "tbl", Seq("id", "s", "d", "dt", "dec", "b"))
     assert(got === want)
     assert(got.nonEmpty)
@@ -122,7 +122,7 @@ class TxFooterStatsSpec extends SparkSpec {
       t.append("tbl", df.coalesce(1))
       t.setStatsColumns("tbl", Seq("sdts"))
       val v = t.currentVersion("tbl").get
-      val got = minMax(t.fileStats("tbl", v))
+      val got = minMax(t.manifest("tbl", v).stats)
       assert(got.values.toSeq ===
         Seq((micros("0001-01-01T00:00:01Z"), micros("8888-12-31T23:59:59Z"))))
       assert(got === scanReference(t, "tbl", Seq("sdts")))
@@ -132,7 +132,7 @@ class TxFooterStatsSpec extends SparkSpec {
         java.sql.Timestamp.valueOf("2024-02-01 00:00:00.5"),
         java.sql.Timestamp.valueOf("2024-02-01 00:00:00.000001")).toDF("sdts").coalesce(1))
       t2.setStatsColumns("tbl", Seq("sdts"))
-      val got2 = minMax(t2.fileStats("tbl", t2.currentVersion("tbl").get))
+      val got2 = minMax(t2.manifest("tbl", t2.currentVersion("tbl").get).stats)
       assert(got2.values.toSeq ===
         Seq((micros("2024-02-01T00:00:00.000001Z"), micros("2024-02-01T00:00:00.5Z"))))
     }
@@ -146,7 +146,7 @@ class TxFooterStatsSpec extends SparkSpec {
         java.sql.Timestamp.valueOf("2024-02-01 12:00:00"),
         java.sql.Timestamp.valueOf("2024-03-01 06:30:15")).toDF("sdts").coalesce(1))
       t.setStatsColumns("tbl", Seq("sdts"))
-      val got = minMax(t.fileStats("tbl", t.currentVersion("tbl").get))
+      val got = minMax(t.manifest("tbl", t.currentVersion("tbl").get).stats)
       assert(got.values.toSeq ===
         Seq((micros("2024-02-01T12:00:00Z"), micros("2024-03-01T06:30:15Z"))))
       assert(got === scanReference(t, "tbl", Seq("sdts")))
@@ -160,7 +160,7 @@ class TxFooterStatsSpec extends SparkSpec {
       .toDF("id", "s").coalesce(1))
     t.setStatsColumns("tbl", Seq("id", "s"))
     val v = t.currentVersion("tbl").get
-    val got = minMax(t.fileStats("tbl", v))
+    val got = minMax(t.manifest("tbl", v).stats)
     assert(got.keys.map(_._2).toSet === Set("id"), "all-NULL column must carry no entry")
     // IS NULL may match: the file stays a candidate
     val nulls = t.read("tbl").where($"s".isNull)
@@ -195,7 +195,7 @@ class TxFooterStatsSpec extends SparkSpec {
     }
     t.setStatsColumns("tbl", Seq("dec"))
     val v = t.currentVersion("tbl").get
-    val got = minMax(t.fileStats("tbl", v))
+    val got = minMax(t.manifest("tbl", v).stats)
     assert(got === scanReference(t, "tbl", Seq("dec")))
     assert(got.values.toSeq === Seq((BigDecimal("-2000.00"), BigDecimal("1999.00"))))
     // single-file sanity: really exercised the multi-block combine
@@ -212,7 +212,7 @@ class TxFooterStatsSpec extends SparkSpec {
         java.sql.Timestamp.from(java.time.Instant.parse("+10000-01-01T00:00:00Z")))
         .toDF("sdts").coalesce(1))
       t.setStatsColumns("tbl", Seq("sdts"))
-      val got = minMax(t.fileStats("tbl", t.currentVersion("tbl").get))
+      val got = minMax(t.manifest("tbl", t.currentVersion("tbl").get).stats)
       // epoch micros need no calendar rendering, so year 10000 is as
       // exact as any other
       assert(got === scanReference(t, "tbl", Seq("sdts")))
@@ -229,7 +229,7 @@ class TxFooterStatsSpec extends SparkSpec {
     t.setStatsColumns("tbl", Seq("id", "extra"))
     val v = t.currentVersion("tbl").get
     val live = t.files("tbl", v)
-    val got = minMax(t.fileStats("tbl", v))
+    val got = minMax(t.manifest("tbl", v).stats)
     // both files carry id stats; only the post-DDL file carries extra stats
     assert(got.keys.count(_._2 == "id") === 2)
     assert(got.keys.count(_._2.startsWith("extra")) === 1)
@@ -264,7 +264,7 @@ class TxFooterStatsSpec extends SparkSpec {
         }
       }
     Files.write(log.resolve(f"v${v + 1}%08d.manifest"), old.mkString("\n").getBytes("UTF-8"))
-    assert(t.fileStats("tbl", v + 1).isEmpty)
+    assert(t.manifest("tbl", v + 1).stats.isEmpty)
     assert(kept(t, "tbl", high) === live)
     t.registerViews("oldfs_")
     assert(spark.sql("SELECT id FROM oldfs_tbl WHERE id >= 8").as[Long].collect().sorted

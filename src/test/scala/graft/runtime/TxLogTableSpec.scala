@@ -3,9 +3,15 @@ package graft.runtime
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 import graft.SparkSpec
+import graft.runtime.TxLogTable.{ColMap, EqDelete, Manifest}
 import graft.sources.LogScan
+import graft.sources.StatsSkip.FileStats
 
 class TxLogTableSpec extends SparkSpec {
   import spark.implicits._
@@ -322,7 +328,7 @@ class TxLogTableSpec extends SparkSpec {
       "stats keyed by physical name must keep pruning after a rename")
     t.dropColumn("tbl", "key")
     val v = t.currentVersion("tbl").get
-    assert(t.statsColumns("tbl", v).isEmpty && t.fileStats("tbl", v).isEmpty,
+    assert(t.manifest("tbl", v).statsCols.isEmpty && t.manifest("tbl", v).stats.isEmpty,
       "dropping the column drops its stats")
   }
 
@@ -465,7 +471,7 @@ class TxLogTableSpec extends SparkSpec {
     val v2 = t.currentVersion("tbl").get
     assert(t.files("tbl", v2) === filesBefore,
       "a MOR delete must not touch any data file")
-    assert(t.equalityDeletes("tbl", v2).size === 1)
+    assert(t.manifest("tbl", v2).edels.size === 1)
     assert(t.read("tbl").as[(Int, String)].collect().map(_._1).toSet ===
       (1 to 20).filter(_ % 5 != 0).toSet)
     assert(t.readVersion("tbl", v1).count() === 20,
@@ -553,7 +559,7 @@ class TxLogTableSpec extends SparkSpec {
       (4 to 10).toSet)
     val (before, after) = t.compact("tbl", targetFiles = 1)
     assert(after === 1, s"compact must rewrite ($before -> $after)")
-    assert(t.equalityDeletes("tbl", t.currentVersion("tbl").get).isEmpty,
+    assert(t.manifest("tbl", t.currentVersion("tbl").get).edels.isEmpty,
       "compact must materialize tombstones away")
     assert(t.read("tbl").select("order_id").as[Int].collect().toSet ===
       (4 to 10).toSet)
@@ -623,7 +629,7 @@ class TxLogTableSpec extends SparkSpec {
     val v2 = t.currentVersion("tbl").get
     assert(point(9999).count() === 1, "a bloom-less appended file must stay a candidate")
     // blooms survive unrelated commits (the append above) for old files
-    assert(t.fileBlooms("tbl", v2).size === 3)
+    assert(t.manifest("tbl", v2).blooms.size === 3)
     // deleted rows stay dead even when the bloom still claims their file
     t.deleteWhere("tbl", $"id" === 50, Seq("id"))
     assert(kept(t, "tbl", point(50)).nonEmpty, "the bloom (built pre-delete) still flags the file")
@@ -642,7 +648,7 @@ class TxLogTableSpec extends SparkSpec {
     // silently returns all files
     val (_, after) = t.compact("tbl", 3, Seq("id"))
     val v = t.currentVersion("tbl").get
-    assert(t.fileBlooms("tbl", v).size === after,
+    assert(t.manifest("tbl", v).blooms.size === after,
       "every compacted output file must carry a fresh bloom")
     def point(k: Int) = t.read("tbl").where($"id" === k)
     val candAbsent = kept(t, "tbl", point(999999))
@@ -654,7 +660,7 @@ class TxLogTableSpec extends SparkSpec {
     // compactZOrder re-blooms too
     val (_, after2) = t.compactZOrder("tbl", 2, Seq("id"))
     val v2 = t.currentVersion("tbl").get
-    assert(t.fileBlooms("tbl", v2).size === after2,
+    assert(t.manifest("tbl", v2).blooms.size === after2,
       "z-order rewrite must also re-bloom its output files")
   }
 
@@ -698,7 +704,7 @@ class TxLogTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       t.addCheckConstraint("tbl", "bal_big", "bal >= 15")
     }
-    assert(t.checkConstraints("tbl", t.currentVersion("tbl").get).isEmpty)
+    assert(t.manifest("tbl", t.currentVersion("tbl").get).checks.isEmpty)
     t.addCheckConstraint("tbl", "bal_pos", "bal >= 0")
     // clean append passes; violating append rejects atomically
     t.append("tbl", Seq((3, 5.0)).toDF("id", "bal"))
@@ -720,7 +726,7 @@ class TxLogTableSpec extends SparkSpec {
       t.overwrite("tbl", Seq((9, -2.0)).toDF("id", "bal"))
     }
     t.overwrite("tbl", Seq((9, 2.0)).toDF("id", "bal"))
-    assert(t.checkConstraints("tbl", t.currentVersion("tbl").get)
+    assert(t.manifest("tbl", t.currentVersion("tbl").get).checks
       .contains("bal_pos"), "constraints survive a full refresh")
     t.dropCheckConstraint("tbl", "bal_pos")
     t.append("tbl", Seq((4, -1.0)).toDF("id", "bal")) // now legal
@@ -947,9 +953,9 @@ class TxLogTableSpec extends SparkSpec {
     t.addCheckConstraint("tbl", "id_pos", "id > 0")
     t.addColumn("tbl", "extra", "int")
     val v = t.currentVersion("tbl").get
-    assert(t.bloomColumns("tbl", v).nonEmpty,
+    assert(t.manifest("tbl", v).bloomCols.nonEmpty,
       "add-column DDL must not shed bloom metadata")
-    assert(t.checkConstraints("tbl", v).contains("id_pos"),
+    assert(t.manifest("tbl", v).checks.contains("id_pos"),
       "add-column DDL must not shed CHECK constraints")
     intercept[IllegalArgumentException] {
       t.append("tbl", Seq((-1, "bad", 0)).toDF("id", "v", "extra"))
@@ -996,5 +1002,117 @@ class TxLogTableSpec extends SparkSpec {
     assert(t.read("pit").selectExpr("hk", "CAST(sdts AS DATE) AS d").as[(String, java.sql.Date)]
       .collect().map { case (h, d) => (h, d.toString) }.toSet ===
       Set(("h1", "2024-01-01"), ("h2", "2024-01-01"), ("h2", "2024-01-03")))
+  }
+
+  test("overwrite keeps the bloom columns its schema still carries and blooms the new files") {
+    val (t, _) = freshStore()
+    t.append("tbl", (1 to 100).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    t.setBloomColumn("tbl", "id")
+    t.overwrite("tbl", (101 to 300).map(i => (i, s"w$i")).toDF("id", "v").repartition(2))
+    val m = t.manifest("tbl", t.currentVersion("tbl").get)
+    assert(m.bloomCols.keySet === Set("id"))
+    assert(m.blooms.keySet === m.files.map(_ -> "id").toSet)
+    def point(k: Int) = t.read("tbl").where($"id" === k)
+    assert(kept(t, "tbl", point(999999)).isEmpty, "an absent key must prune after overwrite")
+    assert(point(150).count() === 1)
+  }
+
+  // ---- the manifest codec ------------------------------------------------
+  private val genName: Gen[String] =
+    Gen.choose(1, 6).flatMap(Gen.listOfN(_, Gen.alphaLowerChar)).map(_.mkString)
+
+  /** a stats value as the JSON reader returns it: ints, longs past the
+    * int range, exact two-place decimals, strings and booleans */
+  private val genStatValue: Gen[com.fasterxml.jackson.databind.JsonNode] = {
+    import com.fasterxml.jackson.databind.node.{BooleanNode, DecimalNode, IntNode, LongNode, TextNode}
+    Gen.oneOf(
+      Gen.choose(-1000, 1000).map(IntNode.valueOf),
+      Gen.choose(Int.MaxValue.toLong + 1, Long.MaxValue).map(LongNode.valueOf),
+      for (a <- Gen.choose(-9999L, 9999L); d <- Gen.choose(1L, 9L))
+        yield DecimalNode.valueOf(java.math.BigDecimal.valueOf(a * 10 + d, 2)),
+      genName.map(TextNode.valueOf),
+      Gen.oneOf(true, false).map(BooleanNode.valueOf))
+  }
+
+  private val genStats: Gen[FileStats] = for {
+    n <- Gen.choose(0L, 1000000L)
+    cs <- Gen.listOfN(3, genName).map(_.distinct)
+    mn <- Gen.listOfN(cs.size, genStatValue)
+    mx <- Gen.listOfN(cs.size, genStatValue)
+    nulls <- Gen.listOfN(cs.size, Gen.choose(0L, n))
+  } yield FileStats(n, cs.zip(mn).toMap, cs.zip(mx).toMap, cs.zip(nulls).toMap)
+
+  private val genKeyType = Gen.oneOf("int", "bigint", "string", "decimal(10,2)", "date",
+    "timestamp", "timestamp_ntz")
+
+  /** a manifest whose per-file entries name live files only, the values
+    * every writer commits */
+  private val genManifest: Gen[Manifest] = for {
+    files <- Gen.listOf(genName).map(_.distinct.zipWithIndex.map { case (b, i) =>
+      s"d-$b/part-$i.parquet" })
+    cols <- Gen.nonEmptyListOf(for (p <- genName; l <- genName;
+      ty <- Gen.oneOf("int", "string", "decimal(12,4)", "array<string>",
+        "struct<a:int,b:string>", "map<string,bigint>")) yield ColMap(p, l, ty))
+    statsCols <- Gen.listOf(genName)
+    statFiles <- Gen.someOf(files)
+    stats <- Gen.listOfN(statFiles.size, genStats)
+    txns <- Gen.mapOf(Gen.zip(genName, Gen.choose(0L, Long.MaxValue)))
+    edels <- Gen.listOf(for {
+      f <- genName
+      keys <- Gen.nonEmptyListOf(Gen.zip(genName, genKeyType))
+      scope <- Gen.atLeastOne(if (files.isEmpty) Seq("d-x/part-0.parquet") else files)
+      rows <- Gen.choose(0L, 1000L)
+    } yield EqDelete(s"ed-$f/part-0.parquet", StructType.fromDDL(keys.toMap.map {
+      case (k, ty) => s"k_$k $ty" }.mkString(",")), scope.toSet, rows))
+    bloomCols <- Gen.mapOf(Gen.zip(genName, Gen.choose(1024, 1 << 20)))
+    bloomFiles <- Gen.someOf(for (f <- files; c <- bloomCols.keys) yield (f, c))
+    bits <- Gen.listOfN(bloomFiles.size, Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue))
+      .map(b => java.util.Base64.getEncoder.encodeToString(b.toArray)))
+    checks <- Gen.mapOf(Gen.zip(genName, genName.map(c => s"$c > 0 AND $c IS NOT NULL")))
+  } yield Manifest(files, cols, statsCols, statFiles.toSeq.zip(stats).toMap, txns,
+    if (files.isEmpty) Nil else edels, bloomCols, bloomFiles.toSeq.zip(bits).toMap, checks)
+
+  test("manifest codec: parse(lines) gives back every generated manifest") {
+    val params = Test.Parameters.default.withMinSuccessfulTests(300)
+      .withWorkers(1).withInitialSeed(Seed(15L))
+    val result = Test.check(params, Prop.forAllNoShrink(genManifest)(m =>
+      Manifest.parse(m.lines) == m))
+    assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
+  }
+
+  test("manifest codec: an #edel line without key types takes them from the mapping") {
+    val m = Manifest.parse(Seq("#col\tid\tkey\tbigint", "#col\ts\tname\tstring",
+      "#edel\ted-a/part-0.parquet\tid,s\td-a/part-0.parquet\t2", "d-a/part-0.parquet"))
+    assert(m.edels === Seq(EqDelete("ed-a/part-0.parquet",
+      StructType.fromDDL("id BIGINT, s STRING"), Set("d-a/part-0.parquet"), 2L)))
+    assert(Manifest.parse(m.lines) === m)
+  }
+
+  test("manifest codec: every committed manifest is a fixed point of parse then lines") {
+    val (t, dir) = freshStore()
+    val kinds = scala.collection.mutable.Set[String]()
+    def step(what: String)(op: => Any): Unit = {
+      op
+      val v = t.currentVersion("tbl").get
+      val lines = Files.readAllLines(Paths.get(dir, "tbl", "_log", f"v$v%08d.manifest"))
+        .toArray.toSeq.map(_.toString)
+      assert(Manifest.parse(lines).lines === lines, s"after $what (v$v)")
+      kinds ++= lines.map(l => if (l.startsWith("#")) l.takeWhile(_ != '\t') else "file")
+    }
+    def rows(r: Range) = r.map(i => (i.toLong, s"s$i", i % 3)).toDF("id", "s", "g").coalesce(1)
+    step("append")(t.append("tbl", rows(1 to 10)))
+    step("setStatsColumns")(t.setStatsColumns("tbl", Seq("id", "s")))
+    step("append with stats")(t.append("tbl", rows(11 to 20)))
+    step("appendOnce")(t.appendOnce("tbl", rows(21 to 25), "app", 0L))
+    step("deleteWhere")(t.deleteWhere("tbl", $"id" === 3L, Seq("id")))
+    step("setBloomColumn")(t.setBloomColumn("tbl", "s"))
+    step("addCheckConstraint")(t.addCheckConstraint("tbl", "id_pos", "id > 0"))
+    val beforeDdl = t.currentVersion("tbl").get
+    step("renameColumn")(t.renameColumn("tbl", "s", "name"))
+    step("dropColumn")(t.dropColumn("tbl", "g"))
+    step("compact")(t.compact("tbl", 2, Seq("id")))
+    step("restore")(t.restore("tbl", beforeDdl))
+    assert(kinds === Set("file", "#col", "#statscol", "#fstat", "#txn", "#edel", "#check",
+      "#bloomcol", "#fbloom"))
   }
 }

@@ -104,4 +104,15 @@ class DeltaTailSpec extends SparkSpec {
     drain(t, s"$t/../cp_v2", (_, v) => seen.synchronized { seen += v; () })
     assert(seen.toSeq == Seq(0L, 1L))
   }
+
+  test("a micro-batch reads one row per commit file, not one per action line") {
+    val t = tbl()
+    // v0 holds commitInfo, protocol, metaData and two add lines
+    DeltaWrite.write(Seq((1L, "a"), (2L, "b")).toDF("id", "p"), t, Seq("p"))
+    DeltaWrite.write(Seq((3L, "a")).toDF("id", "p"), t)
+    val q = DeltaTail.stream(spark, t, s"$t/../cp_rows", (_, _) => ())
+    val read = try { q.processAllAvailable(); q.recentProgress.map(_.numInputRows) }
+      finally q.stop()
+    assert(read.filter(_ > 0).toSeq == Seq(1L, 1L), read.toSeq)
+  }
 }

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -124,5 +126,18 @@ class IcebergTailSpec extends SparkSpec {
     val merged = parent.collectFirst { case (id, Some(p)) if p == s3 => id }.get
     assert(changed(merged)._2.exists(_.startsWith("[1,v1,delete,")))
     assert(!changed(merged)._2.exists(_.contains("v11")))
+  }
+
+  test("a micro-batch reads one row per metadata file, not one per line") {
+    val (t, cp) = dirs()
+    IcebergWrite.write(rows(1 to 10), t)
+    IcebergWrite.write(rows(11 to 13), t)
+    val versions = Files.list(java.nio.file.Paths.get(t, "metadata"))
+    val n = try versions.iterator().asScala.count(_.getFileName.toString.matches("v.*\\.metadata\\.json"))
+      finally versions.close()
+    val q = IcebergTail.stream(spark, t, cp, (_: DataFrame, _: Long) => ())
+    val read = try { q.processAllAvailable(); q.recentProgress.map(_.numInputRows) }
+      finally q.stop()
+    assert(n >= 2 && read.filter(_ > 0).toSeq == Seq.fill(n)(1L), (n, read.toSeq))
   }
 }
